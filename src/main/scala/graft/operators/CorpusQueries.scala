@@ -1016,9 +1016,9 @@ object CorpusQueries {
     * deterministic. TakeOrdered over the distributed counts; the id
     * window runs on k rows. */
   def vocabOf(docs: DataFrame, k: Int): DataFrame =
-    vocabOfTokens(docs.select(col("doc_id"), words(col("text")).as("w")), k)
+    vocabOfTokens(docs.select(words(col("text")).as("w")), k)
 
-  /** [[vocabOf]] over an already-tokenized (doc_id, w) frame. */
+  /** [[vocabOf]] over an already-tokenized frame (reads only `w`). */
   def vocabOfTokens(toks: DataFrame, k: Int): DataFrame =
     toks
       .select(explode(col("w")).as("term"))
@@ -1152,9 +1152,8 @@ object CorpusQueries {
     * covers it), which makes the result order-independent and
     * deterministic. Per doc: token count, scrubbed-token count, and the
     * md5 of the kept text — the scrubbed corpus signature downstream
-    * stages re-key on. The in-row mask test is O(tokens × |cut|); a
-    * deployment scrubbing a 100 TB corpus joins token positions against
-    * the covered set instead — same semantics, chosen per scale. */
+    * stages re-key on. The in-row kept mask is one walk over the sorted
+    * span starts, O(tokens + starts) per doc. */
   def scrubSpans(spark: SparkSession, dir: String): DataFrame = {
     implicit val s: SparkSession = spark
     val toks = Tables(dir).documents
@@ -1185,10 +1184,13 @@ object CorpusQueries {
     // values) and reconstruct the covered-position set IN-ROW — the
     // explode to per-position rows blew each occurrence up 30× into a
     // corpus-wide distinct (a ~40M-row shuffle at sf1) whose whole output
-    // was immediately re-collapsed per doc. The kept-index filter below
-    // tests i ∈ ∪[p, p+29] directly against the sorted start list; the
-    // covered SET (old `cut`) is exactly the complement, so n_scrubbed =
-    // n_tokens − |kept| and the kept text is unchanged.
+    // was immediately re-collapsed per doc. The kept positions are the
+    // complement of ∪[p, p+29] over the sorted start list, walked once:
+    // every span has the same length, so the covered run up to start s_k
+    // ends at s_k + 29 and the kept positions are exactly the gaps
+    // [1, s_1 − 1], [s_k + 30, s_{k+1} − 1], [s_m + 30, n] — O(tokens +
+    // starts) per doc, where testing each position against every start
+    // was O(tokens × starts). n_scrubbed = n_tokens − |kept|.
     val starts = spans
       .withColumn("multi", min(col("doc_id")).over(wH) =!= max(col("doc_id")).over(wH))
       .withColumn("first", min(struct(col("doc_id"), col("pos"))).over(wH))
@@ -1196,9 +1198,12 @@ object CorpusQueries {
         !(col("doc_id") === col("first.doc_id") && col("pos") === col("first.pos")))
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_set(col("pos"))).as("starts"))
+    val (lo, hi) = (s"IF(k = 0, 1, element_at(starts, k) + $SpanTokens)",
+      "IF(k = size(starts), size(w), element_at(starts, k + 1) - 1)")
     toks.join(starts, Seq("doc_id"), "left")
+      .withColumn("starts", coalesce(col("starts"), array().cast("array<int>")))
       .withColumn("kept", expr(
-        s"filter(sequence(1, size(w)), i -> starts IS NULL OR NOT exists(starts, p -> i >= p AND i <= p + ${SpanTokens - 1}))"))
+        s"flatten(transform(sequence(0, size(starts)), k -> IF($lo <= $hi, sequence($lo, $hi), array())))"))
       .select(col("doc_id"),
         size(col("w")).cast("long").as("n_tokens"),
         (size(col("w")) - size(col("kept"))).cast("long").as("n_scrubbed"),

@@ -1,7 +1,30 @@
 package graft.operators
 
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
+
+/** One listed file: its content sha1 and, for a `.sha1` companion, the
+  * checksum it declares (first whitespace-separated token, like `sha1sum`
+  * output; null for every other file). */
+final case class ManifestEntry(relPath: String, sha1: String, declared: String)
+
+/** A directory's manifest, collected to the driver (one entry per file —
+  * the same bound as the done-signal it renders) and sorted by rel_path in
+  * Spark's string order (UTF-8 bytes, not `String.compareTo`), so every
+  * rendering equals what an `orderBy("rel_path")` over the scan gives. */
+final case class DirManifest(root: String, files: Seq[ManifestEntry]) {
+  /** (rel_path → sha1) of the data files: no `.sha1` companions, no hidden
+    * dotfiles (the reference's `sync.is_hidden_file` skip). */
+  lazy val checksums: Map[String, String] = files.filter(isData).map(e => e.relPath -> e.sha1).toMap
+  private def isData(e: ManifestEntry) = e.declared == null && !e.relPath.split('/').last.startsWith(".")
+  /** Sorted `file checksum` lines of the entries `keep` accepts. */
+  def render(keep: ManifestEntry => Boolean): String =
+    files.filter(keep).map(e => s"${e.relPath} ${e.sha1}").mkString("\n")
+  /** The reference's `calc_done_signal_content` (main.py:66) over the data files. */
+  def signal: String = render(isData)
+}
 
 /** Distributed drop-zone sync (SURVEY §2.2 rows 17+22, file level).
   *
@@ -11,34 +34,35 @@ import org.apache.spark.sql.functions._
   * into added/removed/changed sets (`sync.py:142 sync_dirs`,
   * `:113 get_checksum_pairs_set`).
   *
-  * Spark-first shape: `binaryFile` reads are distributed and splittable
-  * across files — a 100 TB drop zone with millions of files hashes in
-  * parallel across the cluster; the diff itself is [[SnapshotDiff]]'s
-  * co-partitioned full-outer join keyed on the relative path.
+  * Spark-first shape: [[scan]] is the one `binaryFile` read of a
+  * directory — distributed and splittable across files, so a drop zone
+  * with millions of files hashes in parallel across the cluster — and it
+  * yields data-file hashes and declared companion values together.
+  * [[manifest]] collects it once to the driver; verification, diffing and
+  * every done-signal are then comparisons of the collected maps, so a
+  * caller that already holds a directory's [[DirManifest]] (a pipeline task
+  * after its write) reuses it instead of hashing the directory again.
   */
 object FileSync {
 
-  /** (rel_path, sha1) recomputed from file contents (excludes `.sha1`
-    * companions and hidden dotfiles, like the reference's
-    * `sync.is_hidden_file` skip). */
-  def actualChecksums(spark: SparkSession, root: String): DataFrame =
-    spark.read.format("binaryFile")
-      .option("recursiveFileLookup", "true")
-      .load(root)
-      .where(!col("path").endsWith(".sha1") &&
-        !element_at(split(col("path"), "/"), -1).startsWith("."))
-      .select(relPath(root), sha1(col("content")).as("sha1"))
+  /** Every listed file under `root` as (rel_path, sha1, n_bytes,
+    * declared). Spark's file listing already skips `_`/`.`-prefixed names
+    * (`_SUCCESS`, `.crc`), recursively. */
+  def scan(spark: SparkSession, root: String): DataFrame =
+    spark.read.format("binaryFile").option("recursiveFileLookup", "true").load(root)
+      .select(relPath(root), sha1(col("content")).as("sha1"), col("length").as("n_bytes"),
+        when(col("path").endsWith(".sha1"),
+          split(trim(col("content").cast("string")), "\\s+").getItem(0)).as("declared"))
 
-  /** (rel_path, sha1) as declared by the `.sha1` companion files
-    * (first whitespace-separated token, like `sha1sum` output). */
-  def declaredChecksums(spark: SparkSession, root: String): DataFrame =
-    spark.read.format("binaryFile")
-      .option("recursiveFileLookup", "true")
-      .option("pathGlobFilter", "*.sha1")
-      .load(root)
-      .select(
-        regexp_replace(relPath(root), "\\.sha1$", "").as("rel_path"),
-        split(trim(col("content").cast("string")), "\\s+").getItem(0).as("sha1"))
+  /** [[scan]] collected and sorted: the directory's one hashing pass. */
+  def manifest(spark: SparkSession, root: String): DirManifest =
+    DirManifest(root, scan(spark, root).collect()
+      .map(r => ManifestEntry(r.getString(0), r.getString(1), r.getString(3)))
+      .sortBy(e => UTF8String.fromString(e.relPath)).toSeq)
+
+  /** (rel_path, sha1) of the data files, recomputed from their contents. */
+  def actualChecksums(spark: SparkSession, root: String): DataFrame =
+    spark.createDataFrame(manifest(spark, root).checksums.toSeq).toDF("rel_path", "sha1")
 
   /** Strips everything up to the FIRST occurrence of the root prefix
     * (reluctant `^.*?` — a greedy `.*` would match up to the LAST
@@ -48,55 +72,61 @@ object FileSync {
     regexp_replace(col("path"), s"^.*?${java.util.regex.Pattern.quote(root.stripSuffix("/"))}/", "")
       .as("rel_path")
 
-  /** Files whose recomputed checksum disagrees with the declared one, or
-    * with a missing/orphaned companion (the reference aborts the sync on
-    * any of these). */
-  def verifyChecksums(spark: SparkSession, root: String): DataFrame = {
-    val actual = actualChecksums(spark, root).withColumnRenamed("sha1", "actual_sha1")
-    val declared = declaredChecksums(spark, root).withColumnRenamed("sha1", "declared_sha1")
-    actual.join(declared, Seq("rel_path"), "full_outer")
-      .withColumn("status",
-        when(col("actual_sha1").isNull, "companion_without_file")
-          .when(col("declared_sha1").isNull, "missing_companion")
-          .when(col("actual_sha1") =!= col("declared_sha1"), "checksum_mismatch")
-          .otherwise("ok"))
-      .where(col("status") =!= "ok")
-      .select("rel_path", "status", "declared_sha1", "actual_sha1")
-  }
+  /** Keys whose values differ between two maps as (key, label, a's
+    * value, b's value), in key order; the label is `labels._1` for a key
+    * only in `a`, `._2` for one only in `b`, `._3` for one in both. */
+  private def mismatches(a: Map[String, String], b: Map[String, String],
+                         labels: (String, String, String)): Seq[(String, String, String, String)] =
+    (a.keySet ++ b.keySet).toSeq.sorted.map(p => (p, a.get(p), b.get(p))).collect {
+      case (p, x, y) if x != y =>
+        (p, if (y.isEmpty) labels._1 else if (x.isEmpty) labels._2 else labels._3, x.orNull, y.orNull)
+    }
+
+  /** (rel_path, status, declared_sha1, actual_sha1) for every file whose
+    * recomputed checksum disagrees with the declared one, or with a
+    * missing/orphaned companion (the reference aborts the sync on any of
+    * these). Empty when the directory verifies. */
+  def verify(m: DirManifest): Seq[(String, String, String, String)] =
+    mismatches(m.files.filter(_.declared != null).map(e => e.relPath.stripSuffix(".sha1") -> e.declared).toMap,
+      m.checksums, ("companion_without_file", "missing_companion", "checksum_mismatch"))
+
+  /** [[verify]] over a fresh manifest of `root`, as a frame. */
+  def verifyChecksums(spark: SparkSession, root: String): DataFrame =
+    spark.createDataFrame(verify(manifest(spark, root))).toDF("rel_path", "status", "declared_sha1", "actual_sha1")
+
+  /** Content-hash diff taking `dst` to `src` (what a sync would copy):
+    * (rel_path, added | removed | changed, dst sha1, src sha1). */
+  def diff(src: DirManifest, dst: DirManifest): Seq[(String, String, String, String)] =
+    mismatches(dst.checksums, src.checksums, ("removed", "added", "changed"))
 
   /** Directory diff on recomputed content hashes: added / removed /
-    * changed relative to `srcRoot` → `dstRoot` (what a sync would copy). */
-  def diffDirs(spark: SparkSession, srcRoot: String, dstRoot: String): DataFrame = {
-    val src = actualChecksums(spark, srcRoot)
-    val dst = actualChecksums(spark, dstRoot)
-    // SnapshotDiff semantics: dst is "old", src is "new" — "added" means
-    // present in src but not yet in dst
-    SnapshotDiff.diff(dst, src, "rel_path", Seq("sha1"))
-  }
+    * changed relative to `srcRoot` → `dstRoot`, with [[SnapshotDiff]]'s
+    * (rel_path, status, old_sig, new_sig) columns. */
+  def diffDirs(spark: SparkSession, srcRoot: String, dstRoot: String): DataFrame =
+    spark.createDataFrame(diff(manifest(spark, srcRoot), manifest(spark, dstRoot))).toDF("rel_path", "status", "old", "new")
+      .select(col("rel_path"), col("status"), md5(col("old")).as("old_sig"), md5(col("new")).as("new_sig"))
 
   /** Apply the diff (reference: `sync.sync_dirs` copies added/changed and
-    * removes deleted files). Hashing/diffing is distributed; the apply
-    * loop is driver-side over the DELTA only — bounded by what actually
-    * changed, exactly like the reference's copy loop — and goes through
-    * the Hadoop FileSystem API so any cluster store works.
+    * removes deleted files). Hashing is distributed; the apply loop is
+    * driver-side over the DELTA only — bounded by what actually changed,
+    * exactly like the reference's copy loop — and goes through the Hadoop
+    * FileSystem API so any cluster store works.
     * @return the applied delta (rel_path, status). */
-  def syncDirs(spark: SparkSession, srcRoot: String, dstRoot: String): Seq[(String, String)] = {
-    import org.apache.hadoop.fs.Path
-    val delta = diffDirs(spark, srcRoot, dstRoot)
-      .select("rel_path", "status").collect()
-      .map(r => (r.getString(0), r.getString(1)))
+  def syncDirs(spark: SparkSession, srcRoot: String, dstRoot: String): Seq[(String, String)] =
+    sync(spark, manifest(spark, srcRoot), manifest(spark, dstRoot))
+
+  /** [[syncDirs]] over manifests the caller already holds. */
+  def sync(spark: SparkSession, src: DirManifest, dst: DirManifest): Seq[(String, String)] = {
+    val delta = diff(src, dst).map(d => (d._1, d._2))
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(dstRoot).getFileSystem(conf)
+    val fs = new Path(dst.root).getFileSystem(conf)
     delta.foreach {
-      case (rel, "removed") =>
-        fs.delete(new Path(s"$dstRoot/$rel"), false)
+      case (rel, "removed") => fs.delete(new Path(s"${dst.root}/$rel"), false)
       case (rel, _) => // added | changed
-        val to = new Path(s"$dstRoot/$rel")
+        val (from, to) = (new Path(s"${src.root}/$rel"), new Path(s"${dst.root}/$rel"))
         fs.mkdirs(to.getParent)
-        org.apache.hadoop.fs.FileUtil.copy(
-          new Path(s"$srcRoot/$rel").getFileSystem(conf), new Path(s"$srcRoot/$rel"),
-          fs, to, false, true, conf)
+        FileUtil.copy(from.getFileSystem(conf), from, fs, to, false, true, conf)
     }
-    delta.toSeq
+    delta
   }
 }

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import java.nio.file.Path
 
-import graft.operators.{CodebookDecode, EavMelt, EntityMerge, FileSync}
+import graft.operators.{CodebookDecode, DirManifest, EavMelt, EntityMerge, FileSync}
 import graft.sources.{DelimitedConfig, DelimitedSource}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -48,31 +48,48 @@ final case class PipelineConfig(
   * Each task's done-signal is the content signature of its output dir, so
   * an unchanged pipeline is a no-op and a drop-zone delta re-runs exactly
   * the affected cone — Luigi's `BaseTask.complete` semantics.
+  *
+  * Hashing: each directory state is scanned once ([[FileSync.manifest]],
+  * collected to the driver). The drop zone is hashed by the Dag's probe,
+  * and sync verifies and diffs that same manifest; a task's output dir is
+  * hashed once after its write, and that manifest serves its lineage
+  * commit and its done-signal. A no-op run is the one probe scan.
   */
 object GraftPipeline {
 
   /** The reference's `calc_done_signal_content`: sorted `file checksum`
-    * lines — computed distributively, rendered driver-side (bounded). */
+    * lines — hashed distributively, rendered driver-side (bounded). */
   def doneSignal(spark: SparkSession, dir: String): String =
     if (!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dir))) ""
-    else FileSync.actualChecksums(spark, dir)
-      .orderBy("rel_path").collect()
-      .map(r => s"${r.getString(0)} ${r.getString(1)}").mkString("\n")
+    else FileSync.manifest(spark, dir).signal
 
   def build(spark: SparkSession, cfg: PipelineConfig): Dag = {
     import spark.implicits._
 
+    // the Dag probes `externalInput` right before it decides to run sync:
+    // that drop-zone manifest is the one sync verifies and copies from
+    var dropZone: Option[DirManifest] = None
+    def probe(): String = { dropZone = Some(FileSync.manifest(spark, cfg.dropDir)); dropZone.get.signal }
+
+    /** Hash a task's output dir once, after its write: the one manifest
+      * gives the lineage commit and the task's done-signal. */
+    def published(dir: String, message: String): String = {
+      val m = FileSync.manifest(spark, dir)
+      cfg.lineageDir.foreach(Lineage.commit(spark, _, m, message))
+      m.signal
+    }
+
     def sync(): String = {
       // the reference os.makedirs's its work dirs up front (main.py:61-63)
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(cfg.inputDataDir))
-      val bad = FileSync.verifyChecksums(spark, cfg.dropDir).collect()
+      val drop = dropZone.getOrElse(FileSync.manifest(spark, cfg.dropDir))
+      val bad = FileSync.verify(drop)
       require(bad.isEmpty, s"drop-zone checksum failures: ${bad.mkString(", ")}")
-      FileSync.syncDirs(spark, cfg.dropDir, cfg.inputDataDir)
+      FileSync.sync(spark, drop, FileSync.manifest(spark, cfg.inputDataDir))
       // the reference's commit_input_data GitCommit (main.py:206-207);
       // Lineage skips the commit when content is unchanged, like the
       // reference's "no changes" branch
-      cfg.lineageDir.foreach(Lineage.commit(spark, _, cfg.inputDataDir, "Add new input data."))
-      doneSignal(spark, cfg.inputDataDir)
+      published(cfg.inputDataDir, "Add new input data.")
     }
 
     def sources2csr(): String = {
@@ -96,8 +113,7 @@ object GraftPipeline {
       TransmartLoad.writeStaging(obs.orderBy("entity_id", "concept_cd"),
         cfg.stagingDir, "observations", singleFile = true)
       // commit_transmart_staging (main.py:219-220)
-      cfg.lineageDir.foreach(Lineage.commit(spark, _, cfg.stagingDir, "Add transmart data."))
-      doneSignal(spark, cfg.stagingDir)
+      published(cfg.stagingDir, "Add transmart data.")
     }
 
     def load(): String =
@@ -117,8 +133,7 @@ object GraftPipeline {
     }
 
     new Dag(Seq(
-      Task("sync", Nil, run = sync _,
-        externalInput = () => doneSignal(spark, cfg.dropDir)),
+      Task("sync", Nil, run = sync _, externalInput = probe _),
       Task("sources2csr", Seq("sync"), sources2csr _),
       Task("csr2transmart", Seq("sources2csr"), csr2transmart _),
       Task("load", Seq("csr2transmart"), load _)) ++

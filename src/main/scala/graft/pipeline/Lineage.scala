@@ -1,8 +1,10 @@
 package graft.pipeline
 
-import graft.operators.FileSync
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.operators.{DirManifest, FileSync}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Data-directory version control — the reference keeps its staged data
   * under a dedicated git repo and commits after each pipeline stage
@@ -13,11 +15,12 @@ import org.apache.spark.sql.functions._
   * graft re-expresses that as a content-addressed ledger + snapshot store
   * driven by the engine's own distributed hashing:
   *  - version id  = sha1 of the directory's (rel_path, sha1) manifest
-  *    ([[TransmartLoad.doneSignal]] — computed distributed, collected
-  *    bounded);
+  *    ([[TransmartLoad.signalOf]] over a [[FileSync.manifest]] — hashed
+  *    distributed, collected bounded; a caller that holds the manifest of
+  *    the directory it just wrote passes it in and nothing is rehashed);
   *  - commit      = skip when the head version matches (the reference's
   *    "no changes" branch), else copy the delta into
-  *    `objects/<version>` via [[FileSync.syncDirs]] (only changed files
+  *    `objects/<version>` via [[FileSync.sync]] (only changed files
   *    move — the object dirs are full trees, the copies are incremental)
   *    and append one ledger row;
   *  - checkout    = syncDirs from the snapshot back over the data dir
@@ -41,42 +44,47 @@ object Lineage {
   private def ledgerPath(root: String) = s"$root/ledger"
   private def objectPath(root: String, vid: String) = s"$root/objects/$vid"
 
-  /** Ledger rows for this store, oldest first (empty frame if none). */
-  def history(spark: SparkSession, ledgerRoot: String): DataFrame = {
-    val path = new org.apache.hadoop.fs.Path(ledgerPath(ledgerRoot))
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(path)) spark.read.parquet(path.toString).orderBy("seq")
-    else {
-      import org.apache.spark.sql.types._
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(
-          StructField("seq", LongType), StructField("version_id", StringType),
-          StructField("parent_id", StringType), StructField("data_dir", StringType),
-          StructField("message", StringType), StructField("n_changed", LongType),
-          StructField("committed_at", LongType))))
-    }
+  // the ledger is read with its schema declared: no footer-inference job
+  private val LedgerSchema = StructType.fromDDL("seq BIGINT, version_id STRING, parent_id STRING, " +
+    "data_dir STRING, message STRING, n_changed BIGINT, committed_at BIGINT")
+
+  private def ledger(spark: SparkSession, ledgerRoot: String): Option[DataFrame] = {
+    val path = new Path(ledgerPath(ledgerRoot))
+    Option.when(path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path))(
+      spark.read.schema(LedgerSchema).parquet(path.toString))
   }
+
+  /** Ledger rows for this store, oldest first (empty frame if none). */
+  def history(spark: SparkSession, ledgerRoot: String): DataFrame =
+    ledger(spark, ledgerRoot).map(_.orderBy("seq")).getOrElse(
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), LedgerSchema))
 
   /** Commit the directory's current content. Returns (version_id, true)
     * when a new version was recorded, (head version_id, false) when the
     * content already matches the head — the reference's skip branch. */
-  def commit(spark: SparkSession, ledgerRoot: String, dataDir: String,
-             message: String): (String, Boolean) = {
-    val vid = versionId(spark, dataDir)
-    val head = history(spark, ledgerRoot)
-      .orderBy(col("seq").desc).limit(1)
-      .select("seq", "version_id").collect().headOption
+  def commit(spark: SparkSession, ledgerRoot: String, dataDir: String, message: String): (String, Boolean) =
+    commit(spark, ledgerRoot, FileSync.manifest(spark, dataDir), message)
+
+  /** [[commit]] of the directory `data` is a manifest of. */
+  def commit(spark: SparkSession, ledgerRoot: String, data: DirManifest, message: String): (String, Boolean) = {
+    val vid = sha1Hex(TransmartLoad.signalOf(data))
+    val head = ledger(spark, ledgerRoot).flatMap(_.orderBy(col("seq").desc).limit(1)
+      .select("seq", "version_id").collect().headOption)
     if (head.exists(_.getString(1) == vid)) (vid, false)
     else {
-      val obj = new org.apache.hadoop.fs.Path(objectPath(ledgerRoot, vid))
-      obj.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(obj)
-      val delta = FileSync.syncDirs(spark, dataDir, obj.toString)
+      val obj = new Path(objectPath(ledgerRoot, vid))
+      val fs = obj.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      // a fresh object dir is known empty; one left by an earlier commit
+      // of the same content is diffed like any other target
+      val stored = if (fs.exists(obj)) FileSync.manifest(spark, obj.toString) else DirManifest(obj.toString, Nil)
+      fs.mkdirs(obj)
+      val delta = FileSync.sync(spark, data, stored)
       val row = Seq((
         head.map(_.getLong(0) + 1).getOrElse(0L), vid,
-        head.map(_.getString(1)).orNull, dataDir, message,
+        head.map(_.getString(1)).orNull, data.root, message,
         delta.size.toLong, System.currentTimeMillis()))
       import spark.implicits._
-      row.toDF("seq", "version_id", "parent_id", "data_dir", "message", "n_changed", "committed_at")
+      row.toDF(LedgerSchema.fieldNames.toSeq: _*)
         .coalesce(1).write.mode("append").parquet(ledgerPath(ledgerRoot))
       (vid, true)
     }

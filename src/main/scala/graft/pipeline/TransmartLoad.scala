@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.operators.{DirManifest, FileSync}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -10,8 +11,8 @@ import org.apache.spark.sql.functions._
   * checksummed/versioned (luigi-pipeline/main.py:120-147 load step;
   * scripts/checksum.py sha1 companions; git_commons.py lineage commits).
   * The Spark-native equivalent: each table is written as delimited text by
-  * the cluster (splittable, parallel), and the lineage record is a
-  * manifest DataFrame of (file, sha1, n_bytes) computed distributively —
+  * the cluster (splittable, parallel), and the lineage record is the
+  * directory's [[FileSync.scan]] — hashed distributively, collected once —
   * the same signature content a [[Dag]] task publishes as its done-signal.
   */
 object TransmartLoad {
@@ -28,28 +29,21 @@ object TransmartLoad {
       .csv(s"$dir/$name")
   }
 
-  /** Distributed manifest of a staged directory: (rel_path, sha1, n_bytes).
-    * Sorted rendering of this frame == the Dag done-signal content
-    * (main.py:66 calc_done_signal_content is the same `file checksum`
-    * list, computed single-node). */
+  /** Distributed manifest of a staged directory: (rel_path, sha1, n_bytes)
+    * — [[FileSync.scan]] without `_SUCCESS` markers. Sorted rendering of
+    * this frame == the Dag done-signal content (main.py:66
+    * calc_done_signal_content is the same `file checksum` list, computed
+    * single-node). */
   def manifest(spark: SparkSession, dir: String): DataFrame =
-    spark.read.format("binaryFile")
-      .option("recursiveFileLookup", "true")
-      .load(dir)
-      .where(!col("path").endsWith("_SUCCESS"))
-      .select(
-        // reluctant anchored strip: first occurrence of the root prefix
-        // (greedy would mis-key when the root string repeats in a path)
-        regexp_replace(col("path"), s"^.*?${java.util.regex.Pattern.quote(dir.stripSuffix("/"))}/", "").as("rel_path"),
-        sha1(col("content")).as("sha1"),
-        length(col("content")).cast("long").as("n_bytes"))
+    FileSync.scan(spark, dir).where(!col("rel_path").endsWith("_SUCCESS"))
+      .select("rel_path", "sha1", "n_bytes")
 
-  /** Done-signal content for a staged dir (driver-side render of the
-    * distributed manifest — bounded: one line per file). */
+  /** Done-signal content for a staged dir: one hashing pass, rendered on
+    * the driver (bounded: one line per file). */
   def doneSignal(spark: SparkSession, dir: String): String =
-    manifest(spark, dir)
-      .orderBy("rel_path")
-      .collect()
-      .map(r => s"${r.getString(0)} ${r.getString(1)}")
-      .mkString("\n")
+    signalOf(FileSync.manifest(spark, dir))
+
+  /** [[doneSignal]] of a manifest already taken: every file but
+    * `_SUCCESS` markers, companions included. */
+  def signalOf(m: DirManifest): String = m.render(!_.relPath.endsWith("_SUCCESS"))
 }

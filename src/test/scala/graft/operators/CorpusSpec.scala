@@ -422,6 +422,16 @@ class CorpusSpec extends AnyFunSuite {
       s"sliding chunks unexpectedly shift-stable ($disturbed of ${multiWindow.size})")
   }
 
+  test("vocab fit reads only the text column") {
+    import spark.implicits._
+    val tiny = Seq("beta alpha beta", "gamma beta alpha").toDF("text")
+    assert(CorpusQueries.vocabOf(tiny, 2).orderBy("id").as[(String, Long)].collect().toSeq ==
+      Seq("beta" -> 1L, "alpha" -> 2L))
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val full = CorpusQueries.vocabOf(docs, 30).orderBy("id").collect().toSeq
+    assert(full.size == 30 && CorpusQueries.vocabOf(docs.select("text"), 30).orderBy("id").collect().toSeq == full)
+  }
+
   test("tokenize ids: oov + in-vocab accounting, bounded head length") {
     val rows = CorpusQueries.queries("docs_tokenize_ids").fn(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))

@@ -7,6 +7,8 @@ import java.security.MessageDigest
 import graft.TestSpark
 import graft.operators.EavMelt
 import graft.sources.{ColSpec, DelimitedConfig}
+import org.apache.spark.graftbridge.ListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end: the reference's sync → sources2csr → csr2transmart → load
@@ -132,6 +134,44 @@ class GraftPipelineSpec extends AnyFunSuite {
     assert(cc.keySet == obs2.select("concept_cd").distinct()
       .collect().map(_.getString(0)).toSet)
     assert(cc.values.sum == obs2.count())
+  }
+
+  /** Spark jobs launched by `body` — tagged through a local property,
+    * which Spark copies onto every job the thread starts (broadcast and
+    * subquery threads included). */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val (key, tag) = ("graft.test.jobCount", System.nanoTime().toString)
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(key) == tag)) n.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    sc.setLocalProperty(key, tag)
+    try body
+    finally {
+      sc.setLocalProperty(key, null)
+      ListenerBridge.flush(sc)
+      sc.removeSparkListener(l)
+    }
+    n.get
+  }
+
+  // Spark jobs of a cold run of this spec's pipeline (lineage and cache
+  // on) with each directory hashed once per state; the per-caller rescans
+  // in sync, lineage and done-signals, with a sort per signal, took 55
+  private val ColdJobs = 28
+
+  test("job-count guard: a no-op run is the one probe job; a cold run stays at its count") {
+    val (root, cfg) = mkCfg()
+    seedDropZone(root)
+    val cold = jobsOf(GraftPipeline.run(spark, cfg))
+    assert(cold <= ColdJobs, s"cold run launched $cold Spark jobs, recorded $ColdJobs")
+    var report: DagReport = null
+    val noop = jobsOf { report = GraftPipeline.run(spark, cfg) }
+    assert(report.ran.isEmpty)
+    assert(noop == 1, s"no-op run launched $noop Spark jobs, expected the drop-zone probe only")
   }
 
   test("corrupted drop-zone checksum aborts the sync (reference semantics)") {

@@ -225,7 +225,9 @@ object Bench {
       // exact verifies)
       "dedup_repeated_spans", "dedup_ngram_jaccard",
       // r15: the tokenized-documents frame (text/corpus token fronts)
-      "text_token_diversity")
+      "text_token_diversity",
+      // the hashed per-source shingle sets (PPJoin family, sorted Jaccard)
+      "dedup_source_overlap")
     stageGated.filter(n => only.forall(_(n))).foreach { name =>
       try {
         SparkEntry.queries(name)(spark, sfDir).write.mode("overwrite").format("noop").save()

@@ -21,6 +21,9 @@ object EavMelt {
   case object TextValue extends ValueKind
   case object DateValue extends ValueKind
 
+  /** The melted frame's columns, in order. */
+  val Columns: Seq[String] = Seq("entity_id", "concept_cd", "num_value", "str_value", "date_value")
+
   /** @param entityCol entity key column (becomes entity_id)
     * @param attrs     (columnName, conceptCode, kind)
     */
@@ -34,8 +37,8 @@ object EavMelt {
       val conceptLit = concept.replace("\\", "\\\\").replace("'", "\\'")
       s"'$conceptLit', $numE, $strE, $datE"
     }.mkString(", ")
-    df.select(col(entityCol).as("entity_id"),
-        expr(s"stack(${attrs.size}, $stackArgs) AS (concept_cd, num_value, str_value, date_value)"))
+    df.select(col(entityCol).as(Columns.head),
+        expr(s"stack(${attrs.size}, $stackArgs) AS (${Columns.tail.mkString(", ")})"))
       .filter(col("num_value").isNotNull || col("str_value").isNotNull || col("date_value").isNotNull)
   }
 }

@@ -24,6 +24,13 @@ final case class DirManifest(root: String, files: Seq[ManifestEntry]) {
     files.filter(keep).map(e => s"${e.relPath} ${e.sha1}").mkString("\n")
   /** The reference's `calc_done_signal_content` (main.py:66) over the data files. */
   def signal: String = render(isData)
+  /** The manifest of subdirectory `rel`: its entries with the `rel/`
+    * prefix stripped. Stripping a common prefix keeps the UTF-8 order. */
+  def subdir(rel: String): DirManifest = {
+    val prefix = s"$rel/"
+    DirManifest(s"${root.stripSuffix("/")}/$rel",
+      files.collect { case e if e.relPath.startsWith(prefix) => e.copy(relPath = e.relPath.stripPrefix(prefix)) })
+  }
 }
 
 /** Distributed drop-zone sync (SURVEY §2.2 rows 17+22, file level).

@@ -1,7 +1,12 @@
 package graft.pipeline
 
+import java.util.concurrent.{CompletionException, Executors}
+
+import scala.util.Try
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftSqlBridge
 
 /** Post-load aggregate-cache rebuild.
   *
@@ -41,7 +46,13 @@ object AggCache {
 
   /** Rebuild every cache table under `cacheDir` and swap atomically
     * (write to `.tmp`, two renames; a crash mid-swap leaves the previous
-    * cache recoverable under `.old`, never a half-written mix). */
+    * cache recoverable under `.old`, never a half-written mix).
+    *
+    * The summaries are independent, so their writes run concurrently, one
+    * thread each, carrying the caller's local properties: their jobs keep
+    * the caller's job group and tags. The swap waits for every write; if
+    * one fails, the others still finish, the failure is rethrown and the
+    * live cache is left as it was. */
   def rebuild(obs: DataFrame, cacheDir: String): Unit = {
     val spark = obs.sparkSession
     val conf = spark.sparkContext.hadoopConfiguration
@@ -49,8 +60,13 @@ object AggCache {
     val fs = target.getFileSystem(conf)
     val tmp = new org.apache.hadoop.fs.Path(s"$cacheDir.tmp")
     if (fs.exists(tmp)) fs.delete(tmp, true)
-    summaries(obs).foreach { case (name, df) =>
-      df.write.mode("overwrite").parquet(s"$tmp/$name")
+    val pool = Executors.newFixedThreadPool(Tables.size)
+    val failures = try summaries(obs).toSeq.map { case (name, df) =>
+      GraftSqlBridge.withThreadLocalCaptured(spark, pool)(df.write.mode("overwrite").parquet(s"$tmp/$name"))
+    }.flatMap(w => Try(w.join()).failed.toOption) finally pool.shutdown()
+    failures.headOption.foreach {
+      case e: CompletionException if e.getCause != null => throw e.getCause
+      case e => throw e
     }
     val old = new org.apache.hadoop.fs.Path(s"$cacheDir.old")
     if (fs.exists(old)) fs.delete(old, true)

@@ -4,8 +4,9 @@ import java.nio.file.Path
 
 import graft.operators.{CodebookDecode, DirManifest, EavMelt, EntityMerge, FileSync}
 import graft.sources.{DelimitedConfig, DelimitedSource}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** One delimited source file in the drop zone (priority = list order). */
 final case class SourceSpec(fileName: String, cfg: DelimitedConfig)
@@ -54,6 +55,25 @@ final case class PipelineConfig(
   * and sync verifies and diffs that same manifest; a task's output dir is
   * hashed once after its write, and that manifest serves its lineage
   * commit and its done-signal. A no-op run is the one probe scan.
+  *
+  * Job budget: each task runs only the Spark jobs its outputs need, and
+  * its independent jobs run together.
+  *  - sync: the input dir's manifest after the copy (the drop zone's is
+  *    the probe's).
+  *  - sources2csr: the source scans and the merge's exchanges, then one
+  *    exchange into a single partition, the write, and the manifest.
+  *  - csr2transmart: the melt's exchange into a single partition, the
+  *    write, and the `staging` manifest. Its read declares the CSR's
+  *    all-string schema (`entityKey +: attrs`), so no job infers the
+  *    header, and a header that disagrees fails the scan instead of
+  *    shifting columns.
+  *  - load: none. Its signal is the `observations/` part of the manifest
+  *    csr2transmart took; it hashes the directory itself only when
+  *    csr2transmart was skipped in this execution.
+  *  - cache_rebuild: three summary writes submitted together
+  *    ([[AggCache.rebuild]]) over a schema-declared read, and the manifest.
+  * Lineage adds a ledger read and an append per commit. The single-file
+  * writes are sorted without range sampling ([[TransmartLoad.writeStaging]]).
   */
 object GraftPipeline {
 
@@ -63,20 +83,34 @@ object GraftPipeline {
     if (!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dir))) ""
     else FileSync.manifest(spark, dir).signal
 
+  /** Read a staged TSV as all-string `columns`: no inference job, and the
+    * scan fails on a header that disagrees with them. */
+  private def readStaged(spark: SparkSession, path: String, columns: Seq[String]): DataFrame =
+    spark.read.schema(StructType(columns.map(StructField(_, StringType))))
+      .option("delimiter", "\t").option("header", "true").option("enforceSchema", "false")
+      .csv(path)
+
   def build(spark: SparkSession, cfg: PipelineConfig): Dag = {
     import spark.implicits._
 
     // the Dag probes `externalInput` right before it decides to run sync:
-    // that drop-zone manifest is the one sync verifies and copies from
+    // that drop-zone manifest is the one sync verifies and copies from.
+    // The probe starts every execution, so it also drops the `staging`
+    // manifest a previous execution's csr2transmart left for load.
     var dropZone: Option[DirManifest] = None
-    def probe(): String = { dropZone = Some(FileSync.manifest(spark, cfg.dropDir)); dropZone.get.signal }
+    var staged: Option[DirManifest] = None
+    def probe(): String = {
+      staged = None
+      dropZone = Some(FileSync.manifest(spark, cfg.dropDir))
+      dropZone.get.signal
+    }
 
     /** Hash a task's output dir once, after its write: the one manifest
       * gives the lineage commit and the task's done-signal. */
-    def published(dir: String, message: String): String = {
+    def published(dir: String, message: String): DirManifest = {
       val m = FileSync.manifest(spark, dir)
       cfg.lineageDir.foreach(Lineage.commit(spark, _, m, message))
-      m.signal
+      m
     }
 
     def sync(): String = {
@@ -89,7 +123,7 @@ object GraftPipeline {
       // the reference's commit_input_data GitCommit (main.py:206-207);
       // Lineage skips the commit when content is unchanged, like the
       // reference's "no changes" branch
-      published(cfg.inputDataDir, "Add new input data.")
+      published(cfg.inputDataDir, "Add new input data.").signal
     }
 
     def sources2csr(): String = {
@@ -101,34 +135,33 @@ object GraftPipeline {
         else CodebookDecode.decodeAll(merged,
           cfg.codebook.map(_._1).distinct.filter(cfg.attrs.contains),
           cfg.codebook.toDF("column_name", "code", "label"))
-      TransmartLoad.writeStaging(decoded.orderBy(cfg.entityKey), cfg.workingDir, "csr", singleFile = true)
+      // the merge leaves one row per entity key
+      TransmartLoad.writeStaging(decoded, cfg.workingDir, "csr", sortedBy = Seq(cfg.entityKey))
       doneSignal(spark, cfg.workingDir)
     }
 
     def csr2transmart(): String = {
-      val csr = spark.read
-        .option("delimiter", "\t").option("header", "true")
-        .csv(s"${cfg.workingDir}/csr")
+      val csr = readStaged(spark, s"${cfg.workingDir}/csr", cfg.entityKey +: cfg.attrs)
       val obs = EavMelt.melt(csr, cfg.entityKey, cfg.concepts)
-      TransmartLoad.writeStaging(obs.orderBy("entity_id", "concept_cd"),
-        cfg.stagingDir, "observations", singleFile = true)
+      // one melted cell per (entity, concept)
+      TransmartLoad.writeStaging(obs, cfg.stagingDir, "observations", sortedBy = Seq("entity_id", "concept_cd"))
       // commit_transmart_staging (main.py:219-220)
-      published(cfg.stagingDir, "Add transmart data.")
+      val m = published(cfg.stagingDir, "Add transmart data.")
+      staged = Some(m)
+      m.signal
     }
 
-    def load(): String =
-      TransmartLoad.doneSignal(spark, s"${cfg.stagingDir}/observations")
+    def load(): String = TransmartLoad.signalOf(
+      staged.fold(FileSync.manifest(spark, s"${cfg.stagingDir}/observations"))(_.subdir("observations")))
 
     // after_data_loading: rebuild the aggregate caches over the loaded
     // observations (scripts/transmart_api_calls.py cache cycle)
     def cacheRebuild(dir: String): String = {
-      val staged = spark.read
-        .option("delimiter", "\t").option("header", "true")
-        .csv(s"${cfg.stagingDir}/observations")
+      val loaded = readStaged(spark, s"${cfg.stagingDir}/observations", EavMelt.Columns)
         .select(col("entity_id").as("patient_num"),
           col("concept_cd").as("concept_path"),
           col("num_value").cast("double").as("num_value"))
-      AggCache.rebuild(staged, dir)
+      AggCache.rebuild(loaded, dir)
       doneSignal(spark, dir)
     }
 

@@ -18,11 +18,15 @@ import org.apache.spark.sql.functions._
 object TransmartLoad {
 
   /** Write `df` as headered TSV under `dir/name/` (parallel part files —
-    * a 100 TB table writes from every executor; transmart-copy-style
-    * single-file staging is a `coalesce(1)` the caller opts into). */
+    * a 100 TB table writes from every executor). A non-empty `sortedBy`
+    * opts into transmart-copy-style single-file staging: one file sorted
+    * by those keys, which must be unique per row so the bytes are fixed.
+    * It is one exchange into a single partition and a sort inside it; a
+    * global `orderBy` would add a range-sampling job that re-runs the
+    * whole upstream plan to pick bounds a single partition does not use. */
   def writeStaging(df: DataFrame, dir: String, name: String,
-                   singleFile: Boolean = false): Unit = {
-    val out = if (singleFile) df.coalesce(1) else df
+                   sortedBy: Seq[String] = Nil): Unit = {
+    val out = if (sortedBy.isEmpty) df else df.repartition(1).sortWithinPartitions(sortedBy.map(col): _*)
     out.write.mode("overwrite")
       .option("delimiter", "\t").option("header", "true")
       .option("emptyValue", "")

@@ -52,4 +52,20 @@ class AggCacheSpec extends AnyFunSuite {
     assert(pc.count() > 0)
     assert(new java.io.File(dir).exists()) // restored in place
   }
+
+  test("a failing summary leaves the live cache intact") {
+    val base = Files.createTempDirectory("graft-cache4").toString
+    val dir = s"$base/cache"
+    AggCache.rebuild(obs, dir)
+    def snapshot() = AggCache.Tables.map(t => t -> AggCache.read(spark, dir, t).collect().toSet).toMap
+    val before = snapshot()
+    // a non-numeric num_value: the counts still build, but numeric_stats'
+    // decimal cast fails under ANSI
+    import spark.implicits._
+    val bad = Seq((1L, "c", "not-a-number")).toDF("patient_num", "concept_path", "num_value")
+    intercept[Exception](AggCache.rebuild(bad, dir))
+    assert(snapshot() == before)
+    AggCache.rebuild(obs, dir)
+    assert(new java.io.File(base).listFiles().map(_.getName).toSet == Set("cache"))
+  }
 }

@@ -136,17 +136,21 @@ class GraftPipelineSpec extends AnyFunSuite {
     assert(cc.values.sum == obs2.count())
   }
 
-  /** Spark jobs launched by `body` — tagged through a local property,
-    * which Spark copies onto every job the thread starts (broadcast and
-    * subquery threads included). */
-  private def jobsOf(body: => Unit): Int = {
+  /** Spark jobs launched by `body`: those tagged through a local
+    * property, which Spark copies onto every job the thread starts
+    * (broadcast and subquery threads included, and the cache writes that
+    * carry the caller's properties), and every job started meanwhile. */
+  private def jobsOf(body: => Unit): (Int, Int) = {
     val sc = spark.sparkContext
     val (key, tag) = ("graft.test.jobCount", System.nanoTime().toString)
-    val n = new java.util.concurrent.atomic.AtomicInteger
+    val (tagged, all) = (new java.util.concurrent.atomic.AtomicInteger, new java.util.concurrent.atomic.AtomicInteger)
     val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(key) == tag)) n.incrementAndGet()
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        all.incrementAndGet()
+        if (Option(e.properties).exists(_.getProperty(key) == tag)) tagged.incrementAndGet()
+      }
     }
+    ListenerBridge.flush(sc) // earlier jobs' events are not this body's
     sc.addSparkListener(l)
     sc.setLocalProperty(key, tag)
     try body
@@ -155,23 +159,61 @@ class GraftPipelineSpec extends AnyFunSuite {
       ListenerBridge.flush(sc)
       sc.removeSparkListener(l)
     }
-    n.get
+    (tagged.get, all.get)
   }
 
   // Spark jobs of a cold run of this spec's pipeline (lineage and cache
-  // on) with each directory hashed once per state; the per-caller rescans
-  // in sync, lineage and done-signals, with a sort per signal, took 55
-  private val ColdJobs = 28
+  // on): a task that starts re-deriving what the pipeline already holds
+  // (a header, a sort's range bounds, a directory's hashes) exceeds it
+  private val ColdJobs = 23
 
   test("job-count guard: a no-op run is the one probe job; a cold run stays at its count") {
     val (root, cfg) = mkCfg()
     seedDropZone(root)
-    val cold = jobsOf(GraftPipeline.run(spark, cfg))
+    val (cold, coldAll) = jobsOf(GraftPipeline.run(spark, cfg))
     assert(cold <= ColdJobs, s"cold run launched $cold Spark jobs, recorded $ColdJobs")
+    assert(cold == coldAll, s"${coldAll - cold} of the cold run's $coldAll jobs lost the caller's local properties")
     var report: DagReport = null
-    val noop = jobsOf { report = GraftPipeline.run(spark, cfg) }
+    val (noop, _) = jobsOf { report = GraftPipeline.run(spark, cfg) }
     assert(report.ran.isEmpty)
     assert(noop == 1, s"no-op run launched $noop Spark jobs, expected the drop-zone probe only")
+  }
+
+  test("load signs csr2transmart's manifest; with csr2transmart skipped it rescans to the same signal") {
+    val (root, cfg) = mkCfg()
+    seedDropZone(root)
+    GraftPipeline.run(spark, cfg)
+    val store = new FileSignalStore(cfg.signalsDir)
+    val stored = store.get("load").get
+    assert(stored.dropWhile(_ != '\n').drop(1) == TransmartLoad.doneSignal(spark, s"${cfg.stagingDir}/observations"))
+    Files.delete(cfg.signalsDir.resolve(".done-load"))
+    val r = GraftPipeline.run(spark, cfg)
+    assert(r.ran == Seq("load"))
+    assert(store.get("load").contains(stored))
+  }
+
+  test("a staged CSR whose header disagrees with the config fails csr2transmart's read") {
+    val (root, cfg) = mkCfg()
+    seedDropZone(root)
+    GraftPipeline.run(spark, cfg)
+    val staged = Files.readAllBytes(Files.list(root.resolve("staging/observations"))
+      .filter(_.getFileName.toString.endsWith(".csv")).findFirst().get)
+    // swap two attribute names in the CSR header, data rows untouched
+    val csr = Files.list(root.resolve("working/csr"))
+      .filter(_.getFileName.toString.endsWith(".csv")).findFirst().get
+    val lines = new String(Files.readAllBytes(csr), StandardCharsets.UTF_8).split("\n", -1)
+    assert(lines.head == (cfg.entityKey +: cfg.attrs).mkString("\t"))
+    lines(0) = Seq("individual_id", "sex", "name", "birth_date", "segment").mkString("\t")
+    Files.write(csr, lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
+    Files.delete(csr.resolveSibling(s".${csr.getFileName}.crc")) // the local FS's stale checksum
+    Files.delete(cfg.signalsDir.resolve(".done-csr2transmart"))
+    val ex = intercept[Exception](GraftPipeline.run(spark, cfg))
+    val chain = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    assert(chain.contains("does not conform to the schema"), chain)
+    // nothing shifted was staged
+    val after = Files.list(root.resolve("staging/observations"))
+      .filter(_.getFileName.toString.endsWith(".csv")).findFirst().get
+    assert(java.util.Arrays.equals(Files.readAllBytes(after), staged))
   }
 
   test("corrupted drop-zone checksum aborts the sync (reference semantics)") {

@@ -12,7 +12,8 @@ class TransmartLoadSpec extends AnyFunSuite {
   test("writeStaging emits headered TSV that round-trips") {
     val dir = Files.createTempDirectory("graft-load").toString
     val df = Seq((1L, "aé", 1.5), (2L, "b", 2.0)).toDF("patient_num", "name", "v")
-    TransmartLoad.writeStaging(df, dir, "patients", singleFile = true)
+    TransmartLoad.writeStaging(df, dir, "patients", sortedBy = Seq("patient_num"))
+    assert(new java.io.File(s"$dir/patients").listFiles().count(_.getName.endsWith(".csv")) == 1)
     val back = spark.read
       .option("delimiter", "\t").option("header", "true")
       .csv(s"$dir/patients")
@@ -24,12 +25,12 @@ class TransmartLoadSpec extends AnyFunSuite {
   test("manifest + doneSignal: stable content signature, changes with data") {
     val dir = Files.createTempDirectory("graft-load2").toString
     val df = Seq((1L, "x")).toDF("k", "v")
-    TransmartLoad.writeStaging(df, dir, "t", singleFile = true)
+    TransmartLoad.writeStaging(df, dir, "t", sortedBy = Seq("k"))
     val m1 = TransmartLoad.manifest(spark, s"$dir/t").collect()
     assert(m1.nonEmpty && m1.forall(_.getString(1).matches("[0-9a-f]{40}")))
     val sig1 = TransmartLoad.doneSignal(spark, s"$dir/t")
     assert(sig1 == TransmartLoad.doneSignal(spark, s"$dir/t")) // deterministic
-    TransmartLoad.writeStaging(Seq((2L, "y")).toDF("k", "v"), dir, "t", singleFile = true)
+    TransmartLoad.writeStaging(Seq((2L, "y")).toDF("k", "v"), dir, "t", sortedBy = Seq("k"))
     assert(sig1 != TransmartLoad.doneSignal(spark, s"$dir/t")) // content-sensitive
   }
 
@@ -42,11 +43,11 @@ class TransmartLoadSpec extends AnyFunSuite {
         run = () => TransmartLoad.doneSignal(spark, s"$dir/t"),
         externalInput = () => TransmartLoad.doneSignal(spark, s"$dir/t")),
       Task("load", Seq("stage"), () => { loads += 1; "loaded" })))
-    TransmartLoad.writeStaging(Seq((1L, "x")).toDF("k", "v"), dir, "t", singleFile = true)
+    TransmartLoad.writeStaging(Seq((1L, "x")).toDF("k", "v"), dir, "t", sortedBy = Seq("k"))
     dag().execute(store)
     dag().execute(store)
     assert(loads == 1) // unchanged staging → load skipped on rerun
-    TransmartLoad.writeStaging(Seq((9L, "z")).toDF("k", "v"), dir, "t", singleFile = true)
+    TransmartLoad.writeStaging(Seq((9L, "z")).toDF("k", "v"), dir, "t", sortedBy = Seq("k"))
     dag().execute(store)
     assert(loads == 2) // restaged content → load re-ran
   }

@@ -1,6 +1,8 @@
 package graft.plans
 
 import graft.TestSpark
+import org.apache.spark.sql.execution.{ReusedSubqueryExec, SubqueryExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,7 +12,7 @@ class BloomPruneSpec extends AnyFunSuite {
 
   test("mightContain: no false negatives, thresholded false positives") {
     val build = (1L to 1000L).filter(_ % 3 == 0).toDF("k")
-    val sketch = BloomPrune.buildFilter(build, col("k"), expectedItems = 1000, fpp = 0.01)
+    val sketch = BloomPrune.sketch(build, col("k"), expectedItems = 1000, fpp = 0.01)
     val probed = (1L to 1000L).toDF("k")
       .withColumn("hit", BloomPrune.mightContain(spark, sketch, col("k")))
       .as[(Long, Boolean)].collect()
@@ -46,5 +48,22 @@ class BloomPruneSpec extends AnyFunSuite {
     // physical plans print top-down: the Filter must sit BELOW the join
     // (deeper = later index) on the probe branch
     assert(joinAt >= 0 && filterAt > joinAt, plan)
+  }
+
+  test("one sketch aggregation per call: the inferred build-side filter reuses the subquery") {
+    implicit val s: org.apache.spark.sql.SparkSession = spark
+    val t = graft.sources.Tables(TestSpark.Sf0001)
+    val build = t.orders.where(col("o_orderpriority") === "1-URGENT").select("o_orderkey")
+    val df = BloomPrune.prunedSemiJoin(spark, t.lineitem, col("l_orderkey"),
+        build, col("o_orderkey"), expectedItems = 10000)
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    val subqueries = new AdaptiveSparkPlanHelper {}.collectWithSubqueries(plan) {
+      case _: SubqueryExec => "run"
+      case _: ReusedSubqueryExec => "reused"
+    }
+    // the probe-side filter and the one Spark infers onto the broadcast
+    // side through the join key: one sketch subquery run, one reuse
+    assert(subqueries.sorted == Seq("reused", "run"), plan.toString)
   }
 }

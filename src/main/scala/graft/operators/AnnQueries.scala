@@ -1788,6 +1788,22 @@ object AnnQueries {
     }
   private val lshPairs: Seq[(Int, Int)] = hyperplanePairs(LshBands * LshRows)
 
+  /** Band `b`'s sign-LSH hash over the hyperplane pairs `prs`: bit r is
+    * set when the embedding is larger on the first coordinate of pair
+    * `b * nRows + r`. */
+  private def bandHash(prs: Seq[(Int, Int)], nRows: Int, b: Int): Column =
+    (0 until nRows).map { r =>
+      val (i, j) = prs(b * nRows + r)
+      when(col("embedding")(i) > col("embedding")(j), lit(1 << r)).otherwise(lit(0))
+    }.reduce(_ + _)
+
+  /** Band `b`'s per-bit margins |v[i] − v[j]| in double: the multiprobe
+    * flips the lowest-margin bit ([[flippedHashCol]]). */
+  private def bandMargins(prs: Seq[(Int, Int)], nRows: Int, b: Int): Column = array((0 until nRows).map { r =>
+    val (i, j) = prs(b * nRows + r)
+    abs(col("embedding")(i).cast("double") - col("embedding")(j).cast("double"))
+  }: _*)
+
   /** §29b — near-neighbor pairs via random-hyperplane LSH: 64 sign bits →
     * 8 bands × 8 bits, candidates = pairs sharing any band's 8-bit bucket,
     * then exact-cosine rerank. The whole-corpus all-pairs product never
@@ -1814,21 +1830,12 @@ object AnnQueries {
     implicit val s: SparkSession = spark
     val emb = Tables(dir).embeddings
     val prs = hyperplanePairs(nBands * nRows)
-    def bandHash(b: Int): Column =
-      (0 until nRows).map { r =>
-        val (i, j) = prs(b * nRows + r)
-        when(col("embedding")(i) > col("embedding")(j), lit(1 << r)).otherwise(lit(0))
-      }.reduce(_ + _)
-    def bandMargins(b: Int): Column = array((0 until nRows).map { r =>
-      val (i, j) = prs(b * nRows + r)
-      abs(col("embedding")(i).cast("double") - col("embedding")(j).cast("double"))
-    }: _*)
 
     val bands =
       if (!multiprobe) {
         emb.select(col("vec_id"),
             explode(array((0 until nBands).map(b =>
-              struct(lit(b).as("band_id"), bandHash(b).as("band_hash"))): _*)).as("b"))
+              struct(lit(b).as("band_id"), bandHash(prs, nRows, b).as("band_hash"))): _*)).as("b"))
           .select(col("vec_id"), col("b.band_id").as("band_id"), col("b.band_hash").as("band_hash"))
       } else {
         // compute h + margins ONCE per (vector, band) in a single Generate;
@@ -1837,7 +1844,7 @@ object AnnQueries {
         // scan + signature arithmetic twice)
         val sig = emb.select(col("vec_id"),
             explode(array((0 until nBands).map(b =>
-              struct(lit(b).as("band_id"), bandHash(b).as("h"), bandMargins(b).as("m"))): _*)).as("s"))
+              struct(lit(b).as("band_id"), bandHash(prs, nRows, b).as("h"), bandMargins(prs, nRows, b).as("m"))): _*)).as("s"))
           .select(col("vec_id"), col("s.band_id").as("band_id"), col("s.h").as("h"), col("s.m").as("m"))
         val flipped = flippedHashCol(nRows)
         sig.select(col("vec_id"), col("band_id"),
@@ -1950,17 +1957,12 @@ object AnnQueries {
     val path = s"/tmp/graft_lshsig_${new java.io.File(dir).getName}"
     Stage.ensure(path, s"$dir/embeddings.parquet") {
       val prs = hyperplanePairs(MpBands * MpRows)
-      def bandHash(b: Int): Column =
-        (0 until MpRows).map { r =>
-          val (i, j) = prs(b * MpRows + r)
-          when(col("embedding")(i) > col("embedding")(j), lit(1 << r)).otherwise(lit(0))
-        }.reduce(_ + _)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("band_id"), col("band_hash")).orderBy(col("vec_id"))
       Tables(dir).embeddings
         .select(col("vec_id"),
           explode(array((0 until MpBands).map(b =>
-            struct(lit(b).as("band_id"), bandHash(b).as("band_hash"))): _*)).as("b"))
+            struct(lit(b).as("band_id"), bandHash(prs, MpRows, b).as("band_hash"))): _*)).as("b"))
         .select(col("vec_id"), col("b.band_id").as("band_id"), col("b.band_hash").as("band_hash"))
         .withColumn("rn", row_number().over(w)).where(col("rn") <= LshServeCap)
         .select("band_id", "band_hash", "vec_id")
@@ -1986,19 +1988,10 @@ object AnnQueries {
     implicit val s: SparkSession = spark
     val emb = Tables(dir).embeddings
     val prs = hyperplanePairs(MpBands * MpRows)
-    def bandHash(b: Int): Column =
-      (0 until MpRows).map { r =>
-        val (i, j) = prs(b * MpRows + r)
-        when(col("embedding")(i) > col("embedding")(j), lit(1 << r)).otherwise(lit(0))
-      }.reduce(_ + _)
-    def bandMargins(b: Int): Column = array((0 until MpRows).map { r =>
-      val (i, j) = prs(b * MpRows + r)
-      abs(col("embedding")(i).cast("double") - col("embedding")(j).cast("double"))
-    }: _*)
     val sig = emb.where(col("vec_id") % ProbeMod === 0)
       .select(col("vec_id").as("probe_id"),
         explode(array((0 until MpBands).map(b =>
-          struct(lit(b).as("band_id"), bandHash(b).as("h"), bandMargins(b).as("m"))): _*)).as("s"))
+          struct(lit(b).as("band_id"), bandHash(prs, MpRows, b).as("h"), bandMargins(prs, MpRows, b).as("m"))): _*)).as("s"))
       .select(col("probe_id"), col("s.band_id").as("band_id"),
         col("s.h").as("h"), col("s.m").as("m"))
     val probeBuckets = sig.select(col("probe_id"), col("band_id"),
@@ -2114,15 +2107,10 @@ object AnnQueries {
       .where(col("cos") >= CosineThreshold)
       .select("id_a", "id_b").distinct()
     val prs = lshPairs
-    def bandHash(b: Int): Column =
-      (0 until LshRows).map { r =>
-        val (i, j) = prs(b * LshRows + r)
-        when(col("embedding")(i) > col("embedding")(j), lit(1 << r)).otherwise(lit(0))
-      }.reduce(_ + _)
     val bands = emb
       .select(col("vec_id"),
         explode(array((0 until LshBands).map(b =>
-          struct(lit(b).as("band_id"), bandHash(b).as("band_hash"))): _*)).as("b"))
+          struct(lit(b).as("band_id"), bandHash(prs, LshRows, b).as("band_hash"))): _*)).as("b"))
       .select(col("vec_id"), col("b.band_id").as("band_id"), col("b.band_hash").as("band_hash"))
     val aBands = bands.join(anchors, Seq("vec_id"))
       .select(col("vec_id").as("a_id"), col("band_id"), col("band_hash"))

@@ -1,19 +1,27 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileUtil, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.commons.codec.digest.DigestUtils
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
+import org.apache.spark.network.util.JavaUtils
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.unsafe.types.UTF8String
 
-/** One listed file: its content sha1 and, for a `.sha1` companion, the
-  * checksum it declares (first whitespace-separated token, like `sha1sum`
-  * output; null for every other file). */
-final case class ManifestEntry(relPath: String, sha1: String, declared: String)
+/** One listed file: its content sha1, its length from the listing and, for
+  * a `.sha1` companion, the checksum it declares (first
+  * whitespace-separated token, like `sha1sum` output; null for every other
+  * file). */
+final case class ManifestEntry(relPath: String, sha1: String, declared: String, nBytes: Long)
 
 /** A directory's manifest, collected to the driver (one entry per file —
   * the same bound as the done-signal it renders) and sorted by rel_path in
   * Spark's string order (UTF-8 bytes, not `String.compareTo`), so every
-  * rendering equals what an `orderBy("rel_path")` over the scan gives. */
+  * rendering equals what an `orderBy("rel_path")` over a scan gives. */
 final case class DirManifest(root: String, files: Seq[ManifestEntry]) {
   /** (rel_path → sha1) of the data files: no `.sha1` companions, no hidden
     * dotfiles (the reference's `sync.is_hidden_file` skip). */
@@ -33,7 +41,7 @@ final case class DirManifest(root: String, files: Seq[ManifestEntry]) {
   }
 }
 
-/** Distributed drop-zone sync (SURVEY §2.2 rows 17+22, file level).
+/** Drop-zone sync (SURVEY §2.2 rows 17+22, file level).
   *
   * The reference's scripts/sync.py pairs every data file with a `.sha1`
   * companion, verifies the declared checksum against the recomputed one
@@ -41,43 +49,73 @@ final case class DirManifest(root: String, files: Seq[ManifestEntry]) {
   * into added/removed/changed sets (`sync.py:142 sync_dirs`,
   * `:113 get_checksum_pairs_set`).
   *
-  * Spark-first shape: [[scan]] is the one `binaryFile` read of a
-  * directory — distributed and splittable across files, so a drop zone
-  * with millions of files hashes in parallel across the cluster — and it
-  * yields data-file hashes and declared companion values together.
-  * [[manifest]] collects it once to the driver; verification, diffing and
-  * every done-signal are then comparisons of the collected maps, so a
-  * caller that already holds a directory's [[DirManifest]] (a pipeline task
-  * after its write) reuses it instead of hashing the directory again.
+  * [[manifest]] is the one hashing pass over a directory: Spark's own file
+  * listing, then one streaming sha1 per file that also reads a companion's
+  * declared value. A directory whose bytes fit one scan split
+  * (`spark.sql.files.maxPartitionBytes`) is hashed on the driver, the way
+  * the reference hashes on one node — a Spark job would cost more to
+  * schedule than the read. A bigger one is hashed by a plain RDD map across
+  * the cluster, so a drop zone with millions of files still hashes in
+  * parallel. Verification, diffing and every done-signal are comparisons
+  * of the collected maps, so a caller that already holds a directory's
+  * [[DirManifest]] (a pipeline task after its write) reuses it instead of
+  * hashing the directory again.
   */
 object FileSync {
 
-  /** Every listed file under `root` as (rel_path, sha1, n_bytes,
-    * declared). Spark's file listing already skips `_`/`.`-prefixed names
-    * (`_SUCCESS`, `.crc`), recursively. */
-  def scan(spark: SparkSession, root: String): DataFrame =
-    spark.read.format("binaryFile").option("recursiveFileLookup", "true").load(root)
-      .select(relPath(root), sha1(col("content")).as("sha1"), col("length").as("n_bytes"),
-        when(col("path").endsWith(".sha1"),
-          split(trim(col("content").cast("string")), "\\s+").getItem(0)).as("declared"))
+  /** Every listed file under `root`, hashed and sorted: the directory's
+    * one hashing pass. It lists what a `binaryFile` read with
+    * `recursiveFileLookup` yields rows for: `_`/`.`-prefixed names such as
+    * `_SUCCESS` and `.crc` are skipped, recursively, and so are empty
+    * files. A missing root throws PATH_NOT_FOUND like that read: an empty
+    * manifest would tell [[sync]] to delete every file of the target. */
+  def manifest(spark: SparkSession, root: String): DirManifest = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val path = new Path(root)
+    val fs = path.getFileSystem(conf)
+    val qualified = fs.makeQualified(path)
+    if (!fs.exists(qualified)) throw new AnalysisException("PATH_NOT_FOUND", Map("path" -> qualified.toString))
+    val listed = new InMemoryFileIndex(spark, Seq(qualified), Map("recursiveFileLookup" -> "true"), None)
+      .allFiles().filter(_.getLen > 0)
+    val split = JavaUtils.byteStringAsBytes(spark.conf.get(SQLConf.FILES_MAX_PARTITION_BYTES.key))
+    val total = listed.map(_.getLen).sum
+    val hashed =
+      if (total <= split) listed.map(f => hash(fs, f.getPath))
+      else {
+        val entries = conf.iterator.asScala.map(e => e.getKey -> e.getValue).toMap
+        val slices = math.min(listed.size.toLong, total / split + 1).toInt
+        spark.sparkContext.parallelize(listed.map(_.getPath.toString), slices)
+          .mapPartitions { paths =>
+            val c = new Configuration(false)
+            entries.foreach { case (k, v) => c.set(k, v) }
+            paths.map { p => val path = new Path(p); hash(path.getFileSystem(c), path) }
+          }.collect().toSeq
+      }
+    val base = s"${qualified.toUri.getPath.stripSuffix("/")}/"
+    DirManifest(root, listed.zip(hashed).map { case (f, (sha, declared)) =>
+      ManifestEntry(f.getPath.toUri.getPath.stripPrefix(base), sha, declared, f.getLen)
+    }.sortBy(e => UTF8String.fromString(e.relPath)))
+  }
 
-  /** [[scan]] collected and sorted: the directory's one hashing pass. */
-  def manifest(spark: SparkSession, root: String): DirManifest =
-    DirManifest(root, scan(spark, root).collect()
-      .map(r => ManifestEntry(r.getString(0), r.getString(1), r.getString(3)))
-      .sortBy(e => UTF8String.fromString(e.relPath)).toSeq)
+  /** A file's sha1 hex, streamed, and for a `.sha1` companion its declared
+    * value, parsed exactly as `split(trim(cast(content as string)),
+    * '\\s+')[0]`: only spaces are trimmed, so a leading newline or tab
+    * declares "". */
+  private def hash(fs: FileSystem, path: Path): (String, String) = {
+    val in = fs.open(path)
+    try {
+      if (!path.getName.endsWith(".sha1")) (DigestUtils.sha1Hex(in), null)
+      else {
+        val bytes = in.readAllBytes()
+        (DigestUtils.sha1Hex(bytes),
+          UTF8String.fromBytes(bytes).trim().split(UTF8String.fromString("\\s+"), -1)(0).toString)
+      }
+    } finally in.close()
+  }
 
   /** (rel_path, sha1) of the data files, recomputed from their contents. */
   def actualChecksums(spark: SparkSession, root: String): DataFrame =
     spark.createDataFrame(manifest(spark, root).checksums.toSeq).toDF("rel_path", "sha1")
-
-  /** Strips everything up to the FIRST occurrence of the root prefix
-    * (reluctant `^.*?` — a greedy `.*` would match up to the LAST
-    * occurrence and mis-key the diff if the root string repeats inside a
-    * file's absolute path, e.g. root `/data/x`, file `/data/x/data/x/y`). */
-  private def relPath(root: String) =
-    regexp_replace(col("path"), s"^.*?${java.util.regex.Pattern.quote(root.stripSuffix("/"))}/", "")
-      .as("rel_path")
 
   /** Keys whose values differ between two maps as (key, label, a's
     * value, b's value), in key order; the label is `labels._1` for a key
@@ -114,10 +152,10 @@ object FileSync {
       .select(col("rel_path"), col("status"), md5(col("old")).as("old_sig"), md5(col("new")).as("new_sig"))
 
   /** Apply the diff (reference: `sync.sync_dirs` copies added/changed and
-    * removes deleted files). Hashing is distributed; the apply loop is
-    * driver-side over the DELTA only — bounded by what actually changed,
-    * exactly like the reference's copy loop — and goes through the Hadoop
-    * FileSystem API so any cluster store works.
+    * removes deleted files). The apply loop is driver-side over the DELTA
+    * only — bounded by what actually changed, exactly like the reference's
+    * copy loop — and goes through the Hadoop FileSystem API so any cluster
+    * store works.
     * @return the applied delta (rel_path, status). */
   def syncDirs(spark: SparkSession, srcRoot: String, dstRoot: String): Seq[(String, String)] =
     sync(spark, manifest(spark, srcRoot), manifest(spark, dstRoot))

@@ -4,6 +4,7 @@ import java.nio.file.Path
 
 import graft.operators.{CodebookDecode, DirManifest, EavMelt, EntityMerge, FileSync}
 import graft.sources.{DelimitedConfig, DelimitedSource}
+import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -50,38 +51,44 @@ final case class PipelineConfig(
   * an unchanged pipeline is a no-op and a drop-zone delta re-runs exactly
   * the affected cone — Luigi's `BaseTask.complete` semantics.
   *
-  * Hashing: each directory state is scanned once ([[FileSync.manifest]],
-  * collected to the driver). The drop zone is hashed by the Dag's probe,
-  * and sync verifies and diffs that same manifest; a task's output dir is
+  * Hashing: each directory state is hashed once ([[FileSync.manifest]]:
+  * Spark's file listing, sha1 on the driver while the bytes fit one scan
+  * split, else an RDD map). The drop zone is hashed by the Dag's probe, and
+  * sync verifies and diffs that same manifest; a task's output dir is
   * hashed once after its write, and that manifest serves its lineage
-  * commit and its done-signal. A no-op run is the one probe scan.
+  * commit and its done-signal. A no-op run is the one probe and launches
+  * no Spark job.
   *
   * Job budget: each task runs only the Spark jobs its outputs need, and
-  * its independent jobs run together.
-  *  - sync: the input dir's manifest after the copy (the drop zone's is
-  *    the probe's).
+  * its independent jobs run together. Lineage commits launch none, and a
+  * manifest none while its directory's bytes fit one scan split.
+  *  - sync: none; the copy is a driver-side loop over the delta.
   *  - sources2csr: the source scans and the merge's exchanges, then one
-  *    exchange into a single partition, the write, and the manifest.
-  *  - csr2transmart: the melt's exchange into a single partition, the
-  *    write, and the `staging` manifest. Its read declares the CSR's
-  *    all-string schema (`entityKey +: attrs`), so no job infers the
-  *    header, and a header that disagrees fails the scan instead of
-  *    shifting columns.
+  *    exchange into a single partition and the write.
+  *  - csr2transmart: the melt's exchange into a single partition and the
+  *    write. Its read declares the CSR's all-string schema
+  *    (`entityKey +: attrs`), so no job infers the header, and a header
+  *    that disagrees fails the scan instead of shifting columns.
   *  - load: none. Its signal is the `observations/` part of the manifest
   *    csr2transmart took; it hashes the directory itself only when
   *    csr2transmart was skipped in this execution.
   *  - cache_rebuild: three summary writes submitted together
-  *    ([[AggCache.rebuild]]) over a schema-declared read, and the manifest.
-  * Lineage adds a ledger read and an append per commit. The single-file
-  * writes are sorted without range sampling ([[TransmartLoad.writeStaging]]).
+  *    ([[AggCache.rebuild]]) over a schema-declared read.
+  * The single-file writes are sorted without range sampling
+  * ([[TransmartLoad.writeStaging]]).
   */
 object GraftPipeline {
 
   /** The reference's `calc_done_signal_content`: sorted `file checksum`
-    * lines — hashed distributively, rendered driver-side (bounded). */
-  def doneSignal(spark: SparkSession, dir: String): String =
-    if (!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dir))) ""
-    else FileSync.manifest(spark, dir).signal
+    * lines of `dir`'s manifest ("" while `dir` is no directory yet). */
+  def doneSignal(spark: SparkSession, dir: String): String = {
+    val (fs, path) = (fsOf(spark, dir), new HPath(dir))
+    if (fs.exists(path) && fs.getFileStatus(path).isDirectory) FileSync.manifest(spark, dir).signal else ""
+  }
+
+  /** The Hadoop file system of `dir`: pipeline dirs may be URIs. */
+  private def fsOf(spark: SparkSession, dir: String): FileSystem =
+    new HPath(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Read a staged TSV as all-string `columns`: no inference job, and the
     * scan fails on a header that disagrees with them. */
@@ -115,7 +122,7 @@ object GraftPipeline {
 
     def sync(): String = {
       // the reference os.makedirs's its work dirs up front (main.py:61-63)
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(cfg.inputDataDir))
+      fsOf(spark, cfg.inputDataDir).mkdirs(new HPath(cfg.inputDataDir))
       val drop = dropZone.getOrElse(FileSync.manifest(spark, cfg.dropDir))
       val bad = FileSync.verify(drop)
       require(bad.isEmpty, s"drop-zone checksum failures: ${bad.mkString(", ")}")

@@ -1,8 +1,8 @@
 package graft.pipeline
 
-import graft.operators.{DirManifest, FileSync}
+import graft.operators.{DirManifest, FileSync, ManifestEntry}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
 
 /** Load-stage surface: staged TSV export + checksum manifest.
   *
@@ -12,8 +12,9 @@ import org.apache.spark.sql.functions._
   * scripts/checksum.py sha1 companions; git_commons.py lineage commits).
   * The Spark-native equivalent: each table is written as delimited text by
   * the cluster (splittable, parallel), and the lineage record is the
-  * directory's [[FileSync.scan]] — hashed distributively, collected once —
-  * the same signature content a [[Dag]] task publishes as its done-signal.
+  * directory's [[FileSync.manifest]] — one hashing pass, on the driver or
+  * across the cluster by size — the same signature content a [[Dag]] task
+  * publishes as its done-signal.
   */
 object TransmartLoad {
 
@@ -33,14 +34,14 @@ object TransmartLoad {
       .csv(s"$dir/$name")
   }
 
-  /** Distributed manifest of a staged directory: (rel_path, sha1, n_bytes)
-    * — [[FileSync.scan]] without `_SUCCESS` markers. Sorted rendering of
-    * this frame == the Dag done-signal content (main.py:66
-    * calc_done_signal_content is the same `file checksum` list, computed
-    * single-node). */
+  /** Manifest of a staged directory as a frame: (rel_path, sha1, n_bytes)
+    * of [[FileSync.manifest]]'s files but `_SUCCESS` markers, in rel_path
+    * order, with n_bytes from the listing. Its rendering is the Dag
+    * done-signal content (main.py:66 calc_done_signal_content is the same
+    * `file checksum` list, computed single-node). */
   def manifest(spark: SparkSession, dir: String): DataFrame =
-    FileSync.scan(spark, dir).where(!col("rel_path").endsWith("_SUCCESS"))
-      .select("rel_path", "sha1", "n_bytes")
+    spark.createDataFrame(FileSync.manifest(spark, dir).files.filter(keep)
+      .map(e => (e.relPath, e.sha1, e.nBytes))).toDF("rel_path", "sha1", "n_bytes")
 
   /** Done-signal content for a staged dir: one hashing pass, rendered on
     * the driver (bounded: one line per file). */
@@ -49,5 +50,7 @@ object TransmartLoad {
 
   /** [[doneSignal]] of a manifest already taken: every file but
     * `_SUCCESS` markers, companions included. */
-  def signalOf(m: DirManifest): String = m.render(!_.relPath.endsWith("_SUCCESS"))
+  def signalOf(m: DirManifest): String = m.render(keep)
+
+  private def keep(e: ManifestEntry): Boolean = !e.relPath.endsWith("_SUCCESS")
 }

@@ -27,14 +27,17 @@ class GraftPipelineSpec extends AnyFunSuite {
       s"${sha1hex(content)}  $name\n".getBytes(StandardCharsets.UTF_8))
   }
 
-  private def mkCfg(): (Path, PipelineConfig) = {
+  /** A pipeline under a fresh temp root; with `uris`, every directory but
+    * the signals' is given as a `file://` URI. */
+  private def mkCfg(uris: Boolean = false): (Path, PipelineConfig) = {
     val root = Files.createTempDirectory("graft-pipe")
-    val dropDir = Files.createDirectory(root.resolve("drop"))
+    Files.createDirectory(root.resolve("drop"))
+    def dir(name: String) = if (uris) s"file://${root.resolve(name)}" else root.resolve(name).toString
     val cfg = PipelineConfig(
-      dropDir = dropDir.toString,
-      inputDataDir = root.resolve("input_data").toString,
-      workingDir = root.resolve("working").toString,
-      stagingDir = root.resolve("staging").toString,
+      dropDir = dir("drop"),
+      inputDataDir = dir("input_data"),
+      workingDir = dir("working"),
+      stagingDir = dir("staging"),
       signalsDir = root.resolve("signals"),
       sources = Seq(
         SourceSpec("individuals.csv", DelimitedConfig(";", header = true, columns = Seq(
@@ -54,9 +57,30 @@ class GraftPipelineSpec extends AnyFunSuite {
         ("sex", "Individual.sex", EavMelt.TextValue),
         ("birth_date", "Individual.birth_date", EavMelt.DateValue),
         ("segment", "Individual.segment", EavMelt.TextValue)),
-      lineageDir = Some(root.resolve("lineage").toString),
-      cacheDir = Some(root.resolve("cache").toString))
+      lineageDir = Some(dir("lineage")),
+      cacheDir = Some(dir("cache")))
     (root, cfg)
+  }
+
+  private val Delivery2 =
+    """individual_id,name,segment
+      |2,Robert,BUILDING
+      |3,Carol,MACHINERY
+      |4,Dan,FURNITURE
+      |5,Eve,HOUSEHOLD
+      |""".stripMargin
+
+  /** The bytes of the one staged observations file. */
+  private def stagedObservations(root: Path): Array[Byte] =
+    Files.readAllBytes(Files.list(root.resolve("staging/observations"))
+      .filter(_.getFileName.toString.endsWith(".csv")).findFirst().get)
+
+  /** Every file under `dir` as rel_path → bytes. */
+  private def tree(dir: Path): Map[String, Seq[Byte]] = {
+    val files = Files.walk(dir)
+    try files.filter(Files.isRegularFile(_)).toArray.map(_.asInstanceOf[Path])
+      .map(f => dir.relativize(f).toString -> Files.readAllBytes(f).toSeq).toMap
+    finally files.close()
   }
 
   private def seedDropZone(root: Path): Unit = {
@@ -111,13 +135,7 @@ class GraftPipelineSpec extends AnyFunSuite {
     assert(lineageMsgs().size == 2) // no new commits on a skipped run
 
     // drop-zone delta: a new individual arrives → whole cone re-runs
-    drop(root.resolve("drop"), "registry.csv",
-      """individual_id,name,segment
-        |2,Robert,BUILDING
-        |3,Carol,MACHINERY
-        |4,Dan,FURNITURE
-        |5,Eve,HOUSEHOLD
-        |""".stripMargin)
+    drop(root.resolve("drop"), "registry.csv", Delivery2)
     val r3 = GraftPipeline.run(spark, cfg)
     assert(r3.ran == Seq("sync", "sources2csr", "csr2transmart", "load", "cache_rebuild"))
     val obs2 = spark.read.option("delimiter", "\t").option("header", "true")
@@ -164,10 +182,11 @@ class GraftPipelineSpec extends AnyFunSuite {
 
   // Spark jobs of a cold run of this spec's pipeline (lineage and cache
   // on): a task that starts re-deriving what the pipeline already holds
-  // (a header, a sort's range bounds, a directory's hashes) exceeds it
-  private val ColdJobs = 23
+  // (a header, a sort's range bounds) or hashes a small directory through
+  // Spark exceeds it
+  private val ColdJobs = 14
 
-  test("job-count guard: a no-op run is the one probe job; a cold run stays at its count") {
+  test("job-count guard: a no-op run launches no Spark job; a cold run stays at its count") {
     val (root, cfg) = mkCfg()
     seedDropZone(root)
     val (cold, coldAll) = jobsOf(GraftPipeline.run(spark, cfg))
@@ -176,7 +195,7 @@ class GraftPipelineSpec extends AnyFunSuite {
     var report: DagReport = null
     val (noop, _) = jobsOf { report = GraftPipeline.run(spark, cfg) }
     assert(report.ran.isEmpty)
-    assert(noop == 1, s"no-op run launched $noop Spark jobs, expected the drop-zone probe only")
+    assert(noop == 0, s"no-op run launched $noop Spark jobs, expected none: the probe hashes on the driver")
   }
 
   test("load signs csr2transmart's manifest; with csr2transmart skipped it rescans to the same signal") {
@@ -225,5 +244,31 @@ class GraftPipelineSpec extends AnyFunSuite {
       GraftPipeline.run(spark, cfg)
     }
     assert(ex.getMessage.contains("checksum"))
+  }
+
+  test("a missing drop zone aborts the run and leaves input_data byte-identical") {
+    val (root, cfg) = mkCfg()
+    seedDropZone(root)
+    GraftPipeline.run(spark, cfg)
+    val input = tree(root.resolve("input_data"))
+    Files.walk(root.resolve("drop")).sorted(java.util.Comparator.reverseOrder()).forEach(Files.delete(_))
+    val ex = intercept[org.apache.spark.sql.AnalysisException](GraftPipeline.run(spark, cfg))
+    assert(ex.getCondition == "PATH_NOT_FOUND", ex.getMessage)
+    assert(tree(root.resolve("input_data")) == input)
+  }
+
+  test("file:// pipeline dirs: a delta run re-runs the cone and stages what plain paths stage") {
+    val runs = Seq(false, true).map { uris =>
+      val (root, cfg) = mkCfg(uris)
+      seedDropZone(root)
+      val cold = GraftPipeline.run(spark, cfg)
+      drop(root.resolve("drop"), "registry.csv", Delivery2)
+      val delta = GraftPipeline.run(spark, cfg)
+      (cold.ran, delta.ran, stagedObservations(root), tree(root.resolve("input_data")))
+    }
+    val all = Seq("sync", "sources2csr", "csr2transmart", "load", "cache_rebuild")
+    runs.foreach { case (cold, delta, _, _) => assert(cold == all && delta == all) }
+    assert(java.util.Arrays.equals(runs(0)._3, runs(1)._3))
+    assert(runs(0)._4 == runs(1)._4)
   }
 }

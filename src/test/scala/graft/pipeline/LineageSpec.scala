@@ -48,4 +48,27 @@ class LineageSpec extends AnyFunSuite {
       Lineage.checkout(spark, store, "deadbeef", data)
     }
   }
+
+  test("a leftover hidden temp entry is ignored by head, history and checkout") {
+    val root = Files.createTempDirectory("graft-lineage-tmp").toString
+    val data = s"$root/data"; val store = s"$root/store"
+    write(data, "a.csv", "k,v\n1,x\n")
+    val (v1, _) = Lineage.commit(spark, store, data, "initial load")
+    // a crash between writing an entry and renaming it into place
+    val ghost = "f" * 40
+    write(s"$store/ledger", s".${"%019d".format(1)}-$ghost.json.tmp",
+      s"""{"seq":1,"version_id":"$ghost","parent_id":"$v1","data_dir":"$data","message":"crashed","n_changed":1,"committed_at":0}\n""")
+    Files.createDirectories(Paths.get(store, "objects", ghost))
+    // head is still v1: unchanged content skips
+    assert(Lineage.commit(spark, store, data, "rerun") == (v1, false))
+    assert(Lineage.history(spark, store).select("version_id").collect().map(_.getString(0)).toSeq == Seq(v1))
+    assertThrows[IllegalArgumentException](Lineage.checkout(spark, store, ghost, data))
+    // the next real commit takes seq 1 and is parented on v1
+    write(data, "a.csv", "k,v\n1,y\n")
+    val (v2, did) = Lineage.commit(spark, store, data, "update")
+    assert(did)
+    val h = Lineage.history(spark, store).select("seq", "version_id", "parent_id")
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq
+    assert(h == Seq((0L, v1, null), (1L, v2, v1)))
+  }
 }

@@ -6,14 +6,16 @@ import java.security.MessageDigest
 import java.util.regex.Pattern
 
 import graft.TestSpark
-import graft.operators.FileSync
+import graft.operators.{FileSync, ManifestEntry}
+import org.apache.spark.graftbridge.ListenerBridge
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Done-signals and version ids rendered from the collected manifest are
   * byte-identical to the earlier per-caller Spark renderings (a
   * `binaryFile` scan sorted by `orderBy("rel_path")`), so `.done-*` files
-  * and lineage ledgers written before still match the same content. */
+  * and version ids written before still match the same content — whichever
+  * side of the scan-split gate the hashing ran on. */
 class SignalCompatSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -78,5 +80,43 @@ class SignalCompatSpec extends AnyFunSuite {
     assert(FileSync.syncDirs(spark, src.toString, dst.toString).map(_._2).toSet == Set("added"))
     assert(FileSync.diff(m, FileSync.manifest(spark, dst.toString)).isEmpty)
     assert(GraftPipeline.doneSignal(spark, dst.toString) == m.signal)
+  }
+
+  test("a session whose scan split is 1 byte hashes through an RDD to the same manifest") {
+    val root = Files.createTempDirectory("graft-signal-rdd")
+    Names.zipWithIndex.foreach { case (n, i) => put(root, n, s"payload $i\n") }
+    put(root, "é.csv.sha1", s"${sha1hex("payload 4\n")}  é.csv\n")
+    put(root, "empty.csv", "")
+    val child = spark.newSession()
+    child.conf.set("spark.sql.files.maxPartitionBytes", "1")
+    val sc = spark.sparkContext
+    val group = s"graft-signal-rdd-${System.nanoTime()}"
+    sc.setJobGroup(group, "manifest over a 1-byte split")
+    val split = try FileSync.manifest(child, root.toString) finally sc.clearJobGroup()
+    ListenerBridge.flush(sc)
+    assert(sc.statusTracker.getJobIdsForGroup(group).nonEmpty, "the 1-byte split did not hash through Spark")
+    assert(split == FileSync.manifest(spark, root.toString))
+  }
+
+  test("companion values and empty files parse as the binaryFile expression does") {
+    val root = Files.createTempDirectory("graft-signal-companion")
+    val hex = sha1hex("payload\n")
+    val companions = Seq(
+      s"\n$hex  a.csv\n", s"$hex\ta.csv\n", s"\t$hex\n", s"$hex  a.csv\r\n", s"$hex\r\n",
+      s"$hex trailing text here\n", s"   $hex   \n", hex, "", " ", s"$hex\u00a0a.csv\n")
+    put(root, "a.csv", "payload\n")
+    put(root, "empty.csv", "")
+    companions.zipWithIndex.foreach { case (c, i) => put(root, s"c$i.sha1", c) }
+    val expected = spark.read.format("binaryFile").option("recursiveFileLookup", "true").load(root.toString)
+      .select(
+        regexp_replace(col("path"), s"^.*?${Pattern.quote(root.toString)}/", ""),
+        sha1(col("content")), col("length"),
+        when(col("path").endsWith(".sha1"), split(trim(col("content").cast("string")), "\\s+").getItem(0)))
+      .collect().map(r => ManifestEntry(r.getString(0), r.getString(1), r.getString(3), r.getLong(2))).toSet
+    val m = FileSync.manifest(spark, root.toString)
+    assert(m.files.toSet == expected)
+    // a.csv and every companion but the empty one: empty files are not listed
+    assert(m.files.size == companions.size)
+    assert(m.files.find(_.relPath == "c0.sha1").get.declared == "") // a leading newline is not trimmed
   }
 }

@@ -91,8 +91,8 @@ object AnalyticsQueries {
     * map-side: scores and verdicts are per-row expressions. */
   def qualityFilter(spark: SparkSession, dir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    // single scoring definition shared with the streaming ingest gate
-    // (graft.streaming.DocStreams) so batch and stream cannot drift
+    // single scoring definition shared with CorpusPipeline's quality
+    // gate (DocStreams.scoredWith) so the query and the pipeline cannot drift
     graft.streaming.DocStreams.scored(Tables(dir).documents)
   }
 

@@ -525,19 +525,19 @@ object AnnQueries {
     val cents = centroids(spark, t).toSeq.map(_._2) // the SCALED tower: k ∝ corpus
     val probes = t.embeddings.where(col("vec_id") % ProbeMod === 0)
       .select(col("vec_id").as("probe_id"), col("embedding"))
-    val scored = twoLevelCandidateFrame(probes, t.embeddings, cents, broadcastProbes = true)
+    val scored = twoLevelCandidateFrame(probes, t.embeddings, cents)
     TopK.perKeyExec(scored, "probe_id", "cos", "vec_id", TopKK)
       .select(col("probe_id"), col("rank"), col("vec_id"), col("cos"))
   }
 
-  /** The two-level candidate frame shared by the batch query and the
-    * streaming twin ([[graft.streaming.AnnStream.twoLevelTopK]]) — both
-    * score the IDENTICAL (probe, candidate, cos) set. Corpus assignment
+  /** The two-level candidate frame shared by [[twoLevelTopK]], its
+    * recall audit and [[TwoLevelBench]] — all score the IDENTICAL
+    * (probe, candidate, cos) set. Corpus assignment
     * and probe navigation run on the single-pass kernels
     * ([[VectorExpressions.twoLevelAssignCol]]/[[VectorExpressions.twoLevelProbeCol]]);
     * `probeFrame` needs (probe_id, embedding). */
   private[graft] def twoLevelCandidateFrame(probeFrame: DataFrame, corpus: DataFrame,
-      cents: Seq[Array[Float]], broadcastProbes: Boolean): DataFrame = {
+      cents: Seq[Array[Float]]): DataFrame = {
     val (perGroup, _) = twoLevelGeometry(cents.length)
     val side = corpus
       .withColumn("cluster",
@@ -549,8 +549,7 @@ object AnnQueries {
         VectorExpressions.twoLevelProbeCol(col("embedding"), cents, perGroup, NProbeBuckets))
       .select(col("probe_id"), col("embedding").as("p_emb"), explode(col("top_c")).as("cluster"))
       .withColumn("p_norm", sqrt(VectorExpressions.dot(col("p_emb"), col("p_emb"))))
-    val pj = if (broadcastProbes) broadcast(p0) else p0
-    side.join(pj, Seq("cluster"))
+    side.join(broadcast(p0), Seq("cluster"))
       .where(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id"),
         round(VectorExpressions.dot(col("embedding"), col("p_emb"))
@@ -639,7 +638,7 @@ object AnnQueries {
     val probes = auditRestrict(t.embeddings.where(col("vec_id") % ProbeMod === 0))
       .select(col("vec_id").as("probe_id"), col("embedding"))
     val tl = TopK.perKeyExec(
-        twoLevelCandidateFrame(probes, t.embeddings, cents, broadcastProbes = true),
+        twoLevelCandidateFrame(probes, t.embeddings, cents),
         "probe_id", "cos", "vec_id", TopKK)
       .select("probe_id", "vec_id")
     val overlap = exact.join(tl, Seq("probe_id", "vec_id"))
@@ -735,23 +734,19 @@ object AnnQueries {
     val probes = t.embeddings
       .where(col("vec_id") % ProbeMod === 0 && expr(modalityCase("vec_id")) === "text")
       .select(col("vec_id").as("probe_id"), col("embedding"))
-    val scored = crossModalCandidateFrame(probes, t.embeddings, cents,
-      broadcastProbes = true)
+    val scored = crossModalCandidateFrame(probes, t.embeddings, cents)
     TopK.perKeyExec(scored, "probe_id", "cos", "vec_id", TopKK)
       .withColumn("modality", expr(modalityCase("vec_id")))
       .select(col("probe_id"), col("rank"), col("vec_id"), col("modality"), col("cos"))
   }
 
-  /** The cross-modal candidate frame shared by the batch query and the
-    * streaming twin ([[graft.streaming.AnnStream.crossModalTopK]]), so
-    * both score the IDENTICAL (probe, candidate, cos) set: non-text
+  /** The cross-modal candidate frame of [[crossModalTopK]]: non-text
     * corpus side cluster-assigned on the kernel, probes exploded to
     * their nprobe clusters, round-6 cosine off precomputed norms.
-    * `probeFrame` needs (probe_id, embedding); the batch path broadcasts
-    * the bounded probe set, the stream path leaves the micro-batch as
-    * the stream side of a stream-static join. */
-  private[graft] def crossModalCandidateFrame(probeFrame: DataFrame, corpus: DataFrame,
-      cents: Seq[Array[Float]], broadcastProbes: Boolean): DataFrame = {
+    * `probeFrame` needs (probe_id, embedding); the bounded probe set is
+    * broadcast. */
+  private def crossModalCandidateFrame(probeFrame: DataFrame, corpus: DataFrame,
+      cents: Seq[Array[Float]]): DataFrame = {
     val side = assignNearest(corpus.where(expr(modalityCase("vec_id")) =!= "text"), cents)
       .withColumn("c_norm", sqrt(VectorExpressions.dot(col("embedding"), col("embedding"))))
       .select(col("vec_id"), col("embedding"), col("cluster"), col("c_norm"))
@@ -760,19 +755,11 @@ object AnnQueries {
       .select(col("probe_id"), col("embedding").as("p_emb"),
         explode(expr("transform(top_c, x -> x.idx)")).as("cluster"))
       .withColumn("p_norm", sqrt(VectorExpressions.dot(col("p_emb"), col("p_emb"))))
-    val pj = if (broadcastProbes) broadcast(p0) else p0
-    side.join(pj, Seq("cluster"))
+    side.join(broadcast(p0), Seq("cluster"))
       .where(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id"),
         round(VectorExpressions.dot(col("embedding"), col("p_emb"))
           / (col("c_norm") * col("p_norm")), 6).as("cos"))
-  }
-
-  /** The seed-centroid tower for external consumers (the stream twin's
-    * bounded recipe — same memoized table the whole family shares). */
-  private[graft] def seedCentroids(spark: SparkSession, dir: String): Seq[Array[Float]] = {
-    implicit val s: SparkSession = spark
-    centroids(spark, Tables(dir)).toSeq.map(_._2)
   }
 
   private def crossModalSql =
@@ -2638,48 +2625,13 @@ object AnnQueries {
 
   /** Ensure the full IVF-PQ index (centroids + codebook + coded corpus)
     * is persisted for `dir` and return its path — the Stage-gated
-    * train/encode-once entry shared by the batch served query and the
-    * streaming server ([[graft.streaming.AnnStream.servedTopK]]). */
-  private[graft] def ivfPqServedIndex(spark: SparkSession, dir: String): String = {
+    * train/encode-once entry of the served query. */
+  private def ivfPqServedIndex(spark: SparkSession, dir: String): String = {
     val indexPath = s"/tmp/graft_ivfpq_idx_${new java.io.File(dir).getName}"
     Stage.ensure(indexPath, s"$dir/embeddings.parquet") {
       persistIvfPqCorpus(spark, dir, indexPath)
     }
     indexPath
-  }
-
-  /** Shortlist width / final k, exposed for the streaming server so its
-    * bounded heaps match the batch [[TopK.perKeyExec]] calls exactly. */
-  private[graft] def pqShortlistSize: Int = PqShortlist
-  private[graft] def serveTopKK: Int = TopKK
-
-  /** The IVF-PQ candidate stage as a STREAM-COMPATIBLE plan: given a
-    * (probe_id, embedding) frame — batch or streaming — derive each
-    * probe's nprobe buckets, ADC lookup tables, and norm map-side (only
-    * the bounded recipe is embedded as literals), join the coded corpus
-    * on cluster, and score candidates by ADC. Column expressions are the
-    * ones [[ivfPqSearchCoded]] uses, so candidate `approx` values are
-    * bit-identical to the batch search; the per-probe shortlist/top-k
-    * selection (a stateful op in a stream) is left to the caller.
-    * Output: (probe_id, p_emb, p_norm, vec_id, approx). */
-  private[graft] def ivfPqCandidateFrame(probeFrame: DataFrame, coded: DataFrame,
-                                         cents: Seq[Array[Float]],
-                                         cb: Array[Array[Array[Float]]]): DataFrame = {
-    def lutCol(m: Int): Column =
-      array(cb(m).map(cw => VectorExpressions.dot(sub(col("embedding"), m), typedlit(cw))): _*)
-        .as(s"lut_$m")
-    val probes = probeFrame
-      .withColumn("top_c", probeTopC(cents))
-      .select(Seq(col("probe_id"), col("embedding").as("p_emb"),
-        sqrt(VectorExpressions.dot(col("embedding"), col("embedding"))).as("p_norm"),
-        explode(expr("transform(top_c, x -> x.idx)")).as("cluster")) ++
-        (0 until PqM).map(lutCol): _*)
-    probes.join(coded, Seq("cluster"))
-      .where(col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("p_emb"), col("p_norm"), col("vec_id"),
-        round((0 until PqM).map(m =>
-            element_at(col(s"lut_$m"), col(s"code_$m") + 1))
-          .reduce(_ + _), 6).as("approx"))
   }
 
   private val ivfPqSql = {
@@ -3214,16 +3166,13 @@ object AnnQueries {
 
   /** Stage-1 candidate pool of the truncate-then-refine pipeline:
     * 4·k prefix-dim candidates per probe, re-ranked exactly. */
-  private[graft] val MrlCandK = 4 * TopKK
+  private val MrlCandK = 4 * TopKK
 
-  /** Stage-1 prefix-cosine candidate frame shared by [[matryoshkaRefine]]
-    * and the streaming twin ([[graft.streaming.AnnStream.matryoshkaTopK]]):
+  /** Stage-1 prefix-cosine candidate frame of [[matryoshkaRefine]]:
     * per (probe, corpus row), the d/4-prefix cosine as `approx`, with the
     * probe's FULL vector and norm carried along for the stage-2 exact
-    * re-rank (a streamed probe is transient — there is no table to
-    * re-join it from). */
-  private[graft] def mrlCandidateFrame(probes: DataFrame, corpus: DataFrame,
-                                       broadcastProbes: Boolean = true): DataFrame = {
+    * re-rank, so stage 2 needs no re-join to the probe table. */
+  private def mrlCandidateFrame(probes: DataFrame, corpus: DataFrame): DataFrame = {
     val d = Dim / 4
     val c = corpus.select(col("vec_id"), slice(col("embedding"), 1, d).as("e_pfx"))
       .withColumn("cn", sqrt(VectorExpressions.dot(col("e_pfx"), col("e_pfx"))))
@@ -3232,8 +3181,7 @@ object AnnQueries {
         slice(col("embedding"), 1, d).as("p_pfx"))
       .withColumn("pn", sqrt(VectorExpressions.dot(col("p_pfx"), col("p_pfx"))))
       .withColumn("p_norm", sqrt(VectorExpressions.dot(col("p_emb"), col("p_emb"))))
-    val p = if (broadcastProbes) broadcast(p0) else p0
-    c.join(p, col("vec_id") =!= col("probe_id"))
+    c.join(broadcast(p0), col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("p_emb"), col("p_norm"), col("vec_id"),
         round(VectorExpressions.dot(col("e_pfx"), col("p_pfx"))
           / (col("cn") * col("pn")), 6).as("approx"))

@@ -306,9 +306,9 @@ object CorpusQueries {
     val seg = Cached.track(foldMerges(wordFreq, merges)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     // the ranked subword vocabulary is ≤ SubwordVocabSize rows by
-    // construction — a BOUNDED driver map (tokenizeStream's vocab
-    // discipline), so the word→ids step is a map-literal projection
-    // over the cached segmentation instead of explode+join+regroup
+    // construction — a BOUNDED driver map, so the word→ids step is a
+    // map-literal projection over the cached segmentation instead of
+    // explode+join+regroup
     val subMap = seg.select(col("wfreq"), explode(col("syms")).as("sub"))
       .groupBy(col("sub")).agg(sum(col("wfreq")).as("n"))
       .orderBy(col("n").desc, col("sub")).limit(SubwordVocabSize)
@@ -870,8 +870,7 @@ object CorpusQueries {
 
   /** The chunker as a frame transform: every operation is stateless
     * row-local (tokenize, explode window starts, slice), so the identical
-    * plan is streaming-legal — [[graft.streaming.DocStreams]] applies it
-    * unchanged to the document stream. */
+    * plan is streaming-legal and runs unchanged on a document stream. */
   def chunksOf(docs: DataFrame): DataFrame = {
     val d = lit(WinStride)
     val toks = docs
@@ -940,8 +939,8 @@ object CorpusQueries {
     * version exploded the token stream through a per-doc window (two
     * shuffles); this one never leaves the row, which is both the 100 TB
     * plan you want (chunking is embarrassingly parallel) and what makes
-    * the operator streaming-legal ([[graft.streaming.DocStreams]] applies
-    * it to the document stream unchanged, spec-pinned). */
+    * the operator streaming-legal (it runs unchanged on a document
+    * stream). */
   def cdcChunksOf(docs: DataFrame): DataFrame = {
     VectorExpressions.register(docs.sparkSession)
     docs

@@ -1169,25 +1169,6 @@ object DedupQueries {
   private[graft] final case class SourceOverlapState(
       catalog: DataFrame, pairs: DataFrame, sizes: DataFrame, names: Seq[String])
 
-  /** Distinct (source, shg) cells of a raw documents-shaped batch — the
-    * IDENTICAL words→shingles→md5-prefix hashing as
-    * [[stagedSourceShingles]]/[[sourceOverlap]], factored so the
-    * streaming landing ([[graft.pipeline.SourceOverlapSink]]) folds the
-    * same cells the batch queries aggregate (replay ≡ batch is the
-    * contract, so the hash chain must be shared, not copied). The
-    * bounded per-doc array frame is built BEFORE the explode (the
-    * documented generator-re-evaluation pitfall). */
-  private[graft] def sourceCells(batch: DataFrame): DataFrame = {
-    graft.plans.VectorExpressions.register(batch.sparkSession)
-    batch
-      .withColumn("w", words(col("text")))
-      .withColumn("sarr", shingles("w"))
-      .select(col("source"), array_distinct(transform(col("sarr"),
-        x => graft.plans.VectorExpressions.hexPrefix(md5(x), 15))).as("hs"))
-      .select(col("source"), explode(col("hs")).as("shg"))
-      .distinct()
-  }
-
   /** Fold one batch of distinct (source, shg) cells into the state.
     * Only shingles the batch TOUCHES are re-aggregated: a new cell
     * (shg, sid) contributes pairs against the sids already on that
@@ -1621,9 +1602,9 @@ object DedupQueries {
     * band_hash), shingle sets on doc_id. Every later ingest cycle then
     * shuffles ONLY the new batch — the archive-sized index side reads
     * straight from its buckets (spec asserts no Exchange above either
-    * index scan). This is [[graft.pipeline.BucketedLayout]]'s co-location
-    * argument applied to the dedup family, where the asymmetry is
-    * extreme: the index is the 100 TB archive, the batch is a day. */
+    * index scan). Bucketing both sides on the join key co-locates them
+    * without a shuffle; in the dedup family the asymmetry is extreme:
+    * the index is the 100 TB archive, the batch is a day. */
   def persistDedupIndexBucketed(spark: SparkSession, dir: String,
                                 path: String, buckets: Int = 8,
                                 prefix: String = "dedup_idx"): Unit = {

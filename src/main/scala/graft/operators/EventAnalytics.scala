@@ -507,9 +507,8 @@ object EventAnalytics {
   }
 
   /** The experiment's deterministic arm deal (shared definition with
-    * [[abTest]]/[[cuped]] and the streaming
-    * [[graft.pipeline.MonitorSink]] — content-keyed md5, so executor
-    * count, engine, AND arrival order cannot move a user between arms). */
+    * [[abTest]]/[[cuped]] — content-keyed md5, so executor count,
+    * engine, AND arrival order cannot move a user between arms). */
   private[graft] def abArm: org.apache.spark.sql.Column =
     when(pmod(graft.plans.VectorExpressions.hexPrefix(
       md5(concat(lit("graft-ab-v1"), col("user_id").cast("string"))), 8), lit(2L)) === 0, "A")
@@ -2392,12 +2391,9 @@ object EventAnalytics {
     forecastFromDaily(cnt)
   }
 
-  /** The backtest TAIL over a landed (type, day, x) daily-count table —
-    * shared verbatim with the streaming twin
-    * ([[graft.streaming.EventStreams.dailyVolume]] maintains the counts
-    * as mergeable watermarked state; this derives the WAPE table from
-    * whatever counts have landed), so replaying a corpus through the
-    * stream and scoring it equals the batch query bit-for-bit. */
+  /** The backtest TAIL over a landed (type, day, x) daily-count table:
+    * the counts are mergeable sums, so this derives the WAPE table from
+    * whatever counts have landed, however they were accumulated. */
   private[graft] def forecastFromDaily(cnt: DataFrame): DataFrame = {
     val grid = cnt.groupBy("type")
       .agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
@@ -2437,14 +2433,10 @@ object EventAnalytics {
     growthFromActive(active)
   }
 
-  /** The ledger TAIL over a landed (user_id, day) activity-cell table —
-    * shared verbatim with the streaming twin
-    * ([[graft.streaming.EventStreams.activeDays]] maintains the distinct
-    * cells as mergeable watermarked state; this derives the
-    * new/retained/resurrected/churned ledger from whatever cells have
-    * landed), the [[forecastFromDaily]] discipline: replaying a corpus
-    * through the stream and scoring the landed cells equals the batch
-    * query bit-for-bit. */
+  /** The ledger TAIL over a landed (user_id, day) activity-cell table:
+    * per-(user, day) presence is idempotent-mergeable, so this derives
+    * the new/retained/resurrected/churned ledger from whatever cells
+    * have landed — the [[forecastFromDaily]] discipline. */
   private[graft] def growthFromActive(active: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("day"))
     val lab = active

@@ -66,9 +66,8 @@ object SplitQueries {
 
   /** Append (bucket, split) to any frame with a `text` column — pure
     * row-local expressions, so the SAME columns run on batch and
-    * streaming frames (the [[graft.streaming.DocStreams.splitAdmitGate]]
-    * twin applies this verbatim; spec-pinned bit-equal). Requires
-    * [[VectorExpressions.register]] on the session. */
+    * streaming frames. Requires [[VectorExpressions.register]] on the
+    * session. */
   def withSplit(docs: DataFrame): DataFrame =
     docs.withColumn("bucket", bucketCol)
       .withColumn("split", splitOf(col("bucket")))

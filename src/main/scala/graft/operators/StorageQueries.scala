@@ -123,8 +123,7 @@ object StorageQueries {
     * cross-source packing would destroy partition pruning). Output is one
     * row per planned shard — the manifest a compaction executor consumes;
     * the plan is a pure function of the table, so a re-run after a crash
-    * re-derives the identical manifest (the [[graft.pipeline.Snapshots]]
-    * idempotence philosophy at the file level). */
+    * re-derives the identical manifest (idempotent at the file level). */
   def compactionPlan(spark: SparkSession, dir: String): DataFrame = {
     implicit val s: SparkSession = spark
     val w = org.apache.spark.sql.expressions.Window

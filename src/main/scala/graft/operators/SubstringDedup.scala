@@ -58,38 +58,12 @@ object SubstringDedup {
   // r14 (opt): gated spread — the stride-1 window md5 explode is the
   // family's heaviest map-side work and ran inside the one-task scan
   // (Tables.spread doc; scrub_spans 1.73 -> 0.90 in the sweep A/B)
-  private def windows(t: Tables): DataFrame = windowsOf(t.spread("documents"))
-
-  /** The same window extraction over an ARBITRARY document frame — the
-    * streaming census twin hashes arriving micro-batches with this, so
-    * landed register counts and the batch census agree bit-for-bit. */
-  private[graft] def windowsOf(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), words(col("text")).as("w"))
+  private def windows(t: Tables): DataFrame =
+    t.spread("documents").select(col("doc_id"), words(col("text")).as("w"))
       .where(size(col("w")) >= W)
       .select(col("doc_id"), posexplode_outer(expr(
         s"transform(sequence(0, size(w) - $W), i -> md5(concat_ws(' ', slice(w, i + 1, $W))))")))
       .select(col("doc_id"), col("pos"), col("col").as("wh"))
-
-  /** (wh, cnt) OCCURRENCE counts of a document frame's windows — the
-    * mergeable register the streaming twin lands: counts add under
-    * union+re-sum, so any partition of the corpus into micro-batches
-    * folds to the same census. */
-  private[graft] def censusOf(docs: DataFrame): DataFrame =
-    windowsOf(docs).groupBy(col("wh")).agg(count(lit(1)).as("cnt"))
-
-  /** [[substringCoverage]] semantics against a LANDED census instead of
-    * an inline window self-count: a window is duplicated iff the census
-    * holds ≥ 2 occurrences of its hash. When `census` covers exactly the
-    * corpus the docs came from, this is bit-equal to the batch query
-    * (spec-pinned); mid-stream it scores against the corpus-so-far,
-    * which can only grow a document's dup_permille as more text lands. */
-  private[graft] def coverageAgainst(docs: DataFrame, census: DataFrame): DataFrame =
-    windowsOf(docs)
-      .join(census, Seq("wh"), "left")
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_windows"),
-        sum(when(coalesce(col("cnt"), lit(1L)) > 1L, 1L).otherwise(0L)).as("dup_windows"))
-      .withColumn("dup_permille", expr("dup_windows * 1000 div n_windows"))
 
   /** Windows with corpus-wide occurrence counts — one wh-keyed shuffle. */
   private def withMultiplicity(t: Tables): DataFrame =

@@ -643,9 +643,8 @@ object TextIndexQueries {
   private[graft] val RrfProbeId = 0L
 
   /** The lexical serving list: BM25 top-`depth` as (doc_id, rank_lex) —
-    * the static side the streaming hybrid server joins per probe
-    * ([[graft.streaming.AnnStream.hybridTopK]]); [[hybridRrf]] consumes
-    * it directly so batch and stream fuse the IDENTICAL list. */
+    * the list [[hybridRrf]] fuses with the vector ranking, kept as its
+    * own def so a server holding it static fuses the IDENTICAL list. */
   def bm25Ranked(spark: SparkSession, dir: String, depth: Int = RrfDepth): DataFrame = {
     val wLex = Window.orderBy(col("score").desc, col("doc_id"))
     bm25Scores(spark, dir)

@@ -126,7 +126,7 @@ object TwoLevelBench {
             / (col("c_norm") * col("p_norm")), 6).as("cos"))
     }
     def twoLevelCandidates: DataFrame =
-      AnnQueries.twoLevelCandidateFrame(probes, corpus, cents, broadcastProbes = true)
+      AnnQueries.twoLevelCandidateFrame(probes, corpus, cents)
 
     def topk(cand: DataFrame): DataFrame =
       TopK.perKeyExec(cand, "probe_id", "cos", "vec_id", TopKK)

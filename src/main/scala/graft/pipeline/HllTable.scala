@@ -27,9 +27,9 @@ import org.apache.spark.sql.functions._
   * verifies bit-equal. Standard error ≈ 1.04/√256 = 6.5% in the HLL
   * regime, tighter under linear counting.
   *
-  * Merge contract (spec-pinned): per-register MAX — build(A ∪ B) equals
-  * merge(build A, build B) exactly, so absorb/replay/compaction follow
-  * the same algebra as [[QuantHist]].
+  * Registers combine by per-register MAX, so tables built over disjoint
+  * inputs combine into exactly the table built over their union — the
+  * same algebra as [[QuantHist]]'s counter addition.
   */
 object HllTable {
 
@@ -62,18 +62,6 @@ object HllTable {
   def build(df: DataFrame, key: Column, grain: Column): DataFrame =
     df.select(grain.as("grain"), regCol(key).as("reg"), rhoCol(key).as("rho"))
       .groupBy("grain", "reg").agg(max(col("rho")).as("max_rho"))
-
-  /** Merge summaries: per-register max. Exact (equals build-on-union). */
-  def merge(summaries: DataFrame*): DataFrame =
-    summaries.reduce(_ unionByName _)
-      .groupBy("grain", "reg").agg(max(col("max_rho")).as("max_rho"))
-
-  /** Fold a RAW micro-batch into a prior summary (None at bootstrap). */
-  def absorb(prior: Option[DataFrame], batch: DataFrame,
-             key: Column, grain: Column): DataFrame = {
-    val b = build(batch, key, grain)
-    prior.map(p => merge(p, b)).getOrElse(b)
-  }
 
   /** The estimate's numerator α·m²·2⁵³ as ONE driver-side double literal,
     * shared verbatim by the Spark plan and the oracle SQL — a single

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Mergeable quantile summary over non-negative integer values,
-  * represented the Spark-first way (the [[CountMin]] / [[TopFreq]]
+  * represented the Spark-first way (the [[TopFreq]] / [[HllTable]]
   * discipline): a TABLE of (grain, bin, cnt) under a FIXED deterministic
   * binning, not an opaque data-dependent blob.
   *
@@ -18,9 +18,9 @@ import org.apache.spark.sql.functions._
   *    (e = len(bin₂(v))−1; idx = (e−4)·16 + (v >> (e−4)) for v ≥ 16,
   *    else v). The same arithmetic runs in Spark and DuckDB — the whole
   *    sketch is oracle-verifiable, unlike sampling sketches.
-  *  - **Exact mergeability**: build(A ∪ B) EQUALS merge(build A, build B)
-  *    bit-for-bit (counter addition) — not "mergeable within error" but
-  *    exactly; the streaming absorb is therefore replay-trivial.
+  *  - **Exact mergeability**: adding the counters of build(A) and
+  *    build(B) per (grain, bin) gives build(A ∪ B) bit-for-bit — not
+  *    "mergeable within error" but exactly.
   *  - **Bounded answers**: the q-quantile read returns the covering bin
   *    [lo, hi]; the true r-th smallest value (r = ⌈q·n⌉) provably lies
   *    inside, and hi − lo ≤ lo/16 (≤ 6.25% relative error), exact below
@@ -67,20 +67,6 @@ object QuantHist {
   def build(df: DataFrame, value: Column, grain: Column): DataFrame =
     df.select(grain.as("grain"), binOf(value).as("bin"))
       .groupBy("grain", "bin").agg(count(lit(1)).as("cnt"))
-
-  /** Merge any number of summaries: counter addition. Exact — the merged
-    * table equals building over the concatenated inputs. */
-  def merge(summaries: DataFrame*): DataFrame =
-    summaries.reduce(_ unionByName _)
-      .groupBy("grain", "bin").agg(sum(col("cnt")).as("cnt"))
-
-  /** Fold a RAW micro-batch into a prior summary (None at bootstrap) —
-    * streaming absorb is merge with the batch's own build. */
-  def absorb(prior: Option[DataFrame], batch: DataFrame,
-             value: Column, grain: Column): DataFrame = {
-    val b = build(batch, value, grain)
-    prior.map(p => merge(p, b)).getOrElse(b)
-  }
 
   /** Answer per-mille quantiles from a summary: for each grain and
     * q ∈ qPm, the covering bin of the r-th smallest value,

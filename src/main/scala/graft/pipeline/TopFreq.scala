@@ -5,10 +5,10 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Mergeable Misra-Gries frequent-items summary, represented the Spark-first
-  * way (the [[CountMin]] / HLL-layer discipline): a TABLE of
+  * way (the [[HllTable]] / [[QuantHist]] discipline): a TABLE of
   * (grain, key, cnt, err) rather than an opaque blob. Build is one keyed
-  * count plus a per-grain top-k window; merging grains is groupBy-sum plus
-  * one re-compression; the summary persists/compacts like any dataset.
+  * count plus a per-grain top-k window; the summary persists like any
+  * dataset.
   *
   * The MG construction from exact per-grain counts: keep each grain's top-k
   * counters, decremented by the (k+1)-th largest count c₍ₖ₊₁₎ (the valid
@@ -28,68 +28,23 @@ object TopFreq {
       .groupBy("grain", "key").agg(count(lit(1)).as("cnt"))
 
   /** Per-grain capacity-k compression of a (grain, key, cnt) table:
-    * keep top-k, decrement by the (k+1)-th count, fold `priorErr`
-    * (grain → e0) into the error ledger. The top-k window sorts only the
-    * count table (distinct keys per grain), not the raw stream, and Spark
-    * plans the rank filter with partial WindowGroupLimit (map-side cap). */
-  private def compress(counts: DataFrame, priorErr: Option[DataFrame], k: Int): DataFrame = {
+    * keep top-k and decrement by the (k+1)-th count, which is also the
+    * grain's error ledger. The top-k window sorts only the count table
+    * (distinct keys per grain), not the raw stream, and Spark plans the
+    * rank filter with partial WindowGroupLimit (map-side cap). */
+  private def compress(counts: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("grain")).orderBy(col("cnt").desc, col("key"))
     val ranked = counts.withColumn("rn", row_number().over(w))
     val dec = ranked.groupBy("grain")
       .agg(coalesce(max(when(col("rn") === k + 1, col("cnt"))), lit(0L)).as("dec"))
-    val kept = ranked.where(col("rn") <= k).join(dec, "grain")
-    val withErr = priorErr match {
-      case Some(e) => kept.join(e, Seq("grain"), "left")
-        .withColumn("err", coalesce(col("e0"), lit(0L)) + col("dec"))
-      case None => kept.withColumn("err", col("dec"))
-    }
-    withErr
+    ranked.where(col("rn") <= k).join(dec, "grain")
       .select(col("grain"), col("key"),
-        greatest(col("cnt") - col("dec"), lit(0L)).as("cnt"), col("err"))
+        greatest(col("cnt") - col("dec"), lit(0L)).as("cnt"), col("dec").as("err"))
       .where(col("cnt") > 0)
   }
 
   /** Per-grain capacity-k summary: (grain, key, cnt, err) with `err`
     * constant within a grain. */
   def build(df: DataFrame, key: Column, grain: Column, k: Int): DataFrame =
-    compress(countsOf(df, key, grain), None, k)
-
-  /** Fold a new micro-batch of RAW rows into a prior summary (None at
-    * bootstrap) — the mergeable-summaries property doing streaming's
-    * work: a batch's exact counts are an err-0 summary, so absorbing is
-    * counter-sum + one re-compression, and the per-grain error ledger
-    * keeps its bound across any number of batches and any split of a
-    * grain's rows between them. */
-  def absorb(prior: Option[DataFrame], df: DataFrame, key: Column, grain: Column,
-             k: Int): DataFrame = prior match {
-    case None => build(df, key, grain, k)
-    case Some(p) =>
-      val e0 = p.groupBy("grain").agg(max(col("err")).as("e0"))
-      val summed = p.select("grain", "key", "cnt")
-        .unionByName(countsOf(df, key, grain))
-        .groupBy("grain", "key").agg(sum(col("cnt")).as("cnt"))
-      compress(summed, Some(e0), k)
-  }
-
-  /** Collapse per-grain summaries into one capacity-k summary
-    * (key, cnt, err): counter sums per key, one re-compression, and the
-    * error ledger = Σ per-grain err + the merge decrement. The global
-    * window runs over ≤ |grains|·k rows — bounded by construction, the
-    * same argument as the Zipf top-k. */
-  def merge(summary: DataFrame, k: Int): DataFrame = {
-    val baseErr = summary.groupBy("grain").agg(max(col("err")).as("e"))
-      .agg(coalesce(sum(col("e")), lit(0L)).as("base_err"))
-    val summed = summary.groupBy("key").agg(sum(col("cnt")).as("cnt"))
-    val w = Window.orderBy(col("cnt").desc, col("key"))
-    val ranked = summed.withColumn("rn", row_number().over(w))
-    val dec = ranked
-      .agg(coalesce(max(when(col("rn") === k + 1, col("cnt"))), lit(0L)).as("dec"))
-    ranked.where(col("rn") <= k)
-      .crossJoin(broadcast(dec))
-      .crossJoin(broadcast(baseErr))
-      .select(col("key"),
-        greatest(col("cnt") - col("dec"), lit(0L)).as("cnt"),
-        (col("base_err") + col("dec")).as("err"))
-      .where(col("cnt") > 0)
-  }
+    compress(countsOf(df, key, grain), k)
 }

@@ -69,14 +69,12 @@ final case class Tables(dir: String)(implicit spark: SparkSession) {
     * read identically: with a UTC session timezone the NTZ→TIMESTAMP cast
     * is value-identical, matching DuckDB's reading of the same file.
     *
-    * The nanosAsLong conf is harmless for micros-vintage files (it only
-    * affects NANOS-typed columns) and idempotent, so setting it here can't
-    * change any other read's schema. */
+    * The NANOS branch relies on `spark.sql.legacy.parquet.nanosAsLong`,
+    * which [[graft.GraftSession]] sets when it builds the session; reading
+    * the table never writes session conf. */
   def events: DataFrame = eventsRaw
 
   private def eventsRaw: DataFrame = {
-    if (!spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").contains("true"))
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = t("events")
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
     raw.schema("ts").dataType match {
@@ -132,10 +130,9 @@ final case class Tables(dir: String)(implicit spark: SparkSession) {
           case _ => false
         }),
         "label" -> num _))
-    // the nanos conf must be live BEFORE the events footer read or a NANOS
-    // vintage fails the probe itself with an unrelated error
-    if (!spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").contains("true"))
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // a NANOS vintage reads only under the nanosAsLong conf GraftSession
+    // sets at build; without it the events footer read fails with an
+    // unrelated error, reported here as `events: unreadable`
     val problems = contract.flatMap { case (name, cols) =>
       scala.util.Try(t(name).schema) match {
         case scala.util.Failure(e) =>

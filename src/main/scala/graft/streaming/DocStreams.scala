@@ -5,16 +5,15 @@ import graft.pipeline.CorpusPolicy
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Streaming corpus ingest (the §2.3 streaming story extended to the
-  * documents domain): the quality gate and content dedup a training-data
-  * pipeline runs AS DOCUMENTS LAND, not in a nightly batch.
+/** Document scoring and incremental dedup written so the same code runs
+  * on batch and streaming frames: the quality columns the batch
+  * `docs_quality_filter` and the corpus pipeline's gate share, and the
+  * arriving-documents-vs-persisted-index joins behind the incremental
+  * dedup and containment queries.
   *
-  * Everything here is either stateless per-row (the gate — trivially
+  * Everything here is either stateless per-row (the scoring — trivially
   * streaming-safe, scales with ingest bandwidth) or keyed state with the
-  * documented growth bound (content dedup). The scoring expressions are
-  * THE SAME columns as the batch `docs_quality_filter`
-  * ([[scored]] is shared), so the stream admits exactly the rows the
-  * batch filter would keep — spec-pinned.
+  * documented growth bound (the pair-level dedup of index hits).
   */
 object DocStreams {
 
@@ -41,19 +40,6 @@ object DocStreams {
   }
 
   private def nTokensCol: Column = size(words(col("text"))).cast("long")
-
-  /** r12 (verdict #6) — scene-cut detection AS DOCUMENTS LAND: the batch
-    * `mm_scene_cuts` transform is row-local by construction (every frame
-    * of a video lives in its own row's payload; the lag is an in-row
-    * `element_at` over the ≤12-element energy array — see
-    * [[graft.operators.MultimodalQueries.sceneCutFrames]], shared
-    * VERBATIM), so the streaming twin is STATELESS append mode: no
-    * watermark, no state store, per-video results emitted in the
-    * micro-batch their payload arrives in. Spec pins replay equality
-    * row-for-row against the batch query. */
-  def sceneCutStream(spark: org.apache.spark.sql.SparkSession, docs: DataFrame): DataFrame =
-    graft.operators.MultimodalQueries.sceneCutFrames(spark,
-      docs.where(col("doc_id") % 3 === 2))
 
   /** §8f(v) — the config-driven gate: SAME scoring expressions as
     * [[scored]], thresholds resolved per source from a [[CorpusPolicy]].
@@ -87,353 +73,10 @@ object DocStreams {
     }
   }
 
-  /** Streaming keep-gate: admitted rows only. Stateless — safe in append
-    * mode at any scale. */
-  def qualityGate(docs: DataFrame): DataFrame =
-    scored(docs).where(col("keep")).drop("keep")
-
-  /** Streaming split-admit gate: arriving documents get their train/val/
-    * test assignment row-locally (the SAME content-keyed columns as the
-    * batch `docs_split_assign` — [[graft.operators.SplitQueries.withSplit]]
-    * verbatim, spec-pinned bit-equal) and only `admit` splits pass. A
-    * training-ingest stream admits "train"; an eval-freezer admits
-    * "val"/"test". Stateless — no watermark, no state store; scales with
-    * ingest bandwidth like [[qualityGate]]. */
-  def splitAdmitGate(docs: DataFrame, admit: Set[String] = Set("train")): DataFrame = {
-    graft.plans.VectorExpressions.register(docs.sparkSession)
-    graft.operators.SplitQueries.withSplit(docs)
-      .where(col("split").isin(admit.toSeq: _*))
-  }
-
-  /** One admitted document of the streaming token-budget gate. */
-  final case class BudgetAdmit(source: String, doc_id: Long, n_tokens: Long, cum_tokens: Long)
-  /** Incoming doc shape for [[tokenBudgetGate]]. */
-  final case class BudgetDoc(source: String, doc_id: Long, h: String, n_tokens: Long)
-
-  final case class BatchDoc(doc_id: Long, n_tokens: Long)
-  final case class EmittedBatch(bucket: Long, batch: Long, n_docs: Long,
-                                max_tokens: Long, padding_waste: Long)
-
-  /** Streaming length-batcher (§8i(aq)) — the serving twin of
-    * `docs_length_batches`: documents accumulate per token-length bucket
-    * (width 32) and a FULL batch of 8 emits the moment it completes,
-    * with its exact padding-waste ledger. State per bucket is one batch
-    * counter plus at most 7 pending token counts — strictly bounded by
-    * the bucket count, never by the stream. Within a micro-batch,
-    * arrivals fold in (n_tokens, doc_id) order, so feeding the batch
-    * query's own ordering reproduces its full batches exactly
-    * (spec-pinned); under any other arrival order the emitted batches
-    * still satisfy the contract that matters for a dense-batch runner:
-    * 8 docs, one bucket, waste < 8 × bucket width. */
-  def lengthBatchGate(docs: org.apache.spark.sql.Dataset[BatchDoc]):
-      org.apache.spark.sql.Dataset[EmittedBatch] = {
-    import docs.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    docs
-      .groupByKey(_.n_tokens / 32)
-      .flatMapGroupsWithState[(Long, List[Long]), EmittedBatch](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (bucket: Long, arrivals: Iterator[BatchDoc], state: GroupState[(Long, List[Long])]) =>
-          var (nextBatch, pending) = state.getOption.getOrElse((0L, List.empty[Long]))
-          val out = Seq.newBuilder[EmittedBatch]
-          arrivals.toSeq.sortBy(d => (d.n_tokens, d.doc_id)).foreach { d =>
-            pending = pending :+ d.n_tokens
-            if (pending.length == 8) {
-              val mx = pending.max
-              out += EmittedBatch(bucket, nextBatch, 8L, mx, mx * 8L - pending.sum)
-              nextBatch += 1
-              pending = Nil
-            }
-          }
-          state.update((nextBatch, pending))
-          out.result().iterator
-      }
-  }
-
-  /** Streaming token-budget admission — the live twin of the batch
-    * `docs_token_budget`: each source admits documents until its running
-    * token total reaches `budget`, then drops the rest. State is ONE
-    * counter per source (strictly bounded by the number of sources —
-    * nothing grows with the corpus), so the gate runs forever. Within a
-    * micro-batch arrivals are folded in (h, doc_id) order — the same
-    * md5-stable order the batch query uses — so feeding the stream in
-    * that order reproduces the batch selection exactly (spec-pinned).
-    * Once a source's budget is exhausted the state pins to the budget
-    * and every later arrival is dropped without growing anything. */
-  def tokenBudgetGate(docs: org.apache.spark.sql.Dataset[BudgetDoc],
-                      budget: Long): org.apache.spark.sql.Dataset[BudgetAdmit] = {
-    import docs.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    docs
-      .groupByKey(_.source)
-      .flatMapGroupsWithState[Long, BudgetAdmit](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (source: String, batch: Iterator[BudgetDoc], state: GroupState[Long]) =>
-          // state > budget is the CLOSED sentinel: the batch twin admits
-          // the maximal prefix (its running sum includes every doc in
-          // order), so the first overflow must close the source for good
-          // — a later smaller doc does NOT get the remaining headroom
-          var cum = state.getOption.getOrElse(0L)
-          val out = Seq.newBuilder[BudgetAdmit]
-          batch.toSeq.sortBy(d => (d.h, d.doc_id)).foreach { d =>
-            if (cum <= budget) {
-              if (cum + d.n_tokens <= budget) {
-                cum += d.n_tokens
-                out += BudgetAdmit(source, d.doc_id, d.n_tokens, cum)
-              } else cum = budget + 1
-            }
-          }
-          state.update(cum)
-          out.result().iterator
-      }
-  }
-
-  /** Streaming sliding-window chunker: the batch chunker's plan applied
-    * verbatim to the document stream — every operation is stateless
-    * row-local (tokenize, explode window starts, slice), so chunks land
-    * in the same micro-batch their document arrives in, with zero state.
-    * Spec-pinned to `docs_chunk_sliding`. */
-  def chunkStream(docs: DataFrame): DataFrame =
-    graft.operators.CorpusQueries.chunksOf(docs)
-
-  /** Streaming CDC chunker: the zero-shuffle array-expression form of
-    * content-defined chunking is row-local, so it runs on the stream
-    * unchanged — chunks land in their document's micro-batch, no state.
-    * Spec-pinned to `docs_chunk_cdc`. */
-  def cdcChunkStream(docs: DataFrame): DataFrame =
-    graft.operators.CorpusQueries.cdcChunksOf(docs)
-
-  /** Streaming tokenizer — the SERVING side of vocabulary-id
-    * tokenization: the vocabulary is fitted offline
-    * ([[graft.operators.CorpusQueries.vocabOf]], a corpus pass the
-    * stream must never pay) and bakes into the streaming plan as a map
-    * literal; the id-mapping is then pure array expressions — row-local,
-    * zero state, zero shuffles, same output columns as the batch query
-    * (spec-pinned to `docs_tokenize_ids`). */
-  def tokenizeStream(docs: DataFrame, vocab: Map[String, Long]): DataFrame = {
-    val m = typedlit(vocab)
-    docs
-      .select(col("doc_id"), words(col("text")).as("w"))
-      .where(size(col("w")) > 0)
-      .withColumn("ids", transform(col("w"), t => coalesce(element_at(m, t), lit(0L))))
-      .select(col("doc_id"),
-        size(col("w")).cast("long").as("n_tokens"),
-        size(filter(col("ids"), i => i === 0L)).cast("long").as("n_oov"),
-        concat_ws(",", transform(slice(col("ids"), 1, 20), i => i.cast("string"))).as("ids_head"))
-  }
-
-  /** Streaming decontamination gate — the SERVING side of the batch
-    * `docs_decontaminate` action: the held-out benchmark's 8-gram set is
-    * computed offline (it is small and FROZEN — benchmarks don't grow
-    * with the corpus) and bakes into the streaming plan as an array
-    * literal; each arriving document is admitted iff its own 8-gram set
-    * does not overlap it. Row-local expressions only — zero state, zero
-    * shuffles (the tokenizeStream discipline). A deployment whose
-    * held-out set outgrows a literal switches to the broadcast-Bloom
-    * form (`pipeline.FileBloom` precedent): same admit semantics, one
-    * bounded false-positive knob. Spec-pinned to the batch kept set. */
-  def decontaminateGate(docs: DataFrame, testNgrams: Seq[String]): DataFrame = {
-    val n = graft.operators.CorpusQueries.DecontamNgram
-    docs
-      .withColumn("w", words(col("text")))
-      .withColumn("sh",
-        when(size(col("w")) > 0, array_distinct(shingles("w", n)))
-          .otherwise(array().cast("array<string>")))
-      .where(!arrays_overlap(col("sh"), typedlit(testNgrams)))
-      .drop("w", "sh")
-  }
-
-  /** Streaming importance-sampling gate — the stream twin of the batch
-    * `docs_importance_sample`: acceptance probability equals the doc's
-    * own quality score, decided by the SAME deterministic md5 bucket as
-    * every sampling op (no RNG, no state — a doc's fate is a pure
-    * function of its id and text, so replays and batch backfills agree
-    * exactly). Row-local expressions only. Spec-pinned to the batch
-    * kept set. */
-  def importanceGate(docs: DataFrame): DataFrame = {
-    graft.plans.VectorExpressions.register(docs.sparkSession)
-    val bucket = graft.plans.VectorExpressions
-      .hexPrefix(md5(col("doc_id").cast("string")), 8) % 100
-    docs
-      .withColumn("quality", qualityCol)
-      .withColumn("keep_pct", floor(col("quality") * 100).cast("int"))
-      .where(bucket < col("keep_pct"))
-      .select(col("doc_id"), col("quality"), col("keep_pct"))
-  }
-
-  /** Streaming BPE segmentation — the tokenizer-trainer's stream-serving
-    * form: the trained merge list (fitted offline,
-    * [[graft.operators.CorpusQueries.trainedBpeMerges]]) bakes into the
-    * plan as fold literals, and the per-WORD merge fold runs INSIDE a
-    * `transform` over each document's word array — so the stream needs
-    * no distinct-word table, no join, no state: every doc's subword
-    * stats are computed row-locally on arrival. Batch amortizes the fold
-    * across duplicate words via the vocabulary join; a stream cannot
-    * (words arrive inside documents), so it pays the fold per word —
-    * the honest serving trade, and still zero-shuffle. Spec-pinned to
-    * `docs_bpe_segment`. */
-  def bpeSegmentStream(docs: DataFrame, merges: Seq[(String, String)]): DataFrame = {
-    def segSize(word: Column): Column = {
-      val chars = filter(split(word, ""), c => c =!= "")
-      val folded = merges.foldLeft(chars) { case (acc0, (a, b)) =>
-        val (la, lb) = (lit(a), lit(b))
-        aggregate(acc0, array().cast("array<string>"),
-          (acc, sym) => when(size(acc) > 0
-              && element_at(acc, -1) === la && sym === lb,
-            concat(slice(acc, lit(1), size(acc) - 1), array(concat(la, lb))))
-            .otherwise(concat(acc, array(sym))))
-      }
-      size(folded).cast("long")
-    }
-    docs
-      .select(col("doc_id"), words(col("text")).as("w"))
-      .where(size(col("w")) > 0)
-      .select(col("doc_id"),
-        size(col("w")).cast("long").as("n_words"),
-        aggregate(transform(col("w"), segSize _), lit(0L), _ + _).as("n_subwords"),
-        aggregate(transform(col("w"), w => length(w).cast("long")), lit(0L), _ + _).as("n_chars"))
-      .withColumn("chars_per_subword",
-        round(col("n_chars").cast("double") / col("n_subwords"), 4))
-  }
-
-  /** Streaming subword-id encoding — the full tokenizer serving path at
-    * arrival: trained merges AND the truncated subword vocabulary (both
-    * fitted offline, both bounded) bake in as literals; each document's
-    * words fold to subwords and map to ids row-locally, emitting the
-    * same per-doc tensor stats as the batch `docs_bpe_ids`. Zero state,
-    * zero shuffle. Spec-pinned to the batch twin. */
-  def bpeIdsStream(docs: DataFrame, merges: Seq[(String, String)],
-                   vocab: Map[String, Long]): DataFrame = {
-    val m = typedlit(vocab)
-    def idsOfWord(word: Column): Column = {
-      val chars = filter(split(word, ""), c => c =!= "")
-      val folded = merges.foldLeft(chars) { case (acc0, (a, b)) =>
-        val (la, lb) = (lit(a), lit(b))
-        aggregate(acc0, array().cast("array<string>"),
-          (acc, sym) => when(size(acc) > 0
-              && element_at(acc, -1) === la && sym === lb,
-            concat(slice(acc, lit(1), size(acc) - 1), array(concat(la, lb))))
-            .otherwise(concat(acc, array(sym))))
-      }
-      transform(folded, sb => coalesce(element_at(m, sb), lit(0L)))
-    }
-    docs
-      .select(col("doc_id"), words(col("text")).as("w"))
-      .where(size(col("w")) > 0)
-      .withColumn("ids", flatten(transform(col("w"), idsOfWord _)))
-      .select(col("doc_id"),
-        size(col("w")).cast("long").as("n_words"),
-        size(col("ids")).cast("long").as("n_subwords"),
-        size(filter(col("ids"), i => i === 0L)).cast("long").as("n_oov"),
-        concat_ws(",", transform(slice(col("ids"), 1, 20), i => i.cast("string"))).as("ids_head"))
-  }
-
-  /** Streaming exact dedup on content hash: the first arrival of each
-    * md5(text) passes, later copies are dropped by the state store.
-    *
-    * State grows with the number of DISTINCT documents seen (one 16-byte
-    * hash key per doc) — the honest bound for content dedup without an
-    * event-time horizon; a deployment that can tolerate re-admitting old
-    * content after a horizon switches to `dropDuplicatesWithinWatermark`
-    * on an ingest-time column, same plan shape. */
-  /** §8k — streaming BM25 scoring: the retrieval SERVING twin of the
-    * batch `text_bm25_topk`. Corpus statistics (per-term df, doc count,
-    * total length) come from the offline index — small and FROZEN
-    * between index rebuilds — and bake into the plan as constants; the
-    * per-term idf is even folded driver-side, since it depends only on
-    * them. Each arriving document scores row-locally (tf from its own
-    * token array) — zero state, zero shuffles, the tokenizeStream
-    * discipline. Integer arithmetic identical to the batch query, so
-    * scores are bit-equal (spec-pinned). A global top-k is not a
-    * streaming-legal append operator; serving ranks within whatever
-    * window the consumer holds. */
-  def bm25Stream(docs: DataFrame, dfs: Map[String, Long], nDocs: Long, lTot: Long): DataFrame = {
-    val terms = graft.operators.TextIndexQueries.Bm25Terms.filter(dfs.contains)
-    val scored = docs
-      .select(col("doc_id"), words(col("text")).as("w"))
-      .withColumn("dl", size(col("w")).cast("long"))
-      .withColumn("dlr", expr(s"(10000 * dl * ${nDocs}) div ${lTot}"))
-    val sTerms = terms.map { t =>
-      val d = dfs(t)
-      val idfS = (10000L * (2 * nDocs - 2 * d + 1)) / (2 * d + 1)
-      val tf = s"CAST(size(filter(w, x -> x = '$t')) AS BIGINT)"
-      expr(s"""CASE WHEN $tf > 0
-              |THEN ($idfS * (($tf * 4400000000) div (200000 * $tf + 60000 + 18 * dlr))) div 10000
-              |END""".stripMargin)
-    }
-    scored
-      .withColumn("s_terms", array(sTerms: _*))
-      .withColumn("matched", filter(col("s_terms"), x => x.isNotNull))
-      .where(size(col("matched")) > 0)
-      .select(col("doc_id"),
-        aggregate(col("matched"), lit(0L), (acc, x) => acc + x).as("score"),
-        size(col("matched")).cast("long").as("n_terms"))
-  }
-
-  def dedupByContent(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), md5(col("text")).as("content_hash"))
-      .dropDuplicates("content_hash")
-
-  /** §8c(l) — streaming incremental near-dup: the batch
-    * [[graft.operators.DedupQueries.incrementalDedup]] band join run as
-    * documents land, against a PERSISTED index manifest
-    * ([[graft.operators.DedupQueries.persistDedupIndex]]: band signatures
-    * + shingle sets of the already-ingested corpus).
-    *
-    * Per arriving document everything is row-local (the SAME
-    * [[graft.operators.DedupQueries.bandExplode]] columns as batch), the
-    * candidate step is a stream-static equi-join on (band_id, band_hash)
-    * — the index side never re-hashes — and the Jaccard verify joins only
-    * candidate rows against the persisted shingle sets. The one stateful
-    * op is the pair-level dropDuplicates (multi-band hits of the same
-    * pair); its state grows with the number of DISTINCT candidate pairs
-    * seen — same honest bound as [[dedupByContent]], and a deployment
-    * with an ingest-time horizon switches it to
-    * `dropDuplicatesWithinWatermark`.
-    *
-    * Emits (batch_doc, index_doc, jaccard) for verified near-dups — the
-    * stream twin of the batch `dedup_incremental` result restricted to
-    * the streamed documents (spec-pinned). */
-  /** Streaming twin of the EXACT incremental similarity join
-    * ([[graft.operators.PrefixJoin.allPairsIncremental]]): arriving
-    * documents check against the staged archive prefix index with ZERO
-    * missed pairs. The stream side indexes ALL its shingles rather than
-    * a probing prefix — prefix-filter completeness needs a shared token
-    * in both sides' prefixes, so widening one side to the full set only
-    * ADDS candidates (and needs no frozen-frequency literal on the
-    * stream); the integer verify then keeps exactly the τ-qualifying
-    * pairs. Stream-static joins against the bucketed index tables; the
-    * candidate dropDuplicates is the same bounded state as the LSH twin
-    * ([[incrementalDedup]]). */
-  def exactIncrementalDedup(stream: DataFrame, indexPrefix: DataFrame,
-                            indexSets: DataFrame): DataFrame = {
-    import graft.plans.VectorExpressions
-    val sh = stream
-      .withColumn("ww", words(col("text")))
-      .withColumn("w", array_distinct(shingles("ww")))
-      .withColumn("hs", array_sort(array_distinct(
-        transform(col("w"), x => VectorExpressions.hexPrefix(md5(x), 15)))))
-      .withColumn("n", size(col("hs")))
-      .select("doc_id", "w", "hs", "n")
-    val cand = sh
-      .select(col("doc_id"), col("hs"), col("n"), explode(col("w")).as("token"))
-      .join(indexPrefix.select(col("doc_id").as("index_doc"), col("token")), Seq("token"))
-      .select(col("doc_id").as("batch_doc"), col("index_doc"),
-        col("hs").as("hs_a"), col("n").as("n_a"))
-      .dropDuplicates("batch_doc", "index_doc")
-    cand
-      .join(indexSets.select(col("doc_id").as("index_doc"), col("hs").as("hs_b"), col("n").as("n_b")),
-        Seq("index_doc"))
-      .withColumn("n_inter", VectorExpressions.sortedIntersect(col("hs_a"), col("hs_b")))
-      .where(col("n_inter") * 3 >= (col("n_a") + col("n_b")))
-      .select(col("batch_doc"), col("index_doc"), col("n_inter"),
-        (col("n_a") + col("n_b") - col("n_inter")).as("n_union"))
-  }
-
   /** §8v(dw) r11 — streaming/incremental CONTAINMENT scorer, shared by
     * the registered batch query
-    * ([[graft.operators.DedupQueries.containmentIncremental]]), the
-    * bucketed-catalog serving path, and the foreachBatch twin: arriving
+    * ([[graft.operators.DedupQueries.containmentIncremental]]) and the
+    * bucketed-catalog serving path: arriving
     * documents (doc_id, text) score against the archive's persisted
     * rare-shingle occurrence list (candidate blocker — 1 ≤ archive-df ≤
     * RareDfMax bounds pair pressure; the arriving doc is the second
@@ -466,6 +109,27 @@ object DocStreams {
       .where(col("containment_pm") >= graft.operators.DedupQueries.ContainmentMinPm)
   }
 
+  /** §8c(l) — streaming incremental near-dup: the batch
+    * [[graft.operators.DedupQueries.incrementalDedup]] band join run as
+    * documents land, against a PERSISTED index manifest
+    * ([[graft.operators.DedupQueries.persistDedupIndex]]: band signatures
+    * + shingle sets of the already-ingested corpus).
+    *
+    * Per arriving document everything is row-local (the SAME
+    * [[graft.operators.DedupQueries.bandExplode]] columns as batch), the
+    * candidate step is a stream-static equi-join on (band_id, band_hash)
+    * — the index side never re-hashes — and the Jaccard verify joins only
+    * candidate rows against the persisted shingle sets. The one stateful
+    * op is the pair-level dropDuplicates (multi-band hits of the same
+    * pair); its state grows with the number of DISTINCT candidate pairs
+    * seen (the honest bound for content dedup without an event-time
+    * horizon), and a deployment
+    * with an ingest-time horizon switches it to
+    * `dropDuplicatesWithinWatermark`.
+    *
+    * Emits (batch_doc, index_doc, jaccard) for verified near-dups — the
+    * stream twin of the batch `dedup_incremental` result restricted to
+    * the streamed documents (spec-pinned). */
   def incrementalDedup(stream: DataFrame, indexSigs: DataFrame,
                        indexShingles: DataFrame): DataFrame = {
     val sh = stream
@@ -486,107 +150,5 @@ object DocStreams {
         round(size(array_intersect(col("ss_a"), col("ss_b")))
           / size(array_union(col("ss_a"), col("ss_b"))), 6).as("jaccard"))
       .where(col("jaccard") >= graft.operators.DedupQueries.JaccardThreshold)
-  }
-
-  /** §8n(cd) — streaming perplexity gate: score arriving documents under
-    * the archive's FROZEN bigram-LM counts (`c2(w1,w2,c2)` /
-    * `c1(w1,c1)` — the [[bm25Stream]] frozen-stats discipline) and admit
-    * those at or above `minPred`. A bigram the archive never saw scores
-    * 0 (maximally surprising — CCNet's unseen handling), so fresh spam
-    * can only LOWER a doc's score, never ride the archive's counts.
-    * Written as a foreachBatch body (per-doc aggregate, the sink-family
-    * pattern). Spec-pinned: with the archive index built from the same
-    * corpus, doc_pred is bit-equal to the batch scoring chain
-    * (`docs_ppl_buckets`' doc_pred column). */
-  def pplGateBatch(batch: DataFrame, c2: DataFrame, c1: DataFrame,
-                   minPred: Long): DataFrame = {
-    val toks = batch.select(col("doc_id"), words(col("text")).as("w"))
-      .where(size(col("w")) >= 2)
-    val docBg = toks.select(col("doc_id"),
-        explode(expr("transform(sequence(1, size(w) - 1), i -> struct(w[i-1] AS w1, w[i] AS w2))")).as("p"))
-      .select(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2"))
-      .groupBy("doc_id", "w1", "w2").agg(count(lit(1)).as("k"))
-    docBg
-      .join(c2, Seq("w1", "w2"), "left")
-      .join(c1, Seq("w1"), "left")
-      .withColumn("pred", coalesce(expr("(c2 * 1000000) div c1"), lit(0L)))
-      .groupBy("doc_id")
-      .agg(expr("sum(k * pred) div sum(k)").as("doc_pred"))
-      .withColumn("admit", col("doc_pred") >= minPred)
-  }
-
-  /** §8m(cc) — streaming twin of the contrastive pair miner
-    * ([[graft.operators.DedupQueries.trainingPairs]]): each arriving
-    * document mines its training triple against the PERSISTED archive
-    * index — band-join candidates (stream-static, the index side never
-    * re-hashes), TF-IDF cosine verify under the archive's FROZEN df/N
-    * statistics (the [[bm25Stream]] discipline: stream-side weights use
-    * the index's term stats, never the batch's own), best verified
-    * partner as the positive, salted-hash negatives from the archive id
-    * domain with the same candidate anti-join guard.
-    *
-    * Written as a foreachBatch body (per-micro-batch groupBy/agg — the
-    * sink-family pattern), because best-partner selection is a per-anchor
-    * aggregate, which append-mode streaming can't express without
-    * watermark-bounded state the miner doesn't otherwise need. Index
-    * frames: `indexSigs` (doc_id, band_id, band_hash), `indexWt`
-    * (doc_id, term, wgt), `indexN2` (doc_id, n2), `dfx` (term, df);
-    * `nDocs`/`maxDoc` are the archive's frozen corpus stats.
-    *
-    * Emits (anchor, pos_id, cos, draw, neg) for arriving docs with a
-    * verified archive partner — spec-pinned to a driver recompute. */
-  def minePairsBatch(batch: DataFrame, indexSigs: DataFrame, indexWt: DataFrame,
-                     indexN2: DataFrame, dfx: DataFrame, nDocs: Long, maxDoc: Long,
-                     negDraws: Int = 2): DataFrame = {
-    import graft.operators.DedupQueries
-    import graft.plans.VectorExpressions
-    val sh = batch
-      .withColumn("w", words(col("text")))
-      .withColumn("s", shingles("w"))
-      .select("doc_id", "s")
-    val banded = DedupQueries.bandExplode(sh)
-    val cand = banded
-      .join(indexSigs.select(col("doc_id").as("index_doc"), col("band_id"), col("band_hash")),
-        Seq("band_id", "band_hash"))
-      .select(col("doc_id").as("anchor"), col("index_doc"))
-      .dropDuplicates("anchor", "index_doc")
-    // stream-side weight vectors under the archive's frozen df/N: a term
-    // the archive never saw gets df = 0 (the formula's maximal rarity)
-    val wtA = sh
-      .select(col("doc_id").as("anchor"), explode(col("s")).as("term"))
-      .groupBy("anchor", "term").agg(count(lit(1)).as("tf"))
-      .join(dfx, Seq("term"), "left")
-      .withColumn("wgt", expr(
-        s"tf * ((100 * (2 * ${nDocs}L - 2 * coalesce(df, 0L) + 1)) div (2 * coalesce(df, 0L) + 1))"))
-      .select("anchor", "term", "wgt")
-    val n2A = wtA.groupBy("anchor")
-      .agg(sum(expr("CAST(wgt AS DECIMAL(18,0)) * wgt")).as("n2_a"))
-    val dots = cand
-      .join(wtA.select(col("anchor"), col("term"), col("wgt").as("w_a")), Seq("anchor"))
-      .join(indexWt.select(col("doc_id").as("index_doc"), col("term"), col("wgt").as("w_b")),
-        Seq("index_doc", "term"))
-      .groupBy("anchor", "index_doc")
-      .agg(sum(expr("CAST(w_a AS DECIMAL(18,0)) * w_b")).as("dot"))
-    val scored = cand
-      .join(dots, Seq("anchor", "index_doc"), "left")
-      .join(n2A, Seq("anchor"))
-      .join(indexN2.select(col("doc_id").as("index_doc"), col("n2").as("n2_b")), Seq("index_doc"))
-      .withColumn("cos", round(expr(
-        """CASE WHEN n2_a = 0 OR n2_b = 0 THEN CAST(0 AS DOUBLE)
-          |ELSE CAST(coalesce(dot, 0) AS DOUBLE) / sqrt(CAST(n2_a AS DOUBLE) * CAST(n2_b AS DOUBLE)) END""".stripMargin), 6))
-      .where(col("cos") >= DedupQueries.CosVerifyThreshold)
-    val best = scored.groupBy("anchor")
-      .agg(max(struct(col("cos"), (-col("index_doc")).as("np"), col("index_doc"))).as("b"))
-      .select(col("anchor"), col("b.index_doc").as("pos_id"), col("b.cos").as("cos"))
-    best
-      .select(col("anchor"), col("pos_id"), col("cos"),
-        explode(expr(s"sequence(0, ${negDraws - 1})")).as("draw"))
-      .withColumn("neg",
-        VectorExpressions.hexPrefix(
-          md5(concat(lit("d#"), col("anchor").cast("string"), lit("#"), col("draw").cast("string"))), 8)
-          % lit(maxDoc + 1))
-      .where(col("neg") =!= col("anchor") && col("neg") =!= col("pos_id"))
-      .join(cand.select(col("anchor"), col("index_doc").as("neg")), Seq("anchor", "neg"), "left_anti")
-      .select(col("anchor"), col("pos_id"), col("cos"), col("draw"), col("neg"))
   }
 }

@@ -114,37 +114,6 @@ class CurriculumSpec extends AnyFunSuite {
     }
   }
 
-  test("streaming ppl gate scores bit-equal to the batch chain under frozen counts") {
-    implicit val s: org.apache.spark.sql.SparkSession = spark
-    import graft.functions.TextFunctions.words
-    val docs = graft.sources.Tables(dir).documents
-    val toks = docs.select(col("doc_id"), words(col("text")).as("w"))
-      .where(size(col("w")) >= 2)
-    val bg = toks.select(col("doc_id"),
-        explode(expr("transform(sequence(1, size(w) - 1), i -> struct(w[i-1] AS w1, w[i] AS w2))")).as("p"))
-      .select(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2"))
-      .groupBy("doc_id", "w1", "w2").agg(count(lit(1)).as("k")).cache()
-    val c2 = bg.groupBy("w1", "w2").agg(sum(col("k")).as("c2")).cache()
-    val c1 = c2.groupBy("w1").agg(sum(col("c2")).as("c1")).cache()
-    val batchPred = TextIndexQueries.queries("docs_ppl_buckets").fn(spark, dir)
-      .select("doc_id", "doc_pred").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val minPred = batchPred.values.toSeq.sorted.apply(batchPred.size / 2)
-    val got = graft.streaming.DocStreams.pplGateBatch(
-        docs.select("doc_id", "text"), c2, c1, minPred)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
-    assert(got.nonEmpty && got.map(_._1).toSet == batchPred.keySet)
-    got.foreach { case (id, pred, admit) =>
-      assert(pred == batchPred(id), s"doc $id")
-      assert(admit == (pred >= minPred))
-    }
-    // a wholly-unseen document is maximally surprising: doc_pred = 0
-    import spark.implicits._
-    val novel = Seq((999999L, "zq xv wj kp totally novel gibberish tokens"))
-      .toDF("doc_id", "text")
-    val nv = graft.streaming.DocStreams.pplGateBatch(novel, c2, c1, minPred).collect()
-    assert(nv.length == 1 && nv.head.getLong(1) == 0L && !nv.head.getBoolean(2))
-  }
-
   test("l-diversity audit matches a driver recompute") {
     implicit val s: org.apache.spark.sql.SparkSession = spark
     val docs = graft.sources.Tables(dir).documents

@@ -13,18 +13,6 @@ class HllTableSpec extends AnyFunSuite {
   private def df(xs: Seq[Long], g: String = "g") =
     xs.map(v => (g, v)).toDF("grain", "k")
 
-  test("merge of two builds equals one build over the union, bit-for-bit") {
-    graft.plans.VectorExpressions.register(spark)
-    val (a, b) = ((1L to 500L), (300L to 900L))
-    val merged = HllTable.merge(
-        HllTable.build(df(a), $"k", $"grain"),
-        HllTable.build(df(b), $"k", $"grain"))
-      .orderBy("grain", "reg").collect().toSeq
-    val direct = HllTable.build(df(a ++ b), $"k", $"grain")
-      .orderBy("grain", "reg").collect().toSeq
-    assert(merged == direct && merged.nonEmpty)
-  }
-
   test("register table is bounded, duplicate-insensitive, order-insensitive") {
     graft.plans.VectorExpressions.register(spark)
     val xs = (1L to 2000L)
@@ -53,14 +41,4 @@ class HllTableSpec extends AnyFunSuite {
     }
   }
 
-  test("absorb chain over micro-batches equals the one-shot build") {
-    graft.plans.VectorExpressions.register(spark)
-    val batches = (1 to 4).map(i => ((i * 100L) to (i * 100L + 350L)).toSeq)
-    val folded = batches.foldLeft(Option.empty[org.apache.spark.sql.DataFrame]) {
-      (acc, b) => Some(HllTable.absorb(acc, df(b), $"k", $"grain"))
-    }.get.orderBy("grain", "reg").collect().toSeq
-    val oneShot = HllTable.build(df(batches.flatten), $"k", $"grain")
-      .orderBy("grain", "reg").collect().toSeq
-    assert(folded == oneShot)
-  }
 }

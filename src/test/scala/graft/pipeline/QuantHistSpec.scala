@@ -17,17 +17,6 @@ class QuantHistSpec extends AnyFunSuite {
   private def df(xs: Seq[Long], g: String = "g") =
     xs.map(v => (g, v)).toDF("grain", "v")
 
-  test("merge of two builds equals one build over the union, bit-for-bit") {
-    val (a, b) = (vals(1, 400), vals(2, 300))
-    val merged = QuantHist.merge(
-        QuantHist.build(df(a), $"v", $"grain"),
-        QuantHist.build(df(b), $"v", $"grain"))
-      .orderBy("grain", "bin").collect().toSeq
-    val direct = QuantHist.build(df(a ++ b), $"v", $"grain")
-      .orderBy("grain", "bin").collect().toSeq
-    assert(merged == direct && merged.nonEmpty)
-  }
-
   test("quantile read returns the covering bin with width <= lo/16") {
     val xs = vals(7, 1000)
     val sorted = xs.sorted
@@ -60,13 +49,4 @@ class QuantHistSpec extends AnyFunSuite {
     assert(many.count() <= 16 + 16 * 59)
   }
 
-  test("absorb chain over micro-batches equals the one-shot build") {
-    val batches = (1 to 5).map(i => vals(i * 11, 200))
-    val folded = batches.foldLeft(Option.empty[org.apache.spark.sql.DataFrame]) {
-      (acc, b) => Some(QuantHist.absorb(acc, df(b), $"v", $"grain"))
-    }.get.orderBy("grain", "bin").collect().toSeq
-    val oneShot = QuantHist.build(df(batches.flatten), $"v", $"grain")
-      .orderBy("grain", "bin").collect().toSeq
-    assert(folded == oneShot)
-  }
 }

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Misra-Gries summary contract: never-overcount, bounded undercount, and
   * φ-heavy-hitter completeness — all against exact counts on the sf0.001
-  * events table (key = user_id, grain = day). */
+  * events table (key = user_id, one grain over the whole table). */
 class TopFreqSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val dir = TestSpark.Sf0001
@@ -17,16 +17,15 @@ class TopFreqSpec extends AnyFunSuite {
     .groupBy("user_id").agg(count(lit(1)).as("n"))
     .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
-  private def merged(k: Int): (Map[Long, Long], Long) = {
-    val m = TopFreq.merge(
-      TopFreq.build(events, col("user_id"), to_date(col("ts")), k), k).collect()
-    val err = if (m.isEmpty) 0L else m.head.getLong(2)
-    (m.map(r => r.getLong(0) -> r.getLong(1)).toMap, err)
+  private def summary(k: Int): (Map[Long, Long], Long) = {
+    val m = TopFreq.build(events, col("user_id"), lit("all"), k).collect()
+    val err = if (m.isEmpty) 0L else m.head.getLong(3)
+    (m.map(r => r.getLong(1) -> r.getLong(2)).toMap, err)
   }
 
   test("estimates never exceed the true count and undershoot by at most err") {
-    val (est, err) = merged(8)
-    assert(est.nonEmpty)
+    val (est, err) = summary(8)
+    assert(est.nonEmpty && err > 0)
     est.foreach { case (u, e) =>
       assert(e <= exact(u), s"user $u overcounted")
       assert(e >= exact(u) - err, s"user $u below the error bound")
@@ -38,16 +37,12 @@ class TopFreqSpec extends AnyFunSuite {
   }
 
   test("keys with true count above the error ledger are guaranteed present") {
-    val (est, err) = merged(8)
+    val (est, err) = summary(8)
     exact.filter(_._2 > err).keys.foreach(u => assert(est.contains(u)))
   }
 
-  test("capacity covering every key makes the merged summary exact") {
-    val perGrainDistinct = events
-      .groupBy(to_date(col("ts"))).agg(countDistinct(col("user_id")).as("d"))
-      .agg(max(col("d"))).collect().head.getLong(0)
-    val k = (perGrainDistinct.max(exact.size.toLong) + 1).toInt
-    val (est, err) = merged(k)
+  test("capacity covering every key makes the summary exact") {
+    val (est, err) = summary(exact.size + 1)
     assert(err == 0L)
     assert(est == exact)
   }

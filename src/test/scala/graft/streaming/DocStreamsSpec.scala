@@ -7,19 +7,13 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Streaming corpus gates pinned to their batch twins on sf0.001 docs. */
+/** The incremental dedup/containment scorers, streamed in micro-batches,
+  * pinned to their registered batch queries on sf0.001 docs. */
 class DocStreamsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
   private case class Doc(doc_id: Long, text: String, lang: String)
-
-  private lazy val docs: Seq[Doc] = {
-    implicit val s: org.apache.spark.sql.SparkSession = spark
-    Tables(TestSpark.Sf0001).documents
-      .select(col("doc_id"), col("text"), col("lang"))
-      .collect().map(r => Doc(r.getLong(0), r.getString(1), r.getString(2))).toSeq
-  }
 
   private def runStream(name: String, chunks: Seq[Seq[Doc]])
       (transform: DataFrame => DataFrame): DataFrame = {
@@ -30,172 +24,6 @@ class DocStreamsSpec extends AnyFunSuite {
       chunks.foreach { c => mem.addData(c); q.processAllAvailable() }
     } finally q.stop()
     spark.table(name)
-  }
-
-  test("streaming qualityGate admits exactly the batch keep set") {
-    val got = runStream("s_qgate", docs.grouped(200).toSeq)(DocStreams.qualityGate)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    implicit val s: org.apache.spark.sql.SparkSession = spark
-    val want = graft.operators.AnalyticsQueries.queries("docs_quality_filter")
-      .fn(spark, TestSpark.Sf0001)
-      .where(col("keep")).select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(got == want && got.nonEmpty)
-  }
-
-  test("streaming exact incremental dedup against the staged prefix index matches the batch twin") {
-    implicit val s: org.apache.spark.sql.SparkSession = spark
-    graft.plans.VectorExpressions.register(spark)
-    val path = java.nio.file.Files.createTempDirectory("graft-apidx-stream").toString
-    graft.operators.PrefixJoin.persistPrefixIndexBucketed(
-      spark, TestSpark.Sf0001, path, buckets = 4, prefix = "apidx_stream")
-    val bucketOf = Tables(TestSpark.Sf0001).documents
-      .select(col("doc_id"),
-        (graft.plans.VectorExpressions.hexPrefix(md5(col("doc_id").cast("string")), 8) % 100).as("b"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val batchDocs = docs.filter(d => bucketOf(d.doc_id) >= 80)
-    val got = runStream("s_exact_inc", batchDocs.grouped(40).toSeq)(df =>
-        DocStreams.exactIncrementalDedup(df,
-          spark.table("apidx_stream_prefix"), spark.table("apidx_stream_sets")))
-      .select("batch_doc", "index_doc", "n_inter", "n_union")
-      .collect().map(_.toSeq).toSet
-    val want = graft.operators.PrefixJoin.allPairsIncremental(spark, TestSpark.Sf0001)
-      .collect().map(_.toSeq).toSet
-    assert(got == want && got.nonEmpty)
-  }
-
-  test("streaming splitAdmitGate admits exactly the batch train split") {
-    val got = runStream("s_split", docs.grouped(200).toSeq)(
-      df => DocStreams.splitAdmitGate(df))
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    implicit val s: org.apache.spark.sql.SparkSession = spark
-    val want = graft.operators.SplitQueries.queries("docs_split_assign")
-      .fn(spark, TestSpark.Sf0001)
-      .where(col("split") === "train").select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(got == want && got.nonEmpty)
-    // the eval-freezer view is the exact complement
-    val eval = runStream("s_split_eval", docs.grouped(200).toSeq)(
-      df => DocStreams.splitAdmitGate(df, Set("val", "test")))
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert((got ++ eval).size == docs.size && (got & eval).isEmpty)
-  }
-
-  test("streaming decontaminate gate admits exactly the batch kept set") {
-    implicit val s: org.apache.spark.sql.SparkSession = spark
-    graft.plans.VectorExpressions.register(spark)
-    import graft.functions.TextFunctions.{shingles, words}
-    val withB = Tables(TestSpark.Sf0001).documents.withColumn("bucket",
-      graft.plans.VectorExpressions.hexPrefix(md5(col("doc_id").cast("string")), 8) % 100)
-    // the frozen held-out n-gram set, fitted offline like the tokenizer vocab
-    val testNg = withB.where(col("bucket") >= 90)
-      .withColumn("w", words(col("text"))).where(size(col("w")) > 0)
-      .select(explode(array_distinct(shingles("w", graft.operators.CorpusQueries.DecontamNgram))).as("sh"))
-      .distinct().collect().map(_.getString(0)).toSeq
-    val bucketOf = withB.select("doc_id", "bucket").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val trainDocs = docs.filter(d => bucketOf(d.doc_id) < 80)
-    val got = runStream("s_decontam", trainDocs.grouped(150).toSeq)(
-      df => DocStreams.decontaminateGate(df, testNg))
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    val want = graft.operators.CorpusQueries.queries("docs_decontaminate")
-      .fn(spark, TestSpark.Sf0001)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(got == want && got.nonEmpty)
-    assert(got.size < trainDocs.size) // the gate does drop the planted twins
-  }
-
-  test("streaming importance gate admits exactly the batch kept set") {
-    val got = runStream("s_imp", docs.grouped(200).toSeq)(DocStreams.importanceGate)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    implicit val s: org.apache.spark.sql.SparkSession = spark
-    val want = graft.operators.CorpusQueries.queries("docs_importance_sample")
-      .fn(spark, TestSpark.Sf0001)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(got == want && got.nonEmpty)
-  }
-
-  test("streaming subword-id encoding emits exactly the batch tensor stats") {
-    implicit val s: org.apache.spark.sql.SparkSession = spark
-    val merges = graft.operators.CorpusQueries.trainedBpeMerges(spark, TestSpark.Sf0001)
-    val vocab = graft.operators.CorpusQueries.trainedSubwordVocab(spark, TestSpark.Sf0001)
-    val got = runStream("s_bpe_ids", docs.grouped(200).toSeq)(
-      df => DocStreams.bpeIdsStream(df, merges, vocab))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4))).toSet
-    val want = graft.operators.CorpusQueries.queries("docs_bpe_ids")
-      .fn(spark, TestSpark.Sf0001)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4))).toSet
-    assert(got == want && got.nonEmpty)
-  }
-
-  test("streaming bpe segmentation emits exactly the batch per-doc stats") {
-    implicit val s: org.apache.spark.sql.SparkSession = spark
-    val merges = graft.operators.CorpusQueries.trainedBpeMerges(spark, TestSpark.Sf0001)
-    val got = runStream("s_bpe", docs.grouped(200).toSeq)(
-      df => DocStreams.bpeSegmentStream(df, merges))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    val want = graft.operators.CorpusQueries.queries("docs_bpe_segment")
-      .fn(spark, TestSpark.Sf0001)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    assert(got == want && got.nonEmpty)
-  }
-
-  test("streaming chunker emits exactly the batch chunk set") {
-    val got = runStream("s_chunks", docs.grouped(150).toSeq)(DocStreams.chunkStream)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSet
-    implicit val s: org.apache.spark.sql.SparkSession = spark
-    val want = graft.operators.CorpusQueries.queries("docs_chunk_sliding")
-      .fn(spark, TestSpark.Sf0001)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSet
-    assert(got == want && got.nonEmpty)
-  }
-
-  test("streaming cdc chunker emits exactly the batch chunk set") {
-    val got = runStream("s_cdc", docs.grouped(150).toSeq)(DocStreams.cdcChunkStream)
-      .select("doc_id", "chunk_id", "start_pos", "n_tokens", "chunk_hash")
-      .collect().map(_.toSeq).toSet
-    implicit val s: org.apache.spark.sql.SparkSession = spark
-    val want = graft.operators.CorpusQueries.queries("docs_chunk_cdc")
-      .fn(spark, TestSpark.Sf0001)
-      .select("doc_id", "chunk_id", "start_pos", "n_tokens", "chunk_hash")
-      .collect().map(_.toSeq).toSet
-    assert(got == want && got.nonEmpty)
-  }
-
-  test("streaming tokenizer with the offline-fitted vocab matches the batch query") {
-    implicit val s: org.apache.spark.sql.SparkSession = spark
-    val vocab = graft.operators.CorpusQueries
-      .vocabOf(Tables(TestSpark.Sf0001).documents, 30)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val got = runStream("s_tok", docs.grouped(150).toSeq)(DocStreams.tokenizeStream(_, vocab))
-      .collect().map(_.toSeq).toSet
-    val want = graft.operators.CorpusQueries.queries("docs_tokenize_ids")
-      .fn(spark, TestSpark.Sf0001)
-      .select("doc_id", "n_tokens", "n_oov", "ids_head")
-      .collect().map(_.toSeq).toSet
-    assert(got == want && got.nonEmpty)
-  }
-
-  test("streaming length-batcher emits the batch query's full batches under ordered feed") {
-    implicit val s: org.apache.spark.sql.SparkSession = spark
-    import graft.functions.TextFunctions.words
-    val scored = Tables(TestSpark.Sf0001).documents
-      .select(col("doc_id"), size(words(col("text"))).cast("long").as("n_tokens"))
-      .collect().map(r => DocStreams.BatchDoc(r.getLong(0), r.getLong(1)))
-      .sortBy(d => (d.n_tokens, d.doc_id)).toSeq
-    val mem = MemoryStream[DocStreams.BatchDoc](spark)
-    val q = DocStreams.lengthBatchGate(mem.toDS())
-      .writeStream.format("memory").queryName("s_batches").outputMode("append").start()
-    try {
-      scored.grouped(120).foreach { c => mem.addData(c); q.processAllAvailable() }
-    } finally q.stop()
-    val got = spark.table("s_batches")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSet
-    val want = graft.operators.CorpusQueries.queries("docs_length_batches")
-      .fn(spark, TestSpark.Sf0001)
-      .where(col("n_docs") === 8)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSet
-    assert(got == want && got.nonEmpty)
-    // every emitted batch honors the dense-runner contract
-    got.foreach { case (_, _, n, _, waste) => assert(n == 8L && waste >= 0 && waste < 8 * 32) }
   }
 
   test("streaming incremental dedup against the persisted index matches the batch twin") {
@@ -251,57 +79,4 @@ class DocStreamsSpec extends AnyFunSuite {
     assert(got == want && got.nonEmpty)
   }
 
-  test("streaming token-budget gate admits exactly the batch prefix, chunked arrivals") {
-    implicit val s: org.apache.spark.sql.SparkSession = spark
-    // feed in the SAME md5-stable order the batch query uses
-    val feed = Tables(TestSpark.Sf0001).documents
-      .select(col("source"), col("doc_id"),
-        md5(col("doc_id").cast("string")).as("h"),
-        size(graft.functions.TextFunctions.words(col("text"))).cast("long").as("n_tokens"))
-      .orderBy(col("h"), col("doc_id"))
-      .collect().map(r => DocStreams.BudgetDoc(r.getString(0), r.getLong(1), r.getString(2), r.getLong(3)))
-      .toSeq
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[DocStreams.BudgetDoc](spark)
-    val q = DocStreams.tokenBudgetGate(mem.toDS(), 800L)
-      .writeStream.format("memory").queryName("s_budget").outputMode("append").start()
-    try {
-      feed.grouped(120).foreach { c => mem.addData(c); q.processAllAvailable() }
-    } finally q.stop()
-    val got = spark.table("s_budget")
-      .collect().map(r => (r.getLong(1), r.getLong(3))).toSet // (doc_id, cum_tokens)
-    val want = graft.operators.CorpusQueries.queries("docs_token_budget")
-      .fn(spark, TestSpark.Sf0001)
-      .collect().map(r => (r.getLong(0), r.getLong(3))).toSet
-    assert(got == want && got.nonEmpty)
-  }
-
-  test("streaming content dedup keeps one doc per distinct content hash") {
-    val withDups = docs ++ docs.take(50).map(d => d.copy(doc_id = d.doc_id + 100000))
-    val got = runStream("s_dedup", withDups.grouped(300).toSeq)(DocStreams.dedupByContent)
-    val batchHashes = spark.createDataset(docs.map(_.text)).toDF("text")
-      .select(md5(col("text"))).distinct().count()
-    assert(got.count() == batchHashes)
-    assert(got.select("content_hash").distinct().count() == batchHashes)
-  }
-
-  test("streaming bm25 with frozen index stats emits exactly the batch scores") {
-    implicit val sess: org.apache.spark.sql.SparkSession = spark
-    import graft.functions.TextFunctions.words
-    val terms = graft.operators.TextIndexQueries.Bm25Terms
-    val full = Tables(TestSpark.Sf0001).documents
-    // offline index statistics, computed once (the artifact the stream freezes)
-    val nDocs = full.count()
-    val lTot = full.select(size(words(col("text"))).cast("long").as("dl"))
-      .agg(sum("dl")).head.getLong(0)
-    val dfs = full.select(col("doc_id"), explode(words(col("text"))).as("t"))
-      .where(col("t").isin(terms: _*)).distinct()
-      .groupBy("t").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val got = runStream("s_bm25", docs.grouped(150).toSeq)(
-        DocStreams.bm25Stream(_, dfs, nDocs, lTot))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val want = graft.operators.TextIndexQueries.bm25Scores(spark, TestSpark.Sf0001)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(got == want && want.nonEmpty)
-  }
 }

@@ -2391,9 +2391,12 @@ object EventAnalytics {
     forecastFromDaily(cnt)
   }
 
-  /** The backtest TAIL over a landed (type, day, x) daily-count table:
-    * the counts are mergeable sums, so this derives the WAPE table from
-    * whatever counts have landed, however they were accumulated. */
+  /** The backtest TAIL over a landed (type, day, x) daily-count table —
+    * shared verbatim with the streaming twin
+    * ([[graft.streaming.EventStreams.dailyVolume]] maintains the counts
+    * as mergeable watermarked state; this derives the WAPE table from
+    * whatever counts have landed), so replaying a corpus through the
+    * stream and scoring it equals the batch query bit-for-bit. */
   private[graft] def forecastFromDaily(cnt: DataFrame): DataFrame = {
     val grid = cnt.groupBy("type")
       .agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
@@ -2433,10 +2436,14 @@ object EventAnalytics {
     growthFromActive(active)
   }
 
-  /** The ledger TAIL over a landed (user_id, day) activity-cell table:
-    * per-(user, day) presence is idempotent-mergeable, so this derives
-    * the new/retained/resurrected/churned ledger from whatever cells
-    * have landed — the [[forecastFromDaily]] discipline. */
+  /** The ledger TAIL over a landed (user_id, day) activity-cell table —
+    * shared verbatim with the streaming twin
+    * ([[graft.streaming.EventStreams.activeDays]] maintains the distinct
+    * cells as mergeable watermarked state; this derives the
+    * new/retained/resurrected/churned ledger from whatever cells have
+    * landed), the [[forecastFromDaily]] discipline: replaying a corpus
+    * through the stream and scoring the landed cells equals the batch
+    * query bit-for-bit. */
   private[graft] def growthFromActive(active: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("day"))
     val lab = active

@@ -1,15 +1,384 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import java.sql.Timestamp
 
-/** Event operators written over watermarked inputs, so one code path is
-  * both the streaming form and the batch query: `withWatermark` is a
-  * no-op on a batch frame, and the registered twins
-  * (`events_preceding_touches`, `events_drift_alarm`) pin these defs to
-  * their DuckDB oracles.
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+/** One event as the stateful sessionizer sees it. */
+final case class Event(event_id: Long, ts: Timestamp, user_id: Long, event_type: String, value: Double)
+
+/** One closed session. */
+final case class Session(user_id: Long, session_start: Timestamp, session_end: Timestamp, n_events: Long)
+
+/** One open session interval (epoch-micros bounds + event count). */
+final case class SessionState(start: Long, last: Long, n: Long)
+
+/** Per-user state: every interval the watermark has not yet sealed. */
+final case class OpenSessions(sessions: Seq[SessionState])
+
+/** One buffered event for the stateful EWMA (epoch-µs + tie-break id). */
+final case class EvRec(tsUs: Long, eventId: Long, value: Double)
+
+/** Per-user EWMA state: the last ≤7 FINALIZED events (the history every
+  * future event's window reaches back into) plus the not-yet-sealed
+  * pending buffer. */
+final case class EwmaState(hist: Seq[EvRec], pending: Seq[EvRec])
+
+/** One smoothed event (the batch `events_ewma` row shape). */
+final case class EwmaPoint(user_id: Long, event_id: Long, ts: Timestamp,
+                           value: Double, ewma: Double)
+
+/** Streaming twins of the batch event operators (SURVEY §2.3 rows 36-37).
+  *
+  * Same transformations as `events_hourly_agg` / `events_sessionize`, but
+  * expressed over an unbounded stream: event-time watermarks bound the
+  * state, windows/session-windows aggregate, and the stateful variant
+  * keeps explicit per-user session state via flatMapGroupsWithState.
+  * At scale, state is hash-partitioned by the grouping key across
+  * executors and checkpointed incrementally — the streaming equivalents
+  * of the batch shuffles.
+  *
+  * All three transforms also run in BATCH mode on the same code path
+  * (Spark executes the same plan with empty initial state), which is how
+  * the specs pin them to the batch twins' results.
   */
 object EventStreams {
+
+  /** Row 36 — windowed aggregation with a watermark: hourly event counts
+    * and value totals per event type. */
+  def hourlyAgg(events: DataFrame, watermark: String = "2 hours"): DataFrame =
+    events
+      .withWatermark("ts", watermark)
+      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
+      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("total_value"))
+      .select(col("w.start").as("bucket"), col("event_type"), col("n_events"), col("total_value"))
+
+  /** r12 (verdict #6) — MERGEABLE DAILY-VOLUME STATE, the streaming half
+    * of the forecast backtest: per-(type, epoch-day) event counts as a
+    * watermarked streaming aggregation. Counts are mergeable sums, so
+    * late/out-of-order arrivals fold into their day's cell until the
+    * watermark closes it; the day key is derived EXACTLY as the batch
+    * query derives it (unix_micros div 86.4e9 — epoch-day UTC), so the
+    * landed cell table is bit-identical to the batch daily-count stage
+    * and [[graft.operators.EventAnalytics.forecastFromDaily]] (the
+    * SHARED tail) scores it into the same WAPE table — spec-pinned.
+    * The serving shape at 100 TB: the stream maintains ~(types × open
+    * days) rows of state; the backtest reads the landed counts, never
+    * the raw event history. */
+  def dailyVolume(events: DataFrame, watermark: String = "2 days"): DataFrame =
+    events
+      .withWatermark("ts", watermark)
+      .groupBy(window(col("ts"), "1 day").as("w"), col("event_type").as("type"))
+      .agg(count(lit(1)).as("x"))
+      .select(col("type"),
+        expr("unix_micros(w.start) div 86400000000").as("day"), col("x"))
+
+  /** r13 (verdict #2) — MERGEABLE ACTIVITY-CELL STATE, the streaming
+    * half of growth accounting: the distinct (user_id, epoch-day) cells
+    * as a watermarked streaming aggregation. Per-(user, day) presence is
+    * idempotent-mergeable (re-delivery and out-of-order arrival fold
+    * into the same cell until the watermark closes the day), and the
+    * day key is derived EXACTLY as the batch query derives it
+    * (unix_micros div 86.4e9 — epoch-day UTC), so the landed cell table
+    * is bit-identical to the batch distinct stage and
+    * [[graft.operators.EventAnalytics.growthFromActive]] (the SHARED
+    * tail) derives the same new/retained/resurrected/churned ledger —
+    * spec-pinned. The serving shape at 100 TB: the stream maintains
+    * ~(active users × open days) cells of state; the ledger reads the
+    * landed cells, never the raw event history. */
+  def activeDays(events: DataFrame, watermark: String = "2 days"): DataFrame =
+    events
+      .withWatermark("ts", watermark)
+      .groupBy(window(col("ts"), "1 day").as("w"), col("user_id"))
+      .agg(count(lit(1)).as("n"))
+      .select(col("user_id"), expr("unix_micros(w.start) div 86400000000").as("day"))
+
+  /** Row 37 (built-in path) — gap-based sessionization via session_window
+    * (30-minute inactivity gap, matching the batch twin). */
+  def sessionWindows(events: DataFrame, gap: String = "30 minutes",
+                     watermark: String = "2 hours"): DataFrame =
+    events
+      .withWatermark("ts", watermark)
+      .groupBy(session_window(col("ts"), gap).as("w"), col("user_id"))
+      .agg(count(lit(1)).as("n_events"))
+      .select(col("user_id"), col("w.start").as("session_start"),
+        col("w.end").as("session_end"), col("n_events"))
+
+  /** Streaming exact-dedup (the ingest-side twin of `dedup_exact_docs`):
+    * re-delivered events are dropped by key; state is bounded by the
+    * watermark horizon, so at 100 TB/day the dedup table never grows past
+    * the horizon's key cardinality per partition. */
+  def dedupEvents(events: DataFrame, watermark: String = "2 hours"): DataFrame =
+    events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark("event_id")
+
+  private val GapUs = 30L * 60 * 1000 * 1000
+
+  /** java.sql.Timestamp ↔ epoch micros (getTime alone drops the
+    * sub-millisecond part the event timestamps carry). */
+  private def toUs(t: Timestamp): Long =
+    t.toInstant.getEpochSecond * 1000000L + t.toInstant.getNano / 1000L
+  private def fromUs(us: Long): Timestamp = {
+    val t = new Timestamp(Math.floorDiv(us, 1000000L) * 1000L)
+    t.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
+    t
+  }
+
+  /** Row 37 (custom-state path) — explicit per-user session state with
+    * flatMapGroupsWithState. The state is the SET of open session
+    * intervals, not a single open session: an out-of-order event admitted
+    * by the watermark may open an earlier separate session, extend an
+    * existing one at either end, or BRIDGE two intervals into one — a
+    * lone-open-session fold gets all three wrong (it would glue a
+    * 60-min-early event onto a session it is gap-separated from). Interval
+    * merge is order-independent, so the result matches the batch twin
+    * under any admissible arrival order. A session emits only once the
+    * watermark passes last + gap — from then on no admissible event can
+    * extend or bridge it (any such event would be older than the
+    * watermark). `session_end` is the last event's timestamp (exactly the
+    * batch twin's max(ts), unlike session_window's end = last + gap). */
+  def sessionizeStateful(events: Dataset[Event], watermark: String = "2 hours"): Dataset[Session] = {
+    import events.sparkSession.implicits._
+    val withWm =
+      if (events.isStreaming) events.withWatermark("ts", watermark) else events
+
+    def fold(intervals0: List[SessionState], batch: Iterator[Event]): List[SessionState] = {
+      var intervals = intervals0
+      batch.foreach { e =>
+        val t = toUs(e.ts)
+        val (overlap, rest) = intervals.partition(s => t >= s.start - GapUs && t <= s.last + GapUs)
+        val merged = overlap.foldLeft(SessionState(t, t, 1)) { (acc, s) =>
+          SessionState(math.min(acc.start, s.start), math.max(acc.last, s.last), acc.n + s.n)
+        }
+        intervals = merged :: rest
+      }
+      intervals
+    }
+
+    def emitAndPark(userId: Long, intervals: List[SessionState],
+                    state: GroupState[OpenSessions]): Iterator[Session] = {
+      val wmUs = state.getCurrentWatermarkMs() * 1000L
+      val (done, open) = intervals.partition(s => s.last + GapUs <= wmUs)
+      if (open.nonEmpty) {
+        state.update(OpenSessions(open))
+        // +1 ms: the ms-truncated timeout must stay strictly past the watermark
+        state.setTimeoutTimestamp(open.map(s => Math.floorDiv(s.last + GapUs, 1000L) + 1).min)
+      } else if (state.exists) state.remove()
+      done.sortBy(_.start)
+        .map(s => Session(userId, fromUs(s.start), fromUs(s.last), s.n)).iterator
+    }
+
+    withWm
+      .groupByKey(_.user_id)
+      .flatMapGroupsWithState[OpenSessions, Session](
+        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+        (userId: Long, batch: Iterator[Event], state: GroupState[OpenSessions]) =>
+          val held = state.getOption.map(_.sessions.toList).getOrElse(Nil)
+          if (batch.isEmpty && state.hasTimedOut) {
+            emitAndPark(userId, held, state)
+          } else {
+            val intervals = fold(held, batch)
+            if (eventTimeWatermarkSet(state)) emitAndPark(userId, intervals, state)
+            else // batch execution: the group holds ALL data — emit everything
+              intervals.sortBy(_.start)
+                .map(s => Session(userId, fromUs(s.start), fromUs(s.last), s.n)).iterator
+          }
+      }
+  }
+
+  /** §8k(be) streaming twin — per-user dyadic EWMA over an unbounded
+    * stream. The batch operator's contract (`events_ewma`: trailing-8
+    * window in (ts, event_id) order, power-of-two weights, bit-identical
+    * doubles) survives out-of-order arrival by FINALIZATION, not by
+    * assuming order: an event's smoothed value depends on the 7 events
+    * immediately before it in the final sequence, so it emits only once
+    * the watermark passes its timestamp — from then on no admissible
+    * arrival can sort before it. State per user is the ≤7-row finalized
+    * tail (the history future windows reach into) plus the pending
+    * buffer the watermark has not sealed — bounded by the watermark
+    * horizon's event count, never by history length (the reason the
+    * TRUNCATED EWMA streams and the unbounded recursion cannot).
+    * Pending re-sorts on every trigger, so arrival order is immaterial
+    * among admissible events; emission order within a trigger is the
+    * final sequence order. Batch execution runs the same code path with
+    * everything final — the spec pins it bit-for-bit to the batch twin. */
+  def ewmaStateful(events: Dataset[Event], watermark: String = "2 hours"): Dataset[EwmaPoint] = {
+    import events.sparkSession.implicits._
+    val withWm = if (events.isStreaming) events.withWatermark("ts", watermark) else events
+
+    // identical association to the batch expression — same bits
+    def dyadic(win: IndexedSeq[Double]): Double = {
+      val v = win.reverse // v(0) = newest
+      v(0) / 2 + v(1) / 4 + v(2) / 8 + v(3) / 16 +
+        v(4) / 32 + v(5) / 64 + v(6) / 128 + v(7) / 128
+    }
+
+    /** Fold `ready` (final-sequence order) into the history, emitting a
+      * point for every event with a full 7-deep window. */
+    def finalizeRun(userId: Long, hist0: Seq[EvRec], ready: Seq[EvRec]): (Seq[EwmaPoint], Seq[EvRec]) = {
+      var hist = hist0
+      val out = Seq.newBuilder[EwmaPoint]
+      ready.foreach { r =>
+        if (hist.size >= 7)
+          out += EwmaPoint(userId, r.eventId, fromUs(r.tsUs), r.value,
+            dyadic((hist.takeRight(7) :+ r).map(_.value).toIndexedSeq))
+        hist = (hist :+ r).takeRight(7)
+      }
+      (out.result(), hist)
+    }
+
+    withWm.groupByKey(_.user_id)
+      .flatMapGroupsWithState[EwmaState, EwmaPoint](
+        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+        (userId: Long, batch: Iterator[Event], state: GroupState[EwmaState]) =>
+          val st = state.getOption.getOrElse(EwmaState(Nil, Nil))
+          val pending = (st.pending ++ batch.map(e => EvRec(toUs(e.ts), e.event_id, e.value)))
+            .sortBy(r => (r.tsUs, r.eventId))
+          if (!eventTimeWatermarkSet(state)) {
+            // batch execution: the group holds ALL data — everything final
+            finalizeRun(userId, st.hist, pending)._1.iterator
+          } else {
+            val wmUs = state.getCurrentWatermarkMs() * 1000L
+            val (ready, open) = pending.partition(_.tsUs < wmUs)
+            val (out, hist) = finalizeRun(userId, st.hist, ready)
+            if (open.nonEmpty) {
+              state.update(EwmaState(hist, open))
+              // ms-truncated timeout strictly past the earliest pending ts
+              state.setTimeoutTimestamp(Math.floorDiv(open.map(_.tsUs).min, 1000L) + 1)
+            } else if (hist.nonEmpty) {
+              // no pending rows: keep only the ≤7-row tail (a returning
+              // user's first windows need it); no timeout — nothing to emit
+              state.update(EwmaState(hist, Nil))
+            } else if (state.exists) state.remove()
+            out.iterator
+          }
+      }
+  }
+
+  /** setTimeoutTimestamp throws in batch execution (no watermark); the
+    * stateful sessionizer supports both modes, so guard on it. */
+  private def eventTimeWatermarkSet(state: GroupState[_]): Boolean =
+    try { state.getCurrentWatermarkMs(); true } catch { case _: Throwable => false }
+
+  /** One emitted next-event transition; `ts` is the DESTINATION event's
+    * time — the moment the transition completed — so downstream windowed
+    * monitors aggregate on it. */
+  final case class Transition(user_id: Long, from_event_id: Long, to_event_id: Long,
+                              from_type: String, to_type: String, ts: Timestamp)
+
+  /** Buffered event reference (epoch-micros + tie-break id + type). */
+  final case class EvRef(ts: Long, event_id: Long, event_type: String)
+
+  /** Per-user transition state: the last SEALED event (the chain head for
+    * the next emission) plus every event the watermark has not sealed. */
+  final case class TransitState(last: Option[EvRef], pending: Seq[EvRef])
+
+  /** §8d(p) — streaming event-transition mining: the pair stream behind
+    * the batch `events_transitions` matrix, emitted as users act. Ordering
+    * within a user is only final up to the watermark, so events buffer in
+    * state until the watermark passes them, then seal IN (ts, event_id)
+    * ORDER — exactly the batch twin's window order — chaining from the
+    * last sealed event. Out-of-order arrivals admitted by the watermark
+    * land in the buffer and sort into place; arrivals older than the
+    * watermark are dropped by Spark before the state op (the standard
+    * lateness contract). State per user = the events inside the watermark
+    * horizon (bounded by horizon × per-user rate) + one chain head; an
+    * event-time timeout seals a gone-quiet user's buffer without waiting
+    * for their next event. The batch `(end)` sentinel row is a closure
+    * artifact — an unbounded stream never knows a user's last event, so
+    * the stream emits only realized pairs (the spec compares against the
+    * batch matrix minus its `(end)` rows). */
+  def transitionsStateful(events: Dataset[Event], watermark: String = "2 hours"): Dataset[Transition] = {
+    import events.sparkSession.implicits._
+    val withWm =
+      if (events.isStreaming) events.withWatermark("ts", watermark) else events
+
+    def seal(userId: Long, st: TransitState, wmUs: Long,
+             state: GroupState[TransitState], streaming: Boolean): Iterator[Transition] = {
+      val (ready, stillPending) =
+        if (streaming) st.pending.partition(_.ts < wmUs)
+        else (st.pending, Seq.empty[EvRef])
+      val chain = ready.sortBy(e => (e.ts, e.event_id))
+      val emitted = (st.last.toSeq ++ chain).sliding(2).collect {
+        case Seq(a, b) =>
+          Transition(userId, a.event_id, b.event_id, a.event_type, b.event_type, fromUs(b.ts))
+      }.toList
+      val newLast = chain.lastOption.orElse(st.last)
+      if (streaming) {
+        if (stillPending.nonEmpty) {
+          state.update(TransitState(newLast, stillPending))
+          state.setTimeoutTimestamp(Math.floorDiv(stillPending.map(_.ts).max, 1000L) + 1)
+        } else if (newLast.isDefined) {
+          // keep only the chain head; no timeout needed — the next event
+          // for this user re-opens the group
+          state.update(TransitState(newLast, Nil))
+        } else if (state.exists) state.remove()
+      }
+      emitted.iterator
+    }
+
+    withWm
+      .groupByKey(_.user_id)
+      .flatMapGroupsWithState[TransitState, Transition](
+        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+        (userId: Long, batch: Iterator[Event], state: GroupState[TransitState]) =>
+          val held = state.getOption.getOrElse(TransitState(None, Nil))
+          val streaming = eventTimeWatermarkSet(state)
+          val folded = held.copy(pending =
+            held.pending ++ batch.map(e => EvRef(toUs(e.ts), e.event_id, e.event_type)))
+          val wmUs = if (streaming) state.getCurrentWatermarkMs() * 1000L else Long.MaxValue
+          seal(userId, folded, wmUs, state, streaming)
+      }
+  }
+
+  /** §8e(u) — windowed transition counts: the aggregation half of the
+    * drift monitor, run over the LANDED pair log (the sink table
+    * [[transitionsStateful]] writes), not stacked on the live stream.
+    * That separation is forced by correctness, not convenience: sealed
+    * transitions are emitted precisely BECAUSE the watermark passed them,
+    * so their event times are always older than the query's global
+    * watermark and a downstream stateful aggregation in the same query
+    * would discard them as late (Spark's
+    * statefulOperator.checkCorrectness rejects the plan for exactly this
+    * reason). The two-query pattern — pair stream → log; monitor over
+    * the log (batch, or a file-source stream with its own watermark) —
+    * is the standard fix and what a deployment wants anyway: the log is
+    * replayable. Works unchanged in batch (withWatermark is a no-op). */
+  def windowedTransitions(transitions: DataFrame,
+                          window: String = "1 hour",
+                          watermark: String = "2 hours"): DataFrame =
+    transitions
+      .withWatermark("ts", watermark)
+      .groupBy(org.apache.spark.sql.functions.window(col("ts"), window).as("w"),
+        col("from_type"), col("to_type"))
+      .agg(count(lit(1)).as("n"))
+      .select(col("w.start").as("bucket"), col("from_type"), col("to_type"), col("n"))
+
+  /** The batch half of the drift monitor: each window's transition
+    * SHARES (within its from_type) against the corpus-wide baseline
+    * matrix (`events_transitions` minus its `(end)` rows — the stream
+    * never emits the closure sentinel). `drift_pct` is the signed share
+    * difference; an alarm thresholds |drift_pct|. Pure exact ratios —
+    * engine-portable like every score in the library. */
+  def transitionDrift(windowCounts: DataFrame, baseline: DataFrame): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("bucket"), col("from_type"))
+    val shares = windowCounts
+      .withColumn("window_pct", round(col("n") * lit(100.0) / sum(col("n")).over(w), 4))
+    val base = baseline
+      .where(col("to_type") =!= "(end)")
+      .withColumn("baseline_pct",
+        round(col("n_transitions") * lit(100.0) /
+          sum(col("n_transitions")).over(
+            org.apache.spark.sql.expressions.Window.partitionBy(col("from_type"))), 4))
+      .select(col("from_type"), col("to_type"), col("baseline_pct"))
+    shares.join(broadcast(base), Seq("from_type", "to_type"), "left")
+      .withColumn("drift_pct",
+        round(col("window_pct") - coalesce(col("baseline_pct"), lit(0.0)), 4))
+      .select(col("bucket"), col("from_type"), col("to_type"),
+        col("n"), col("window_pct"), col("baseline_pct"), col("drift_pct"))
+  }
 
   /** Stream-stream interval join: every purchase pairs with the SAME
     * user's touch events in the hour strictly before it. Both sides
@@ -40,10 +409,106 @@ object EventStreams {
         col("touch_id"), col("touch_type"), col("t_ts"))
   }
 
+  /** §8h(ah) — streaming point-in-time enrichment: live events pick up
+    * the landed SCD2 version valid at their timestamp. The dimension is
+    * STATIC (the landed scd2 table — tiny next to the stream), so the
+    * version candidates arrive by broadcast stream-static join; picking
+    * the latest valid version is one watermarked aggregation keyed by the
+    * event (max struct ordered by version_no), sealed per event once the
+    * watermark passes it. Per-event state is one struct; the explosion
+    * before the agg is bounded by versions-per-user. Events before their
+    * user's first version (or for unknown users) drop — same inner
+    * semantics as the batch twin's ASOF oracle. */
+  def pitEnrichStream(events: DataFrame, versions: DataFrame,
+                      watermark: String = "2 hours"): DataFrame = {
+    val v = broadcast(versions
+      .select(col("user_id"), col("valid_from"), col("state"), col("version_no")))
+    events
+      .withWatermark("ts", watermark)
+      .select(col("user_id"), col("ts"), col("event_id"))
+      .join(v, Seq("user_id"))
+      .where(col("valid_from") <= col("ts"))
+      .groupBy(col("user_id"), col("event_id"), col("ts"))
+      .agg(max(struct(col("version_no"), col("valid_from"), col("state"))).as("v"))
+      .select(col("user_id"), col("event_id"), col("ts"),
+        col("v.state").as("state_at"), col("v.version_no").as("version_at"))
+  }
+
+  /** §8j(ax) — streaming overlapping-stays: which KNOWN users' stays
+    * overlap an ARRIVING user's stay set. The batch keyed join's
+    * detection phase as a stream-static join: the static side is the
+    * staged [[graft.operators.MultiIntervalJoin.binIndex]] of the
+    * session-list table (built once per corpus state — the ann_*_served
+    * discipline), the stream side derives its own bin index row-locally
+    * (explode + transform, no state), the join keys on the hour bin and
+    * filters on the tiny bin-LOCAL subsets. `dropDuplicates` dedups the
+    * (probe, corpus) pair across shared bins — in a long-running
+    * deployment bound that state with a watermark on the probe's arrival
+    * time; the spec pins batch-mode equality to the batch keyed join. */
+  def overlappingStaysStream(stays: DataFrame, corpusIndex: DataFrame,
+                             binWidth: Long): DataFrame = {
+    val probe = graft.operators.MultiIntervalJoin.binIndex(
+      stays, "ivs", "user_id", binWidth, "p_")
+    val localOverlap = org.apache.spark.sql.functions.expr(
+      "exists(p_loc, a -> exists(c_loc, b -> a.s <= b.e AND b.s <= a.e))")
+    probe.join(corpusIndex, probe("p_bin") === corpusIndex("c_bin") && localOverlap)
+      .where(col("p_id") =!= col("c_id"))
+      .select(col("p_id").as("probe_user"), col("c_id").as("corpus_user"))
+      .dropDuplicates("probe_user", "corpus_user")
+  }
+
+  /** One "user went quiet" alarm: last activity and when the silence was
+    * established (event time — the watermark instant that proved it). */
+  final case class SilenceAlarm(user_id: Long, last_seen: Timestamp, silent_events: Long)
+
+  /** Per-user silence state: last event micros + count since last alarm. */
+  final case class SilenceState(lastUs: Long, n: Long)
+
+  /** §8g(z) — heartbeat/silence alarm: emit when a user produces NO
+    * events for `silence` — the first operator here that is
+    * timeout-DRIVEN rather than data-driven: nothing arrives, yet a row
+    * must be emitted, which batch cannot express at all (a batch twin
+    * can only report silence relative to the data's end). Mechanics:
+    * every event updates the user's last-seen state and re-arms an
+    * EventTimeTimeout at last_seen + silence; if the watermark crosses
+    * that point with no newer event, the timeout path fires and emits
+    * one alarm (then disarms — one alarm per quiet spell; the next event
+    * re-arms). State is one record per active user, removed on alarm, so
+    * the store is bounded by |users active within the silence horizon|.
+    * A re-appearing user simply starts a new spell — the alarm stream is
+    * exactly the input for the gap-fill family's downstream repair. */
+  def silenceAlarms(events: Dataset[Event], silenceMs: Long = 2L * 3600 * 1000)
+      : Dataset[SilenceAlarm] = {
+    import events.sparkSession.implicits._
+    require(silenceMs > 0, s"silence must be positive: $silenceMs ms")
+    val silMs = silenceMs
+    events
+      .withWatermark("ts", s"$silenceMs milliseconds")
+      .groupByKey(_.user_id)
+      .flatMapGroupsWithState[SilenceState, SilenceAlarm](
+        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+        (userId: Long, batch: Iterator[Event], state: GroupState[SilenceState]) =>
+          if (batch.isEmpty && state.hasTimedOut) {
+            val st = state.get
+            state.remove() // one alarm per quiet spell; next event re-arms
+            Iterator.single(SilenceAlarm(userId, fromUs(st.lastUs), st.n))
+          } else {
+            var last = state.getOption.map(_.lastUs).getOrElse(Long.MinValue)
+            var n = state.getOption.map(_.n).getOrElse(0L)
+            batch.foreach { e =>
+              val t = toUs(e.ts); if (t > last) last = t; n += 1
+            }
+            state.update(SilenceState(last, n))
+            state.setTimeoutTimestamp(Math.floorDiv(last, 1000L) + silMs + 1)
+            Iterator.empty
+          }
+      }
+  }
+
   /** §8f(x) — the LIVE drift alarm: one query from pair log to alarm
-    * rows, streaming-legal end to end. A share computed as a non-time
-    * window function over sealed counts can't run on a stream (it is a
-    * second stateful pass); this formulation folds everything
+    * rows, streaming-legal end to end. [[transitionDrift]] can't run on a
+    * stream (its share is a non-time window function over the sealed
+    * counts — a second stateful pass); this formulation folds everything
     * into ONE watermarked aggregation keyed by (time window, from_type):
     * the static baseline's to_type vocabulary (bounded — |event types|
     * rows, collected once at plan build) becomes |vocab| conditional

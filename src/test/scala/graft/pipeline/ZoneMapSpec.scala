@@ -37,4 +37,102 @@ class ZoneMapSpec extends AnyFunSuite {
     assert(s == 4L) // k = 5, 10, 105, 110
   }
 
+  test("candidateFiles prunes files whose range cannot match") {
+    val lowOnly = ZoneMap.candidateFiles(zm, "k", lit(3L), lit(7L))
+    assert(lowOnly.size == 1)
+    val highOnly = ZoneMap.candidateFiles(zm, "k", lit(105L), lit(200L))
+    assert(highOnly.size == 1 && highOnly != lowOnly)
+    val spanning = ZoneMap.candidateFiles(zm, "k", lit(5L), lit(105L))
+    assert(spanning.size == 2)
+    // gap between the two files: no false positives needed, both pruned
+    assert(ZoneMap.candidateFiles(zm, "k", lit(50L), lit(60L)).isEmpty)
+  }
+
+  test("candidateFiles works on date columns through the dtype tag") {
+    val jan = ZoneMap.candidateFiles(zm, "d",
+      lit(Date.valueOf("2024-01-01")), lit(Date.valueOf("2024-01-31")))
+    assert(jan.size == 1)
+    assert(ZoneMap.candidateFiles(zm, "d",
+      lit(Date.valueOf("2023-01-01")), lit(Date.valueOf("2023-12-31"))).isEmpty)
+  }
+
+  test("all-null column in a file drops that file; unknown column → empty") {
+    val d2 = Files.createTempDirectory("graft-zm-null").toString
+    Seq((1L, Option.empty[String]), (2L, None)).toDF("k", "s")
+      .coalesce(1).write.mode("overwrite").parquet(d2)
+    val zm2 = ZoneMap.build(spark.read.parquet(d2), Seq("s"))
+    assert(ZoneMap.candidateFiles(zm2, "s", lit("a"), lit("z")).isEmpty)
+    assert(ZoneMap.candidateFiles(zm2, "missing", lit("a"), lit("z")).isEmpty)
+  }
+
+  test("prunedParquet reads only candidate files, same rows as a full scan") {
+    val pruned = ZoneMap.prunedParquet(spark, dir, zm, "k", lit(101L), lit(200L))
+    assert(pruned.inputFiles.length == 1) // low-range file never listed
+    val full = spark.read.parquet(dir).where($"k" >= 101L && $"k" <= 200L)
+    assert(pruned.select("k").orderBy("k").collect().toSeq ==
+      full.select("k").orderBy("k").collect().toSeq)
+    assert(ZoneMap.prunedParquet(spark, dir, zm, "k", lit(50L), lit(60L)).count() == 0)
+  }
+
+  test("streaming maintenance converges the manifest to a full rebuild") {
+    import org.apache.spark.sql.streaming.Trigger
+    val root = Files.createTempDirectory("graft-zm-stream").toString
+    val src = s"$root/staged"; val manifest = s"$root/manifest"; val ckpt = s"$root/ckpt"
+    def land(lo: Long, hi: Long): Unit =
+      (lo to hi).map(k => (k, s"v$k")).toDF("k", "v")
+        .coalesce(1).write.mode("append").parquet(src)
+    def runOnce(): Unit = {
+      val schema = spark.read.parquet(src).schema
+      val stream = spark.readStream.schema(schema).parquet(src)
+      val q = ZoneMap.maintain(stream, Seq("k"), manifest)
+        .option("checkpointLocation", ckpt).trigger(Trigger.AvailableNow()).start()
+      try q.awaitTermination(120000) finally q.stop()
+    }
+    land(1, 10); runOnce()
+    land(100, 120); runOnce() // only the new file is scanned (checkpointed source)
+    val got = spark.read.parquet(manifest)
+      .select("file", "column", "min_value", "max_value", "n_rows", "n_nulls")
+      .orderBy("file", "column").collect().toSeq
+    val want = ZoneMap.build(spark.read.parquet(src), Seq("k"))
+      .select("file", "column", "min_value", "max_value", "n_rows", "n_nulls")
+      .orderBy("file", "column").collect().toSeq
+    assert(got == want && got.size == 2)
+  }
+
+  test("maintain recovers a half-swapped manifest from its .old backup") {
+    import org.apache.spark.sql.streaming.Trigger
+    val root = Files.createTempDirectory("graft-zm-crash").toString
+    val src = s"$root/staged"; val manifest = s"$root/manifest"; val ckpt = s"$root/ckpt"
+    def land(lo: Long, hi: Long): Unit =
+      (lo to hi).map(k => (k, s"v$k")).toDF("k", "v")
+        .coalesce(1).write.mode("append").parquet(src)
+    def runOnce(): Unit = {
+      val schema = spark.read.parquet(src).schema
+      val q = ZoneMap.maintain(spark.readStream.schema(schema).parquet(src), Seq("k"), manifest)
+        .option("checkpointLocation", ckpt).trigger(Trigger.AvailableNow()).start()
+      try q.awaitTermination(120000) finally q.stop()
+    }
+    land(1, 10); runOnce()
+    // simulate a crash between the two swap renames: target gone, backup left
+    java.nio.file.Files.move(java.nio.file.Paths.get(manifest),
+      java.nio.file.Paths.get(s"$manifest.old-7"))
+    land(100, 120); runOnce()
+    val got = spark.read.parquet(manifest)
+      .select("file", "column", "min_value", "max_value", "n_rows", "n_nulls")
+      .orderBy("file").collect().toSeq
+    val want = ZoneMap.build(spark.read.parquet(src), Seq("k"))
+      .select("file", "column", "min_value", "max_value", "n_rows", "n_nulls")
+      .orderBy("file").collect().toSeq
+    assert(got == want && got.size == 2) // first file's stats survived the crash
+  }
+
+  test("conflicting dtypes for one column are rejected") {
+    val bad = Seq(
+      ("f1", "k", "BIGINT", "1", "5", 2L, 0L),
+      ("f2", "k", "STRING", "a", "b", 2L, 0L))
+      .toDF("file", "column", "dtype", "min_value", "max_value", "n_rows", "n_nulls")
+    assertThrows[IllegalArgumentException] {
+      ZoneMap.candidateFiles(bad, "k", lit(1L), lit(2L))
+    }
+  }
 }

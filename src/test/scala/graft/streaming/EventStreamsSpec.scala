@@ -3,38 +3,38 @@ package graft.streaming
 import java.sql.Timestamp
 
 import graft.TestSpark
+import graft.operators.CsrQueries
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The watermarked event operators pinned to their registered batch
-  * queries on the same sf0.001 events: feed the table through a
-  * MemoryStream (or a file-source stream), push the watermark past the
-  * horizon with a sentinel, and compare the emitted (append-mode) results
-  * row-for-row. */
+/** Streaming twins pinned to the batch operators' results on the same
+  * sf0.001 events (SURVEY §2.3 rows 36-37): feed the whole table through a
+  * MemoryStream, push the watermark past the horizon with a sentinel
+  * event, and compare the emitted (append-mode) results row-for-row. */
 class EventStreamsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
   /** sf0.001 events as case-class rows + a far-future sentinel that drives
     * the watermark past every real event. */
-  private lazy val batchEvents: Seq[StreamEvent] = {
+  private lazy val batchEvents: Seq[Event] = {
     implicit val s: org.apache.spark.sql.SparkSession = spark
     Tables(TestSpark.Sf0001).events
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .as[StreamEvent].collect().toSeq
+      .as[Event].collect().toSeq
   }
-  private lazy val sentinel: StreamEvent = {
+  private lazy val sentinel: Event = {
     val maxTs = batchEvents.map(_.ts.getTime).max
-    StreamEvent(-1L, new Timestamp(maxTs + 6L * 3600 * 1000), -1L, "sentinel", 0.0)
+    Event(-1L, new Timestamp(maxTs + 6L * 3600 * 1000), -1L, "sentinel", 0.0)
   }
 
   /** Run a streaming transform over (events + sentinel), collect the
     * append-mode output from a memory sink. */
-  private def runStream(name: String)(transform: Dataset[StreamEvent] => DataFrame): DataFrame = {
-    val mem = MemoryStream[StreamEvent](spark)
+  private def runStream(name: String)(transform: Dataset[Event] => DataFrame): DataFrame = {
+    val mem = MemoryStream[Event](spark)
     val q = transform(mem.toDS())
       .writeStream.format("memory").queryName(name).outputMode("append").start()
     try {
@@ -44,6 +44,225 @@ class EventStreamsSpec extends AnyFunSuite {
       q.processAllAvailable()
     } finally q.stop()
     spark.table(name)
+  }
+
+  test("streaming hourlyAgg matches the batch events_hourly_agg") {
+    val got = runStream("s_hourly")(ds => EventStreams.hourlyAgg(ds.toDF()))
+      .where(col("event_type") =!= "sentinel")
+      .select(col("bucket"), col("event_type"), col("n_events"),
+        round(col("total_value").cast("decimal(28,6)"), 2).cast("double").as("total_value"))
+      .orderBy("bucket", "event_type").collect().toSeq
+    val want = CsrQueries.eventsHourlyAgg(spark, TestSpark.Sf0001)
+      .orderBy("bucket", "event_type").collect().toSeq
+    assert(got.size == want.size)
+    // double summation order differs between streaming/batch: compare
+    // counts exactly, sums to 1e-6
+    got.zip(want).foreach { case (g, w) =>
+      assert(g.getTimestamp(0) == w.getTimestamp(0) && g.getString(1) == w.getString(1))
+      assert(g.getLong(2) == w.getLong(2))
+      assert(math.abs(g.getDouble(3) - w.getDouble(3)) < 1e-6)
+    }
+  }
+
+  test("streaming session_window sessionize matches the batch twin") {
+    val got = runStream("s_sess")(ds => EventStreams.sessionWindows(ds.toDF()))
+      .where(col("user_id") =!= -1L)
+      .orderBy("user_id", "session_start")
+      .select("user_id", "session_start", "n_events").collect().toSeq
+    val want = CsrQueries.eventsSessionize(spark, TestSpark.Sf0001)
+      .orderBy("user_id", "session_start")
+      .select("user_id", "session_start", "n_events").collect().toSeq
+    assert(got == want)
+  }
+
+  test("file-source streaming: hourlyAgg over a parquet drop zone (AvailableNow)") {
+    import org.apache.spark.sql.streaming.Trigger
+    // stage the events as a parquet drop zone (micros timestamps)
+    val dir = java.nio.file.Files.createTempDirectory("graft-stream-src").toString
+    locally {
+      implicit val s: org.apache.spark.sql.SparkSession = spark
+      Tables(TestSpark.Sf0001).events
+        .select("event_id", "ts", "user_id", "event_type", "value")
+        .write.mode("overwrite").parquet(dir)
+    }
+    val schema = spark.read.parquet(dir).schema
+    val stream = spark.readStream.schema(schema).parquet(dir)
+    val q = EventStreams.hourlyAgg(stream)
+      .writeStream.format("memory").queryName("f_hourly")
+      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
+    try q.awaitTermination(120000) finally q.stop()
+    val got = spark.table("f_hourly")
+      .select(col("bucket"), col("event_type"), col("n_events"))
+      .orderBy("bucket", "event_type").collect().toSeq
+    val want = CsrQueries.eventsHourlyAgg(spark, TestSpark.Sf0001)
+      .select(col("bucket"), col("event_type"), col("n_events"))
+      .orderBy("bucket", "event_type").collect().toSeq
+    assert(got == want)
+  }
+
+  test("streaming dedupEvents drops re-delivered events within the watermark") {
+    val mem = MemoryStream[Event](spark)
+    val q = EventStreams.dedupEvents(mem.toDS().toDF())
+      .writeStream.format("memory").queryName("s_dedup").outputMode("append").start()
+    try {
+      val sample = batchEvents.take(200)
+      mem.addData(sample ++ sample) // every event delivered twice
+      q.processAllAvailable()
+      mem.addData(sample.take(5)) // and a third time in a later batch
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(spark.table("s_dedup").count() == 200)
+  }
+
+  test("stateful sessionize lowers session_start for an out-of-order event") {
+    // batch 1 opens a session at t0; batch 2 delivers an EARLIER event
+    // (admitted by the 2h watermark, within the 30min gap of the open
+    // session) — the emitted session_start must be the min event time
+    val t0 = Timestamp.valueOf("2026-01-01 10:00:00")
+    val tEarlier = Timestamp.valueOf("2026-01-01 09:50:00")
+    val tClose = Timestamp.valueOf("2026-01-01 20:00:00")
+    val mem = MemoryStream[Event](spark)
+    val q = EventStreams.sessionizeStateful(mem.toDS())
+      .toDF().writeStream.format("memory").queryName("s_ooo").outputMode("append").start()
+    try {
+      mem.addData(Event(1L, t0, 7L, "a", 0.0))
+      q.processAllAvailable()
+      mem.addData(Event(2L, tEarlier, 7L, "a", 0.0))
+      q.processAllAvailable()
+      mem.addData(Event(3L, tClose, -1L, "sentinel", 0.0)) // push watermark past the gap
+      q.processAllAvailable()
+    } finally q.stop()
+    val got = spark.table("s_ooo").where(col("user_id") === 7L)
+      .select("session_start", "session_end", "n_events")
+      .as[(Timestamp, Timestamp, Long)].collect().toSeq
+    assert(got == Seq((tEarlier, t0, 2L)))
+  }
+
+  test("stateful sessionize keeps a gap-separated early event as its own session") {
+    // batch 1 opens a session at 10:00; batch 2 delivers a 09:00 event —
+    // admitted by the 2h watermark but 60min (> gap) before the open
+    // session. It must become a SEPARATE earlier session, not be glued on.
+    val t0 = Timestamp.valueOf("2026-01-01 10:00:00")
+    val tEarly = Timestamp.valueOf("2026-01-01 09:00:00")
+    val tClose = Timestamp.valueOf("2026-01-01 20:00:00")
+    val mem = MemoryStream[Event](spark)
+    val q = EventStreams.sessionizeStateful(mem.toDS())
+      .toDF().writeStream.format("memory").queryName("s_sep").outputMode("append").start()
+    try {
+      mem.addData(Event(1L, t0, 7L, "a", 0.0)); q.processAllAvailable()
+      mem.addData(Event(2L, tEarly, 7L, "a", 0.0)); q.processAllAvailable()
+      mem.addData(Event(3L, tClose, -1L, "sentinel", 0.0)); q.processAllAvailable()
+    } finally q.stop()
+    val got = spark.table("s_sep").where(col("user_id") === 7L)
+      .orderBy("session_start")
+      .select("session_start", "session_end", "n_events")
+      .as[(Timestamp, Timestamp, Long)].collect().toSeq
+    assert(got == Seq((tEarly, tEarly, 1L), (t0, t0, 1L)))
+  }
+
+  test("stateful sessionize bridges two open intervals with a late middle event") {
+    // 09:00 and 09:50 are separate (50min gap); a late 09:25 event sits
+    // within the 30min gap of BOTH and must merge everything into one
+    val tA = Timestamp.valueOf("2026-01-01 09:00:00")
+    val tB = Timestamp.valueOf("2026-01-01 09:50:00")
+    val tMid = Timestamp.valueOf("2026-01-01 09:25:00")
+    val tClose = Timestamp.valueOf("2026-01-01 20:00:00")
+    val mem = MemoryStream[Event](spark)
+    val q = EventStreams.sessionizeStateful(mem.toDS())
+      .toDF().writeStream.format("memory").queryName("s_bridge").outputMode("append").start()
+    try {
+      mem.addData(Event(1L, tA, 7L, "a", 0.0), Event(2L, tB, 7L, "a", 0.0))
+      q.processAllAvailable()
+      mem.addData(Event(3L, tMid, 7L, "a", 0.0)); q.processAllAvailable()
+      mem.addData(Event(4L, tClose, -1L, "sentinel", 0.0)); q.processAllAvailable()
+    } finally q.stop()
+    val got = spark.table("s_bridge").where(col("user_id") === 7L)
+      .select("session_start", "session_end", "n_events")
+      .as[(Timestamp, Timestamp, Long)].collect().toSeq
+    assert(got == Seq((tA, tB, 3L)))
+  }
+
+  test("stateful transitions match the batch matrix minus its (end) closure rows") {
+    val got = runStream("s_trans")(ds => EventStreams.transitionsStateful(ds).toDF())
+      .where(col("user_id") =!= -1L)
+      .groupBy("from_type", "to_type").count()
+      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    implicit val s: org.apache.spark.sql.SparkSession = spark
+    val want = graft.operators.EventAnalytics.queries("events_transitions")
+      .fn(spark, TestSpark.Sf0001)
+      .where(col("to_type") =!= "(end)")
+      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    assert(got == want && got.nonEmpty)
+  }
+
+  test("stateful transitions seal out-of-order events in event-time order and keep the chain head") {
+    val t1 = Timestamp.valueOf("2026-01-01 10:00:00")
+    val tLate = Timestamp.valueOf("2026-01-01 09:50:00")
+    val tNext = Timestamp.valueOf("2026-01-01 21:00:00")
+    val mem = MemoryStream[Event](spark)
+    val q = EventStreams.transitionsStateful(mem.toDS())
+      .toDF().writeStream.format("memory").queryName("s_trans_ooo").outputMode("append").start()
+    try {
+      mem.addData(Event(2L, t1, 7L, "b", 0.0)); q.processAllAvailable()
+      // late arrival, admitted by the 2h watermark, earlier than the buffered event
+      mem.addData(Event(1L, tLate, 7L, "a", 0.0)); q.processAllAvailable()
+      // push the watermark past both buffered events → seal a→b
+      mem.addData(Event(90L, Timestamp.valueOf("2026-01-01 20:00:00"), -1L, "sentinel", 0.0))
+      q.processAllAvailable()
+      // a later event must chain from the SEALED head (b), not restart
+      mem.addData(Event(3L, tNext, 7L, "c", 0.0)); q.processAllAvailable()
+      mem.addData(Event(91L, Timestamp.valueOf("2026-01-02 08:00:00"), -1L, "sentinel", 0.0))
+      q.processAllAvailable()
+    } finally q.stop()
+    val got = spark.table("s_trans_ooo").where(col("user_id") === 7L)
+      .select("from_event_id", "to_event_id", "from_type", "to_type")
+      .as[(Long, Long, String, String)].collect().toSeq.sortBy(_._1)
+    assert(got == Seq((1L, 2L, "a", "b"), (2L, 3L, "b", "c")))
+  }
+
+  test("windowed transition counts over the landed pair log account for every pair") {
+    // two-query pattern: pair stream → memory sink (the log), monitor
+    // aggregates the log — the direct stacking is rejected by Spark's
+    // global-watermark correctness check (sealed rows are always late)
+    val log = runStream("s_translog")(ds => EventStreams.transitionsStateful(ds).toDF())
+    val got = EventStreams.windowedTransitions(log)
+      .where(col("from_type") =!= "sentinel" && col("to_type") =!= "sentinel")
+      .groupBy("from_type", "to_type").agg(sum("n").as("n"))
+      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    implicit val s: org.apache.spark.sql.SparkSession = spark
+    val want = graft.operators.EventAnalytics.queries("events_transitions")
+      .fn(spark, TestSpark.Sf0001)
+      .where(col("to_type") =!= "(end)")
+      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    assert(got == want && got.nonEmpty)
+  }
+
+  test("transition drift report: window shares vs baseline, zero drift for an identical window") {
+    implicit val s: org.apache.spark.sql.SparkSession = spark
+    import spark.implicits._
+    val baseline = graft.operators.EventAnalytics.queries("events_transitions")
+      .fn(spark, TestSpark.Sf0001).localCheckpoint()
+    // a synthetic window whose counts EQUAL the baseline matrix (minus
+    // (end)) must report zero drift everywhere
+    val t0 = Timestamp.valueOf("2026-01-01 00:00:00")
+    val windowCounts = baseline.where(col("to_type") =!= "(end)")
+      .select(lit(t0).as("bucket"), col("from_type"), col("to_type"),
+        col("n_transitions").as("n"))
+    val drift = EventStreams.transitionDrift(windowCounts, baseline).collect()
+    assert(drift.nonEmpty)
+    drift.foreach { r =>
+      assert(math.abs(r.getDouble(6)) < 1e-9, s"nonzero drift: $r")
+      assert(r.getDouble(4) == r.getDouble(5)) // window_pct == baseline_pct
+    }
+    // and a skewed window reports signed drift that sums to ~0 per source
+    val skewed = windowCounts.withColumn("n",
+      when(col("to_type") === "click", col("n") * 3).otherwise(col("n")))
+    val d2 = EventStreams.transitionDrift(skewed, baseline)
+      .collect().map(r => (r.getString(1), r.getDouble(6)))
+    d2.groupBy(_._1).foreach { case (from, rows) =>
+      assert(math.abs(rows.map(_._2).sum) < 0.02, s"$from drift does not balance")
+    }
+    assert(d2.exists(_._2 > 0.5), "skewed window must show positive drift on click")
   }
 
   test("drift alarm runs LIVE over a file-source re-ingest of the pair log") {
@@ -82,6 +301,24 @@ class EventStreamsSpec extends AnyFunSuite {
     assert(got.nonEmpty && got == want)
   }
 
+  test("streaming point-in-time enrich against the landed SCD2 matches the batch twin") {
+    implicit val s: org.apache.spark.sql.SparkSession = spark
+    // the landed dimension: the batch SCD2 build with version numbers
+    val versions = graft.operators.ChangeData.scd2(spark, TestSpark.Sf0001)
+      .withColumn("version_no", row_number().over(
+        org.apache.spark.sql.expressions.Window
+          .partitionBy(col("user_id")).orderBy(col("valid_from"))))
+      .select(col("user_id"), col("valid_from"), col("state"), col("version_no"))
+      .localCheckpoint()
+    val got = runStream("s_pit")(ds =>
+        EventStreams.pitEnrichStream(ds.toDF(), versions))
+      .where(col("user_id") =!= -1L)
+      .collect().map(_.toSeq).toSet
+    val want = graft.operators.ChangeData.queries("etl_pit_enrich")
+      .fn(spark, TestSpark.Sf0001).collect().map(_.toSeq).toSet
+    assert(got.nonEmpty && got == want)
+  }
+
   test("stream-stream interval join matches the batch twin") {
     val got = runStream("s_sjoin")(ds => EventStreams.precedingTouches(ds.toDF()))
       .where(col("user_id") =!= -1L)
@@ -91,6 +328,39 @@ class EventStreamsSpec extends AnyFunSuite {
       .fn(spark, TestSpark.Sf0001)
       .collect().map(_.toSeq).toSet
     assert(got.nonEmpty && got == want)
+  }
+
+  test("silence alarm fires on timeout only, once per quiet spell, and re-arms") {
+    val t0 = Timestamp.valueOf("2026-04-01 10:00:00")
+    def plus(min: Long) = new Timestamp(t0.getTime + min * 60000)
+    val mem = MemoryStream[Event](spark)
+    val q = EventStreams.silenceAlarms(mem.toDS(), silenceMs = 60L * 60000) // 1h
+      .toDF().writeStream.format("memory").queryName("s_silence").outputMode("append").start()
+    try {
+      // user 1 active at t0 and t0+30m; user 2 only at t0
+      mem.addData(Event(1L, t0, 1L, "a", 0.0), Event(2L, t0, 2L, "a", 0.0))
+      q.processAllAvailable()
+      mem.addData(Event(3L, plus(30), 1L, "a", 0.0)); q.processAllAvailable()
+      // driver event pushes the watermark past t0+1h: user 2 went quiet,
+      // user 1 (last seen t0+30) has not yet
+      mem.addData(Event(90L, plus(150), 99L, "w", 0.0)); q.processAllAvailable()
+      val afterFirst = spark.table("s_silence")
+        .select("user_id").as[Long].collect().toSet
+      assert(afterFirst.contains(2L) && !afterFirst.contains(1L))
+      // user 2 re-appears (within the admissible horizon) → new spell arms;
+      // watermark far past everything fires user 1, user 2's second spell,
+      // and eventually the driver user's own silence
+      mem.addData(Event(4L, plus(140), 2L, "b", 0.0)); q.processAllAvailable()
+      mem.addData(Event(91L, plus(600), 99L, "w", 0.0)); q.processAllAvailable()
+      mem.addData(Event(92L, plus(1200), 99L, "w", 0.0)); q.processAllAvailable()
+    } finally q.stop()
+    val alarms = spark.table("s_silence")
+      .select("user_id", "last_seen", "silent_events")
+      .as[(Long, Timestamp, Long)].collect().toSeq.sortBy(a => (a._1, a._2.getTime))
+    val u1 = alarms.filter(_._1 == 1L)
+    val u2 = alarms.filter(_._1 == 2L)
+    assert(u1 == Seq((1L, plus(30), 2L)), s"user1 alarms: $u1")
+    assert(u2 == Seq((2L, t0, 1L), (2L, plus(140), 1L)), s"user2 alarms: $u2")
   }
 
   test("drift alarm surfaces transitions into types the baseline never saw as (novel)") {
@@ -109,6 +379,88 @@ class EventStreamsSpec extends AnyFunSuite {
     // baseline 100% drifts -33.33; the novel type surfaces with share
     // 33.33 and NO baseline (drift = its full share)
     assert(got == List(("(novel)", 1L, 33.3333, 33.3333), ("b", 2L, 66.6667, -33.3333)))
+  }
+
+  test("stateful flatMapGroupsWithState sessionize matches the batch twin") {
+    val got = runStream("s_state")(EventStreams.sessionizeStateful(_).toDF())
+      .where(col("user_id") =!= -1L)
+      .orderBy("user_id", "session_start")
+      .select("user_id", "session_start", "session_end", "n_events").collect().toSeq
+    val want = CsrQueries.eventsSessionize(spark, TestSpark.Sf0001)
+      .orderBy("user_id", "session_start")
+      .select("user_id", "session_start", "session_end", "n_events").collect().toSeq
+    assert(got == want)
+  }
+
+  test("streaming overlapping-stays matches the batch keyed join against the staged index") {
+    implicit val s: org.apache.spark.sql.SparkSession = spark
+    val HourUs = 3600000000L
+    val sessDf = CsrQueries.eventsSessionize(spark, TestSpark.Sf0001)
+      .select(col("user_id"),
+        struct(unix_micros(col("session_start")).as("s"),
+          unix_micros(col("session_end")).as("e")).as("iv"))
+      .groupBy(col("user_id")).agg(sort_array(collect_list(col("iv"))).as("ivs"))
+    // staged detection index of the KNOWN corpus (serving artifact)
+    val corpusIndex = graft.operators.MultiIntervalJoin
+      .binIndex(sessDf, "ivs", "user_id", HourUs, "c_")
+      .persist()
+    // batch truth: every ordered (probe, corpus) pair with any overlap
+    val a = sessDf.toDF("a_user", "a_ivs")
+    val b = sessDf.toDF("b_user", "b_ivs")
+    val want = graft.operators.MultiIntervalJoin
+      .overlapPairsMultiKeyed(a, "a_ivs", "a_user", b, "b_ivs", "b_user", HourUs)
+      .where(col("a_user") =!= col("b_user"))
+      .select("a_user", "b_user").as[(Long, Long)].collect().toSet
+    // stream the same users' stay sets as probes
+    val stays = sessDf.select(col("user_id"),
+        expr("transform(ivs, x -> struct(x.s AS s, x.e AS e))").as("ivs"))
+      .as[StayRow].collect().toSeq
+    val mem = MemoryStream[StayRow](spark)
+    val q = EventStreams.overlappingStaysStream(mem.toDF(), corpusIndex, HourUs)
+      .writeStream.format("memory").queryName("s_stays").outputMode("append").start()
+    val got =
+      try {
+        mem.addData(stays)
+        q.processAllAvailable()
+        spark.table("s_stays").select("probe_user", "corpus_user")
+          .as[(Long, Long)].collect().toSet
+      } finally { q.stop(); corpusIndex.unpersist() }
+    assert(got == want, "stream-static detection must reproduce the batch pair set")
+  }
+
+  test("stateful ewma matches the batch events_ewma bit-for-bit") {
+    val batch = graft.operators.EventAnalytics.ewma(spark, TestSpark.Sf0001)
+      .collect().map(r => r.getLong(1) -> r.getDouble(4)).toMap
+    val got = runStream("ewma_stream")(ds => EventStreams.ewmaStateful(ds).toDF())
+      .collect().map(r => r.getLong(1) -> r.getDouble(4)).toMap
+    assert(got == batch && batch.nonEmpty)
+  }
+
+  test("stateful ewma sorts an admissible late event into its window") {
+    // user 7: events every 10 min; event #3 arrives LATE (after #4..#9).
+    // Once the sentinel seals everything, the windows must reflect the
+    // (ts, event_id) order, not arrival order.
+    val base = Timestamp.valueOf("2026-01-01 10:00:00").getTime
+    def ev(i: Int) = Event(i.toLong, new Timestamp(base + i * 600000L), 7L, "a", i.toDouble)
+    val all = (1 to 9).map(ev)
+    val late = all(2) // event 3
+    val mem = MemoryStream[Event](spark)
+    val q = EventStreams.ewmaStateful(mem.toDS())
+      .toDF().writeStream.format("memory").queryName("ewma_ooo").outputMode("append").start()
+    try {
+      mem.addData(all.filterNot(_ == late): _*); q.processAllAvailable()
+      mem.addData(late); q.processAllAvailable()
+      mem.addData(Event(99L, new Timestamp(base + 12L * 3600 * 1000), -1L, "sentinel", 0.0))
+      q.processAllAvailable()
+    } finally q.stop()
+    val got = spark.table("ewma_ooo").where(col("user_id") === 7L)
+      .select("event_id", "ewma").as[(Long, Double)].collect().toMap
+    def dyadic(v: Seq[Double]) = // v(0) = newest, same association as the operator
+      v(0) / 2 + v(1) / 4 + v(2) / 8 + v(3) / 16 + v(4) / 32 + v(5) / 64 + v(6) / 128 + v(7) / 128
+    val expect = Map(
+      8L -> dyadic((1 to 8).map(_.toDouble).reverse),
+      9L -> dyadic((2 to 9).map(_.toDouble).reverse))
+    assert(got == expect)
   }
 
   test("batch driftAlarms baseline: the non-sentinel pair aggregate equals " +
@@ -134,7 +486,6 @@ class EventStreamsSpec extends AnyFunSuite {
   }
 }
 
-/** One event row fed through the MemoryStream (top level: Spark cannot
-  * build an encoder for a class nested in the spec). */
-final case class StreamEvent(event_id: Long, ts: Timestamp, user_id: Long,
-                       event_type: String, value: Double)
+/** One stay interval / one probe row for the streaming overlap spec. */
+final case class StayIv(s: Long, e: Long)
+final case class StayRow(user_id: Long, ivs: Seq[StayIv])

@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** r12 streaming twins pinned to their batch queries on sf0.001:
   * daily-volume state → shared forecast tail ≡ `events_forecast_backtest`,
-  * and the stateless scene-cut stream ≡ `mm_scene_cuts`. */
+  * and active-day state → shared ledger tail ≡ `events_growth_accounting`. */
 class ServingTwinsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -102,29 +102,6 @@ class ServingTwinsSpec extends AnyFunSuite {
       .orderBy("day").collect().map(_.toSeq).toSeq
     val want = graft.operators.EventAnalytics.growthAccounting(spark, TestSpark.Sf0001)
       .orderBy("day").collect().map(_.toSeq).toSeq
-    assert(got == want && got.nonEmpty)
-  }
-
-  // ---------------------------------------------------- scene-cut twin
-
-  private case class Doc(doc_id: Long, text: String)
-
-  test("stateless sceneCutStream equals the batch mm_scene_cuts row-for-row") {
-    implicit val s: org.apache.spark.sql.SparkSession = spark
-    graft.plans.VectorExpressions.register(spark)
-    val docs: Seq[Doc] = Tables(TestSpark.Sf0001).documents
-      .select(col("doc_id"), col("text"))
-      .collect().map(r => Doc(r.getLong(0), r.getString(1))).toSeq
-    val mem = MemoryStream[Doc](spark)
-    val q = DocStreams.sceneCutStream(spark, mem.toDF())
-      .writeStream.format("memory").queryName("s_scenecuts").outputMode("append").start()
-    try {
-      docs.grouped(150).foreach { c => mem.addData(c); q.processAllAvailable() }
-    } finally q.stop()
-    val got = spark.table("s_scenecuts")
-      .orderBy("doc_id", "frame_idx").collect().map(_.toSeq).toSeq
-    val want = graft.operators.MultimodalQueries.sceneCuts(spark, TestSpark.Sf0001)
-      .orderBy("doc_id", "frame_idx").collect().map(_.toSeq).toSeq
     assert(got == want && got.nonEmpty)
   }
 }

@@ -54,6 +54,9 @@ object GraftSession {
       .config("spark.sql.codegen.cache.maxEntries",
         sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000"))
       .config("spark.ui.enabled", "false")
+      // without libhadoop, the stock file: FileSystem forks a `chmod` for
+      // every file and directory it creates
+      .config("spark.hadoop.fs.file.impl", classOf[PosixLocalFileSystem].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -10,11 +10,17 @@ import org.apache.spark.sql.functions._
   * 9→unknown in studies/individual_codebook.txt) and rewrites coded values
   * to labels during sources2csr.
   *
-  * Spark-first shape: the codebook is a small DataFrame
-  * (column_name, code, label) broadcast-joined against the fact table —
-  * a map-side hash join with zero shuffle of the fact side, which is the
-  * only strategy that survives a 100 TB fact table. Unmatched codes keep
-  * their original value (the reference passes unknown codes through).
+  * Spark-first shape, by where the codebook lives:
+  *  - rows on the driver (a pipeline config's codebook): every decoded
+  *    column becomes `coalesce(element_at(<map literal>, col), col)` in one
+  *    projection — no join, no shuffle, and a plan that does not grow with
+  *    the number of decoded columns;
+  *  - a DataFrame (column_name, code, label), e.g. [[fromFile]]'s
+  *    distributed parse: broadcast-joined against the fact table — a
+  *    map-side hash join with zero shuffle of the fact side, and the
+  *    codebook never becomes a plan literal.
+  * Unmatched and null codes keep their original value (the reference
+  * passes unknown codes through).
   */
 object CodebookDecode {
 
@@ -32,6 +38,18 @@ object CodebookDecode {
 
   def decodeAll(df: DataFrame, columns: Seq[String], codebook: DataFrame): DataFrame =
     columns.foldLeft(df)((acc, c) => decode(acc, c, codebook))
+
+  /** [[decodeAll]] over driver-side codebook rows (column, code, label):
+    * one map lookup per column. A (column, code) pair may appear once —
+    * the join would multiply its fact rows — and is rejected otherwise. */
+  def decodeAll(df: DataFrame, columns: Seq[String], codebook: Seq[(String, String, String)]): DataFrame = {
+    val dup = codebook.groupBy(r => (r._1, r._2)).collect { case (k, rs) if rs.size > 1 => k }
+    require(dup.isEmpty, s"codebook codes bound twice: ${dup.toSeq.sorted.mkString(", ")}")
+    df.withColumns(columns.distinct.map { c =>
+      val labels = codebook.collect { case (`c`, code, label) => code -> label }.toMap
+      c -> coalesce(element_at(typedLit(labels), df(c)), df(c))
+    }.toMap)
+  }
 
   /** Load a codebook FILE in the reference's tab-separated format
     * (studies/individual_codebook.txt): each line is

@@ -11,12 +11,20 @@ import org.apache.spark.sql.functions._
   * wins — see /root/reference/test_data_e2e/xx_archive/test_data_NGS/config/
   * sources_config.json:5-102 for the Individual entity).
   *
-  * Spark-first shape: every source is projected to (key, attr...), the
-  * sources are chained with full-outer joins on the entity key (one shuffle
-  * per source, all co-partitioned on the key — at 100 TB this is the same
-  * hash-partitioned merge a MERGE INTO would do), and each attribute becomes
-  * `coalesce(src0.attr, src1.attr, ...)` in priority order. Optionally emits
-  * `<attr>_src` provenance columns ("src<i>" of the winning source).
+  * Spark-first shape: one union of the sources, then one aggregate on the
+  * entity key — a single shuffle however many sources there are, with
+  * map-side partial aggregation. Source i carries its attributes as one
+  * struct column `__s<i>` (null in the other sources' rows) and the
+  * aggregate keeps `min(__s<i>)` per key: the reference dedups entity keys
+  * in sources2csr before merging, and keep-first is the lexicographic min
+  * over the attribute values. Each attribute is then
+  * `coalesce(src0.attr, src1.attr, ...)` in priority order. Optionally
+  * emits `<attr>_src` provenance columns ("src<i>" of the winning source).
+  *
+  * This is the result of deduping every source on the key and chaining
+  * full-outer joins on it: null keys never match, so each source's
+  * null-key rows stay one row of their own (the grouping key carries the
+  * source index for them).
   */
 object EntityMerge {
 
@@ -25,45 +33,29 @@ object EntityMerge {
     * @param key      entity key column name
     * @param attrs    attribute columns to resolve
     * @param provenance also emit `<attr>_src` winning-source columns
-    * @param dedupKeys dedup each source on the entity key first (the
-    *                 reference dedups entity keys in sources2csr before
-    *                 merging; duplicate keys would otherwise multiply rows
-    *                 through the outer joins). Deterministic keep-first by
-    *                 attribute value order. The window shuffle is keyed the
-    *                 same as the join, so the partitioning is reused.
     */
   def merge(sources: Seq[DataFrame], key: String, attrs: Seq[String],
-            provenance: Boolean = false, dedupKeys: Boolean = true): DataFrame = {
+            provenance: Boolean = false): DataFrame = {
     require(sources.nonEmpty, "at least one source")
-    val prepared = sources.zipWithIndex.map { case (df, i) =>
-      val cols = col(key) +: attrs.map { a =>
-        (if (df.columns.contains(a)) col(a) else lit(null)).as(s"${a}__$i")
-      }
-      val projected = df.select(cols: _*)
-      if (!dedupKeys || attrs.isEmpty) projected
-      else {
-        // keep-first = lexicographic min over the attribute struct: same
-        // result as a row_number window ordered by the attrs, but with
-        // map-side partial aggregation instead of a full shuffle+sort —
-        // the 100 TB-friendly shape (and the agg's hash partitioning on
-        // the key is reused by the merge join right after)
-        val names = attrs.map(a => s"${a}__$i")
-        projected
-          .groupBy(col(key))
-          .agg(min(struct(names.map(col): _*)).as("__m"))
-          .select(col(key) +: names.map(n => col(s"__m.$n").as(n)): _*)
-      }
-    }
-    val joined = prepared.reduce((l, r) => l.join(r, Seq(key), "full_outer"))
-    val resolved = attrs.map { a =>
-      coalesce(sources.indices.map(i => col(s"${a}__$i")): _*).as(a)
-    }
+    val slots = sources.indices.map(i => s"__s$i")
+    val own = sources.map(df => struct(attrs.map(a =>
+      (if (df.columns.contains(a)) col(a) else lit(null)).as(a)): _*))
+    val slotTypes = sources.zip(own).map { case (df, s) => df.select(s).schema.head.dataType }
+    val unioned = sources.indices.map { i =>
+      val structs = slots.indices.map(j =>
+        (if (j == i) own(i) else lit(null).cast(slotTypes(j))).as(slots(j)))
+      sources(i).select((col(key) +: lit(i).as("__src") +: structs): _*)
+    }.reduce(_ union _)
+    val merged = unioned.groupBy(col(key), when(col(key).isNull, col("__src")).as("__src"))
+      .agg(min(col(slots.head)).as(slots.head), slots.tail.map(s => min(col(s)).as(s)): _*)
+    def attr(i: Int, a: String) = col(s"${slots(i)}.$a")
+    val resolved = attrs.map(a => coalesce(sources.indices.map(attr(_, a)): _*).as(a))
     val prov = if (!provenance) Nil else attrs.map { a =>
-      val branches = sources.indices.map(i => (col(s"${a}__$i").isNotNull, lit(s"src$i")))
+      val branches = sources.indices.map(i => (attr(i, a).isNotNull, lit(s"src$i")))
       branches.tail.foldLeft(when(branches.head._1, branches.head._2)) {
         case (acc, (c, v)) => acc.when(c, v)
       }.as(s"${a}_src")
     }
-    joined.select((col(key) +: (resolved ++ prov)): _*)
+    merged.select((col(key) +: (resolved ++ prov)): _*)
   }
 }

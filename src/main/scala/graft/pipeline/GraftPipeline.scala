@@ -63,8 +63,10 @@ final case class PipelineConfig(
   * its independent jobs run together. Lineage commits launch none, and a
   * manifest none while its directory's bytes fit one scan split.
   *  - sync: none; the copy is a driver-side loop over the delta.
-  *  - sources2csr: the source scans and the merge's exchanges, then one
-  *    exchange into a single partition and the write.
+  *  - sources2csr: the source scans and the merge's one exchange (the
+  *    sources' union aggregated on the entity key), then one exchange into
+  *    a single partition and the write. The codebook decode is a map
+  *    lookup in the projection, so it adds no job.
   *  - csr2transmart: the melt's exchange into a single partition and the
   *    write. Its read declares the CSR's all-string schema
   *    (`entityKey +: attrs`), so no job infers the header, and a header
@@ -75,7 +77,8 @@ final case class PipelineConfig(
   *  - cache_rebuild: three summary writes submitted together
   *    ([[AggCache.rebuild]]) over a schema-declared read.
   * The single-file writes are sorted without range sampling
-  * ([[TransmartLoad.writeStaging]]).
+  * ([[TransmartLoad.writeStaging]]). Local writes set each file's mode
+  * without forking `chmod` ([[graft.PosixLocalFileSystem]]).
   */
 object GraftPipeline {
 
@@ -98,8 +101,6 @@ object GraftPipeline {
       .csv(path)
 
   def build(spark: SparkSession, cfg: PipelineConfig): Dag = {
-    import spark.implicits._
-
     // the Dag probes `externalInput` right before it decides to run sync:
     // that drop-zone manifest is the one sync verifies and copies from.
     // The probe starts every execution, so it also drops the `staging`
@@ -139,9 +140,7 @@ object GraftPipeline {
       val merged = EntityMerge.merge(frames, cfg.entityKey, cfg.attrs)
       val decoded =
         if (cfg.codebook.isEmpty) merged
-        else CodebookDecode.decodeAll(merged,
-          cfg.codebook.map(_._1).distinct.filter(cfg.attrs.contains),
-          cfg.codebook.toDF("column_name", "code", "label"))
+        else CodebookDecode.decodeAll(merged, cfg.codebook.map(_._1).distinct.filter(cfg.attrs.contains), cfg.codebook)
       // the merge leaves one row per entity key
       TransmartLoad.writeStaging(decoded, cfg.workingDir, "csr", sortedBy = Seq(cfg.entityKey))
       doneSignal(spark, cfg.workingDir)

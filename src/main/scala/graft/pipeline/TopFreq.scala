@@ -29,9 +29,12 @@ object TopFreq {
 
   /** Per-grain capacity-k compression of a (grain, key, cnt) table:
     * keep top-k and decrement by the (k+1)-th count, which is also the
-    * grain's error ledger. The top-k window sorts only the count table
-    * (distinct keys per grain), not the raw stream, and Spark plans the
-    * rank filter with partial WindowGroupLimit (map-side cap). */
+    * grain's error ledger. Counters that decrement to 0 leave, except the
+    * grain's rank-1 row: when all k tie with the (k+1)-th, that row (at
+    * cnt 0, a valid MG statement) is what carries the grain's `err`. The
+    * top-k window sorts only the count table (distinct keys per grain),
+    * not the raw stream, and Spark plans the rank filter with partial
+    * WindowGroupLimit (map-side cap). */
   private def compress(counts: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("grain")).orderBy(col("cnt").desc, col("key"))
     val ranked = counts.withColumn("rn", row_number().over(w))
@@ -39,12 +42,13 @@ object TopFreq {
       .agg(coalesce(max(when(col("rn") === k + 1, col("cnt"))), lit(0L)).as("dec"))
     ranked.where(col("rn") <= k).join(dec, "grain")
       .select(col("grain"), col("key"),
-        greatest(col("cnt") - col("dec"), lit(0L)).as("cnt"), col("dec").as("err"))
-      .where(col("cnt") > 0)
+        greatest(col("cnt") - col("dec"), lit(0L)).as("cnt"), col("dec").as("err"), col("rn"))
+      .where(col("cnt") > 0 || col("rn") === 1)
+      .drop("rn")
   }
 
   /** Per-grain capacity-k summary: (grain, key, cnt, err) with `err`
-    * constant within a grain. */
+    * constant within a grain and at least one row per grain. */
   def build(df: DataFrame, key: Column, grain: Column, k: Int): DataFrame =
     compress(countsOf(df, key, grain), k)
 }

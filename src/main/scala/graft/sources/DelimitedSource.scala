@@ -36,17 +36,21 @@ object DelimitedSource {
 
   /** Multi-path variant — the zone-map-pruned scan hands in the surviving
     * file list instead of the directory. */
-  def read(spark: SparkSession, paths: Seq[String], cfg: DelimitedConfig): DataFrame = {
-    require(paths.nonEmpty, "DelimitedSource.read: empty path list")
+  def read(spark: SparkSession, paths: Seq[String], cfg: DelimitedConfig): DataFrame =
+    rawStrings(spark, paths, cfg, "read").select(cfg.columns.map(typed): _*)
+
+  /** The files as the config's columns, all strings: no inference. */
+  private def rawStrings(spark: SparkSession, paths: Seq[String], cfg: DelimitedConfig,
+                         caller: String): DataFrame = {
+    require(paths.nonEmpty, s"DelimitedSource.$caller: empty path list")
     cfg.columns.foreach(c => require(c.dtype != "date" || c.dateFormat.isDefined,
       s"column ${c.name}: date requires dateFormat"))
-    val raw = spark.read
+    spark.read
       .option("delimiter", cfg.delimiter)
       .option("header", cfg.header.toString)
       .option("nullValue", cfg.nullValue)
       .schema(StructType(cfg.columns.map(c => StructField(c.name, StringType, nullable = true))))
       .csv(paths: _*)
-    raw.select(cfg.columns.map(typed): _*)
   }
 
   private def typed(c: ColSpec): Column = c.dtype match {
@@ -71,15 +75,7 @@ object DelimitedSource {
     * verdict. Mirrors the reference pipeline's refusal to let one bad
     * registry row kill the load while never silently dropping it. */
   def readTagged(spark: SparkSession, paths: Seq[String], cfg: DelimitedConfig): DataFrame = {
-    require(paths.nonEmpty, "DelimitedSource.readTagged: empty path list")
-    cfg.columns.foreach(c => require(c.dtype != "date" || c.dateFormat.isDefined,
-      s"column ${c.name}: date requires dateFormat"))
-    val raw = spark.read
-      .option("delimiter", cfg.delimiter)
-      .option("header", cfg.header.toString)
-      .option("nullValue", cfg.nullValue)
-      .schema(StructType(cfg.columns.map(c => StructField(c.name, StringType, nullable = true))))
-      .csv(paths: _*)
+    val raw = rawStrings(spark, paths, cfg, "readTagged")
     val badFlags = cfg.columns.map { c =>
       when(col(c.name).isNotNull && tryTyped(c).isNull, lit(c.name))
     }

@@ -14,6 +14,7 @@ object TestSpark {
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[PosixLocalFileSystem].getName)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

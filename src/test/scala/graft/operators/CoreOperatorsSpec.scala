@@ -33,6 +33,15 @@ class CoreOperatorsSpec extends AnyFunSuite {
     assert(out.head.getString(1) == "dup-a")
   }
 
+  test("EntityMerge: null-key rows from two sources stay separate") {
+    val src0 = Seq[(Option[Long], String)]((None, "n0-b"), (None, "n0-a"), (Some(1L), "k0")).toDF("id", "name")
+    val src1 = Seq[(Option[Long], String)]((None, "n1"), (Some(1L), "k1")).toDF("id", "name")
+    val out = EntityMerge.merge(Seq(src0, src1), "id", Seq("name"), provenance = true)
+      .collect().map(r => (Option(r.get(0)), r.getString(1), r.getString(2))).toSet
+    // a source's null keys collapse like any key; across sources they never match
+    assert(out == Set((Some(1L), "k0", "src0"), (None, "n0-a", "src0"), (None, "n1", "src1")))
+  }
+
   // ----------------------------------------------------------- SnapshotDiff
 
   test("SnapshotDiff: added / removed / changed, unchanged dropped") {
@@ -70,6 +79,35 @@ class CoreOperatorsSpec extends AnyFunSuite {
     val out = CodebookDecode.decode(facts, "sex", cb)
       .select("sex").as[String].collect().sorted.toSeq
     assert(out == Seq("9", "female", "male")) // 9 passes through unchanged
+  }
+
+  test("CodebookDecode: driver-side codebook rows decode like the broadcast join") {
+    val facts = Seq[(Option[String], Option[String], Int)](
+      (Some("1"), Some("2"), 0), (Some("9"), None, 1), (None, Some("1"), 2), (Some("2"), Some("7"), 3))
+      .toDF("sex", "consent", "n")
+    val rows = Seq(("sex", "1", "male"), ("sex", "2", "female"), ("consent", "1", "yes"), ("consent", "2", "no"),
+      ("other", "1", "unused"))
+    val cols = Seq("sex", "consent")
+    val bySeq = CodebookDecode.decodeAll(facts, cols, rows)
+    val byJoin = CodebookDecode.decodeAll(facts, cols, rows.toDF("column_name", "code", "label"))
+    assert(bySeq.columns.toSeq == facts.columns.toSeq)
+    assert(bySeq.schema == byJoin.schema)
+    val got = bySeq.as[(Option[String], Option[String], Int)].collect().sortBy(_._3).toSeq
+    assert(got == byJoin.as[(Option[String], Option[String], Int)].collect().sortBy(_._3).toSeq)
+    // unmatched (9, 7) and null codes pass through
+    assert(got == Seq((Some("male"), Some("no"), 0), (Some("9"), None, 1), (None, Some("yes"), 2),
+      (Some("female"), Some("7"), 3)))
+  }
+
+  test("CodebookDecode: a (column, code) bound twice is rejected up front") {
+    val facts = Seq("1", "2").toDF("sex")
+    val ex = intercept[IllegalArgumentException](CodebookDecode.decodeAll(facts, Seq("sex"),
+      Seq(("sex", "1", "male"), ("sex", "1", "m"), ("sex", "2", "female"))))
+    assert(ex.getMessage.contains("(sex,1)"))
+    // the join form of the same codebook multiplies the fact row
+    val joined = CodebookDecode.decodeAll(facts, Seq("sex"),
+      Seq(("sex", "1", "male"), ("sex", "1", "m"), ("sex", "2", "female")).toDF("column_name", "code", "label"))
+    assert(joined.count() == 3)
   }
 
   test("CodebookDecode.fromFile: reference format — column SETS, tab padding, blank lines") {

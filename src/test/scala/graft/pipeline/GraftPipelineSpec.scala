@@ -184,7 +184,7 @@ class GraftPipelineSpec extends AnyFunSuite {
   // on): a task that starts re-deriving what the pipeline already holds
   // (a header, a sort's range bounds) or hashes a small directory through
   // Spark exceeds it
-  private val ColdJobs = 14
+  private val ColdJobs = 12
 
   test("job-count guard: a no-op run launches no Spark job; a cold run stays at its count") {
     val (root, cfg) = mkCfg()

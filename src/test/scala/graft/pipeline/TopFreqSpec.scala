@@ -41,6 +41,23 @@ class TopFreqSpec extends AnyFunSuite {
     exact.filter(_._2 > err).keys.foreach(u => assert(est.contains(u)))
   }
 
+  test("per-day grains: a day whose counters all decrement to 0 keeps a row carrying its err") {
+    val day = date_format(col("ts"), "yyyy-MM-dd")
+    val summary = TopFreq.build(events, col("user_id"), day, 8).collect()
+      .map(r => (r.getString(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3))).toMap
+    val err = summary.map { case ((d, _), (_, e)) => d -> e }
+    val perDay = events.groupBy(day.as("day"), col("user_id")).agg(count(lit(1)).as("n"))
+      .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
+    assert(err.keySet == perDay.keySet.map(_._1), "a day lost its summary")
+    perDay.foreach { case ((d, u), n) =>
+      val est = summary.get((d, u)).fold(0L)(_._1)
+      assert(est <= n && est >= n - err(d), s"$d user $u: estimate $est, true count $n, err ${err(d)}")
+    }
+    // the day seen to vanish: every counter ties with the 9th count there
+    assert(perDay(("2024-01-14", 13L)) == 2L)
+    assert(err("2024-01-14") >= 2L)
+  }
+
   test("capacity covering every key makes the summary exact") {
     val (est, err) = summary(exact.size + 1)
     assert(err == 0L)

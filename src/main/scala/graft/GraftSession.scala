@@ -20,15 +20,6 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // AQE sort-merge -> shuffled-hash rewrite (guide §3.1): off by
-      // default in Spark (threshold 0); enabling it lets AQE drop the two
-      // sort passes of an SMJ when every post-shuffle partition of the
-      // build side is measured below the threshold at runtime — a
-      // per-partition-size decision, so it stays safe at deployment scale
-      // (the build side of any rewritten join is provably <64 MB per
-      // task). Parameterised for A/B and cluster override.
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCALMAP", "0"))
       // Spark's 10 MB broadcast default is famously conservative for
       // multi-GB executors; 32 MB lets AQE runtime-broadcast bounded
       // derived frames (e.g. the triangle closing-edge list at bench
@@ -50,9 +41,8 @@ object GraftSession {
       // production session running a query mix does too. 10k entries keeps
       // every unit's compiled class resident (each is tens of KB — noise in
       // a multi-GB driver). Scale-independent: the cache is keyed on
-      // generated source, never on data. Env override for A/B.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000"))
+      // generated source, never on data.
+      .config("spark.sql.codegen.cache.maxEntries", "10000")
       .config("spark.ui.enabled", "false")
       // without libhadoop, the stock file: FileSystem forks a `chmod` for
       // every file and directory it creates

@@ -1941,8 +1941,7 @@ object AnnQueries {
     * serving query never re-ranks corpus buckets. */
   private[operators] def stagedLshSigs(spark: SparkSession, dir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    val path = s"/tmp/graft_lshsig_${new java.io.File(dir).getName}"
-    Stage.ensure(path, s"$dir/embeddings.parquet") {
+    Stage.cached(spark, "lshsig", dir, "embeddings") {
       val prs = hyperplanePairs(MpBands * MpRows)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("band_id"), col("band_hash")).orderBy(col("vec_id"))
@@ -1953,10 +1952,7 @@ object AnnQueries {
         .select(col("vec_id"), col("b.band_id").as("band_id"), col("b.band_hash").as("band_hash"))
         .withColumn("rn", row_number().over(w)).where(col("rn") <= LshServeCap)
         .select("band_id", "band_hash", "vec_id")
-        .write.mode("overwrite").parquet(path)
     }
-    Cached.track(graft.sources.Tables.relationAt(spark, path)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
   }
 
   /** §29c(r14) — FIXED-BUDGET probed LSH serving: top-[[TopKK]] neighbors
@@ -2552,11 +2548,8 @@ object AnnQueries {
     * claims at 100 TB. Oracle: identical to [[pqAdcTopK]]'s SQL —
     * persistence must not change a single row. */
   def pqServedTopK(spark: SparkSession, dir: String): DataFrame = {
-    val indexPath = s"/tmp/graft_pq_corpus_${new java.io.File(dir).getName}"
-    Stage.ensure(indexPath, s"$dir/embeddings.parquet") {
-      persistPqCorpus(spark, dir, indexPath)
-    }
-    pqAdcTopKFrom(spark, dir, indexPath)
+    pqAdcTopKFrom(spark, dir,
+      Stage.path("pq_corpus", dir, "embeddings")(persistPqCorpus(spark, dir, _)))
   }
 
   /** [[persistIvfPqCorpus]] with the code corpus laid out
@@ -2593,10 +2586,8 @@ object AnnQueries {
   def ivfPqPrunedTopK(spark: SparkSession, dir: String): DataFrame = {
     VectorExpressions.register(spark)
     implicit val s: SparkSession = spark
-    val indexPath = s"/tmp/graft_ivfpq_part_${new java.io.File(dir).getName}"
-    Stage.ensure(indexPath, s"$dir/embeddings.parquet") {
-      persistIvfPqCorpusPartitioned(spark, dir, indexPath)
-    }
+    val indexPath =
+      Stage.path("ivfpq_part", dir, "embeddings")(persistIvfPqCorpusPartitioned(spark, dir, _))
     val t = Tables(dir)
     val cents = readCentroids(spark, s"$indexPath/centroids")
     val cb = readCodebook(spark, s"$indexPath/codebook")
@@ -2626,13 +2617,8 @@ object AnnQueries {
   /** Ensure the full IVF-PQ index (centroids + codebook + coded corpus)
     * is persisted for `dir` and return its path — the Stage-gated
     * train/encode-once entry of the served query. */
-  private def ivfPqServedIndex(spark: SparkSession, dir: String): String = {
-    val indexPath = s"/tmp/graft_ivfpq_idx_${new java.io.File(dir).getName}"
-    Stage.ensure(indexPath, s"$dir/embeddings.parquet") {
-      persistIvfPqCorpus(spark, dir, indexPath)
-    }
-    indexPath
-  }
+  private def ivfPqServedIndex(spark: SparkSession, dir: String): String =
+    Stage.path("ivfpq_idx", dir, "embeddings")(persistIvfPqCorpus(spark, dir, _))
 
   private val ivfPqSql = {
     val encs = (0 until PqM).map(pqEncDuck).mkString("\n  UNION ALL\n  ")

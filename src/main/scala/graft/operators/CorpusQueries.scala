@@ -206,11 +206,7 @@ object CorpusQueries {
     * content-signature gate, read back ordered. A tokenizer is trained
     * once and served forever — reruns must not pay the training jobs. */
   def trainedBpeMerges(spark: SparkSession, dir: String): Seq[(String, String)] = {
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_bpe_${Integer.toHexString(dir.hashCode)}"
-    Stage.ensure(path, s"$dir/documents.parquet") {
-      bpeMerges(spark, dir).write.mode("overwrite").parquet(path)
-    }
-    graft.sources.Tables.relationAt(spark, path).orderBy("rank").collect()
+    Stage.parquet(spark, "bpe", dir, "documents")(bpeMerges(spark, dir)).orderBy("rank").collect()
       .map(r => (r.getString(1), r.getString(2)))
   }
 
@@ -1103,11 +1099,9 @@ object CorpusQueries {
     * unsplittable-file pitfall), read as a narrow parquet scan. */
   private[operators] def stagedSpans(spark: SparkSession, dir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    val path = s"/tmp/graft_spans_${new java.io.File(dir).getName}"
-    Stage.ensure(path, s"$dir/documents.parquet") {
-      spansOf(Tables(dir).spread("documents")).write.mode("overwrite").parquet(path)
+    Stage.parquet(spark, "spans", dir, "documents") {
+      spansOf(Tables(dir).spread("documents"))
     }
-    graft.sources.Tables.relationAt(spark, path)
   }
 
   def repeatedSpans(spark: SparkSession, dir: String): DataFrame = {
@@ -1292,10 +1286,7 @@ object CorpusQueries {
     * every row and every character of text (JSON escaping is lossless). */
   def jsonlIngest(spark: SparkSession, dir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    val stage = s"${System.getProperty("java.io.tmpdir")}/graft_jsonl_${Integer.toHexString(dir.hashCode)}"
-    Stage.ensure(stage, s"$dir/documents.parquet") {
-      Tables(dir).documents.write.mode("overwrite").json(stage)
-    }
+    val stage = Stage.path("jsonl", dir, "documents")(Tables(dir).documents.write.json(_))
     val schema = new org.apache.spark.sql.types.StructType()
       .add("doc_id", "long").add("text", "string").add("lang", "string")
       .add("source", "string").add("n_chars", "long")

@@ -81,15 +81,12 @@ object DedupQueries {
     * arrays. */
   private[operators] def stagedShingleSets(spark: SparkSession, dir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    val path = s"/tmp/graft_shset_${new java.io.File(dir).getName}"
-    Stage.ensure(path, s"$dir/documents.parquet") {
+    Stage.parquet(spark, "shset", dir, "documents") {
       Tables(dir).spread("documents")
         .withColumn("w", words(col("text")))
         .withColumn("s", shingles("w"))
         .select(col("doc_id"), array_distinct(col("s")).as("ss"))
-        .write.mode("overwrite").parquet(path)
     }
-    graft.sources.Tables.relationAt(spark, path)
   }
 
   /** Per-seed linear-mix constants for the K minwise hashes: one md5 per
@@ -580,13 +577,9 @@ object DedupQueries {
                            candsOf: Tables => DataFrame): DataFrame = {
     implicit val s: SparkSession = spark
     graft.plans.VectorExpressions.register(spark)
-    val path = s"/tmp/graft_${tag}_${new java.io.File(dir).getName}"
-    Stage.ensure(path, s"$dir/documents.parquet") {
+    Stage.cached(spark, tag, dir, "documents") {
       scorePairs(Tables(dir), candsOf(Tables(dir)))
-        .write.mode("overwrite").parquet(path)
     }
-    Cached.track(graft.sources.Tables.relationAt(spark, path)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
   }
 
   /** The corpus term statistics the verify weights derive from: per-doc
@@ -620,17 +613,13 @@ object DedupQueries {
     * docs, exactly the rows the inline build produced. */
   private[operators] def stagedTermWeights(spark: SparkSession, dir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    val path = s"/tmp/graft_tfwgt_${new java.io.File(dir).getName}"
-    Stage.ensure(path, s"$dir/documents.parquet") {
+    Stage.cached(spark, "tfwgt", dir, "documents") {
       val (tfAll, dfx, nDocs) = tfParts(Tables(dir))
       tfAll.join(dfx, Seq("term"))
         .crossJoin(broadcast(nDocs))
         .withColumn("wgt", expr("tf * ((100 * (2 * n_docs - 2 * df + 1)) div (2 * df + 1))"))
         .select("doc_id", "term", "wgt")
-        .write.mode("overwrite").parquet(path)
     }
-    Cached.track(graft.sources.Tables.relationAt(spark, path)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
   }
 
   /** TF-IDF-cosine scoring of an arbitrary (doc_a, doc_b) pair frame —
@@ -652,8 +641,7 @@ object DedupQueries {
     * consumers), so the gate counts the materialized frame — rows, the
     * stable proxy for its hash-relation footprint — and keeps the keyed
     * join beyond the budget (a 100 TB candidate set never broadcasts). */
-  private val WeightBroadcastMaxRows: Long =
-    sys.env.getOrElse("SPARK_GRAFT_WGT_BCAST_MAX_ROWS", (4L << 20).toString).toLong
+  private val WeightBroadcastMaxRows: Long = 4L << 20
 
   private def scorePairsWith(wtAll: DataFrame, cands: DataFrame)(
       implicit s: SparkSession): DataFrame = {
@@ -960,13 +948,9 @@ object DedupQueries {
     * because they ARE the same staged rows. */
   private[operators] def stagedSigs(spark: SparkSession, dir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    val path = s"/tmp/graft_mhsig_${new java.io.File(dir).getName}"
-    Stage.ensure(path, s"$dir/documents.parquet") {
+    Stage.cached(spark, "mhsig", dir, "documents") {
       minhashSigs(shingled(Tables(dir))).select("doc_id", "m")
-        .write.mode("overwrite").parquet(path)
     }
-    Cached.track(graft.sources.Tables.relationAt(spark, path)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
   }
 
   def minhashEstimate(spark: SparkSession, dir: String): DataFrame = {
@@ -1092,18 +1076,14 @@ object DedupQueries {
   private[operators] def stagedSourceShingles(spark: SparkSession, dir: String): DataFrame = {
     implicit val s: SparkSession = spark
     graft.plans.VectorExpressions.register(spark)
-    val path = s"/tmp/graft_srcsh_${new java.io.File(dir).getName}"
-    Stage.ensure(path, s"$dir/documents.parquet") {
+    Stage.cached(spark, "srcsh", dir, "documents") {
       Tables(dir).documents
         .withColumn("w", words(col("text")))
         .withColumn("sarr", shingles("w"))
         .select(col("doc_id"), col("source"), col("lang"),
           array_distinct(transform(col("sarr"),
             x => graft.plans.VectorExpressions.hexPrefix(md5(x), 15))).as("hs"))
-        .write.mode("overwrite").parquet(path)
     }
-    Cached.track(graft.sources.Tables.relationAt(spark, path)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
   }
 
   def sourceOverlap(spark: SparkSession, dir: String): DataFrame = {
@@ -1252,19 +1232,18 @@ object DedupQueries {
     * Serving cycles read these and fold only the arriving batch. */
   private[graft] def stagedSourceOverlapState(spark: SparkSession, dir: String): SourceOverlapState = {
     implicit val s: SparkSession = spark
-    val path = s"/tmp/graft_srcovlst_${new java.io.File(dir).getName}"
-    Stage.ensure(path, s"$dir/documents.parquet") {
+    val path = Stage.path("srcovlst", dir, "documents") { p =>
       val archCells = stagedSourceShingles(spark, dir)
         .where(graft.plans.VectorExpressions.hexPrefix(md5(col("doc_id").cast("string")), 8) % 100 < 80)
         .select(col("source"), explode(col("hs")).as("shg"))
         .distinct()
       val st = sourceOverlapFold(emptyOverlapState, archCells)
-      st.catalog.write.mode("overwrite").parquet(s"$path/catalog")
-      st.pairs.write.mode("overwrite").parquet(s"$path/pairs")
-      st.sizes.write.mode("overwrite").parquet(s"$path/sizes")
+      st.catalog.write.parquet(s"$p/catalog")
+      st.pairs.write.parquet(s"$p/pairs")
+      st.sizes.write.parquet(s"$p/sizes")
       import spark.implicits._
       st.names.zipWithIndex.map { case (n, i) => (i.toLong, n) }
-        .toDF("sid", "source").coalesce(1).write.mode("overwrite").parquet(s"$path/dict")
+        .toDF("sid", "source").coalesce(1).write.parquet(s"$p/dict")
       // build-time persists stay on the Cached registry — the CONSUMER
       // releases after its action (a releaseAll here would unpersist
       // unrelated in-flight frames session-wide, and drop the

@@ -226,31 +226,17 @@ object GraphQueries {
     pagerankFrom(edges(Tables(dir)))
   }
 
-  /** The co-purchase edge list as a PERSISTED dataset (§8i(an)) — the
+  /** The co-purchase edge list as a staged dataset (§8i(an)) — the
     * graphs' encode-once discipline, same content-signature gate as the
-    * ANN indices: triangles, PageRank, and any future graph pass read
+    * ANN indices: triangles, PageRank, BFS and any future graph pass read
     * the materialization instead of re-deriving it from the fact table
     * per run. An unchanged lineitem is a no-op; a new drop rebuilds. */
-  def persistEdges(spark: SparkSession, dir: String, path: String): Unit = {
-    implicit val s: SparkSession = spark
-    edges(Tables(dir)).write.mode("overwrite").parquet(path)
-  }
+  private def edgesStage(spark: SparkSession, dir: String): String =
+    Stage.path("edges", dir, "lineitem")(edges(Tables(dir)(spark)).write.parquet(_))
 
-  /** The staged co-purchase edge dataset (content-signature gated on the
-    * fact table): build once per corpus state, serve every graph pass —
-    * PageRank, BFS, and any future traversal. */
-  private[operators] def stagedEdgesPath(dir: String): String =
-    s"/tmp/graft_edges_${new java.io.File(dir).getName}"
-
-  private[operators] def stagedEdges(spark: SparkSession, dir: String): DataFrame = {
-    implicit val s: SparkSession = spark
-    val path = stagedEdgesPath(dir)
-    Stage.ensure(path, s"$dir/lineitem.parquet") {
-      persistEdges(spark, dir, path)
-    }
-    Cached.track(graft.sources.Tables.relationAt(spark, path)
+  private[operators] def stagedEdges(spark: SparkSession, dir: String): DataFrame =
+    Cached.track(graft.sources.Tables.relationAt(spark, edgesStage(spark, dir))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-  }
 
   /** r12 (verdict #4) — the graph family's SHARED derived frame: the
     * symmetric ADJACENCY (node, sorted-distinct neighbor array), staged
@@ -269,16 +255,12 @@ object GraphQueries {
     * slice AFTER the read, so one staged artifact serves every cap. */
   private[operators] def stagedAdj(spark: SparkSession, dir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    val path = s"/tmp/graft_gadj_${new java.io.File(dir).getName}"
-    Stage.ensure(path, s"$dir/lineitem.parquet") {
+    Stage.cached(spark, "gadj", dir, "lineitem") {
       val e = stagedEdges(spark, dir)
       e.select(col("pa").as("node"), col("pb").as("dst"))
         .unionByName(e.select(col("pb").as("node"), col("pa").as("dst")))
         .groupBy("node").agg(sort_array(collect_set(col("dst"))).as("ns"))
-        .write.mode("overwrite").parquet(path)
     }
-    Cached.track(graft.sources.Tables.relationAt(spark, path)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
   }
 
   /** Symmetric edge list derived narrowly from [[stagedAdj]]. */
@@ -306,8 +288,7 @@ object GraphQueries {
     * out-degree, so it stays a small fraction of the edge list. */
   private[operators] def stagedTriEdges(spark: SparkSession, dir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    val path = s"/tmp/graft_gtri_${new java.io.File(dir).getName}"
-    Stage.ensure(path, s"$dir/lineitem.parquet") {
+    Stage.cached(spark, "gtri", dir, "lineitem") {
       val nodeDomain = Tables(dir).part.count()
       val e = stagedEdges(spark, dir)
       val deg = degFromAdj(stagedAdj(spark, dir))
@@ -330,10 +311,7 @@ object GraphQueries {
         .select(col("src"), col("dst"),
           array_intersect(col("ns_a"), col("ns_b")).as("tris"))
         .where(size(col("tris")) > 0)
-        .write.mode("overwrite").parquet(path)
     }
-    Cached.track(graft.sources.Tables.relationAt(spark, path)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
   }
 
   /** PageRank served from the staged adjacency (edge build AND the
@@ -518,14 +496,12 @@ object GraphQueries {
     * per corpus state). */
   private def stagedBackbone(spark: SparkSession, dir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    // "w" suffix: the artifact gained the support column (n) — a new path
+    // "w" suffix: the artifact gained the support column (n) — a new stage
     // name, because Stage signatures track the SOURCE, not the builder,
     // and a schema change must not serve a stale artifact
-    val path = s"/tmp/graft_backbonew_${new java.io.File(dir).getName}"
-    Stage.ensure(path, s"$dir/lineitem.parquet") {
-      backbone(Tables(dir)).write.mode("overwrite").parquet(path)
+    Stage.parquet(spark, "backbonew", dir, "lineitem") {
+      backbone(Tables(dir))
     }
-    graft.sources.Tables.relationAt(spark, path)
   }
 
   /** The contraction loop on any (u, v) edge frame → the converged star
@@ -905,8 +881,7 @@ object GraphQueries {
     * Consumers slice columns; staged≡inline pinned in StagedFramesSpec. */
   private[operators] def stagedWedgePairs(spark: SparkSession, dir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    val path = s"/tmp/graft_gwedge_${new java.io.File(dir).getName}"
-    Stage.ensure(path, s"$dir/lineitem.parquet") {
+    val path = Stage.path("gwedge", dir, "lineitem") { p =>
       val adj = stagedAdj(spark, dir)
       val capped = adj.select(
         expr("1000000000 div size(ns)").cast("long").as("w"),
@@ -919,7 +894,7 @@ object GraphQueries {
             "ELSE CAST(raise_error('graph wedge pairs: partkey exceeds the 32-bit packed-pair domain') AS BIGINT) END)))")).as("ab"))
         .groupBy("ab")
         .agg(count(lit(1)).as("common"), sum(col("w")).as("ra_nano"))
-        .write.mode("overwrite").parquet(path)
+        .write.parquet(p)
     }
     // Stage.read (artifact-sized splits): the frame is byte-slim (35 MB
     // for ~4M pairs at sf0.1) so the default 128 MB split packs it into
@@ -1247,7 +1222,7 @@ object GraphQueries {
     // A fully lazy renorm (max via broadcast cross-join, one action) was
     // built and REJECTED: 170 s AQE-on / 8.9 s AQE-off vs this
     // structure's 4.8 s.
-    val (a, h) = LoopConf.noAqeBelow(spark, Stage.bytes(stagedEdgesPath(dir))) {
+    val (a, h) = LoopConf.noAqeBelow(spark, Stage.bytes(edgesStage(spark, dir))) {
       var h0 = eSrc.select(col("src").as("node")).distinct()
         .select(col("node"), lit(HitsScale).as("s"))
       var a0: DataFrame = null

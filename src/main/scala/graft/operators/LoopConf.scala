@@ -10,9 +10,8 @@ import org.apache.spark.sql.SparkSession
   * stages finish in tens of milliseconds at bench scale — there the
   * re-planning latency is the dominant term, not a rounding error
   * (graph_hits measured 6.3 s AQE-on vs 4.8 s AQE-off at sf0.1, identical
-  * rows). The gate is SIZE-based and parameterised, not a blanket local
-  * tune: below `SPARK_GRAFT_AQE_LOOP_GATE_BYTES` (default 1 GiB) of
-  * loop working set the per-iteration stages are sub-second on any
+  * rows). The gate is SIZE-based, not a blanket local tune: below 1 GiB
+  * of loop working set the per-iteration stages are sub-second on any
   * deployment-shaped executor count and AQE is pure latency; above it the
   * loop's joins/aggregations are big enough that AQE's skew handling and
   * partition coalescing pay for themselves, so it stays ON (a 100 TB
@@ -25,15 +24,14 @@ import org.apache.spark.sql.SparkSession
   */
 object LoopConf {
 
-  private def gateBytes: Long =
-    sys.env.getOrElse("SPARK_GRAFT_AQE_LOOP_GATE_BYTES", (1L << 30).toString).toLong
+  private val GateBytes: Long = 1L << 30
 
   /** Run `body` (a loop whose actions all fire inside it) with AQE off
     * when `workingSetBytes` is below the gate; restore the previous value
     * whatever happens. Conf is session-scoped — callers run queries
     * sequentially (the bench/verify harness contract). */
   def noAqeBelow[T](spark: SparkSession, workingSetBytes: Long)(body: => T): T =
-    if (workingSetBytes >= gateBytes) body
+    if (workingSetBytes >= GateBytes) body
     else {
       val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
       spark.conf.set("spark.sql.adaptive.enabled", "false")

@@ -361,10 +361,7 @@ object MultiIntervalJoin {
     * rebuilds. */
   private[operators] def stagedStayPairs(spark: SparkSession, dir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    val path = s"/tmp/graft_staypairs_${new java.io.File(dir).getName}"
-    Stage.ensure(path, s"$dir/events.parquet") {
-      overlappingStays(spark, dir).write.mode("overwrite").parquet(path)
-    }
+    val path = Stage.path("staypairs", dir, "events")(overlappingStays(spark, dir).write.parquet(_))
     Cached.track(Stage.read(spark, path)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
   }

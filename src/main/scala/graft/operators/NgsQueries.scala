@@ -58,9 +58,8 @@ object NgsQueries {
 
   /** Render lineitem as a deterministic MAF file (one mutation row per
     * line item; classification keyed off l_returnflag). */
-  private def stageMaf(spark: SparkSession, dir: String): String = {
-    val stage = s"${System.getProperty("java.io.tmpdir")}/graft_maf_${Integer.toHexString(dir.hashCode)}"
-    Stage.ensure(stage, s"$dir/lineitem.parquet") {
+  private def stageMaf(spark: SparkSession, dir: String): String =
+    Stage.path("maf", dir, "lineitem") { p =>
       Tables(dir)(spark).lineitem.select(
         concat(lit("G"), (col("l_partkey") % Genes).cast("string")).as("Hugo_Symbol"),
         (col("l_partkey") % Genes).as("Entrez_Gene_Id"),
@@ -73,12 +72,10 @@ object NgsQueries {
         lit("A").as("Reference_Allele"),
         lit("T").as("Tumor_Seq_Allele2"),
         concat(lit("S"), (col("l_suppkey") % Samples).cast("string")).as("Tumor_Sample_Barcode"))
-        .write.mode("overwrite")
+        .write
         .option("delimiter", "\t").option("header", "true")
-        .csv(stage)
+        .csv(p)
     }
-    stage
-  }
 
   /** MAF → cBioPortal mutated-genes staging: non-silent mutation count per
     * gene × sample. */
@@ -113,9 +110,8 @@ object NgsQueries {
 
   /** Render a deterministic `.seg` file from orders (one CNA segment per
     * eighth order; integer-derived bounds and a 0.01-grid mean). */
-  private def stageSeg(spark: SparkSession, dir: String): String = {
-    val stage = s"${System.getProperty("java.io.tmpdir")}/graft_seg_${Integer.toHexString(dir.hashCode)}"
-    Stage.ensure(stage, s"$dir/orders.parquet") {
+  private def stageSeg(spark: SparkSession, dir: String): String =
+    Stage.path("seg", dir, "orders") { p =>
       Tables(dir)(spark).orders
         .where(col("o_orderkey") % 8 === 0)
         .select(
@@ -126,12 +122,10 @@ object NgsQueries {
             + (col("o_orderkey") % 7) * 15000).as("End"),
           ((col("o_orderkey") % 500) + 10).as("Num_Probes"),
           (((col("o_orderkey") % 400) - 200) / lit(100.0)).as("Segment_Mean"))
-        .write.mode("overwrite")
+        .write
         .option("delimiter", "\t").option("header", "true")
-        .csv(stage)
+        .csv(p)
     }
-    stage
-  }
 
   /** `.seg` segments ⋈ gene positions (chromosome equality + interval
     * overlap, gene side broadcast) → per gene × sample segment count and

@@ -147,10 +147,6 @@ object SplitQueries {
     // identical pair set without re-shingling + re-minhashing the corpus
     // per run (staged≡inline pinned in StagedFramesSpec; the
     // docs_pipeline_report precedent).
-    // ADVICE r14: side effect — the first run writes the /tmp/graft_mhsig_*
-    // staged artifact via Stage.ensure (as do splitScrub/crossSourceMatrix);
-    // fine for the single-process harness, unsafe under concurrent drivers
-    // (Stage.ensure's documented limitation).
     val pairs = DedupQueries.minhashLsh(spark, dir)
     val asg = assigned(t).select("doc_id", "split")
     pairs

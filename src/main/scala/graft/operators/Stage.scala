@@ -1,17 +1,27 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Content-signature staging skip — the reference pipeline's incremental
   * discipline (scripts/sync.py: downstream work re-runs only when the
   * `file checksum` signal changes) applied to locally staged derived files.
   *
-  * A staged directory `stage` is CURRENT when `<stage>.sig` records the same
-  * signature as the source it was derived from. The signature is the
-  * source's (size, mtime) — cheap, no content read — which is exactly the
-  * granularity the drop-zone sync uses to decide whether to rehash. The
-  * `.sig` file lives NEXT to the directory, never inside it, so datasource
-  * readers that glob the directory never see it as data.
+  * A stage is named by the query layer (`name`), keyed on the dataset dir
+  * and derived from one of its tables. It lives at
+  * `java.io.tmpdir/graft_<name>_<key>`, where `<key>` hashes the absolute,
+  * normalized dataset dir, so two datasets that share a basename never
+  * share a stage. The stage is CURRENT when `<stage>.sig` records the same
+  * signature as the source table. The signature is the source's (size,
+  * mtime) — cheap, no content read — which is exactly the granularity the
+  * drop-zone sync uses to decide whether to rehash. The `.sig` file lives
+  * NEXT to the stage, never inside it, so datasource readers that glob the
+  * directory never see it as data.
+  *
+  * A stale stage is built into a private temp sibling, renamed into place,
+  * and only then is its `.sig` written: a build that fails, or one racing
+  * another, never leaves a partial artifact under the published name.
   */
 object Stage {
 
@@ -32,7 +42,7 @@ object Stage {
       // close it or every signature() on a directory leaks a descriptor.
       val listing = Files.list(p)
       val parts =
-        try listing.toArray.map(_.asInstanceOf[java.nio.file.Path])
+        try listing.toArray.map(_.asInstanceOf[Path])
           .filter(Files.isRegularFile(_)).sortBy(_.toString)
         finally listing.close()
       StageVersion + "|" + parts
@@ -42,18 +52,6 @@ object Stage {
       s"$StageVersion|${Files.size(p)}:${Files.getLastModifiedTime(p).toMillis}"
     else s"$StageVersion|absent"
   }
-
-  private def sigFile(stage: String) = Paths.get(stage + ".sig")
-
-  /** True iff `stage` was last recorded against the current state of
-    * `sourcePath` (and the stage itself still exists). */
-  def current(stage: String, sourcePath: String): Boolean =
-    Files.exists(Paths.get(stage)) && Files.exists(sigFile(stage)) &&
-      new String(Files.readAllBytes(sigFile(stage)), "UTF-8") == signature(sourcePath)
-
-  /** Record that `stage` now reflects `sourcePath`'s current state. */
-  def record(stage: String, sourcePath: String): Unit =
-    Files.write(sigFile(stage), signature(sourcePath).getBytes("UTF-8"))
 
   /** Read a staged artifact with file splits sized to the ARTIFACT, not
     * the global 128 MB default (r13): staged frames are byte-slim —
@@ -75,8 +73,7 @@ object Stage {
     * and feed iterative consumers, where 64 tiny cached partitions add
     * per-task overhead on every iteration and the first shuffle already
     * re-spreads the work). Default stays `spark.read.parquet`. */
-  def read(spark: org.apache.spark.sql.SparkSession, stage: String,
-           targetTasks: Int = 64): org.apache.spark.sql.DataFrame = {
+  def read(spark: SparkSession, stage: String, targetTasks: Int = 64): DataFrame = {
     val split = math.max(1L << 20, bytes(stage) / math.max(targetTasks, 1))
     readSession(spark, split).read.parquet(stage)
   }
@@ -89,7 +86,7 @@ object Stage {
     val p = Paths.get(stage)
     if (Files.isDirectory(p)) {
       val listing = Files.list(p)
-      try listing.toArray.map(_.asInstanceOf[java.nio.file.Path])
+      try listing.toArray.map(_.asInstanceOf[Path])
         .filter(f => Files.isRegularFile(f) && f.getFileName.toString.endsWith(".parquet"))
         .map(Files.size).sum
       finally listing.close()
@@ -104,10 +101,9 @@ object Stage {
     * own entries; stale ones are dropped on sight). */
   private val readSessions =
     scala.collection.concurrent.TrieMap.empty[(org.apache.spark.SparkContext, Long),
-      org.apache.spark.sql.SparkSession]
+      SparkSession]
 
-  private def readSession(spark: org.apache.spark.sql.SparkSession,
-                          split: Long): org.apache.spark.sql.SparkSession = {
+  private def readSession(spark: SparkSession, split: Long): SparkSession = {
     readSessions.filterInPlace((k, _) => !k._1.isStopped)
     readSessions.getOrElseUpdate((spark.sparkContext, split), {
       val rs = spark.newSession()
@@ -117,22 +113,72 @@ object Stage {
     })
   }
 
-  /** Build-if-stale with the sig invalidated FIRST: a `mode(overwrite)`
-    * rewrite deletes and re-creates the stage directory, and a stale `.sig`
-    * surviving into that window would let a later `current` call serve a
-    * partially written stage. Deleting the sig before `build` runs NARROWS
-    * that window for the single-process, sequential harness this gates
-    * (one driver, one ensure at a time): a crash mid-build leaves no sig,
-    * so the next run rebuilds instead of reading torn data. It is NOT a
-    * multi-process guarantee — a reader that passed `current` just before
-    * the delete can still observe the overwrite, and two processes
-    * building the same stage concurrently interleave destructively. A
-    * shared deployment needs write-to-temp + atomic rename (the
-    * [[graft.pipeline.AggCache]] swap discipline) or an external lock. */
-  def ensure(stage: String, sourcePath: String)(build: => Unit): Unit =
-    if (!current(stage, sourcePath)) {
-      Files.deleteIfExists(sigFile(stage))
-      build
-      record(stage, sourcePath)
+  /** Stage `name` for the dataset at `dir`, derived from its `table`, and
+    * return the published path. When the stage is not current, `write`
+    * builds it at the temp path it is given (a file or a directory); the
+    * result is then published as above. One build per stage runs at a time
+    * in a JVM, so a concurrent caller waits for it and reads its result. */
+  def path(name: String, dir: String, table: String)(write: String => Unit): String = {
+    val stage = Paths.get(System.getProperty("java.io.tmpdir"), s"graft_${name}_${key(dir)}")
+    val source = s"$dir/$table.parquet"
+    locks.computeIfAbsent(stage.toString, _ => new AnyRef).synchronized {
+      if (!current(stage, source)) {
+        val sig = signature(source)
+        val tmp = stage.resolveSibling(s"${stage.getFileName}.${java.util.UUID.randomUUID}.tmp")
+        try {
+          write(tmp.toString)
+          // another process may have published this source state meanwhile
+          if (!current(stage, source)) {
+            replace(tmp, stage)
+            Files.write(sigFile(stage), sig.getBytes("UTF-8"))
+          }
+        } finally deleteTree(tmp)
+      }
     }
+    stage.toString
+  }
+
+  /** [[path]] for a parquet frame, read back through the relation cache. */
+  def parquet(spark: SparkSession, name: String, dir: String, table: String)(
+      frame: => DataFrame): DataFrame =
+    graft.sources.Tables.relationAt(spark, path(name, dir, table)(frame.write.parquet(_)))
+
+  /** [[parquet]], persisted and registered with [[Cached]] for release. */
+  def cached(spark: SparkSession, name: String, dir: String, table: String)(
+      frame: => DataFrame): DataFrame =
+    Cached.track(parquet(spark, name, dir, table)(frame)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+
+  private val locks = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+
+  private def key(dir: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(Paths.get(dir).toAbsolutePath.normalize.toString.getBytes("UTF-8"))
+      .take(8).map(b => f"$b%02x").mkString
+
+  private def sigFile(stage: Path) = stage.resolveSibling(s"${stage.getFileName}.sig")
+
+  /** True iff `stage` exists and was last recorded against the current
+    * state of `sourcePath`. */
+  private def current(stage: Path, sourcePath: String): Boolean =
+    Files.exists(stage) && Files.exists(sigFile(stage)) &&
+      new String(Files.readAllBytes(sigFile(stage)), "UTF-8") == signature(sourcePath)
+
+  /** Rename `tmp` onto `stage`. A directory cannot be renamed over a
+    * non-empty one, so an old stage moves aside first and is deleted after. */
+  private def replace(tmp: Path, stage: Path): Unit = {
+    val old = stage.resolveSibling(s"${tmp.getFileName}.old")
+    val hadOld = Files.exists(stage)
+    if (hadOld) Files.move(stage, old, StandardCopyOption.ATOMIC_MOVE)
+    Files.move(tmp, stage, StandardCopyOption.ATOMIC_MOVE)
+    if (hadOld) deleteTree(old)
+  }
+
+  private def deleteTree(p: Path): Unit =
+    if (Files.isDirectory(p, java.nio.file.LinkOption.NOFOLLOW_LINKS)) {
+      val listing = Files.list(p)
+      try listing.toArray.foreach(c => deleteTree(c.asInstanceOf[Path]))
+      finally listing.close()
+      Files.delete(p)
+    } else Files.deleteIfExists(p)
 }

@@ -371,12 +371,9 @@ object StorageQueries {
 
   private[operators] def stagedValCounts(spark: SparkSession, dir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    val path = s"/tmp/graft_vcnt_${new java.io.File(dir).getName}"
-    Stage.ensure(path, s"$dir/lineitem.parquet") {
-      meltCells(Tables(dir).lineitem).write.mode("overwrite").parquet(path)
+    Stage.cached(spark, "vcnt", dir, "lineitem") {
+      meltCells(Tables(dir).lineitem)
     }
-    Cached.track(graft.sources.Tables.relationAt(spark, path)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
   }
 
   /** The o_custkey leg of the skew/advisor melt, staged against the
@@ -384,15 +381,11 @@ object StorageQueries {
     * [[stagedValCounts]] so the consumers union the two frames). */
   private[operators] def stagedCustKeyCounts(spark: SparkSession, dir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    val path = s"/tmp/graft_ocust_${new java.io.File(dir).getName}"
-    Stage.ensure(path, s"$dir/orders.parquet") {
+    Stage.cached(spark, "ocust", dir, "orders") {
       Tables(dir).orders
         .select(lit("o_custkey").as("col_name"), col("o_custkey").cast("string").as("val"))
         .groupBy("col_name", "val").agg(count(lit(1)).as("cnt"))
-        .write.mode("overwrite").parquet(path)
     }
-    Cached.track(graft.sources.Tables.relationAt(spark, path)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
   }
 
   /** §8p(cu) — ANALYZE-style table statistics: per column, the numbers a
@@ -487,14 +480,10 @@ object StorageQueries {
   private def stagedArchiveValCounts(spark: SparkSession, dir: String): DataFrame = {
     implicit val s: SparkSession = spark
     graft.plans.VectorExpressions.register(spark)
-    val path = s"/tmp/graft_vcnt80_${new java.io.File(dir).getName}"
-    Stage.ensure(path, s"$dir/lineitem.parquet") {
+    Stage.cached(spark, "vcnt80", dir, "lineitem") {
       meltCells(Tables(dir).lineitem.where(
         graft.plans.VectorExpressions.hexPrefix(md5(col("l_orderkey").cast("string")), 8) % 100 < 80))
-        .write.mode("overwrite").parquet(path)
     }
-    Cached.track(graft.sources.Tables.relationAt(spark, path)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
   }
 
   /** §8aa(et) r14 — INCREMENTAL table statistics: the full-table ANALYZE

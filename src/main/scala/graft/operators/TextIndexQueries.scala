@@ -246,12 +246,9 @@ object TextIndexQueries {
     * pinned in StagedFramesSpec. */
   private[operators] def stagedDocPred(spark: SparkSession, dir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    val path = s"/tmp/graft_dpred_${new java.io.File(dir).getName}"
-    Stage.ensure(path, s"$dir/documents.parquet") {
-      docPred(Tables(dir).documents).write.mode("overwrite").parquet(path)
+    Stage.cached(spark, "dpred", dir, "documents") {
+      docPred(Tables(dir).documents)
     }
-    Cached.track(graft.sources.Tables.relationAt(spark, path)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
   }
 
   private[operators] def docPred(docs: DataFrame)(implicit s: SparkSession): DataFrame = {
@@ -455,20 +452,18 @@ object TextIndexQueries {
     * term-bucketed index table; the serving plans never read `text`. */
   private[graft] def stagedPostings(spark: SparkSession, dir: String): String = {
     implicit val s: SparkSession = spark
-    val path = s"/tmp/graft_postings_${new java.io.File(dir).getName}"
-    Stage.ensure(path, s"$dir/documents.parquet") {
+    Stage.path("postings", dir, "documents") { path =>
       val ws = Tables(dir).documents.select(col("doc_id"), words(col("text")).as("w"))
       ws.select(col("doc_id"), size(col("w")).cast("long").as("dl"),
           posexplode(col("w")).as(Seq("pos", "term")))
         .groupBy(col("term"), col("doc_id"), col("dl"))
         .agg(count(lit(1)).as("tf"), sort_array(collect_list(col("pos"))).as("positions"))
         .repartition(col("term")).sortWithinPartitions("term")
-        .write.mode("overwrite").parquet(s"$path/postings")
+        .write.parquet(s"$path/postings")
       ws.select(size(col("w")).cast("long").as("dl"))
         .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("l_tot"))
-        .write.mode("overwrite").parquet(s"$path/stats")
+        .write.parquet(s"$path/stats")
     }
-    path
   }
 
   /** BM25 top-k SERVED from the staged postings — identical scores to
@@ -506,8 +501,7 @@ object TextIndexQueries {
     * state. */
   private def stagedBasePostings(spark: SparkSession, dir: String): String = {
     implicit val s: SparkSession = spark
-    val path = s"/tmp/graft_postings_base_${new java.io.File(dir).getName}"
-    Stage.ensure(path, s"$dir/documents.parquet") {
+    Stage.path("postings_base", dir, "documents") { path =>
       val bucket = graft.plans.VectorExpressions.hexPrefix(md5(col("doc_id").cast("string")), 8) % 100
       val ws = Tables(dir).documents.where(bucket < 80)
         .select(col("doc_id"), words(col("text")).as("w"))
@@ -516,12 +510,11 @@ object TextIndexQueries {
         .groupBy(col("term"), col("doc_id"), col("dl"))
         .agg(count(lit(1)).as("tf"))
         .repartition(col("term")).sortWithinPartitions("term")
-        .write.mode("overwrite").parquet(s"$path/postings")
+        .write.parquet(s"$path/postings")
       ws.select(size(col("w")).cast("long").as("dl"))
         .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("l_tot"))
-        .write.mode("overwrite").parquet(s"$path/stats")
+        .write.parquet(s"$path/stats")
     }
-    path
   }
 
   /** §8l(bs) — INCREMENTAL index maintenance for the lexical tower: a

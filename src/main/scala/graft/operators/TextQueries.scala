@@ -24,14 +24,11 @@ object TextQueries {
     * stored-w ≡ inline-words(text) row for row (spec-pinned). */
   private[operators] def stagedDocTokens(spark: SparkSession, dir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    val path = s"/tmp/graft_doctok_${new java.io.File(dir).getName}"
-    Stage.ensure(path, s"$dir/documents.parquet") {
+    Stage.parquet(spark, "doctok", dir, "documents") {
       Tables(dir).spread("documents")
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
           words(col("text")).as("w"))
-        .write.mode("overwrite").parquet(path)
     }
-    graft.sources.Tables.relationAt(spark, path)
   }
 
   /** §33 — token counting: whitespace tokens + a BPE-ish regex token count

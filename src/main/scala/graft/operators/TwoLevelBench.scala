@@ -47,9 +47,7 @@ object TwoLevelBench {
     VectorExpressions.register(spark)
 
     // ---- fixture: factor× deterministic near-copies, staged like ScaleUp
-    val srcName = new java.io.File(srcDir).getName
-    val fixPath = s"/tmp/graft_tlb_${srcName}_x$factor"
-    Stage.ensure(fixPath, s"$srcDir/embeddings.parquet") {
+    val corpus = Stage.parquet(spark, s"tlb_x$factor", srcDir, "embeddings") {
       val src = spark.read.parquet(s"$srcDir/embeddings.parquet")
         .select("vec_id", "embedding")
       val stride = src.agg(max(col("vec_id"))).head().getLong(0) + 1
@@ -60,10 +58,7 @@ object TwoLevelBench {
                  |                    - 500.0D) / 50000.0D) AS FLOAT))""".stripMargin
             .replace("\n", " ")).as("embedding"))
         .repartition(32)
-        .write.mode("overwrite").parquet(fixPath)
-    }
-    val corpus = spark.read.parquet(fixPath)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val n = corpus.count()
 
     // ---- tower geometry at the family's scaled-k rule

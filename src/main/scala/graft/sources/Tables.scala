@@ -167,10 +167,7 @@ object Tables {
   private[sources] def relation(spark: SparkSession, dir: String, name: String): DataFrame =
     relationAt(spark, s"$dir/$name.parquet")
 
-  /** Same memoization for ANY immutable parquet path — staged artifacts
-    * read this through so their per-query footer/listing cost is also
-    * paid once per (session, content version). The mtime key invalidates
-    * when Stage.ensure rebuilds the artifact. */
+  /** Same memoization for any parquet path, keyed on its mtime. */
   private[graft] def relationAt(spark: SparkSession, path: String): DataFrame = {
     val m = mtime(path)
     // unreadable path: no caching, surface the reader's own error

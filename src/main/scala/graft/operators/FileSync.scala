@@ -1,13 +1,15 @@
 package graft.operators
 
+import java.io.FileNotFoundException
+
 import scala.jdk.CollectionConverters._
 
 import org.apache.commons.codec.digest.DigestUtils
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path}
+import org.apache.spark.graftbridge.FileListingBridge
 import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.unsafe.types.UTF8String
@@ -49,8 +51,9 @@ final case class DirManifest(root: String, files: Seq[ManifestEntry]) {
   * into added/removed/changed sets (`sync.py:142 sync_dirs`,
   * `:113 get_checksum_pairs_set`).
   *
-  * [[manifest]] is the one hashing pass over a directory: Spark's own file
-  * listing, then one streaming sha1 per file that also reads a companion's
+  * [[manifest]] is the one hashing pass over a directory: one recursive
+  * `FileSystem.listStatus` walk that skips the names Spark's file index
+  * skips, then one streaming sha1 per file that also reads a companion's
   * declared value. A directory whose bytes fit one scan split
   * (`spark.sql.files.maxPartitionBytes`) is hashed on the driver, the way
   * the reference hashes on one node — a Spark job would cost more to
@@ -64,25 +67,57 @@ final case class DirManifest(root: String, files: Seq[ManifestEntry]) {
 object FileSync {
 
   /** Every listed file under `root`, hashed and sorted: the directory's
-    * one hashing pass. It lists what a `binaryFile` read with
-    * `recursiveFileLookup` yields rows for: `_`/`.`-prefixed names such as
-    * `_SUCCESS` and `.crc` are skipped, recursively, and so are empty
-    * files. A missing root throws PATH_NOT_FOUND like that read: an empty
-    * manifest would tell [[sync]] to delete every file of the target. */
+    * one hashing pass. It lists what Spark's file index lists with
+    * `recursiveFileLookup`: `_`/`.`-prefixed names such as `_SUCCESS` and
+    * `.crc` are skipped, recursively ([[walk]]). Zero-length files are
+    * listed and hashed like any other. A missing root throws PATH_NOT_FOUND
+    * like a `binaryFile` read: an empty manifest would tell [[sync]] to
+    * delete every file of the target. */
   def manifest(spark: SparkSession, root: String): DirManifest = {
-    val conf = spark.sparkContext.hadoopConfiguration
+    val (fs, qualified, top) = listRoot(spark, root)
+    hashed(spark, root, fs, qualified,
+      top.getOrElse(throw new AnalysisException("PATH_NOT_FOUND", Map("path" -> qualified.toString))))
+  }
+
+  /** [[manifest]] of `root` while it is a directory, else None (a missing
+    * root or a file), from the same one listing: no separate existence or
+    * status call. */
+  def manifestIfDir(spark: SparkSession, root: String): Option[DirManifest] = {
+    val (fs, qualified, top) = listRoot(spark, root)
+    // the listing of a file is that file; a directory's entries are its children
+    top.filterNot(_.exists(_.getPath == qualified)).map(hashed(spark, root, fs, qualified, _))
+  }
+
+  /** `root`'s file system, its qualified path and its `listStatus` (None
+    * when it does not exist). */
+  private def listRoot(spark: SparkSession, root: String): (FileSystem, Path, Option[Array[FileStatus]]) = {
     val path = new Path(root)
-    val fs = path.getFileSystem(conf)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val qualified = fs.makeQualified(path)
-    if (!fs.exists(qualified)) throw new AnalysisException("PATH_NOT_FOUND", Map("path" -> qualified.toString))
-    val listed = new InMemoryFileIndex(spark, Seq(qualified), Map("recursiveFileLookup" -> "true"), None)
-      .allFiles().filter(_.getLen > 0)
+    (fs, qualified, try Some(fs.listStatus(qualified)) catch { case _: FileNotFoundException => None })
+  }
+
+  /** The files among `statuses`, and under each directory among them,
+    * recursively: one `listStatus` per directory. A name Spark's file index
+    * skips (`HadoopFSUtils.shouldFilterOutPathName`) is skipped at every
+    * depth, file or directory. `listStatus` statuses, not `listFiles`'
+    * `LocatedFileStatus`, which loads owner and permission per file (a
+    * forked process on the local file system without libhadoop); only the
+    * path, kind and length are read. */
+  private def walk(fs: FileSystem, statuses: Array[FileStatus]): Seq[FileStatus] =
+    statuses.toSeq.filterNot(s => FileListingBridge.shouldFilterOutPathName(s.getPath.getName))
+      .flatMap(s => if (s.isDirectory) walk(fs, fs.listStatus(s.getPath)) else Seq(s))
+
+  /** The manifest of the files [[walk]] finds from `top`, `root`'s listing. */
+  private def hashed(spark: SparkSession, root: String, fs: FileSystem, qualified: Path,
+                     top: Array[FileStatus]): DirManifest = {
+    val listed = walk(fs, top)
     val split = JavaUtils.byteStringAsBytes(spark.conf.get(SQLConf.FILES_MAX_PARTITION_BYTES.key))
     val total = listed.map(_.getLen).sum
-    val hashed =
+    val hashes =
       if (total <= split) listed.map(f => hash(fs, f.getPath))
       else {
-        val entries = conf.iterator.asScala.map(e => e.getKey -> e.getValue).toMap
+        val entries = spark.sparkContext.hadoopConfiguration.iterator.asScala.map(e => e.getKey -> e.getValue).toMap
         val slices = math.min(listed.size.toLong, total / split + 1).toInt
         spark.sparkContext.parallelize(listed.map(_.getPath.toString), slices)
           .mapPartitions { paths =>
@@ -92,7 +127,7 @@ object FileSync {
           }.collect().toSeq
       }
     val base = s"${qualified.toUri.getPath.stripSuffix("/")}/"
-    DirManifest(root, listed.zip(hashed).map { case (f, (sha, declared)) =>
+    DirManifest(root, listed.zip(hashes).map { case (f, (sha, declared)) =>
       ManifestEntry(f.getPath.toUri.getPath.stripPrefix(base), sha, declared, f.getLen)
     }.sortBy(e => UTF8String.fromString(e.relPath)))
   }

@@ -52,12 +52,12 @@ final case class PipelineConfig(
   * the affected cone — Luigi's `BaseTask.complete` semantics.
   *
   * Hashing: each directory state is hashed once ([[FileSync.manifest]]:
-  * Spark's file listing, sha1 on the driver while the bytes fit one scan
-  * split, else an RDD map). The drop zone is hashed by the Dag's probe, and
-  * sync verifies and diffs that same manifest; a task's output dir is
-  * hashed once after its write, and that manifest serves its lineage
-  * commit and its done-signal. A no-op run is the one probe and launches
-  * no Spark job.
+  * one recursive `FileSystem.listStatus` walk, sha1 on the driver while the
+  * bytes fit one scan split, else an RDD map). The drop zone is hashed by
+  * the Dag's probe, and sync verifies and diffs that same manifest; a
+  * task's output dir is hashed once after its write, and that manifest
+  * serves its lineage commit and its done-signal. A no-op run is the one
+  * probe and launches no Spark job.
   *
   * Job budget: each task runs only the Spark jobs its outputs need, and
   * its independent jobs run together. Lineage commits launch none, and a
@@ -84,10 +84,8 @@ object GraftPipeline {
 
   /** The reference's `calc_done_signal_content`: sorted `file checksum`
     * lines of `dir`'s manifest ("" while `dir` is no directory yet). */
-  def doneSignal(spark: SparkSession, dir: String): String = {
-    val (fs, path) = (fsOf(spark, dir), new HPath(dir))
-    if (fs.exists(path) && fs.getFileStatus(path).isDirectory) FileSync.manifest(spark, dir).signal else ""
-  }
+  def doneSignal(spark: SparkSession, dir: String): String =
+    FileSync.manifestIfDir(spark, dir).fold("")(_.signal)
 
   /** The Hadoop file system of `dir`: pipeline dirs may be URIs. */
   private def fsOf(spark: SparkSession, dir: String): FileSystem =

@@ -99,7 +99,7 @@ object Lineage {
       val fs = fsOf(spark, obj)
       // a fresh object dir is known empty; one left by an earlier commit
       // of the same content is diffed like any other target
-      val stored = if (fs.exists(obj)) FileSync.manifest(spark, obj.toString) else DirManifest(obj.toString, Nil)
+      val stored = FileSync.manifestIfDir(spark, obj.toString).getOrElse(DirManifest(obj.toString, Nil))
       fs.mkdirs(obj)
       val delta = FileSync.sync(spark, data, stored)
       val seq = head.fold(0L)(_._1 + 1)

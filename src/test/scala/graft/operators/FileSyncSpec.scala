@@ -5,6 +5,9 @@ import java.nio.file.{Files, Path}
 import java.security.MessageDigest
 
 import graft.TestSpark
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.spark.sql.AnalysisException
+import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
 import org.scalatest.funsuite.AnyFunSuite
 
 class FileSyncSpec extends AnyFunSuite {
@@ -103,5 +106,43 @@ class FileSyncSpec extends AnyFunSuite {
     val got = FileSync.actualChecksums(spark, dir.toString)
       .as[(String, String)].collect().toMap
     assert(got == Map("f.txt" -> sha1hex("hello world")))
+  }
+
+  test("the manifest lists what Spark's file index lists, plus zero-length files") {
+    val root = Files.createTempDirectory("graft-walk")
+    val named = Seq("plain.csv", "_metadata", "_common_metadata", "a=b/part.csv", "_p=1/q.csv",
+      "é/Ａ.csv", "😀.csv", "sub dir/x y.csv", "deep/er/est.csv",
+      // skipped by name, at any depth
+      ".dot", ".hidden/x.csv", "_tmp/y.csv", "x._COPYING_", "deep/_tmp/z.csv", "deep/.crcish")
+    named.foreach(n => put(root, n, s"payload $n", companion = None))
+    val empty = Seq("empty.csv", "a=b/empty.csv", "_SUCCESS", "deep/_SUCCESS", ".hidden/empty")
+    empty.foreach(n => put(root, n, "", companion = None))
+
+    val indexed = new InMemoryFileIndex(spark, Seq(new HPath(root.toUri)), Map("recursiveFileLookup" -> "true"), None)
+      .allFiles().map(_.getPath.toUri.getPath.stripPrefix(s"$root/")).toSet
+    val m = FileSync.manifest(spark, root.toString)
+    val listed = m.files.map(_.relPath)
+    assert(listed.toSet == indexed ++ Set("empty.csv", "a=b/empty.csv"))
+    assert(listed.toSet == Set("plain.csv", "_metadata", "_common_metadata", "a=b/part.csv", "_p=1/q.csv",
+      "é/Ａ.csv", "😀.csv", "sub dir/x y.csv", "deep/er/est.csv", "empty.csv", "a=b/empty.csv"))
+    assert(listed.size == listed.toSet.size)
+    assert(m.files.filter(_.nBytes == 0).map(_.sha1).toSet == Set(sha1hex("")))
+    assert(FileSync.manifest(spark, s"file://$root").files == m.files)
+  }
+
+  test("manifestIfDir: a directory's manifest, None for a file or a missing path") {
+    val root = Files.createTempDirectory("graft-ifdir")
+    put(root, "only.csv", "one file", companion = None)
+    val file = root.resolve("only.csv").toString
+    val missing = root.resolve("missing").toString
+    Seq("", "file://").foreach { scheme =>
+      assert(FileSync.manifestIfDir(spark, s"$scheme$root") == Some(FileSync.manifest(spark, s"$scheme$root")))
+      assert(FileSync.manifestIfDir(spark, s"$scheme$file").isEmpty)
+      assert(FileSync.manifestIfDir(spark, s"$scheme$missing").isEmpty)
+      val ex = intercept[AnalysisException](FileSync.manifest(spark, s"$scheme$missing"))
+      assert(ex.getCondition == "PATH_NOT_FOUND", ex.getMessage)
+    }
+    val emptyDir = Files.createDirectory(root.resolve("sub")).toString
+    assert(FileSync.manifestIfDir(spark, emptyDir).map(_.files) == Some(Nil))
   }
 }

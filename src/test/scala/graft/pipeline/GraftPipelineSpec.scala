@@ -8,7 +8,8 @@ import graft.TestSpark
 import graft.operators.EavMelt
 import graft.sources.{ColSpec, DelimitedConfig}
 import org.apache.spark.graftbridge.ListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end: the reference's sync → sources2csr → csr2transmart → load
@@ -157,15 +158,20 @@ class GraftPipelineSpec extends AnyFunSuite {
   /** Spark jobs launched by `body`: those tagged through a local
     * property, which Spark copies onto every job the thread starts
     * (broadcast and subquery threads included, and the cache writes that
-    * carry the caller's properties), and every job started meanwhile. */
-  private def jobsOf(body: => Unit): (Int, Int) = {
+    * carry the caller's properties), and every job started meanwhile; and
+    * the SQL executions started meanwhile. */
+  private def jobsOf(body: => Unit): (Int, Int, Int) = {
     val sc = spark.sparkContext
     val (key, tag) = ("graft.test.jobCount", System.nanoTime().toString)
-    val (tagged, all) = (new java.util.concurrent.atomic.AtomicInteger, new java.util.concurrent.atomic.AtomicInteger)
+    val Seq(tagged, all, sql) = Seq.fill(3)(new java.util.concurrent.atomic.AtomicInteger)
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         all.incrementAndGet()
         if (Option(e.properties).exists(_.getProperty(key) == tag)) tagged.incrementAndGet()
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => sql.incrementAndGet()
+        case _ =>
       }
     }
     ListenerBridge.flush(sc) // earlier jobs' events are not this body's
@@ -177,7 +183,7 @@ class GraftPipelineSpec extends AnyFunSuite {
       ListenerBridge.flush(sc)
       sc.removeSparkListener(l)
     }
-    (tagged.get, all.get)
+    (tagged.get, all.get, sql.get)
   }
 
   // Spark jobs of a cold run of this spec's pipeline (lineage and cache
@@ -186,16 +192,27 @@ class GraftPipelineSpec extends AnyFunSuite {
   // Spark exceeds it
   private val ColdJobs = 12
 
-  test("job-count guard: a no-op run launches no Spark job; a cold run stays at its count") {
+  test("job-count guard: a no-op run starts no SQL execution and no job; a cold run stays at its count") {
     val (root, cfg) = mkCfg()
     seedDropZone(root)
-    val (cold, coldAll) = jobsOf(GraftPipeline.run(spark, cfg))
+    val (cold, coldAll, _) = jobsOf(GraftPipeline.run(spark, cfg))
     assert(cold <= ColdJobs, s"cold run launched $cold Spark jobs, recorded $ColdJobs")
     assert(cold == coldAll, s"${coldAll - cold} of the cold run's $coldAll jobs lost the caller's local properties")
     var report: DagReport = null
-    val (noop, _) = jobsOf { report = GraftPipeline.run(spark, cfg) }
+    val (noop, _, noopSql) = jobsOf { report = GraftPipeline.run(spark, cfg) }
     assert(report.ran.isEmpty)
     assert(noop == 0, s"no-op run launched $noop Spark jobs, expected none: the probe hashes on the driver")
+    assert(noopSql == 0, s"no-op run started $noopSql SQL executions, expected none")
+  }
+
+  test("an empty data file with its correct companion is synced into input_data") {
+    val (root, cfg) = mkCfg()
+    seedDropZone(root)
+    drop(root.resolve("drop"), "notes.txt", "")
+    assert(GraftPipeline.run(spark, cfg).ran.head == "sync")
+    val synced = root.resolve("input_data/notes.txt")
+    assert(Files.isRegularFile(synced) && Files.size(synced) == 0)
+    assert(GraftPipeline.doneSignal(spark, cfg.inputDataDir).split("\n").contains(s"notes.txt ${sha1hex("")}"))
   }
 
   test("load signs csr2transmart's manifest; with csr2transmart skipped it rescans to the same signal") {

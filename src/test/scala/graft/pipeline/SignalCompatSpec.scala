@@ -98,7 +98,7 @@ class SignalCompatSpec extends AnyFunSuite {
     assert(split == FileSync.manifest(spark, root.toString))
   }
 
-  test("companion values and empty files parse as the binaryFile expression does") {
+  test("companion values parse as the binaryFile expression does; empty files are listed and hashed") {
     val root = Files.createTempDirectory("graft-signal-companion")
     val hex = sha1hex("payload\n")
     val companions = Seq(
@@ -114,9 +114,13 @@ class SignalCompatSpec extends AnyFunSuite {
         when(col("path").endsWith(".sha1"), split(trim(col("content").cast("string")), "\\s+").getItem(0)))
       .collect().map(r => ManifestEntry(r.getString(0), r.getString(1), r.getString(3), r.getLong(2))).toSet
     val m = FileSync.manifest(spark, root.toString)
-    assert(m.files.toSet == expected)
-    // a.csv and every companion but the empty one: empty files are not listed
-    assert(m.files.size == companions.size)
+    // the scan yields no row for a zero-length file; the manifest lists it
+    // with the sha1 of no bytes, and an empty companion declares ""
+    val emptySha = sha1hex("")
+    val empties = Set(ManifestEntry("empty.csv", emptySha, null, 0L),
+      ManifestEntry(s"c${companions.indexOf("")}.sha1", emptySha, "", 0L))
+    assert(m.files.toSet == expected ++ empties)
+    assert(m.files.size == companions.size + 2) // a.csv, every companion, empty.csv
     assert(m.files.find(_.relPath == "c0.sha1").get.declared == "") // a leading newline is not trimmed
   }
 }

@@ -92,8 +92,8 @@ object AnalyticsQueries {
   def qualityFilter(spark: SparkSession, dir: String): DataFrame = {
     implicit val s: SparkSession = spark
     // single scoring definition shared with CorpusPipeline's quality
-    // gate (DocStreams.scoredWith) so the query and the pipeline cannot drift
-    graft.streaming.DocStreams.scored(Tables(dir).documents)
+    // gate (CorpusPolicy.scoredWith) so the query and the pipeline cannot drift
+    graft.pipeline.CorpusPolicy.scored(Tables(dir).documents)
   }
 
   private val qualityFilterSql =

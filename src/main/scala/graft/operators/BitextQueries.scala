@@ -135,7 +135,7 @@ object BitextQueries {
     margined(best, fwdSum, bwdOf(cand))
   }
 
-  /** The archive state the streaming twin serves against: the en towers
+  /** The archive state the incremental form serves against: the en towers
     * and the FROZEN backward neighborhood sums from the full corpus
     * build. */
   def archiveState(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
@@ -148,7 +148,7 @@ object BitextQueries {
     (tgt, bwdOf(candOf(probedOf(tagged.where(col("lang") =!= "en"), cents), tgt)))
   }
 
-  /** §8p(dc) — the streaming serving twin (`foreachBatch` body): arriving
+  /** §8p(dc) — the incremental serving form: arriving
     * non-English documents mined against the FROZEN archive — en towers
     * and archived backward sums — exactly the index-served economics of
     * `text_hybrid_served`: per-batch cost follows the batch and the

@@ -865,8 +865,8 @@ object CorpusQueries {
   }
 
   /** The chunker as a frame transform: every operation is stateless
-    * row-local (tokenize, explode window starts, slice), so the identical
-    * plan is streaming-legal and runs unchanged on a document stream. */
+    * row-local (tokenize, explode window starts, slice), so any split of
+    * the documents chunks to the same rows. */
   def chunksOf(docs: DataFrame): DataFrame = {
     val d = lit(WinStride)
     val toks = docs
@@ -934,9 +934,7 @@ object CorpusQueries {
     * all array expressions over the per-row token array — the first
     * version exploded the token stream through a per-doc window (two
     * shuffles); this one never leaves the row, which is both the 100 TB
-    * plan you want (chunking is embarrassingly parallel) and what makes
-    * the operator streaming-legal (it runs unchanged on a document
-    * stream). */
+    * plan you want (chunking is embarrassingly parallel). */
   def cdcChunksOf(docs: DataFrame): DataFrame = {
     VectorExpressions.register(docs.sparkSession)
     docs

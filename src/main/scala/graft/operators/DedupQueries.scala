@@ -29,8 +29,7 @@ object DedupQueries {
   private val R = 3
   private val K = B * R
 
-  /** Near-dup verification threshold on shingle-set Jaccard (shared with
-    * the streaming twin in [[graft.streaming.DocStreams]]). */
+  /** Near-dup verification threshold on shingle-set Jaccard. */
   private[graft] val JaccardThreshold = 0.5
 
   /** Simhash bit width and hamming acceptance radius. 60 bits = 15 md5
@@ -102,7 +101,7 @@ object DedupQueries {
     * r13: reads the staged signature artifact ([[stagedSigs]]) — the
     * corpus md5+mix pass is paid once per corpus state; band derivation
     * stays narrow (map-side). [[bandExplode]] remains the from-scratch
-    * pipeline for arbitrary/streaming frames. */
+    * pipeline for arbitrary frames. */
   private def bandBuckets(t: Tables)(implicit s: SparkSession): DataFrame =
     bandsFromSigs(stagedSigs(s, t.dir))
 
@@ -116,12 +115,9 @@ object DedupQueries {
     .withColumn("m", array((0 until K).map(i =>
       expr(s"array_min(transform(hs, h -> (${mixA(i)}L * h + ${mixB(i)}L) % ${P}L))")): _*))
 
-  /** The band-signature pipeline over any frame with (doc_id, s) — shared
-    * by the batch operators and the streaming incremental-dedup twin
-    * ([[graft.streaming.DocStreams.incrementalDedup]]): every expression
-    * is row-local (transform/md5/explode, no state), so the SAME columns
-    * run on batch and streaming frames. Extra input columns are carried
-    * through the explode untouched. */
+  /** The band-signature pipeline over any frame with (doc_id, s): every
+    * expression is row-local (transform/md5/explode). Extra input columns
+    * are carried through the explode untouched. */
   private[graft] def bandExplode(sh: DataFrame): DataFrame =
     bandsFromSigs(minhashSigs(sh)).drop("hx", "hs", "s")
 
@@ -1556,70 +1552,6 @@ object DedupQueries {
       .where(col("jaccard") >= JaccardThreshold)
   }
 
-  /** §8c(l) — persist the incremental-dedup index manifest: band
-    * signatures and shingle sets of the already-ingested side (md5-bucket
-    * < 80) as two parquet tables. Later ingest cycles — batch or the
-    * streaming twin ([[graft.streaming.DocStreams.incrementalDedup]]) —
-    * check new documents against these tables without re-hashing the
-    * corpus: at 100 TB the index is hashed ONCE, and each cycle's cost is
-    * proportional to the new batch, not the archive. */
-  def persistDedupIndex(spark: SparkSession, dir: String, indexPath: String): Unit = {
-    VectorExpressions.register(spark)
-    implicit val s: SparkSession = spark
-    val bucket = graft.plans.VectorExpressions.hexPrefix(md5(col("doc_id").cast("string")), 8) % 100
-    val sh = Tables(dir).documents.where(bucket < 80)
-      .withColumn("w", words(col("text")))
-      .withColumn("s", shingles("w"))
-      .select(col("doc_id"), col("s"))
-    bandExplode(sh).write.mode("overwrite").parquet(s"$indexPath/signatures")
-    sh.select(col("doc_id"), array_distinct(col("s")).as("ss"))
-      .write.mode("overwrite").parquet(s"$indexPath/shingles")
-  }
-
-  /** §8g(ab) — the bucketed form of the index manifest: signatures
-    * bucketed+sorted on the candidate join's exact key (band_id,
-    * band_hash), shingle sets on doc_id. Every later ingest cycle then
-    * shuffles ONLY the new batch — the archive-sized index side reads
-    * straight from its buckets (spec asserts no Exchange above either
-    * index scan). Bucketing both sides on the join key co-locates them
-    * without a shuffle; in the dedup family the asymmetry is extreme:
-    * the index is the 100 TB archive, the batch is a day. */
-  def persistDedupIndexBucketed(spark: SparkSession, dir: String,
-                                path: String, buckets: Int = 8,
-                                prefix: String = "dedup_idx"): Unit = {
-    VectorExpressions.register(spark)
-    implicit val s: SparkSession = spark
-    val bucket = graft.plans.VectorExpressions.hexPrefix(md5(col("doc_id").cast("string")), 8) % 100
-    val sh = Tables(dir).documents.where(bucket < 80)
-      .withColumn("w", words(col("text")))
-      .withColumn("s", shingles("w"))
-      .select(col("doc_id"), col("s"))
-    spark.sql(s"DROP TABLE IF EXISTS ${prefix}_signatures")
-    bandExplode(sh).select("doc_id", "band_id", "band_hash")
-      .write.format("parquet")
-      .bucketBy(buckets, "band_id", "band_hash").sortBy("band_id", "band_hash")
-      .option("path", s"$path/signatures").saveAsTable(s"${prefix}_signatures")
-    spark.sql(s"DROP TABLE IF EXISTS ${prefix}_shingles")
-    sh.select(col("doc_id"), array_distinct(col("s")).as("ss"))
-      .write.format("parquet")
-      .bucketBy(buckets, "doc_id").sortBy("doc_id")
-      .option("path", s"$path/shingles").saveAsTable(s"${prefix}_shingles")
-  }
-
-  /** Incremental dedup served from the bucketed catalog index: the new
-    * batch (md5 bucket ≥ 80) checks against the landed archive without
-    * the archive moving. Same code path as the streaming twin — the
-    * index frames just come from bucketed tables. */
-  def incrementalDedupFromCatalog(spark: SparkSession, dir: String,
-                                  prefix: String = "dedup_idx"): DataFrame = {
-    VectorExpressions.register(spark)
-    implicit val s: SparkSession = spark
-    val bucket = graft.plans.VectorExpressions.hexPrefix(md5(col("doc_id").cast("string")), 8) % 100
-    val batch = Tables(dir).documents.where(bucket >= 80)
-    graft.streaming.DocStreams.incrementalDedup(batch,
-      spark.table(s"${prefix}_signatures"), spark.table(s"${prefix}_shingles"))
-  }
-
   private val incrementalDedupSql =
     s"""WITH $minhashCtes,
        |bk AS (SELECT doc_id, ${graft.functions.DuckSql.docBucket} AS bucket FROM documents),
@@ -1998,12 +1930,11 @@ object DedupQueries {
     * kept here, unlike the batch query's df ≥ 2: the arriving document
     * IS the second occurrence; the df cap is still the whale guard).
     * Candidate and verify cost are proportional to the batch, never the
-    * archive; archive-internal pairs never form. The scoring body is
-    * [[graft.streaming.DocStreams.incrementalContainment]] — shared
-    * verbatim by the foreachBatch streaming twin and the bucketed-catalog
-    * serving path ([[containmentFromCatalog]]), so all three produce the
-    * identical row set (per-pair verdicts depend only on the pair's two
-    * documents — any micro-batch split replays bit-equal). */
+    * archive; archive-internal pairs never form: candidates come from the
+    * batch's shingles hitting the rare-occurrence list, and the exact
+    * |A∩B| / min verify runs on those pairs only. Per-pair verdicts depend
+    * only on the pair's two documents, so any split of the batch scores
+    * to the same row set. */
   def containmentIncremental(spark: SparkSession, dir: String): DataFrame = {
     graft.plans.VectorExpressions.register(spark)
     implicit val s: SparkSession = spark
@@ -2027,57 +1958,26 @@ object DedupQueries {
       .where(col("df") >= 1 && col("df") <= RareDfMax)
       .select("shingle")
     val rareOcc = archSh.join(rare, Seq("shingle"))
-    val batch = docs.where(!col("in_index")).select("doc_id", "text")
-    graft.streaming.DocStreams.incrementalContainment(batch, rareOcc, archSets)
-  }
-
-  /** §8v(dw) — the archive half persisted as BUCKETED catalog tables (the
-    * [[persistDedupIndexBucketed]] economics for the containment family):
-    * the rare-shingle occurrence list bucketed+sorted on the candidate
-    * join's key (shingle), the archive shingle sets on doc_id. Every
-    * later cycle — [[containmentFromCatalog]] or the foreachBatch twin —
-    * shuffles only the arriving batch; the archive-sized index reads
-    * straight from its buckets. */
-  def persistContainmentIndexBucketed(spark: SparkSession, dir: String,
-                                      path: String, buckets: Int = 8,
-                                      prefix: String = "containment_idx"): Unit = {
-    graft.plans.VectorExpressions.register(spark)
-    implicit val s: SparkSession = spark
-    val bucket = graft.plans.VectorExpressions.hexPrefix(md5(col("doc_id").cast("string")), 8) % 100
-    val arch = Tables(dir).documents.where(bucket < 80)
-    val archSh = arch
+    val bsh = docs.where(!col("in_index"))
       .withColumn("w", words(col("text")))
       .withColumn("s", shingles("w"))
-      .select(col("doc_id"), explode_outer(array_distinct(col("s"))).as("shingle"))
-      .where(col("shingle").isNotNull)
-    val rare = archSh.groupBy("shingle").agg(count(lit(1)).as("df"))
-      .where(col("df") >= 1 && col("df") <= RareDfMax)
-      .select("shingle")
-    spark.sql(s"DROP TABLE IF EXISTS ${prefix}_rare")
-    archSh.join(rare, Seq("shingle")).select("shingle", "doc_id")
-      .write.format("parquet")
-      .bucketBy(buckets, "shingle").sortBy("shingle")
-      .option("path", s"$path/rare").saveAsTable(s"${prefix}_rare")
-    spark.sql(s"DROP TABLE IF EXISTS ${prefix}_sets")
-    arch.withColumn("w", words(col("text")))
-      .withColumn("s", shingles("w"))
       .select(col("doc_id"), array_distinct(col("s")).as("ss"))
-      .write.format("parquet")
-      .bucketBy(buckets, "doc_id").sortBy("doc_id")
-      .option("path", s"$path/sets").saveAsTable(s"${prefix}_sets")
-  }
-
-  /** Incremental containment served from the bucketed catalog — same
-    * scorer as the registered query and the streaming twin; only the
-    * index frames' provenance differs. */
-  def containmentFromCatalog(spark: SparkSession, dir: String,
-                             prefix: String = "containment_idx"): DataFrame = {
-    graft.plans.VectorExpressions.register(spark)
-    implicit val s: SparkSession = spark
-    val bucket = graft.plans.VectorExpressions.hexPrefix(md5(col("doc_id").cast("string")), 8) % 100
-    val batch = Tables(dir).documents.where(bucket >= 80).select(col("doc_id"), col("text"))
-    graft.streaming.DocStreams.incrementalContainment(batch,
-      spark.table(s"${prefix}_rare"), spark.table(s"${prefix}_sets"))
+    val bocc = bsh
+      .select(col("doc_id").as("batch_doc"), explode_outer(col("ss")).as("shingle"))
+      .where(col("shingle").isNotNull)
+    val cand = bocc
+      .join(rareOcc.select(col("shingle"), col("doc_id").as("index_doc")), Seq("shingle"))
+      .select("batch_doc", "index_doc").dropDuplicates("batch_doc", "index_doc")
+    cand
+      .join(bsh.select(col("doc_id").as("batch_doc"), col("ss").as("ss_a")), Seq("batch_doc"))
+      .join(archSets.select(col("doc_id").as("index_doc"), col("ss").as("ss_b")), Seq("index_doc"))
+      .select(col("batch_doc"), col("index_doc"),
+        size(col("ss_a")).cast("long").as("n_batch"),
+        size(col("ss_b")).cast("long").as("n_index"),
+        size(array_intersect(col("ss_a"), col("ss_b"))).cast("long").as("n_inter"))
+      .withColumn("containment_pm", expr("n_inter * 1000 div least(n_batch, n_index)"))
+      .withColumn("jaccard_pm", expr("n_inter * 1000 div (n_batch + n_index - n_inter)"))
+      .where(col("containment_pm") >= ContainmentMinPm)
   }
 
   private def containmentIncrementalSql =

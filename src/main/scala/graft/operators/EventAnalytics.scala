@@ -1685,15 +1685,23 @@ object EventAnalytics {
       |  COUNT(*) AS n_conversions
       |FROM c GROUP BY 1 ORDER BY 1""".stripMargin
 
-  /** Batch twin of the stream-stream interval join
-    * ([[graft.streaming.EventStreams.precedingTouches]]): purchases ⋈
-    * same-user touches in the strict hour before. One shuffle on
-    * user_id both sides; the range predicate rides the join. */
+  /** Interval join: every purchase pairs with the SAME user's touch
+    * events in the hour strictly before it. One shuffle on user_id both
+    * sides; the range predicate rides the join. */
   def precedingTouches(spark: SparkSession, dir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    graft.streaming.EventStreams.precedingTouches(
-      Tables(dir).events.select(col("user_id"), col("ts"), col("event_id"),
-        col("event_type"), col("value")))
+    val events = Tables(dir).events
+    val touches = events
+      .where(col("event_type") =!= "purchase")
+      .select(col("user_id").as("t_user"), col("ts").as("t_ts"),
+        col("event_id").as("touch_id"), col("event_type").as("touch_type"))
+    val purchases = events
+      .where(col("event_type") === "purchase")
+      .select(col("user_id"), col("ts").as("p_ts"), col("event_id").as("purchase_id"))
+    purchases.join(touches,
+      expr("user_id = t_user AND t_ts >= p_ts - INTERVAL 1 HOUR AND t_ts < p_ts"))
+      .select(col("user_id"), col("purchase_id"), col("p_ts"),
+        col("touch_id"), col("touch_type"), col("t_ts"))
   }
 
   private val precedingTouchesSql =
@@ -1707,34 +1715,82 @@ object EventAnalytics {
       |  AND t.t_ts >= p.p_ts - INTERVAL 1 HOUR AND t.t_ts < p.p_ts
       |ORDER BY p.user_id, p.purchase_id, t.touch_id""".stripMargin
 
-  /** §8f(x) batch twin — the drift alarm on the SAME code path the live
-    * monitor runs ([[graft.streaming.EventStreams.driftAlarm]]): hourly
-    * transition shares vs the corpus-wide baseline matrix, alarm rows
-    * where |drift| ≥ 20 points. The pair log is the lead-window stream
-    * the stateful miner emits (no `(end)` sentinel — a live stream never
-    * sees closures); the baseline is [[transitions]] minus its sentinel
-    * rows. Pinning this batch run to the DuckDB oracle certifies the
-    * streaming plan's arithmetic row-for-row. */
+  /** §8f(x) — the drift alarm: hourly transition shares vs the
+    * corpus-wide baseline matrix, alarm rows where |drift| ≥ 20 points.
+    * The pair log has no `(end)` sentinel; the baseline is
+    * [[transitions]] minus its sentinel rows. */
   def driftAlarms(spark: SparkSession, dir: String): DataFrame = {
     implicit val s: SparkSession = spark
     // r14 (opt, §2.4): the baseline matrix re-ran the identical per-user
     // lead() window a second time ([[transitions]] — two full events
-    // sorts per run). [[graft.streaming.EventStreams.driftAlarm]] drops
-    // the '(end)' sentinel rows and recomputes baseline_pct internally
-    // from n_transitions, so the non-sentinel pair aggregate IS the
-    // baseline it sees: one window pass, persisted for both consumers
-    // (vocab/base and the windowed counts). Row-for-row identical input
-    // to driftAlarm by construction; oracle unchanged.
+    // sorts per run). [[driftAlarm]] drops the '(end)' sentinel rows and
+    // recomputes baseline_pct internally from n_transitions, so the
+    // non-sentinel pair aggregate IS the baseline it sees: one window
+    // pass, persisted for both consumers (vocab/base and the windowed
+    // counts). Row-for-row identical input to driftAlarm by construction;
+    // oracle unchanged.
     val pairs = Cached.track(transitionPairs(spark, dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val baseline = pairs.groupBy(col("from_type"), col("to_type"))
       .agg(count(lit(1)).as("n_transitions"))
-    graft.streaming.EventStreams.driftAlarm(pairs, baseline, alarmPct = 20.0)
+    driftAlarm(pairs, baseline)
+  }
+
+  /** Alarm rows of a (from_type, to_type, ts) pair log against a
+    * (from_type, to_type, n_transitions) baseline, whose `(end)` sentinel
+    * rows are excluded. Everything folds into ONE aggregation keyed by
+    * (hour window, from_type): the baseline's to_type vocabulary
+    * (bounded — |event types| rows, collected once at plan build) becomes
+    * |vocab| conditional counters inside the group, so per-group state is
+    * O(|vocab|) longs — no collect_list multiset, no whale-group risk
+    * when one from_type dominates an hour. The counters then melt into
+    * per-transition rows, shares are a projection (n·100/total), the
+    * baseline share arrives by broadcast join, and rows with |drift|
+    * below 20 points are dropped. Transitions into a to_type the baseline
+    * has never seen surface as one `(novel)` row per group (count =
+    * total − Σ vocab counters, baseline share 0) — a brand-new event
+    * type IS drift and must not vanish from the monitor. */
+  private[operators] def driftAlarm(transitions: DataFrame, baseline: DataFrame): DataFrame = {
+    val baseRows = baseline.where(col("to_type") =!= "(end)")
+    val vocab: Seq[String] = baseRows.select(col("to_type")).distinct()
+      .orderBy(col("to_type"))
+      .collect().map(_.getString(0)).toSeq
+    val base = baseRows
+      .withColumn("baseline_pct",
+        round(col("n_transitions") * lit(100.0) /
+          sum(col("n_transitions")).over(Window.partitionBy(col("from_type"))), 4))
+      .select(col("from_type"), col("to_type"), col("baseline_pct"))
+
+    val counters = vocab.zipWithIndex.map { case (v, i) =>
+      sum(when(col("to_type") === v, 1L).otherwise(0L)).as(s"n_$i")
+    } :+ count(lit(1)).as("total")
+    val counts = transitions
+      .groupBy(window(col("ts"), "1 hour").as("w"), col("from_type"))
+      .agg(counters.head, counters.tail: _*)
+
+    val knownN = vocab.indices.map(i => col(s"n_$i")).reduceOption(_ + _).getOrElse(lit(0L))
+    val melted = counts
+      .select(col("w.start").as("bucket"), col("from_type"), col("total"),
+        explode(array(
+          vocab.zipWithIndex.map { case (v, i) =>
+            struct(lit(v).as("to_type"), col(s"n_$i").as("n"))
+          } :+ struct(lit("(novel)").as("to_type"), (col("total") - knownN).as("n")): _*
+        )).as("e"))
+      .select(col("bucket"), col("from_type"), col("e.to_type").as("to_type"),
+        col("e.n").as("n"), col("total"))
+      .where(col("n") > 0)
+      .withColumn("window_pct", round(col("n") * lit(100.0) / col("total"), 4))
+
+    melted.join(broadcast(base), Seq("from_type", "to_type"), "left")
+      .withColumn("drift_pct",
+        round(col("window_pct") - coalesce(col("baseline_pct"), lit(0.0)), 4))
+      .where(abs(col("drift_pct")) >= 20.0)
+      .select(col("bucket"), col("from_type"), col("to_type"),
+        col("n"), col("window_pct"), col("baseline_pct"), col("drift_pct"))
   }
 
   /** The landed pair log the drift monitor consumes: one row per
-    * consecutive-event transition, stamped with the SOURCE event's time
-    * (shared by the batch twin and the spec's file-source re-ingest). */
+    * consecutive-event transition, stamped with the SOURCE event's time. */
   private[graft] def transitionPairs(spark: SparkSession, dir: String): DataFrame = {
     implicit val s: SparkSession = spark
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
@@ -2388,16 +2444,6 @@ object EventAnalytics {
     val cnt = Tables(dir).events
       .select(col("event_type").as("type"), expr("unix_micros(ts) div 86400000000").as("day"))
       .groupBy("type", "day").agg(count(lit(1)).as("x"))
-    forecastFromDaily(cnt)
-  }
-
-  /** The backtest TAIL over a landed (type, day, x) daily-count table —
-    * shared verbatim with the streaming twin
-    * ([[graft.streaming.EventStreams.dailyVolume]] maintains the counts
-    * as mergeable watermarked state; this derives the WAPE table from
-    * whatever counts have landed), so replaying a corpus through the
-    * stream and scoring it equals the batch query bit-for-bit. */
-  private[graft] def forecastFromDaily(cnt: DataFrame): DataFrame = {
     val grid = cnt.groupBy("type")
       .agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
       .select(col("type"), explode(expr("sequence(d0, d1)")).as("day"))
@@ -2433,18 +2479,6 @@ object EventAnalytics {
     val active = Tables(dir).events
       .select(col("user_id"), expr("unix_micros(ts) div 86400000000").as("day"))
       .distinct()
-    growthFromActive(active)
-  }
-
-  /** The ledger TAIL over a landed (user_id, day) activity-cell table —
-    * shared verbatim with the streaming twin
-    * ([[graft.streaming.EventStreams.activeDays]] maintains the distinct
-    * cells as mergeable watermarked state; this derives the
-    * new/retained/resurrected/churned ledger from whatever cells have
-    * landed), the [[forecastFromDaily]] discipline: replaying a corpus
-    * through the stream and scoring the landed cells equals the batch
-    * query bit-for-bit. */
-  private[graft] def growthFromActive(active: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("day"))
     val lab = active
       .withColumn("first_day", min(col("day")).over(

@@ -95,10 +95,8 @@ object MultiIntervalJoin {
   /** Slim detection-side index of an interval-set table: one row per
     * (id, touched bin) carrying the bin-LOCAL interval subset —
     * `<prefix>id`, `<prefix>bin`, `<prefix>loc`. Built map-side (no
-    * shuffle); batch joins derive it inline, and serving paths stage it
-    * once per corpus state so a probe stream joins against the persisted
-    * index ([[graft.streaming.EventStreams.overlappingStaysStream]]). */
-  def binIndex(df: DataFrame, ivs: String, id: String,
+    * shuffle). */
+  private def binIndex(df: DataFrame, ivs: String, id: String,
                binWidth: Long, prefix: String): DataFrame = {
     val x = RangeJoin.fresh(df.columns.toSet, Seq("_x"))("_x")
     df.select(col(id).as(s"${prefix}id"),

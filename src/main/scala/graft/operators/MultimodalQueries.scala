@@ -186,8 +186,7 @@ object MultimodalQueries {
     * not a `lag` window. This replaces the r11 form's
     * Window.partitionBy(doc_id): same rows out (spec-pinned), but ZERO
     * shuffle — at 100 TB the (doc, frame) rows never leave their input
-    * partition — and, being row-local, the IDENTICAL function runs on a
-    * readStream of documents in append mode, with no state at all. */
+    * partition. */
   private[graft] def sceneCutFrames(spark: SparkSession, docs: DataFrame): DataFrame = {
     graft.plans.VectorExpressions.register(spark)
     docs

@@ -45,7 +45,7 @@ object PipelineReport {
       .withColumn("kept_near", lit(true))
 
     // stage 3: the quality gate's keep flag (shared scoring columns)
-    val quality = graft.streaming.DocStreams.scored(docs)
+    val quality = graft.pipeline.CorpusPolicy.scored(docs)
       .select(col("doc_id"), col("keep").as("kept_quality"))
 
     // stage 4: content-keyed split + leakage scrub (train side only)

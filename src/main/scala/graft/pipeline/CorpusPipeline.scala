@@ -3,7 +3,6 @@ package graft.pipeline
 import java.nio.file.Path
 
 import graft.operators.{CorpusQueries, DedupQueries}
-import graft.streaming.DocStreams
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -42,10 +41,10 @@ final case class ExternalLoad(
   * under the same [[Dag]] scheduler as the reference-shaped ETL
   * ([[GraftPipeline]]): the corpus analogue of sync → transform → load.
   *
-  *  1. `quality_gate` — the batch twin of the streaming ingest gate
-  *     ([[DocStreams.scored]], SAME columns): drop low-quality docs.
+  *  1. `quality_gate` — the `docs_quality_filter` scoring
+  *     ([[CorpusPolicy.scored]], SAME columns): drop low-quality docs.
   *     With a policy file, thresholds resolve per source
-  *     ([[DocStreams.scoredWith]] — broadcast join, zero extra shuffles).
+  *     ([[CorpusPolicy.scoredWith]] — broadcast join, zero extra shuffles).
   *  2. `dedup` — exact content dedup (min doc_id survives per md5(text)),
   *     or with `nearDup` the minhash-LSH near-dup survivors (cluster rep
   *     = min doc_id, same semantics as the registered `dedup_survivors`).
@@ -76,7 +75,7 @@ object CorpusPipeline {
 
     def qualityGate(): String = {
       val docs = spark.read.parquet(cfg.docsDir)
-      val keep = DocStreams.scoredWith(docs, policy())
+      val keep = CorpusPolicy.scoredWith(docs, policy())
         .where(col("keep")).select(col("doc_id"))
       docs.join(keep, Seq("doc_id"), "left_semi")
         .write.mode("overwrite").parquet(s"${cfg.workDir}/gated")

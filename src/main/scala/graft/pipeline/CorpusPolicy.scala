@@ -3,6 +3,9 @@ package graft.pipeline
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
+import graft.functions.TextFunctions.words
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions._
 import org.json4s.{DefaultFormats, JArray, JObject, JValue}
 import org.json4s.jackson.JsonMethods
 
@@ -19,9 +22,9 @@ final case class SourcePolicy(
 /** §8f(v) — config-driven corpus policy: the gate thresholds and near-dup
   * shingle sizes the training pipeline applies, with per-source overrides.
   *
-  * The defaults reproduce the fixed gate the batch `docs_quality_filter`
-  * and streaming ingest share ([[graft.streaming.DocStreams.scored]]), so
-  * a pipeline with no config file behaves exactly as before.
+  * The defaults reproduce the fixed gate of `docs_quality_filter`
+  * ([[CorpusPolicy.scored]]), so a pipeline with no config file behaves
+  * exactly as before.
   *
   * Scale shape: the policy is bounded config (one row per *source*, not
   * per document) — it reaches the data plane as a broadcast join, never a
@@ -68,6 +71,60 @@ final case class CorpusPolicy(
 
 object CorpusPolicy {
   private implicit val formats: DefaultFormats.type = DefaultFormats
+
+  /** The fixed-threshold quality columns (doc_id, lang, quality, n_tokens,
+    * keep) that `docs_quality_filter` and the pipeline report share. */
+  def scored(docs: DataFrame): DataFrame = {
+    docs.select(col("doc_id"), col("lang"), qualityCol.as("quality"),
+        nTokensCol.as("n_tokens"))
+      .withColumn("keep",
+        col("quality") >= 0.5 && col("n_tokens") >= 10 && col("lang") =!= "zh")
+  }
+
+  /** The shared row-local scoring expressions (no thresholds). */
+  private def qualityCol: Column = {
+    val n = length(col("text")).cast("double")
+    val punct = (length(col("text")) - length(regexp_replace(col("text"), "[.,;:!?()]", ""))).cast("double")
+    val wcol = words(col("text"))
+    val nTok = size(wcol).cast("double")
+    round(least(n / lit(500.0), lit(1.0)) * 0.3
+      + (lit(1.0) - punct / n) * 0.4
+      + (size(filter(wcol, w => w.isin("the", "a", "of", "to", "and", "in", "is", "for"))) / nTok) * 0.3, 6)
+  }
+
+  private def nTokensCol: Column = size(words(col("text"))).cast("long")
+
+  /** §8f(v) — the config-driven gate: SAME scoring expressions as
+    * [[scored]], thresholds resolved per source from `policy`.
+    * The policy reaches the plan as a broadcast left join on `source`
+    * (bounded: one row per *configured* source) with the defaults as
+    * coalesce fallbacks — unlisted sources gate exactly like the
+    * fixed-threshold [[scored]] when the policy is all defaults
+    * (spec-pinned). Row-local + broadcast ⇒ shuffle-free at any corpus
+    * size. */
+  def scoredWith(docs: DataFrame, policy: CorpusPolicy): DataFrame = {
+    val base = docs.select(col("doc_id"), col("source"), col("lang"),
+      qualityCol.as("quality"), nTokensCol.as("n_tokens"))
+    def keepCond(mq: Column, mt: Column, dl: Column): Column =
+      col("quality") >= mq && col("n_tokens") >= mt && !array_contains(dl, col("lang"))
+    if (policy.perSource.isEmpty)
+      base.withColumn("keep", keepCond(lit(policy.minQuality),
+        lit(policy.minTokens), typedlit(policy.dropLangs)))
+    else {
+      val spark = docs.sparkSession
+      import spark.implicits._
+      val ov = policy.perSource.keys.toSeq.sorted.map { src =>
+        val (mq, mt, dl, _) = policy.resolve(src)
+        (src, mq, mt, dl)
+      }.toDF("source", "p_mq", "p_mt", "p_dl")
+      base.join(broadcast(ov), Seq("source"), "left")
+        .withColumn("keep", keepCond(
+          coalesce(col("p_mq"), lit(policy.minQuality)),
+          coalesce(col("p_mt"), lit(policy.minTokens)),
+          coalesce(col("p_dl"), typedlit(policy.dropLangs))))
+        .drop("p_mq", "p_mt", "p_dl")
+    }
+  }
 
   /** Parse the JSON config:
     * {{{

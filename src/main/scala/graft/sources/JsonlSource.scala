@@ -13,9 +13,8 @@ import org.apache.spark.sql.types.StructType
   * and a schema drift hazard (one new field in one shard silently changes
   * every reader). The read is `text` + `from_json`, not the JSON
   * datasource: it keeps the raw line first-class for quarantine (the JSON
-  * datasource forbids plans that touch only its corrupt-record column),
-  * and the identical expression works under `readStream` for a live drop
-  * zone. Lines are the split unit, so the scan parallelizes like CSV;
+  * datasource forbids plans that touch only its corrupt-record column).
+  * Lines are the split unit, so the scan parallelizes like CSV;
   * fields absent from a line are NULL, fields not in the schema are
   * ignored; a malformed line parses to a NULL struct — the detection —
   * with its raw text preserved for the repair/replay queue, mirroring
@@ -33,11 +32,9 @@ object JsonlSource {
     tag(spark.read.text(paths: _*), schema)
   }
 
-  /** The tagging projection over a `(value: string)` lines frame — ONE
-    * definition shared by the batch reader and any streaming ingest
-    * (`spark.readStream.text(dir)` produces the same column, and every
-    * expression here is row-local, so the gate is streaming-legal in
-    * append mode; spec-pinned batch == stream). */
+  /** The tagging projection over a `(value: string)` lines frame. Every
+    * expression is row-local, so any split of the lines tags to the same
+    * rows (spec-pinned chunk-by-chunk). */
   def tag(lines: DataFrame, schema: StructType): DataFrame = {
     val parseSchema = schema.add("_corrupt", "string")
     val opts = Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_corrupt")
@@ -45,10 +42,6 @@ object JsonlSource {
       .where(length(trim(col("value"))) > 0)
       .select(from_json(col("value"), parseSchema, opts).as("_p"), col("value").as("_raw"))
   }
-
-  /** Streaming variant: tail a drop-zone directory of JSONL files. */
-  def readTaggedStream(spark: SparkSession, dir: String, schema: StructType): DataFrame =
-    tag(spark.readStream.text(dir), schema)
 
   /** Rows that parsed cleanly, expanded to the schema's columns. */
   def good(tagged: DataFrame): DataFrame =

@@ -43,7 +43,7 @@ class PosixLocalFileSystemSpec extends AnyFunSuite {
   }
 
   test("a Spark write, FileSync.sync and Lineage.commit get the stock modes") {
-    val root = Files.createTempDirectory("graft-fs")
+    val root = TestSpark.tempDir("graft-fs")
     val out = root.resolve("written")
     spark.range(20).selectExpr("id", "cast(id AS string) AS s").repartition(2)
       .write.partitionBy("s").parquet(out.toString)
@@ -57,7 +57,7 @@ class PosixLocalFileSystemSpec extends AnyFunSuite {
   }
 
   test("a sticky bit still applies, and chmod keeps a directory's setgid bit") {
-    val dir = Files.createTempDirectory("graft-fs-bits")
+    val dir = TestSpark.tempDir("graft-fs-bits")
     val sticky = dir.resolve("sticky")
     assert(localFs.mkdirs(new Path(sticky.toUri)))
     localFs.setPermission(new Path(sticky.toUri), new FsPermission(Integer.parseInt("1777", 8).toShort))

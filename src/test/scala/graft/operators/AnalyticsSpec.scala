@@ -24,6 +24,48 @@ class AnalyticsSpec extends AnyFunSuite {
     }
   }
 
+  test("drift alarm surfaces transitions into types the baseline never saw as (novel)") {
+    val spark2 = spark
+    import spark2.implicits._
+    val t0 = java.sql.Timestamp.valueOf("2026-03-01 10:00:00")
+    val pairs = Seq(
+      ("a", "b", t0), ("a", "b", new java.sql.Timestamp(t0.getTime + 1000)),
+      ("a", "zz_new", new java.sql.Timestamp(t0.getTime + 2000))) // type unseen in baseline
+      .toDF("from_type", "to_type", "ts")
+    val baseline = Seq(("a", "b", 10L), ("a", "(end)", 5L))
+      .toDF("from_type", "to_type", "n_transitions")
+    val got = EventAnalytics.driftAlarm(pairs, baseline)
+      .collect().map(r => (r.getString(2), r.getLong(3), r.getDouble(4), r.getDouble(6))).toList
+      .sortBy(_._1)
+    // (end) is excluded from the baseline → vocab is {b}: b at 66.67% vs
+    // baseline 100% drifts -33.33; the novel type surfaces with share
+    // 33.33 and NO baseline (drift = its full share)
+    assert(got == List(("(novel)", 1L, 33.3333, 33.3333), ("b", 2L, 66.6667, -33.3333)))
+  }
+
+  test("batch driftAlarms baseline: the non-sentinel pair aggregate equals " +
+    "the transitions matrix (r14 one-window restructure pin)") {
+    // r14 opt: EventAnalytics.driftAlarms derives the baseline from the
+    // SAME persisted transitionPairs frame the windowed counts consume
+    // (one user-window pass instead of two). driftAlarm filters '(end)'
+    // rows and recomputes baseline_pct from n_transitions internally, so
+    // the two constructions must be row-identical on (from, to, n).
+    import org.apache.spark.sql.functions._
+    implicit val s: org.apache.spark.sql.SparkSession = spark
+    val fromTransitions = EventAnalytics
+      .queries("events_transitions").fn(spark, TestSpark.Sf0001)
+      .where(col("to_type") =!= "(end)")
+      .select(col("from_type"), col("to_type"), col("n_transitions"))
+    val fromPairs = EventAnalytics
+      .transitionPairs(spark, TestSpark.Sf0001)
+      .groupBy(col("from_type"), col("to_type"))
+      .agg(count(lit(1)).as("n_transitions"))
+    assert(fromTransitions.exceptAll(fromPairs).isEmpty,
+      "transitions-derived baseline has rows the pair aggregate lacks")
+    assert(fromPairs.exceptAll(fromTransitions).isEmpty,
+      "pair aggregate has rows the transitions-derived baseline lacks")
+  }
+
   test("approx_count_distinct estimate lands within the configured rsd") {
     val row = AnalyticsQueries.approxDistinctEstimate(spark, TestSpark.Sf0001).head()
     val approx = row.getLong(0).toDouble
@@ -111,7 +153,7 @@ class AnalyticsSpec extends AnyFunSuite {
   }
 
   test("persisted IVF centroids reproduce the refined search exactly") {
-    val path = java.nio.file.Files.createTempDirectory("graft-ivf-cent").toString + "/centroids"
+    val path = TestSpark.tempDir("graft-ivf-cent").toString + "/centroids"
     AnnQueries.trainIvf(spark, TestSpark.Sf0001, path)
     val fromDisk = AnnQueries.ivfTopKFrom(spark, TestSpark.Sf0001, path)
       .collect().map(_.toSeq).toSet

@@ -60,7 +60,7 @@ class CentroidCapSpec extends AnyFunSuite {
 
   test("centroid memo: a rewritten embeddings table invalidates the cached vintage") {
     import org.apache.spark.sql.functions._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_memo").toString
+    val tmp = TestSpark.tempDir("graft_memo").toString
     val src = spark.read.parquet(s"$dir/embeddings.parquet")
     src.write.parquet(s"$tmp/embeddings.parquet")
     val t = graft.sources.Tables(tmp)(spark)

@@ -111,26 +111,24 @@ class CoreOperatorsSpec extends AnyFunSuite {
   }
 
   test("CodebookDecode.fromFile: reference format — column SETS, tab padding, blank lines") {
-    val path = java.nio.file.Files.createTempFile("graft_cb_spec", ".txt")
-    try {
-      // group 2 binds ONE code list to TWO columns (the reference's
-      // SIGYN IFCGIV… multi-column binding); stray padding tabs throughout
-      java.nio.file.Files.write(path,
-        ("1\tSEX\t\t\t1\tmale\t2\tfemale\t9\tunknown\n" +
-          "\n" +
-          "2\tCONSENT REFUSED\t\t1\tyes\t2\tno\n").getBytes("UTF-8"))
-      val cb = CodebookDecode.fromFile(spark, path.toString)
-        .as[(String, String, String)].collect().toSet
-      assert(cb == Set(
-        ("SEX", "1", "male"), ("SEX", "2", "female"), ("SEX", "9", "unknown"),
-        ("CONSENT", "1", "yes"), ("CONSENT", "2", "no"),
-        ("REFUSED", "1", "yes"), ("REFUSED", "2", "no")))
-      // and the frame drives decodeAll like any inline codebook
-      val facts = Seq(("1", "2"), ("9", "1")).toDF("SEX", "CONSENT")
-      val out = CodebookDecode.decodeAll(facts, Seq("SEX", "CONSENT"), cb.toSeq.toDF("column_name", "code", "label"))
-        .as[(String, String)].collect().toSet
-      assert(out == Set(("male", "no"), ("unknown", "yes")))
-    } finally java.nio.file.Files.delete(path)
+    val path = TestSpark.tempDir("graft_cb_spec").resolve("codebook.txt")
+    // group 2 binds ONE code list to TWO columns (the reference's
+    // SIGYN IFCGIV… multi-column binding); stray padding tabs throughout
+    java.nio.file.Files.write(path,
+      ("1\tSEX\t\t\t1\tmale\t2\tfemale\t9\tunknown\n" +
+        "\n" +
+        "2\tCONSENT REFUSED\t\t1\tyes\t2\tno\n").getBytes("UTF-8"))
+    val cb = CodebookDecode.fromFile(spark, path.toString)
+      .as[(String, String, String)].collect().toSet
+    assert(cb == Set(
+      ("SEX", "1", "male"), ("SEX", "2", "female"), ("SEX", "9", "unknown"),
+      ("CONSENT", "1", "yes"), ("CONSENT", "2", "no"),
+      ("REFUSED", "1", "yes"), ("REFUSED", "2", "no")))
+    // and the frame drives decodeAll like any inline codebook
+    val facts = Seq(("1", "2"), ("9", "1")).toDF("SEX", "CONSENT")
+    val out = CodebookDecode.decodeAll(facts, Seq("SEX", "CONSENT"), cb.toSeq.toDF("column_name", "code", "label"))
+      .as[(String, String)].collect().toSet
+    assert(out == Set(("male", "no"), ("unknown", "yes")))
   }
 
   // --------------------------------------------------------------- Ontology

@@ -30,7 +30,7 @@ class FileSyncSpec extends AnyFunSuite {
   }
 
   test("verifyChecksums: ok files silent; mismatch/missing/orphan flagged") {
-    val dir = Files.createTempDirectory("graft-sync")
+    val dir = TestSpark.tempDir("graft-sync")
     put(dir, "good.csv", "a,b\n1,2\n")
     put(dir, "bad.csv", "x,y\n", companion = Some("deadbeef" * 5))
     put(dir, "lonely.csv", "no companion", companion = None)
@@ -46,8 +46,8 @@ class FileSyncSpec extends AnyFunSuite {
   }
 
   test("diffDirs: added / removed / changed between drop zone and staging") {
-    val src = Files.createTempDirectory("graft-src") // drop zone (new)
-    val dst = Files.createTempDirectory("graft-dst") // staged (old)
+    val src = TestSpark.tempDir("graft-src") // drop zone (new)
+    val dst = TestSpark.tempDir("graft-dst") // staged (old)
     put(src, "keep.csv", "same", companion = None)
     put(dst, "keep.csv", "same", companion = None)
     put(src, "new.csv", "fresh", companion = None)
@@ -66,7 +66,7 @@ class FileSyncSpec extends AnyFunSuite {
   }
 
   test("hidden dotfiles are skipped like the reference's sync") {
-    val dir = Files.createTempDirectory("graft-hidden")
+    val dir = TestSpark.tempDir("graft-hidden")
     put(dir, "visible.csv", "data", companion = None)
     put(dir, ".hidden", "secret", companion = None)
     val got = FileSync.actualChecksums(spark, dir.toString)
@@ -75,8 +75,8 @@ class FileSyncSpec extends AnyFunSuite {
   }
 
   test("syncDirs applies the delta: dst converges to src") {
-    val src = Files.createTempDirectory("graft-sync-src")
-    val dst = Files.createTempDirectory("graft-sync-dst")
+    val src = TestSpark.tempDir("graft-sync-src")
+    val dst = TestSpark.tempDir("graft-sync-dst")
     put(src, "a.csv", "v2", companion = None)
     put(dst, "a.csv", "v1", companion = None)
     put(src, "b.csv", "new", companion = None)
@@ -92,7 +92,7 @@ class FileSyncSpec extends AnyFunSuite {
   test("rel_path strips the FIRST root occurrence when the root string repeats in the path") {
     // root .../data/x containing data/x/y.csv: a greedy prefix strip would
     // match up to the SECOND "data/x/" and mis-key the file as "y.csv"
-    val base = Files.createTempDirectory("graft-rep")
+    val base = TestSpark.tempDir("graft-rep")
     val root = base.resolve("data/x")
     put(root, "data/x/y.csv", "payload", companion = None)
     val got = FileSync.actualChecksums(spark, root.toString)
@@ -101,7 +101,7 @@ class FileSyncSpec extends AnyFunSuite {
   }
 
   test("actualChecksums computes real sha1 over content") {
-    val dir = Files.createTempDirectory("graft-sha")
+    val dir = TestSpark.tempDir("graft-sha")
     put(dir, "f.txt", "hello world", companion = None)
     val got = FileSync.actualChecksums(spark, dir.toString)
       .as[(String, String)].collect().toMap
@@ -109,7 +109,7 @@ class FileSyncSpec extends AnyFunSuite {
   }
 
   test("the manifest lists what Spark's file index lists, plus zero-length files") {
-    val root = Files.createTempDirectory("graft-walk")
+    val root = TestSpark.tempDir("graft-walk")
     val named = Seq("plain.csv", "_metadata", "_common_metadata", "a=b/part.csv", "_p=1/q.csv",
       "é/Ａ.csv", "😀.csv", "sub dir/x y.csv", "deep/er/est.csv",
       // skipped by name, at any depth
@@ -131,7 +131,7 @@ class FileSyncSpec extends AnyFunSuite {
   }
 
   test("manifestIfDir: a directory's manifest, None for a file or a missing path") {
-    val root = Files.createTempDirectory("graft-ifdir")
+    val root = TestSpark.tempDir("graft-ifdir")
     put(root, "only.csv", "one file", companion = None)
     val file = root.resolve("only.csv").toString
     val missing = root.resolve("missing").toString

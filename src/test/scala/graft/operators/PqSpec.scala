@@ -80,7 +80,7 @@ class PqSpec extends AnyFunSuite {
   }
 
   test("persisted IVF-PQ index reproduces the trained inline search exactly") {
-    val path = java.nio.file.Files.createTempDirectory("graft-ivfpq").toString + "/index"
+    val path = TestSpark.tempDir("graft-ivfpq").toString + "/index"
     AnnQueries.trainIvfPq(spark, dir, path)
     val fromDisk = AnnQueries.ivfPqTopKFrom(spark, dir, path)
       .collect().map(_.toSeq).toSet
@@ -90,7 +90,7 @@ class PqSpec extends AnyFunSuite {
   }
 
   test("persisted PQ code corpus serves ADC search identical to inline encoding") {
-    val path = java.nio.file.Files.createTempDirectory("graft-pqcodes").toString + "/index"
+    val path = TestSpark.tempDir("graft-pqcodes").toString + "/index"
     AnnQueries.persistPqCorpus(spark, dir, path)
     val served = AnnQueries.pqAdcTopKFrom(spark, dir, path)
       .collect().map(_.toSeq).toSet
@@ -108,7 +108,7 @@ class PqSpec extends AnyFunSuite {
   test("index append: batch-encoded arrivals equal a full re-encode, codes written once each") {
     implicit val s: org.apache.spark.sql.SparkSession = spark
     import org.apache.spark.sql.functions._
-    val path = java.nio.file.Files.createTempDirectory("graft-ivfpq-app").toString + "/index"
+    val path = TestSpark.tempDir("graft-ivfpq-app").toString + "/index"
     AnnQueries.trainIvfPq(spark, dir, path)
     val emb = graft.sources.Tables(dir)(spark).embeddings
     // archive first, then two later arrival batches, through the append path
@@ -123,7 +123,7 @@ class PqSpec extends AnyFunSuite {
 
   test("cluster-partitioned code corpus: a bucket filter prunes files at the scan") {
     implicit val s: org.apache.spark.sql.SparkSession = spark
-    val path = java.nio.file.Files.createTempDirectory("graft-ivfpq-part").toString + "/idx"
+    val path = TestSpark.tempDir("graft-ivfpq-part").toString + "/idx"
     AnnQueries.persistIvfPqCorpusPartitioned(spark, dir, path)
     // a two-bucket probe must read exactly two partition directories
     val pruned = spark.read.parquet(s"$path/codes")

@@ -44,7 +44,7 @@ class PrefixIndexSpec extends AnyFunSuite {
     assert(inMem == naive)
 
     // staged catalog index
-    val path = java.nio.file.Files.createTempDirectory("graft-apidx").toString
+    val path = TestSpark.tempDir("graft-apidx").toString
     PrefixJoin.persistPrefixIndexBucketed(spark, TestSpark.Sf0001, path, buckets = 4)
     val prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

@@ -21,7 +21,7 @@ class SketchSpec extends AnyFunSuite {
       .groupBy(to_date(col("ts")).as("day"))
       .agg(hll_sketch_agg(col("user_id"), lit(12)).as("sk"))
     // persistable: the sketch column is bytes — write/read round-trip
-    val path = java.nio.file.Files.createTempDirectory("graft-hll").toString
+    val path = TestSpark.tempDir("graft-hll").toString
     daily.write.mode("overwrite").parquet(path)
     val merged = spark.read.parquet(path)
       .agg(hll_sketch_estimate(hll_union_agg(col("sk"), lit(true))).as("est"))

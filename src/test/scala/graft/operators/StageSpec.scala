@@ -6,6 +6,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
+import graft.TestSpark
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,7 +14,7 @@ class StageSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
   private val run = "spec" + java.util.UUID.randomUUID.toString.replace("-", "")
-  private val datasets = Files.createTempDirectory("graft_stage_spec")
+  private val datasets = TestSpark.tempDir("graft_stage_spec")
   private val names = new AtomicInteger
 
   /** A stage name no other test or run shares, so its siblings can be listed. */

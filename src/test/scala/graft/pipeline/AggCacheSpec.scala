@@ -16,7 +16,7 @@ class AggCacheSpec extends AnyFunSuite {
     ObservationQueries.observations(spark, TestSpark.Sf0001).localCheckpoint()
 
   test("summaries match direct recomputation") {
-    val dir = Files.createTempDirectory("graft-cache").toString + "/cache"
+    val dir = TestSpark.tempDir("graft-cache").toString + "/cache"
     AggCache.rebuild(obs, dir)
     val cc = AggCache.read(spark, dir, "concept_counts")
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
@@ -31,7 +31,7 @@ class AggCacheSpec extends AnyFunSuite {
   }
 
   test("second rebuild replaces the cache in place") {
-    val dir = Files.createTempDirectory("graft-cache2").toString + "/cache"
+    val dir = TestSpark.tempDir("graft-cache2").toString + "/cache"
     AggCache.rebuild(obs, dir)
     val half = obs.where(col("patient_num") % 2 === 0).localCheckpoint()
     AggCache.rebuild(half, dir)
@@ -43,7 +43,7 @@ class AggCacheSpec extends AnyFunSuite {
   }
 
   test("a crash between the two swap renames is recoverable on read") {
-    val base = Files.createTempDirectory("graft-cache3").toString
+    val base = TestSpark.tempDir("graft-cache3").toString
     val dir = s"$base/cache"
     AggCache.rebuild(obs, dir)
     // simulate the crash window: target renamed away, tmp never arrived
@@ -54,7 +54,7 @@ class AggCacheSpec extends AnyFunSuite {
   }
 
   test("a failing summary leaves the live cache intact") {
-    val base = Files.createTempDirectory("graft-cache4").toString
+    val base = TestSpark.tempDir("graft-cache4").toString
     val dir = s"$base/cache"
     AggCache.rebuild(obs, dir)
     def snapshot() = AggCache.Tables.map(t => t -> AggCache.read(spark, dir, t).collect().toSet).toMap

@@ -12,7 +12,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def freshCfg(): CorpusConfig = {
-    val root = Files.createTempDirectory("graft-corpus-pipe")
+    val root = TestSpark.tempDir("graft-corpus-pipe")
     val docsDir = s"$root/docs"
     spark.read.parquet(s"${TestSpark.Sf0001}/documents.parquet")
       .write.parquet(docsDir)
@@ -101,7 +101,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
     // gate is really reading the file, not the fixed 0.5 default
     val docs = spark.read.parquet(cfg.docsDir)
     val lax = spark.read.parquet(s"${cfg.workDir}/gated").count()
-    assert(lax == graft.streaming.DocStreams.scored(docs)
+    assert(lax == CorpusPolicy.scored(docs)
       .where(col("n_tokens") >= 10 && col("lang") =!= "zh").count())
 
     // unchanged config + data → no-op

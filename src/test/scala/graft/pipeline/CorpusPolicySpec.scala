@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import graft.TestSpark
-import graft.streaming.DocStreams
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -50,12 +49,12 @@ class CorpusPolicySpec extends AnyFunSuite {
     val docs = spark.read.parquet(s"${TestSpark.Sf0001}/documents.parquet")
     def keeps(df: org.apache.spark.sql.DataFrame): Set[Long] =
       df.where(col("keep")).select("doc_id").collect().map(_.getLong(0)).toSet
-    val fixed = keeps(DocStreams.scored(docs))
-    assert(keeps(DocStreams.scoredWith(docs, CorpusPolicy())) == fixed && fixed.nonEmpty)
+    val fixed = keeps(CorpusPolicy.scored(docs))
+    assert(keeps(CorpusPolicy.scoredWith(docs, CorpusPolicy())) == fixed && fixed.nonEmpty)
     // a populated perSource map that resolves to the same thresholds is
     // also identical (exercises the broadcast-join path, not just literals)
     val same = CorpusPolicy(perSource = Map("no_such_source" -> SourcePolicy()))
-    assert(keeps(DocStreams.scoredWith(docs, same)) == fixed)
+    assert(keeps(CorpusPolicy.scoredWith(docs, same)) == fixed)
   }
 
   test("scoredWith: per-source override gates only that source") {
@@ -64,9 +63,9 @@ class CorpusPolicySpec extends AnyFunSuite {
       .groupBy("source").count().orderBy(desc("count"))
       .head.getString(0)
     val strict = CorpusPolicy(perSource = Map(src -> SourcePolicy(minQuality = Some(2.0))))
-    val got = DocStreams.scoredWith(docs, strict).where(col("keep"))
+    val got = CorpusPolicy.scoredWith(docs, strict).where(col("keep"))
     assert(got.where(col("source") === src).count() == 0)
-    val baseline = DocStreams.scoredWith(docs, CorpusPolicy()).where(col("keep"))
+    val baseline = CorpusPolicy.scoredWith(docs, CorpusPolicy()).where(col("keep"))
     assert(got.where(col("source") =!= src).count() ==
       baseline.where(col("source") =!= src).count())
   }

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import java.nio.file.Files
 import scala.collection.mutable
+import graft.TestSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 class DagSpec extends AnyFunSuite {
@@ -79,7 +80,7 @@ class DagSpec extends AnyFunSuite {
   }
 
   test("FileSignalStore persists .done-<task> files across Dag instances") {
-    val dir = Files.createTempDirectory("graft-dag")
+    val dir = TestSpark.tempDir("graft-dag")
     val store1 = new FileSignalStore(dir)
     pipeline(mutable.Buffer(), () => "v1").execute(store1)
     assert(Files.exists(dir.resolve(".done-sources2csr")))

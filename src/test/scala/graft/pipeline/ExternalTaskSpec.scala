@@ -113,7 +113,7 @@ class ExternalTaskSpec extends AnyFunSuite {
 
   test("RunReport lands retry accounting next to outcomes") {
     val spark = TestSpark.spark
-    val dir = java.nio.file.Files.createTempDirectory("graft-extreport").toString
+    val dir = TestSpark.tempDir("graft-extreport").toString
     val outcomes = Seq(
       RunReport.Outcome("ext", "ok", 12L),
       RunReport.Outcome("consume", "ok", 3L))

@@ -31,7 +31,7 @@ class GraftPipelineSpec extends AnyFunSuite {
   /** A pipeline under a fresh temp root; with `uris`, every directory but
     * the signals' is given as a `file://` URI. */
   private def mkCfg(uris: Boolean = false): (Path, PipelineConfig) = {
-    val root = Files.createTempDirectory("graft-pipe")
+    val root = TestSpark.tempDir("graft-pipe")
     Files.createDirectory(root.resolve("drop"))
     def dir(name: String) = if (uris) s"file://${root.resolve(name)}" else root.resolve(name).toString
     val cfg = PipelineConfig(

@@ -14,7 +14,7 @@ class LineageSpec extends AnyFunSuite {
   }
 
   test("commit-if-changed, parent chain, checkout restores exactly") {
-    val root = Files.createTempDirectory("graft-lineage").toString
+    val root = TestSpark.tempDir("graft-lineage").toString
     val data = s"$root/data"; val store = s"$root/store"
 
     write(data, "a.csv", "k,v\n1,x\n")
@@ -50,7 +50,7 @@ class LineageSpec extends AnyFunSuite {
   }
 
   test("a leftover hidden temp entry is ignored by head, history and checkout") {
-    val root = Files.createTempDirectory("graft-lineage-tmp").toString
+    val root = TestSpark.tempDir("graft-lineage-tmp").toString
     val data = s"$root/data"; val store = s"$root/store"
     write(data, "a.csv", "k,v\n1,x\n")
     val (v1, _) = Lineage.commit(spark, store, data, "initial load")

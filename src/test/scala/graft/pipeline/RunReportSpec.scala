@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.TestSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 class RunReportSpec extends AnyFunSuite {
@@ -29,7 +30,7 @@ class RunReportSpec extends AnyFunSuite {
 
   test("landed run history is a queryable dataset across runs") {
     val spark = graft.TestSpark.spark
-    val dir = java.nio.file.Files.createTempDirectory("graft-runhist").toString
+    val dir = TestSpark.tempDir("graft-runhist").toString
     val (tasks, log) = RunReport.instrument(Seq(
       task("sync", Nil), task("load", Seq("sync"))))
     val dag = new Dag(tasks)

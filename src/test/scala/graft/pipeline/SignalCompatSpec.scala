@@ -48,7 +48,7 @@ class SignalCompatSpec extends AnyFunSuite {
     "Ａ.csv", "😀.csv", "sub dir/x y.csv", "x_SUCCESS")
 
   test("doneSignals and versionId are byte-identical to the Spark-sorted renderings") {
-    val root = Files.createTempDirectory("graft-signal")
+    val root = TestSpark.tempDir("graft-signal")
     Names.zipWithIndex.foreach { case (n, i) => put(root, n, s"payload $i\n") }
     put(root, "é.csv.sha1", s"${sha1hex("payload 4\n")}  é.csv\n")
     val dir = root.toString
@@ -70,20 +70,20 @@ class SignalCompatSpec extends AnyFunSuite {
   }
 
   test("verify and diff over the manifest agree with the frame API") {
-    val src = Files.createTempDirectory("graft-signal-src")
+    val src = TestSpark.tempDir("graft-signal-src")
     Names.foreach(n => put(src, n, n))
     put(src, "é.csv.sha1", "0" * 40)
     val m = FileSync.manifest(spark, src.toString)
     assert(FileSync.verify(m).map(v => v._1 -> v._2).toMap ==
       (Names.filterNot(_ == "é.csv").map(_ -> "missing_companion") :+ ("é.csv" -> "checksum_mismatch")).toMap)
-    val dst = Files.createTempDirectory("graft-signal-dst")
+    val dst = TestSpark.tempDir("graft-signal-dst")
     assert(FileSync.syncDirs(spark, src.toString, dst.toString).map(_._2).toSet == Set("added"))
     assert(FileSync.diff(m, FileSync.manifest(spark, dst.toString)).isEmpty)
     assert(GraftPipeline.doneSignal(spark, dst.toString) == m.signal)
   }
 
   test("a session whose scan split is 1 byte hashes through an RDD to the same manifest") {
-    val root = Files.createTempDirectory("graft-signal-rdd")
+    val root = TestSpark.tempDir("graft-signal-rdd")
     Names.zipWithIndex.foreach { case (n, i) => put(root, n, s"payload $i\n") }
     put(root, "é.csv.sha1", s"${sha1hex("payload 4\n")}  é.csv\n")
     put(root, "empty.csv", "")
@@ -99,7 +99,7 @@ class SignalCompatSpec extends AnyFunSuite {
   }
 
   test("companion values parse as the binaryFile expression does; empty files are listed and hashed") {
-    val root = Files.createTempDirectory("graft-signal-companion")
+    val root = TestSpark.tempDir("graft-signal-companion")
     val hex = sha1hex("payload\n")
     val companions = Seq(
       s"\n$hex  a.csv\n", s"$hex\ta.csv\n", s"\t$hex\n", s"$hex  a.csv\r\n", s"$hex\r\n",

@@ -10,7 +10,7 @@ class TransmartLoadSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("writeStaging emits headered TSV that round-trips") {
-    val dir = Files.createTempDirectory("graft-load").toString
+    val dir = TestSpark.tempDir("graft-load").toString
     val df = Seq((1L, "aé", 1.5), (2L, "b", 2.0)).toDF("patient_num", "name", "v")
     TransmartLoad.writeStaging(df, dir, "patients", sortedBy = Seq("patient_num"))
     assert(new java.io.File(s"$dir/patients").listFiles().count(_.getName.endsWith(".csv")) == 1)
@@ -23,7 +23,7 @@ class TransmartLoadSpec extends AnyFunSuite {
   }
 
   test("manifest + doneSignal: stable content signature, changes with data") {
-    val dir = Files.createTempDirectory("graft-load2").toString
+    val dir = TestSpark.tempDir("graft-load2").toString
     val df = Seq((1L, "x")).toDF("k", "v")
     TransmartLoad.writeStaging(df, dir, "t", sortedBy = Seq("k"))
     val m1 = TransmartLoad.manifest(spark, s"$dir/t").collect()
@@ -35,7 +35,7 @@ class TransmartLoadSpec extends AnyFunSuite {
   }
 
   test("doneSignal drives Dag skip/invalidate end-to-end") {
-    val dir = Files.createTempDirectory("graft-load3").toString
+    val dir = TestSpark.tempDir("graft-load3").toString
     val store = new InMemorySignalStore
     var loads = 0
     def dag() = new Dag(Seq(

@@ -12,7 +12,7 @@ class DelimitedSourceSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("per-file delimiter + per-column date formats + nulls") {
-    val dir = Files.createTempDirectory("graft-delim")
+    val dir = TestSpark.tempDir("graft-delim")
     Files.write(dir.resolve("data.csv"),
       """id;born;score;label
         |1;03.02.2020;1.5;alpha
@@ -36,7 +36,7 @@ class DelimitedSourceSpec extends AnyFunSuite {
   }
 
   test("quarantine routes malformed cells with reasons; good rows type cleanly") {
-    val dir = Files.createTempDirectory("graft-quar")
+    val dir = TestSpark.tempDir("graft-quar")
     Files.write(dir.resolve("data.csv"),
       """id;born;score;label
         |1;03.02.2020;1.5;alpha

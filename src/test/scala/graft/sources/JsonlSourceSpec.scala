@@ -12,7 +12,7 @@ class JsonlSourceSpec extends AnyFunSuite {
     .add("id", "long").add("text", "string")
 
   private def stage(lines: String*): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsonl_spec")
+    val dir = TestSpark.tempDir("graft_jsonl_spec")
     java.nio.file.Files.write(dir.resolve("part-0.jsonl"),
       lines.mkString("\n").getBytes("UTF-8"))
     dir.toString
@@ -60,7 +60,7 @@ class JsonlSourceSpec extends AnyFunSuite {
 
   test("JSON escaping round-trips exotic text exactly") {
     val exotic = "line1\nline2\ttab \"quoted\" \\backslash\\ ué中"
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsonl_rt").toString
+    val dir = TestSpark.tempDir("graft_jsonl_rt").toString
     Seq((1L, exotic)).toDF("id", "text").write.mode("overwrite").json(dir)
     val back = JsonlSource.read(spark, dir, schema)
       .as[(Long, String)].collect().head

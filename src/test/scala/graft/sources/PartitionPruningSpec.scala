@@ -12,7 +12,7 @@ class PartitionPruningSpec extends AnyFunSuite {
 
   test("hive-partitioned layout prunes partitions at the scan") {
     implicit val s: org.apache.spark.sql.SparkSession = spark
-    val dir = Files.createTempDirectory("graft-part").toString
+    val dir = TestSpark.tempDir("graft-part").toString
     Tables(TestSpark.Sf0001).events
       .write.mode("overwrite").partitionBy("event_type").parquet(dir)
     val q = spark.read.parquet(dir).where(col("event_type") === "view")

@@ -25,7 +25,7 @@ class TablesVintageSpec extends AnyFunSuite {
   }
 
   test("assertVintage names every mismatched column in one error") {
-    val dir = Files.createTempDirectory("graft-vintage").toString
+    val dir = TestSpark.tempDir("graft-vintage").toString
     // region: r_name missing; events: ts mistyped (string); others absent
     spark.range(3).selectExpr("CAST(id AS INT) AS r_regionkey")
       .write.mode("overwrite").parquet(s"$dir/region.parquet")

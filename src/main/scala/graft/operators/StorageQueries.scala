@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Q
+import graft.pipeline.ZoneMap
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -15,48 +16,20 @@ import org.apache.spark.sql.functions._
 object StorageQueries {
 
   /** Zone-map build folded to global per-column stats. The interesting part
-    * is the per-file pass ([[zoneMap]]: one distributed scan keyed on
+    * is the per-file pass ([[ZoneMap.build]]: one distributed scan keyed on
     * `input_file_name()`); the fold proves the manifest is lossless — the
     * per-file mins/maxes/counts recombine to exactly the table-wide stats
     * DuckDB computes directly. All three columns are BIGINT so one cast
-    * covers the fold; mixed dtypes are exercised in StorageLayoutSpec. */
+    * covers the fold; mixed dtypes are exercised in ZoneMapSpec. */
   def zoneMapStats(spark: SparkSession, dir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    val zm = zoneMap(Tables(dir).lineitem, Seq("l_orderkey", "l_partkey", "l_suppkey"))
+    val zm = ZoneMap.build(Tables(dir).lineitem, Seq("l_orderkey", "l_partkey", "l_suppkey"))
     zm.groupBy(col("column"))
       .agg(
         min(col("min_value").cast("bigint")).cast("string").as("min_value"),
         max(col("max_value").cast("bigint")).cast("string").as("max_value"),
         sum(col("n_rows")).as("n_rows"),
         sum(col("n_nulls")).as("n_nulls"))
-  }
-
-  /** (file, column, dtype, min_value, max_value, n_rows, n_nulls) for the
-    * given columns of every file backing `df`: the file-level analogue of
-    * parquet row-group zone maps. One distributed pass
-    * (`input_file_name()` groupBy → min/max/count partial aggs); values
-    * are carried as strings with a type tag, so one manifest schema
-    * covers every column type. */
-  private[operators] def zoneMap(df: DataFrame, cols: Seq[String]): DataFrame = {
-    val perFile = df
-      .withColumn("_file", input_file_name())
-      .groupBy(col("_file"))
-      .agg(count(lit(1)).as("n_rows"),
-        cols.flatMap(c => Seq(
-          min(col(c)).cast("string").as(s"min_$c"),
-          max(col(c)).cast("string").as(s"max_$c"),
-          sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"nulls_$c"))): _*)
-    val dtypes = df.select(cols.map(col): _*).schema.map(f => f.name -> f.dataType.sql).toMap
-    val entries = cols.map { c =>
-      struct(lit(c).as("column"), lit(dtypes(c)).as("dtype"),
-        col(s"min_$c").as("min_value"), col(s"max_$c").as("max_value"),
-        col(s"nulls_$c").as("n_nulls"))
-    }
-    perFile
-      .select(col("_file").as("file"), col("n_rows"), explode(array(entries: _*)).as("e"))
-      .select(col("file"), col("e.column").as("column"), col("e.dtype").as("dtype"),
-        col("e.min_value").as("min_value"), col("e.max_value").as("max_value"),
-        col("n_rows"), col("e.n_nulls").as("n_nulls"))
   }
 
   private val zoneMapStatsSql =

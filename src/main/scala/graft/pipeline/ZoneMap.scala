@@ -62,85 +62,6 @@ object ZoneMap {
     base.where(col(column) >= lo && col(column) <= hi)
   }
 
-  /** Zone-map-driven config-ingest scan (SURVEY §8b candidate (i)): the
-    * delimited drop zone gets the same scheduler-side file pruning as the
-    * parquet path. The manifest is built once over the typed config-driven
-    * read ([[graft.sources.DelimitedSource]] + [[build]]) and consulted
-    * before every scan — CSV has no row-group statistics of its own, so
-    * at 100 TB this is the ONLY pruning layer the drop zone gets, and the
-    * predicate re-applies as the residual row filter inside surviving
-    * files. */
-  def prunedDelimited(spark: SparkSession, dir: String,
-                      cfg: graft.sources.DelimitedConfig, zoneMap: DataFrame,
-                      column: String, lo: Column, hi: Column): DataFrame = {
-    val files = candidateFiles(zoneMap, column, lo, hi)
-    val base =
-      if (files.isEmpty) graft.sources.DelimitedSource.read(spark, dir, cfg).where(lit(false))
-      else graft.sources.DelimitedSource.read(spark, files, cfg)
-    base.where(col(column) >= lo && col(column) <= hi)
-  }
-
-  /** Incremental maintenance (SURVEY §8b candidate (c)): attach to a file
-    * stream over the staged directory and upsert each micro-batch's
-    * per-file stats into the manifest — the zone map stays current as
-    * files land, without ever rescanning the backlog. Each batch:
-    * stats of the batch's files (one distributed pass over just those
-    * files), anti-join the old manifest on file, union, write to a
-    * versioned temp dir and atomically swap via the Hadoop FileSystem API
-    * (readers only ever see a complete manifest). Use with
-    * `Trigger.AvailableNow` for catch-up or a continuous trigger for
-    * steady-state ingest; exactly-once comes from the stream checkpoint —
-    * re-processed files upsert idempotently (same file key, same stats).
-    *
-    * Returns the DataStreamWriter so the caller owns trigger/checkpoint. */
-  def maintain(stream: DataFrame, cols: Seq[String], manifestDir: String):
-      org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val spark = batch.sparkSession
-      val stats = build(batch, cols)
-      val conf = spark.sparkContext.hadoopConfiguration
-      val target = new org.apache.hadoop.fs.Path(manifestDir)
-      val fs = target.getFileSystem(conf)
-      // crash recovery: a failure between the two swap renames below
-      // leaves the previous manifest under .old-<batch>; restore the
-      // newest backup BEFORE merging, so a retried batch can never
-      // truncate the manifest down to its own files
-      if (!fs.exists(target) && fs.exists(target.getParent)) {
-        val prefix = target.getName + ".old-"
-        val backups = fs.listStatus(target.getParent).map(_.getPath)
-          .filter(_.getName.startsWith(prefix))
-        if (backups.nonEmpty) {
-          val newest = backups.maxBy(_.getName.stripPrefix(prefix).toLong)
-          if (!fs.rename(newest, target)) // an ignored failure here would
-            throw new java.io.IOException( // truncate history to this batch
-              s"zone-map manifest restore failed: $newest -> $target")
-        }
-      }
-      val merged =
-        if (fs.exists(target)) {
-          val batchFiles = stats.select("file").distinct()
-          val old = spark.read.parquet(manifestDir)
-          old.join(batchFiles, Seq("file"), "left_anti").unionByName(stats)
-        } else stats
-      val tmp = new org.apache.hadoop.fs.Path(s"$manifestDir.tmp-$batchId")
-      val old = new org.apache.hadoop.fs.Path(s"$manifestDir.old-$batchId")
-      merged.write.mode("overwrite").parquet(tmp.toString)
-      // two renames, not delete-then-rename: a crash mid-swap leaves the
-      // previous manifest recoverable under .old-<batch> instead of gone.
-      // A leftover .old-<batch> from a prior attempt of this SAME batch is
-      // redundant once target exists (the swap completed before the crash)
-      // and must go first — renaming onto an existing dir would NEST
-      // target inside it and poison any later restore.
-      if (fs.exists(old)) fs.delete(old, true)
-      if (fs.exists(target) && !fs.rename(target, old))
-        throw new java.io.IOException(s"zone-map manifest swap failed: $target -> $old")
-      if (!fs.rename(tmp, target))
-        throw new java.io.IOException(s"zone-map manifest swap failed: $tmp -> $target")
-      fs.delete(old, true)
-      ()
-    }
-  }
-
   /** Files that MIGHT contain rows with `column` in [lo, hi] — interval
     * overlap on the zone map, casting min/max back to the column's type.
     * No false negatives: a file is only dropped when its whole range lies

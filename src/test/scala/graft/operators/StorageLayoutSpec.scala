@@ -4,34 +4,10 @@ import graft.TestSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Storage-layout planners pinned against driver recomputes: the
-  * compaction manifest's first-fit shard assignment, the z-order
-  * layout audit's bit-interleave, file zones, and pruning arithmetic,
-  * and the per-file zone map behind `zone_map_stats`. */
+  * compaction manifest's first-fit shard assignment and the z-order
+  * layout audit's bit-interleave, file zones, and pruning arithmetic. */
 class StorageLayoutSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-
-  test("per-file stats fold back to exact table-wide stats") {
-    import org.apache.spark.sql.functions._
-    val spark2 = spark
-    import spark2.implicits._
-    // two parquet files with disjoint key ranges: k 1–10 and k 101–110
-    val dir = TestSpark.tempDir("graft-zm").toString
-    ((1L to 10L) ++ (101L to 110L)).map { k =>
-      (k, java.sql.Date.valueOf(if (k <= 10) "2024-01-15" else "2024-06-15"),
-        if (k % 5 == 0) null else s"v$k")
-    }.toDF("k", "d", "s")
-      .repartitionByRange(2, col("k"))
-      .write.mode("overwrite").parquet(dir)
-    val zm = StorageQueries.zoneMap(spark.read.parquet(dir), Seq("k", "d", "s")).cache()
-    assert(zm.select("file").distinct().count() == 2)
-    val k = zm.where($"column" === "k")
-      .agg(min($"min_value".cast("bigint")), max($"max_value".cast("bigint")),
-        sum($"n_rows"), sum($"n_nulls"))
-      .as[(Long, Long, Long, Long)].head()
-    assert(k == ((1L, 110L, 20L, 0L)))
-    val s = zm.where($"column" === "s").agg(sum($"n_nulls")).as[Long].head()
-    assert(s == 4L) // k = 5, 10, 105, 110
-  }
 
   test("compaction plan matches a first-fit driver recompute") {
     val docs = spark.read.parquet(s"${TestSpark.Sf0001}/documents.parquet")

@@ -1,6 +1,5 @@
 package graft.pipeline
 
-import java.nio.file.Files
 import java.sql.Date
 
 import graft.TestSpark
@@ -13,7 +12,7 @@ class ZoneMapSpec extends AnyFunSuite {
 
   /** Two parquet files with disjoint key ranges: k 1–10 and k 101–110. */
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft-zm").toString
+    val d = TestSpark.tempDir("graft-zm").toString
     val rows = ((1L to 10L) ++ (101L to 110L)).map { k =>
       (k, Date.valueOf(if (k <= 10) "2024-01-15" else "2024-06-15"),
         if (k % 5 == 0) null else s"v$k")
@@ -57,7 +56,7 @@ class ZoneMapSpec extends AnyFunSuite {
   }
 
   test("all-null column in a file drops that file; unknown column → empty") {
-    val d2 = Files.createTempDirectory("graft-zm-null").toString
+    val d2 = TestSpark.tempDir("graft-zm-null").toString
     Seq((1L, Option.empty[String]), (2L, None)).toDF("k", "s")
       .coalesce(1).write.mode("overwrite").parquet(d2)
     val zm2 = ZoneMap.build(spark.read.parquet(d2), Seq("s"))
@@ -72,58 +71,6 @@ class ZoneMapSpec extends AnyFunSuite {
     assert(pruned.select("k").orderBy("k").collect().toSeq ==
       full.select("k").orderBy("k").collect().toSeq)
     assert(ZoneMap.prunedParquet(spark, dir, zm, "k", lit(50L), lit(60L)).count() == 0)
-  }
-
-  test("streaming maintenance converges the manifest to a full rebuild") {
-    import org.apache.spark.sql.streaming.Trigger
-    val root = Files.createTempDirectory("graft-zm-stream").toString
-    val src = s"$root/staged"; val manifest = s"$root/manifest"; val ckpt = s"$root/ckpt"
-    def land(lo: Long, hi: Long): Unit =
-      (lo to hi).map(k => (k, s"v$k")).toDF("k", "v")
-        .coalesce(1).write.mode("append").parquet(src)
-    def runOnce(): Unit = {
-      val schema = spark.read.parquet(src).schema
-      val stream = spark.readStream.schema(schema).parquet(src)
-      val q = ZoneMap.maintain(stream, Seq("k"), manifest)
-        .option("checkpointLocation", ckpt).trigger(Trigger.AvailableNow()).start()
-      try q.awaitTermination(120000) finally q.stop()
-    }
-    land(1, 10); runOnce()
-    land(100, 120); runOnce() // only the new file is scanned (checkpointed source)
-    val got = spark.read.parquet(manifest)
-      .select("file", "column", "min_value", "max_value", "n_rows", "n_nulls")
-      .orderBy("file", "column").collect().toSeq
-    val want = ZoneMap.build(spark.read.parquet(src), Seq("k"))
-      .select("file", "column", "min_value", "max_value", "n_rows", "n_nulls")
-      .orderBy("file", "column").collect().toSeq
-    assert(got == want && got.size == 2)
-  }
-
-  test("maintain recovers a half-swapped manifest from its .old backup") {
-    import org.apache.spark.sql.streaming.Trigger
-    val root = Files.createTempDirectory("graft-zm-crash").toString
-    val src = s"$root/staged"; val manifest = s"$root/manifest"; val ckpt = s"$root/ckpt"
-    def land(lo: Long, hi: Long): Unit =
-      (lo to hi).map(k => (k, s"v$k")).toDF("k", "v")
-        .coalesce(1).write.mode("append").parquet(src)
-    def runOnce(): Unit = {
-      val schema = spark.read.parquet(src).schema
-      val q = ZoneMap.maintain(spark.readStream.schema(schema).parquet(src), Seq("k"), manifest)
-        .option("checkpointLocation", ckpt).trigger(Trigger.AvailableNow()).start()
-      try q.awaitTermination(120000) finally q.stop()
-    }
-    land(1, 10); runOnce()
-    // simulate a crash between the two swap renames: target gone, backup left
-    java.nio.file.Files.move(java.nio.file.Paths.get(manifest),
-      java.nio.file.Paths.get(s"$manifest.old-7"))
-    land(100, 120); runOnce()
-    val got = spark.read.parquet(manifest)
-      .select("file", "column", "min_value", "max_value", "n_rows", "n_nulls")
-      .orderBy("file").collect().toSeq
-    val want = ZoneMap.build(spark.read.parquet(src), Seq("k"))
-      .select("file", "column", "min_value", "max_value", "n_rows", "n_nulls")
-      .orderBy("file").collect().toSeq
-    assert(got == want && got.size == 2) // first file's stats survived the crash
   }
 
   test("conflicting dtypes for one column are rejected") {

@@ -34,7 +34,7 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // r15 (opt, guide §1.2 per-task work / codegen): the generated-class
       // cache defaults to 100 entries (StaticSQLConf CODEGEN_CACHE_MAX_ENTRIES).
-      // An engine session serving the full 311-query registry generates a
+      // An engine session serving the full 308-query registry generates a
       // few thousand distinct codegen units, so at 100 entries every repeat
       // execution of a query re-pays Janino compilation for every span —
       // the bench's interleaved passes thrash it by construction, and any

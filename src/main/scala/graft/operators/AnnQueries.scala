@@ -205,16 +205,11 @@ object AnnQueries {
     * centroid matrix O(n/occupancy)·dim — at 10⁹ vectors that is 4×10¹⁵
     * cosine ops and a multi-GB literal baked into every task. 65536 is
     * the top of FAISS's published nlist guidance (4√n–16√n for n ≤ 10⁹,
-    * capped at the 4k–64k production band BASELINE.md names); past
-    * `CentroidCap × CentroidOccupancy` (~16M) vectors the right shape is
-    * NOT a bigger flat k but a two-level coarse quantizer: assign
-    * through the persisted IVF tower (probe the 64k top-level cells,
-    * then rank only that cell's sub-centroids) the way the `*_served`
-    * family already stages probes — assignment cost then n·(√k + k/√k),
-    * never n·k ([[twoLevelAssign]] is that path made executable, with
-    * the flat-vs-two-level agreement audit a deployment reads before
-    * switching). Inert at every verification scale (sf1 ≈ 20k vectors →
-    * k = 80 ≪ cap), proven by `CentroidCapSpec`. */
+    * capped at the 4k–64k production band BASELINE.md names). Past
+    * `CentroidCap × CentroidOccupancy` (~16M) vectors k stays at the cap
+    * and occupancy grows with the corpus; the flat assignment is the
+    * only path. It binds at no verification scale (sf1 ≈ 20k vectors →
+    * k = 80 ≪ cap); `CentroidCapSpec` pins the three regions. */
   private[operators] val CentroidCap = 65536
 
   /** THE family rule, capped: k = min(cap, max(floor, n / occupancy)).
@@ -394,312 +389,6 @@ object AnnQueries {
        |SELECT cluster, id_b AS vec_id, MIN(id_a) AS dup_of, MAX(cos) AS max_cos
        |FROM pairs WHERE cos >= $CosineThreshold
        |GROUP BY 1, 2 ORDER BY cluster, vec_id""".stripMargin
-
-  // --------------------------------------- two-level assignment (r10)
-
-  /** Width of the two-level demo tower: 16 fine centroids in 4 groups of
-    * 4 — k1 = k2 = √k, the balance that minimizes k1 + k/k1. */
-  private val TwoLevelK = 16
-  private val TwoLevelGroups = 4
-
-  /** §8k(bq) — TWO-LEVEL coarse assignment, the beyond-[[CentroidCap]]
-    * path made executable (the [[CentroidCap]] Scaladoc's design,
-    * FAISS's IMI/two-level-quantizer shape): instead of ranking all k
-    * fine centroids per vector (k·n cosines — the cost the cap bounds),
-    * each vector first picks its nearest GROUP REPRESENTATIVE (k1 = √k
-    * cosines; reps = each group's first centroid), then ranks only that
-    * group's k/k1 fine centroids — 2√k cosines per vector, which at the
-    * cap (k = 65536) is 512 vs 65536 per row. The trade is the standard
-    * quantizer approximation: a vector whose true nearest centroid sits
-    * in a group whose representative ranked behind another's lands in a
-    * different cell. This query IS that trade's audit — per fine cell:
-    * occupancy under flat argmax, occupancy under the two-level route,
-    * and how many vectors agree — the go/no-go table a deployment reads
-    * before switching the tower past the cap.
-    *
-    * The second-level ranking evaluates ONLY the chosen group's
-    * centroids: a lazily-branched CASE over per-group
-    * [[VectorExpressions.centroidCosines]] kernels (codegen CASE
-    * short-circuits, so per-row cost is k1 + k/k1 cosines, not k).
-    *
-    * Scale shape: two map-side kernel stages, two tiny aggregates over
-    * ≤k rows, one broadcast-size join — no corpus-keyed shuffle at all
-    * beyond the cell-keyed counts. */
-  def twoLevelAssign(spark: SparkSession, dir: String): DataFrame = {
-    VectorExpressions.register(spark)
-    implicit val s: SparkSession = spark
-    val t = Tables(dir)
-    import spark.implicits._
-    val cents = t.embeddings.where(col("vec_id") < TwoLevelK)
-      .select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1).map(_._2).toSeq
-    require(cents.length == TwoLevelK,
-      s"two-level audit needs the $TwoLevelK seed vectors (vec_id < $TwoLevelK); " +
-        s"corpus has only ${cents.length} — the rest of the family degrades to " +
-        s"the $NCentroids-centroid floor, this audit does not")
-    // r11: the navigation comes from the SAME parameterized builder the
-    // production route uses (⌈√16⌉ = 4 groups of 4 = the toy geometry),
-    // so this registered audit exercises the production branch
-    val flatCos = VectorExpressions.centroidCosines(col("embedding"), cents)
-    val assigned = assignNearest(t.embeddings, cents, out = "two", routeAt = 1)
-      .withColumn("flat", (array_position(flatCos, array_max(flatCos)) - 1).cast("int"))
-      .select(col("vec_id"), col("flat"), col("two"))
-    val byFlat = assigned.groupBy(col("flat").as("cluster"))
-      .agg(count(lit(1)).as("n_flat"),
-        sum(when(col("two") === col("flat"), 1L).otherwise(0L)).as("n_agree"))
-    val byTwo = assigned.groupBy(col("two").as("cluster"))
-      .agg(count(lit(1)).as("n_two"))
-    byFlat.join(byTwo, Seq("cluster"), "full_outer")
-      .select(col("cluster"),
-        coalesce(col("n_flat"), lit(0L)).as("n_flat"),
-        coalesce(col("n_two"), lit(0L)).as("n_two"),
-        coalesce(col("n_agree"), lit(0L)).as("n_agree"))
-      .withColumn("agree_pm",
-        when(col("n_flat") > 0, expr("n_agree * 1000 div n_flat")).otherwise(lit(0L)))
-  }
-
-  private def twoLevelSql = {
-    val perGroup = TwoLevelK / TwoLevelGroups
-    s"""WITH cents AS (
-       |  SELECT vec_id AS cid, embedding AS c FROM embeddings WHERE vec_id < $TwoLevelK),
-       |reps AS (SELECT cid // $perGroup AS grp, c FROM cents WHERE cid % $perGroup = 0),
-       |acc AS (
-       |  SELECT e.vec_id, cid, ${cosChainDuck("e.embedding", "c")} AS ccos
-       |  FROM embeddings e CROSS JOIN cents),
-       |flat AS (
-       |  SELECT vec_id, cid AS flat FROM (
-       |    SELECT vec_id, cid, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cid) AS rn
-       |    FROM acc) x WHERE rn = 1),
-       |gpick AS (
-       |  SELECT vec_id, grp FROM (
-       |    SELECT e.vec_id, r.grp,
-       |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
-       |        ORDER BY ${cosChainDuck("e.embedding", "r.c")} DESC, r.grp) AS rn
-       |    FROM embeddings e CROSS JOIN reps r) x WHERE rn = 1),
-       |two AS (
-       |  SELECT vec_id, cid AS two FROM (
-       |    SELECT a.vec_id, a.cid,
-       |      ROW_NUMBER() OVER (PARTITION BY a.vec_id ORDER BY a.ccos DESC, a.cid) AS rn
-       |    FROM acc a JOIN gpick g
-       |      ON g.vec_id = a.vec_id AND a.cid // $perGroup = g.grp) x WHERE rn = 1),
-       |av AS (
-       |  SELECT f.vec_id, f.flat, t.two FROM flat f JOIN two t USING (vec_id)),
-       |bf AS (SELECT flat AS cluster, COUNT(*) AS n_flat,
-       |         CAST(SUM(CASE WHEN two = flat THEN 1 ELSE 0 END) AS BIGINT) AS n_agree
-       |       FROM av GROUP BY 1),
-       |bt AS (SELECT two AS cluster, COUNT(*) AS n_two FROM av GROUP BY 1)
-       |SELECT COALESCE(bf.cluster, bt.cluster) AS cluster,
-       |  COALESCE(n_flat, 0) AS n_flat, COALESCE(n_two, 0) AS n_two,
-       |  COALESCE(n_agree, 0) AS n_agree,
-       |  CASE WHEN COALESCE(n_flat, 0) > 0
-       |       THEN COALESCE(n_agree, 0) * 1000 // n_flat ELSE 0 END AS agree_pm
-       |FROM bf FULL OUTER JOIN bt ON bf.cluster = bt.cluster
-       |ORDER BY cluster""".stripMargin
-  }
-
-  /** §8k(bq²) r11 — IVF top-k END-TO-END through the two-level tower:
-    * the complete retrieval path a beyond-[[CentroidCap]] deployment
-    * runs, on the SCALED tower (k = scaledK ∝ corpus, k1 = ⌈√k⌉ — the
-    * production geometry, forced through the two-level route so it is
-    * oracled at every verification scale; at the sf floors k = 8 →
-    * k1 = 3 groups of 3). Corpus vectors land in their two-level cell
-    * ([[assignNearest]] with routeAt = 1); probes NAVIGATE the same way
-    * a two-level quantizer serves: nearest group representative first,
-    * then the [[NProbeBuckets]] best fine cells WITHIN that group
-    * (2√k + nprobe work per probe — the probe never sees the other
-    * groups' cells, which is exactly the quantizer's approximation and
-    * why [[twoLevelAssign]]'s agreement table is the go/no-go read).
-    * Scoring, tie rules, and the bounded-heap top-k are [[ivfTopK]]'s.
-    *
-    * Scale shape: identical to `ann_ivf_topk` — two map-side kernel
-    * stages, broadcast exploded probes, one cluster-keyed join, TopK
-    * exec, occupancy pinned by k ∝ corpus; only the assignment
-    * arithmetic differs (√k-branched kernels instead of one k-wide
-    * kernel). An earlier FIXED-k toy form measured 9.9 s / 9.5× at sf1
-    * (fixed k ⇒ per-probe candidates ∝ corpus — the quadratic class
-    * the scaled rule exists to avoid); this form is the scaled one. */
-  def twoLevelTopK(spark: SparkSession, dir: String): DataFrame = {
-    VectorExpressions.register(spark)
-    implicit val s: SparkSession = spark
-    val t = Tables(dir)
-    val cents = centroids(spark, t).toSeq.map(_._2) // the SCALED tower: k ∝ corpus
-    val probes = t.embeddings.where(col("vec_id") % ProbeMod === 0)
-      .select(col("vec_id").as("probe_id"), col("embedding"))
-    val scored = twoLevelCandidateFrame(probes, t.embeddings, cents)
-    TopK.perKeyExec(scored, "probe_id", "cos", "vec_id", TopKK)
-      .select(col("probe_id"), col("rank"), col("vec_id"), col("cos"))
-  }
-
-  /** The two-level candidate frame shared by [[twoLevelTopK]], its
-    * recall audit and [[TwoLevelBench]] — all score the IDENTICAL
-    * (probe, candidate, cos) set. Corpus assignment
-    * and probe navigation run on the single-pass kernels
-    * ([[VectorExpressions.twoLevelAssignCol]]/[[VectorExpressions.twoLevelProbeCol]]);
-    * `probeFrame` needs (probe_id, embedding). */
-  private[graft] def twoLevelCandidateFrame(probeFrame: DataFrame, corpus: DataFrame,
-      cents: Seq[Array[Float]]): DataFrame = {
-    val (perGroup, _) = twoLevelGeometry(cents.length)
-    val side = corpus
-      .withColumn("cluster",
-        VectorExpressions.twoLevelAssignCol(col("embedding"), cents, perGroup))
-      .withColumn("c_norm", sqrt(VectorExpressions.dot(col("embedding"), col("embedding"))))
-      .select(col("vec_id"), col("embedding"), col("cluster"), col("c_norm"))
-    val p0 = probeFrame
-      .withColumn("top_c",
-        VectorExpressions.twoLevelProbeCol(col("embedding"), cents, perGroup, NProbeBuckets))
-      .select(col("probe_id"), col("embedding").as("p_emb"), explode(col("top_c")).as("cluster"))
-      .withColumn("p_norm", sqrt(VectorExpressions.dot(col("p_emb"), col("p_emb"))))
-    side.join(broadcast(p0), Seq("cluster"))
-      .where(col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id"),
-        round(VectorExpressions.dot(col("embedding"), col("p_emb"))
-          / (col("c_norm") * col("p_norm")), 6).as("cos"))
-  }
-
-  private def twoLevelTopKSql = {
-    // runtime geometry, same integer arithmetic as twoLevelGeometry:
-    // k from the scaled rule, k1 = ceil(sqrt(k)) (IEEE sqrt of a small
-    // int is correctly rounded in both engines; exact on perfect
-    // squares), pg = (k + k1 - 1) // k1
-    s"""WITH geo AS (
-       |  SELECT k, (k + CAST(CEIL(SQRT(k)) AS BIGINT) - 1) // CAST(CEIL(SQRT(k)) AS BIGINT) AS pg
-       |  FROM (SELECT ${scaledKSql} AS k FROM embeddings)),
-       |cents AS (
-       |  SELECT vec_id AS cid, embedding AS c FROM embeddings
-       |  WHERE vec_id < (SELECT k FROM geo)),
-       |reps AS (SELECT cid // (SELECT pg FROM geo) AS grp, c FROM cents
-       |         WHERE cid % (SELECT pg FROM geo) = 0),
-       |acc AS (
-       |  SELECT e.vec_id, cid, ${cosChainDuck("e.embedding", "c")} AS ccos
-       |  FROM embeddings e CROSS JOIN cents),
-       |gpick AS (
-       |  SELECT vec_id, grp FROM (
-       |    SELECT e.vec_id, r.grp,
-       |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
-       |        ORDER BY ${cosChainDuck("e.embedding", "r.c")} DESC, r.grp) AS rn
-       |    FROM embeddings e CROSS JOIN reps r) x WHERE rn = 1),
-       |corpus AS (
-       |  SELECT vec_id, cid AS cluster FROM (
-       |    SELECT a.vec_id, a.cid,
-       |      ROW_NUMBER() OVER (PARTITION BY a.vec_id ORDER BY a.ccos DESC, a.cid) AS rn
-       |    FROM acc a JOIN gpick g
-       |      ON g.vec_id = a.vec_id AND a.cid // (SELECT pg FROM geo) = g.grp) x WHERE rn = 1),
-       |probe_assign AS (
-       |  SELECT vec_id AS probe_id, cid AS cluster FROM (
-       |    SELECT a.vec_id, a.cid,
-       |      ROW_NUMBER() OVER (PARTITION BY a.vec_id ORDER BY a.ccos DESC, a.cid) AS rn
-       |    FROM acc a JOIN gpick g
-       |      ON g.vec_id = a.vec_id AND a.cid // (SELECT pg FROM geo) = g.grp
-       |    WHERE a.vec_id % $ProbeMod = 0) x WHERE rn <= $NProbeBuckets),
-       |scored AS (
-       |  SELECT probe_id, e.vec_id, ROUND(${cosChainDuck("e.embedding", "p.embedding")}, 6) AS cos
-       |  FROM probe_assign pa
-       |  JOIN corpus cl ON cl.cluster = pa.cluster
-       |  JOIN embeddings e ON e.vec_id = cl.vec_id
-       |  JOIN embeddings p ON p.vec_id = pa.probe_id
-       |  WHERE e.vec_id <> pa.probe_id),
-       |ranked AS (
-       |  SELECT probe_id, vec_id, cos,
-       |    ROW_NUMBER() OVER (PARTITION BY probe_id ORDER BY cos DESC, vec_id) AS rank
-       |  FROM scored)
-       |SELECT probe_id, rank, vec_id, cos FROM ranked WHERE rank <= $TopKK
-       |ORDER BY probe_id, rank""".stripMargin
-  }
-
-  /** §8y(eh) r12 — RECALL@k of the two-level tower against the exact
-    * top-k, on the fixed audit probe draw: the go/no-go number for
-    * routing a deployment through the √k navigation ([[twoLevelTopK]] is
-    * the path; this is its [[ivfRecall]]). Per probe: how many of the
-    * exact k nearest survive retrieval when BOTH corpus and probes
-    * navigate the two-level quantizer — group representative first, then
-    * the nprobe best cells within that group. A probe whose true
-    * neighbors live across a group boundary loses them here and not in
-    * the flat tower — the navigation's EXPECTED failure mode, and this
-    * table is where it would show up first. It is not an inequality:
-    * the forced-route fixture measured two-level recall ABOVE flat at
-    * 2M vectors (1000‰ vs 840‰ — flat's top-nprobe-of-k pruning can
-    * clip more neighbor mass than group-then-cells at equal nprobe), so
-    * read the table, don't assume the sign.
-    *
-    * Scale shape: truth = budget × corpus (linear, the r10 audit
-    * discipline); two-level side = the same map-side kernels as
-    * `ann_ivf_topk_twolevel` over the budgeted probe set. The forced-
-    * route wall-clock/recall reading at 2M vectors lives in BASELINE.md
-    * ([[TwoLevelBench]]); this query pins the same recall arithmetic to
-    * the DuckDB oracle at every gate SF. */
-  def twoLevelRecall(spark: SparkSession, dir: String): DataFrame = {
-    VectorExpressions.register(spark)
-    implicit val s: SparkSession = spark
-    val t = Tables(dir)
-    val cents = centroids(spark, t).toSeq.map(_._2)
-    val exact = TopK.perKeyExec(scoredProbes(t, audited = true),
-        "probe_id", "cos", "vec_id", TopKK)
-      .select("probe_id", "vec_id")
-    val probes = auditRestrict(t.embeddings.where(col("vec_id") % ProbeMod === 0))
-      .select(col("vec_id").as("probe_id"), col("embedding"))
-    val tl = TopK.perKeyExec(
-        twoLevelCandidateFrame(probes, t.embeddings, cents),
-        "probe_id", "cos", "vec_id", TopKK)
-      .select("probe_id", "vec_id")
-    val overlap = exact.join(tl, Seq("probe_id", "vec_id"))
-      .groupBy("probe_id").agg(count(lit(1)).as("n_overlap"))
-    exact.select("probe_id").distinct()
-      .join(overlap, Seq("probe_id"), "left")
-      .select(col("probe_id"),
-        coalesce(col("n_overlap"), lit(0L)).as("n_overlap"))
-      .withColumn("recall_pm", expr(s"n_overlap * 1000 div $TopKK"))
-  }
-
-  // def, not val: embeds bruteForceSql, declared later in the object
-  private def twoLevelRecallSql =
-    s"""WITH $auditIdsCte,
-       |geo AS (
-       |  SELECT k, (k + CAST(CEIL(SQRT(k)) AS BIGINT) - 1) // CAST(CEIL(SQRT(k)) AS BIGINT) AS pg
-       |  FROM (SELECT ${scaledKSql} AS k FROM embeddings)),
-       |cents AS (
-       |  SELECT vec_id AS cid, embedding AS c FROM embeddings
-       |  WHERE vec_id < (SELECT k FROM geo)),
-       |reps AS (SELECT cid // (SELECT pg FROM geo) AS grp, c FROM cents
-       |         WHERE cid % (SELECT pg FROM geo) = 0),
-       |acc AS (
-       |  SELECT e.vec_id, cid, ${cosChainDuck("e.embedding", "c")} AS ccos
-       |  FROM embeddings e CROSS JOIN cents),
-       |gpick AS (
-       |  SELECT vec_id, grp FROM (
-       |    SELECT e.vec_id, r.grp,
-       |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
-       |        ORDER BY ${cosChainDuck("e.embedding", "r.c")} DESC, r.grp) AS rn
-       |    FROM embeddings e CROSS JOIN reps r) x WHERE rn = 1),
-       |corpus AS (
-       |  SELECT vec_id, cid AS cluster FROM (
-       |    SELECT a.vec_id, a.cid,
-       |      ROW_NUMBER() OVER (PARTITION BY a.vec_id ORDER BY a.ccos DESC, a.cid) AS rn
-       |    FROM acc a JOIN gpick g
-       |      ON g.vec_id = a.vec_id AND a.cid // (SELECT pg FROM geo) = g.grp) x WHERE rn = 1),
-       |probe_assign AS (
-       |  SELECT vec_id AS probe_id, cid AS cluster FROM (
-       |    SELECT a.vec_id, a.cid,
-       |      ROW_NUMBER() OVER (PARTITION BY a.vec_id ORDER BY a.ccos DESC, a.cid) AS rn
-       |    FROM acc a JOIN gpick g
-       |      ON g.vec_id = a.vec_id AND a.cid // (SELECT pg FROM geo) = g.grp
-       |    JOIN audit_ids ai ON ai.vec_id = a.vec_id) x WHERE rn <= $NProbeBuckets),
-       |tl AS (
-       |  SELECT probe_id, vec_id FROM (
-       |    SELECT probe_id, e.vec_id,
-       |      ROW_NUMBER() OVER (PARTITION BY probe_id
-       |        ORDER BY ROUND(${cosChainDuck("e.embedding", "p.embedding")}, 6) DESC, e.vec_id) AS rank
-       |    FROM probe_assign pa
-       |    JOIN corpus cl ON cl.cluster = pa.cluster
-       |    JOIN embeddings e ON e.vec_id = cl.vec_id
-       |    JOIN embeddings p ON p.vec_id = pa.probe_id
-       |    WHERE e.vec_id <> pa.probe_id) x WHERE rank <= $TopKK),
-       |ex AS (SELECT probe_id, vec_id FROM (${auditSqlRestrict(bruteForceSql).replace("\n", "\n     ")}) t1),
-       |ov AS (SELECT probe_id, COUNT(*) AS n_overlap
-       |       FROM ex JOIN tl USING (probe_id, vec_id) GROUP BY 1)
-       |SELECT p.probe_id, COALESCE(ov.n_overlap, 0) AS n_overlap,
-       |  COALESCE(ov.n_overlap, 0) * 1000 // $TopKK AS recall_pm
-       |FROM (SELECT DISTINCT probe_id FROM ex) p
-       |LEFT JOIN ov USING (probe_id) ORDER BY probe_id""".stripMargin
 
   // ------------------------------------------- cross-modal bridge (r10)
 
@@ -1192,16 +881,6 @@ object AnnQueries {
 
   // ------------------------------------------------------------------ IVF
 
-  /** Literal centroid vectors — the bounded driver-side structure (id
-    * asc). r09: SCALED via [[scaledK]] — SemDeDup/FAISS's
-    * k-grows-with-the-corpus rule applied to the whole seed-centroid
-    * family, so per-cluster occupancy (and with it every bucket-pruned
-    * candidate set) stays pinned as the corpus grows; r10: CAPPED at
-    * [[CentroidCap]] so coarse assignment stays ≤ cap·n cosines and the
-    * collected matrix bounded (see the cap's Scaladoc for the
-    * beyond-cap two-level path). Oracle-identical at the ≤2000-vector
-    * verification scales, where the floor governs; every family oracle
-    * carries the same [[scaledKSql]] predicate. */
   /** Per-base-dir memo of the collected centroid table. The sizing
     * count() plus the ≤k-row collect are bounded, but they are a full
     * corpus scan + a job PER CALL — and `BitextQueries.mineBatch` calls
@@ -1215,6 +894,15 @@ object AnnQueries {
   private val centroidMemo =
     new java.util.concurrent.ConcurrentHashMap[String, (String, Array[(Long, Array[Float])])]()
 
+  /** Literal centroid vectors — the bounded driver-side structure (id
+    * asc). r09: SCALED via [[scaledK]] — SemDeDup/FAISS's
+    * k-grows-with-the-corpus rule applied to the whole seed-centroid
+    * family, so per-cluster occupancy (and with it every bucket-pruned
+    * candidate set) stays pinned as the corpus grows; r10: CAPPED at
+    * [[CentroidCap]] so coarse assignment stays ≤ cap·n cosines and the
+    * collected matrix bounded. Oracle-identical at the ≤2000-vector
+    * verification scales, where the floor governs; every family oracle
+    * carries the same [[scaledKSql]] predicate. */
   private[operators] def centroids(spark: SparkSession, t: Tables): Array[(Long, Array[Float])] = {
     val sig = Stage.signature(s"${t.dir}/embeddings.parquet")
     centroidMemo.compute(t.dir, { (_, cached) =>
@@ -1229,85 +917,28 @@ object AnnQueries {
     })._2
   }
 
-  /** argmax-cosine cluster id off the [[VectorExpressions.centroidCosines]]
-    * kernel (first index on ties — the family rule; the composed
-    * array-of-cosines form breaks codegen past a few dozen centroids). */
-  private def nearestCluster(cents: Seq[Array[Float]]): Column = {
+  /** Coarse assignment — the family's single entry point for "add a
+    * `cluster` column": argmax cosine off the
+    * [[VectorExpressions.centroidCosines]] kernel, first index on ties
+    * (the family rule; the composed array-of-cosines form breaks codegen
+    * past a few dozen centroids). One k-wide kernel per row; [[scaledK]]
+    * keeps k ≤ [[CentroidCap]]. */
+  private[operators] def assignNearest(df: DataFrame, cents: Seq[Array[Float]]): DataFrame = {
     val cc = VectorExpressions.centroidCosines(col("embedding"), cents)
-    (array_position(cc, array_max(cc)) - 1).cast("int")
+    df.withColumn("cluster", (array_position(cc, array_max(cc)) - 1).cast("int"))
   }
 
-  /** r11: the production two-level route fires when the tower is at the
-    * flat-assignment cost ceiling — i.e. exactly when [[scaledK]] hits
-    * [[CentroidCap]] (corpus ≥ cap × occupancy ≈ 16.4M vectors): past it
-    * flat assignment is cap·n cosines/row while the two-level navigation
-    * is ~2√cap. Inert below the cap (every verification scale), which
-    * keeps all committed oracles and plan anchors bit-identical;
-    * TwoLevelRouteSpec forces the route at a toy threshold and pins
-    * per-vector equality with the independently composed form. */
-  private[operators] val TwoLevelRouteK: Int = CentroidCap
-
-  /** Shared two-level geometry: (perGroup, nGroups) for a k-cell tower —
-    * k1 = ⌈√k⌉ consecutive blocks of ⌈k/k1⌉ (the same integer arithmetic
-    * the DuckDB twins carry: pg = (k + k1 − 1) // k1). */
-  private[operators] def twoLevelGeometry(k: Int): (Int, Int) = {
-    val k1 = math.ceil(math.sqrt(k.toDouble)).toInt
-    val perGroup = math.ceil(k.toDouble / k1).toInt
-    (perGroup, (k + perGroup - 1) / perGroup)
-  }
-
-
-  /** ROUTED coarse assignment — the family's single entry point for
-    * "add a `cluster` column": flat kernel argmax below [[TwoLevelRouteK]]
-    * (bit-identical to the pre-r11 form), the two-level navigation at or
-    * above it via the single-pass [[VectorExpressions.twoLevelAssignCol]]
-    * kernel (a composed per-group CASE form was measured and rejected:
-    * projection collapse re-derives the rep kernel per tested branch —
-    * 11 s vs sub-second for one sf1 assignment pass; TwoLevelRouteSpec
-    * pins the kernel's bit-equality to the composed form). `routeAt` is
-    * a test seam; production callers take the default. */
-  private[operators] def assignNearest(df: DataFrame, cents: Seq[Array[Float]],
-      out: String = "cluster", routeAt: Int = TwoLevelRouteK): DataFrame =
-    if (cents.length < routeAt) df.withColumn(out, nearestCluster(cents))
-    else df.withColumn(out, VectorExpressions.twoLevelAssignCol(
-      col("embedding"), cents, twoLevelGeometry(cents.length)._1))
-
-  /** ROUTED probe-side navigation — [[assignNearest]]'s twin for "which
-    * nprobe cells does this probe search": below [[TwoLevelRouteK]] the
-    * flat ranking (cos desc, centroid id asc) off ONE kernel evaluation
-    * (bit-identical to the pre-r11 form — transform-with-index so the
-    * k-wide fold runs once per row, not once per element); at or above
-    * it the two-level navigation (best group rep, then the nprobe best
-    * cells WITHIN that group via [[VectorExpressions.twoLevelProbeCol]]),
-    * so above the cap a probe ranks 2√k cells, not k, AND probes search
-    * the same quantizer the corpus was assigned under — a mixed
-    * flat-probe/two-level-corpus tower would silently misroute probes
-    * into cells their neighbors never landed in. Both branches emit the
-    * same `array<struct<…, idx>>` shape (consumers read only `x.idx`).
-    * `routeAt` is a test seam; production callers take the default.
-    * `width` is the navigation fan-out (how many cells the probe visits):
-    * the serving family takes the [[NProbeBuckets]] default; the tuning
-    * curve asks for its widest arm so every caller — whatever its
-    * nprobe — navigates the SAME routed quantizer as the corpus. */
-  private def probeTopC(cents: Seq[Array[Float]],
-      routeAt: Int = TwoLevelRouteK, width: Int = NProbeBuckets): Column =
-    if (cents.length < routeAt)
-      slice(reverse(array_sort(transform(
-        VectorExpressions.centroidCosines(col("embedding"), cents),
-        (c, i) => struct(c.as("cos"), (-i).as("nidx"), i.as("idx"))))), 1, width)
-    else
-      transform(
-        VectorExpressions.twoLevelProbeCol(col("embedding"), cents,
-          twoLevelGeometry(cents.length)._1, width),
-        c => struct(c.as("idx")))
-
-  /** Test seams for [[probeTopC]] (the spec forces the route below the
-    * cap and pins it to the driver recompute; the default seam pins the
-    * flat branch bit-identical to the committed family form). */
-  private[operators] def probeTopCForced(cents: Seq[Array[Float]]): Column =
-    probeTopC(cents, routeAt = 0)
-  private[operators] def probeTopCDefault(cents: Seq[Array[Float]]): Column =
-    probeTopC(cents)
+  /** Probe-side twin of [[assignNearest]] — "which cells does this probe
+    * search": the ranking (cos desc, centroid id asc) off ONE kernel
+    * evaluation (transform-with-index so the k-wide fold runs once per
+    * row, not once per element), cut at `width` cells. Emits
+    * `array<struct<cos, nidx, idx>>`; consumers read only `x.idx`. The
+    * serving family takes the [[NProbeBuckets]] width; the tuning curve
+    * asks for its widest arm and slices each nprobe prefix from it. */
+  private[operators] def probeTopC(cents: Seq[Array[Float]], width: Int = NProbeBuckets): Column =
+    slice(reverse(array_sort(transform(
+      VectorExpressions.centroidCosines(col("embedding"), cents),
+      (c, i) => struct(c.as("cos"), (-i).as("nidx"), i.as("idx"))))), 1, width)
 
   /** §8n(cg) — per-cluster MEDOID prototypes: every vector assigned to
     * its nearest seed centroid (the `ann_ivf_topk` assignment — same
@@ -3353,12 +2984,8 @@ object AnnQueries {
     val corpus = assignNearest(t.embeddings, cents)
       .select(col("vec_id"), col("embedding"), col("cluster"),
         sqrt(VectorExpressions.dot(col("embedding"), col("embedding"))).as("c_norm"))
-    // Probe navigation through the ROUTED quantizer (probeTopC at the
-    // curve's widest arm), not an inline flat top-c: above the cap the
-    // corpus assignment below is two-level, and a flat-probe arm would
-    // tune nprobe against cells the corpus never landed in. Below the
-    // cap (every committed oracle) the routed form is bit-identical to
-    // the flat ranking, so the DuckDB twin's flat pa CTE still matches.
+    // probe cells ranked once at the curve's widest arm; each arm keeps
+    // its crank prefix
     val probes = auditRestrict(t.embeddings.where(col("vec_id") % ProbeMod === 0))
       .withColumn("top_c", probeTopC(cents, width = maxP))
       .select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"),
@@ -3474,9 +3101,6 @@ object AnnQueries {
     "mm_ann_crossmodal" -> Q(crossModalTopK _, crossModalSql,
       Seq(col("probe_id"), col("rank"))),
     "mm_pair_integrity" -> Q(pairIntegrity _, pairIntegritySql, Seq(col("modality"))),
-    "ann_twolevel_assign" -> Q(twoLevelAssign _, twoLevelSql, Seq(col("cluster"))),
-    "ann_ivf_topk_twolevel" -> Q(twoLevelTopK _, twoLevelTopKSql,
-      Seq(col("probe_id"), col("rank"))),
     "ann_ivf_range" -> Q(ivfRangeSearch _, ivfRangeSql,
       Seq(col("probe_id"), col("cos").desc, col("vec_id"))),
     "ann_cluster_medoids" -> Q(clusterMedoids _, clusterMedoidsSql, Seq(col("cluster"))),
@@ -3489,6 +3113,5 @@ object AnnQueries {
     "ann_matryoshka_refine" -> Q(matryoshkaRefine _, mrlRefineSql,
       Seq(col("probe_id"), col("rank"))),
     "ann_probe_curve" -> Q(probeCurve _, probeCurveSql, Seq(col("nprobe"))),
-    "ann_twolevel_recall" -> Q(twoLevelRecall _, twoLevelRecallSql, Seq(col("probe_id"))),
   )
 }

@@ -243,18 +243,8 @@ object CorpusQueries {
     * vocab cap. */
   private[graft] val SubwordVocabSize = 24
 
-  /** Subword-ID encoding — the tensor a trainer actually consumes,
-    * closing the tokenizer ring (train → segment → encode): the trained
-    * merges segment the distinct-word table once, subwords rank into a
-    * corpus-frequency vocabulary (top-K, deterministic ties), every word
-    * maps to its id sequence, and documents reduce to id-sequence stats
-    * plus the head — the docs_tokenize_ids shape, at the subword unit.
-    * All vocabulary objects are word/subword-bounded (broadcast); the
-    * corpus-side work is one posexplode + keyed re-aggregation on
-    * doc_id. Subwords beyond the top-K map to 0 (OOV) — real, because
-    * the vocab is truncated like any production tokenizer's. */
   /** Apply a merge list to a frame's `syms` array column, in rank order
-    * (shared by the segment / ids queries and the vocab fitter). */
+    * (shared by the segment and ids queries). */
   private[graft] def foldMerges(df: DataFrame, merges: Seq[(String, String)]): DataFrame =
     merges.foldLeft(df) { case (d, (a, b)) =>
       val (la, lb) = (lit(a), lit(b))
@@ -266,25 +256,16 @@ object CorpusQueries {
             .otherwise(concat(acc, array(sym)))))
     }
 
-  /** The truncated subword→id vocabulary as a driver map — FITTED
-    * offline (one corpus pass), the stream-serving analogue of
-    * [[trainedBpeMerges]]: bounded at [[SubwordVocabSize]] entries by
-    * construction. */
-  def trainedSubwordVocab(spark: SparkSession, dir: String): Map[String, Long] = {
-    implicit val s: SparkSession = spark
-    val merges = trainedBpeMerges(spark, dir)
-    val wf = Tables(dir).documents
-      .select(explode(words(col("text"))).as("word"))
-      .groupBy(col("word")).agg(count(lit(1)).as("wfreq"))
-      .withColumn("syms", filter(split(col("word"), ""), c => c =!= ""))
-    foldMerges(wf, merges)
-      .select(col("wfreq"), explode(col("syms")).as("sub"))
-      .groupBy(col("sub")).agg(sum(col("wfreq")).as("n"))
-      .orderBy(col("n").desc, col("sub")).limit(SubwordVocabSize)
-      .collect().zipWithIndex
-      .map { case (r, i) => r.getString(0) -> (i + 1L) }.toMap
-  }
-
+  /** Subword-ID encoding — the tensor a trainer actually consumes,
+    * closing the tokenizer ring (train → segment → encode): the trained
+    * merges segment the distinct-word table once, subwords rank into a
+    * corpus-frequency vocabulary (top-K, deterministic ties), every word
+    * maps to its id sequence, and documents reduce to id-sequence stats
+    * plus the head — the docs_tokenize_ids shape, at the subword unit.
+    * All vocabulary objects are word/subword-bounded (broadcast); the
+    * corpus-side work is one posexplode + keyed re-aggregation on
+    * doc_id. Subwords beyond the top-K map to 0 (OOV) — real, because
+    * the vocab is truncated like any production tokenizer's. */
   def bpeIds(spark: SparkSession, dir: String): DataFrame = {
     implicit val s: SparkSession = spark
     val merges = trainedBpeMerges(spark, dir)

@@ -46,15 +46,6 @@ object Ontology {
     walk(root, "")
   }
 
-  /** Leaf concept → full concept path. */
-  def conceptPaths(root: OntNode, sep: String = "\\"): Seq[(String, String)] = {
-    def walk(n: OntNode, prefix: String): Seq[(String, String)] = {
-      val p = s"$prefix$sep${n.name}$sep"
-      n.concepts.map(_ -> p) ++ n.children.flatMap(walk(_, p.dropRight(1)))
-    }
-    walk(root, "")
-  }
-
   /** (concept, ancestorPath) for every tree level the concept rolls into —
     * joining facts on this mapping and grouping by path yields counts at
     * every node of the tree in one aggregation. */

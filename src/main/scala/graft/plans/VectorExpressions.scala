@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, 
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType}
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
 
 /** Cosine similarity over two `array<float>` columns as a native Catalyst
   * expression with whole-stage codegen (SURVEY §4: vector ops must not fall
@@ -447,196 +447,6 @@ case class CentroidCosines(child: Expression, matrix: Array[Array[Float]])
     copy(child = newChild)
 }
 
-/** Two-level coarse assignment in ONE generated pass (r11): nearest group
-  * representative (rows `g·perGroup` of the build-time-constant matrix),
-  * then argmax over only that group's rows — the beyond-CentroidCap
-  * navigation as a single int-valued kernel. Exists for the same reason
-  * as [[CentroidCosines]]: the composed form (a per-group CASE chain over
-  * per-group kernels) loses the materialized group pick to projection
-  * collapse, re-deriving the rep kernel per tested branch and falling
-  * out of whole-stage codegen (measured 11 s vs sub-second for one sf1
-  * assignment pass). Per-cosine arithmetic is EXACTLY [[CosineSim]]'s
-  * loop; argmax keeps the first index on ties (strict `>`), so the cell
-  * id is bit-identical to the composed form and the DuckDB window chain. */
-case class TwoLevelAssign(child: Expression, matrix: Array[Array[Float]], perGroup: Int)
-    extends UnaryExpression {
-  require(perGroup > 0 && matrix.nonEmpty, "two-level tower needs rows and a positive group width")
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "graft_twolevel_assign"
-  private def nGroups: Int = (matrix.length + perGroup - 1) / perGroup
-
-  private def cosRow(x: ArrayData, c: Array[Float]): Double = {
-    val n = math.min(x.numElements(), c.length)
-    var dot = 0.0; var nx = 0.0; var ny = 0.0; var i = 0
-    while (i < n) {
-      val xi = x.getFloat(i).toDouble; val yi = c(i).toDouble
-      dot += xi * yi; nx += xi * xi; ny += yi * yi; i += 1
-    }
-    if (nx == 0.0 || ny == 0.0) 0.0 else dot / (math.sqrt(nx) * math.sqrt(ny))
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val x = input.asInstanceOf[ArrayData]
-    var bg = 0; var bgc = cosRow(x, matrix(0))
-    var g = 1
-    while (g < nGroups) {
-      val c = cosRow(x, matrix(g * perGroup))
-      if (c > bgc) { bgc = c; bg = g }
-      g += 1
-    }
-    val lo = bg * perGroup; val hi = math.min(lo + perGroup, matrix.length)
-    var bi = lo; var bic = cosRow(x, matrix(lo)); var i = lo + 1
-    while (i < hi) {
-      val c = cosRow(x, matrix(i))
-      if (c > bic) { bic = c; bi = i }
-      i += 1
-    }
-    bi
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val mat = ctx.addReferenceObj("twoLevelMatrix", matrix, "float[][]")
-      val fn = ctx.addNewFunction("graftTwoLevelCos",
-        s"""
-           |private double graftTwoLevelCos(org.apache.spark.sql.catalyst.util.ArrayData a, float[] c) {
-           |  int n = java.lang.Math.min(a.numElements(), c.length);
-           |  double dot = 0.0; double nx = 0.0; double ny = 0.0;
-           |  for (int i = 0; i < n; i++) {
-           |    double xi = (double) a.getFloat(i); double yi = (double) c[i];
-           |    dot += xi * yi; nx += xi * xi; ny += yi * yi;
-           |  }
-           |  return (nx == 0.0 || ny == 0.0) ? 0.0 : dot / (java.lang.Math.sqrt(nx) * java.lang.Math.sqrt(ny));
-           |}
-         """.stripMargin)
-      val bg = ctx.freshName("bg"); val bgc = ctx.freshName("bgc"); val g = ctx.freshName("g")
-      val lo = ctx.freshName("lo"); val hi = ctx.freshName("hi")
-      val bi = ctx.freshName("bi"); val bic = ctx.freshName("bic")
-      val i = ctx.freshName("i"); val cv = ctx.freshName("cv")
-      s"""
-         |int $bg = 0; double $bgc = $fn($a, $mat[0]);
-         |for (int $g = 1; $g < ${nGroups}; $g++) {
-         |  double $cv = $fn($a, $mat[$g * $perGroup]);
-         |  if ($cv > $bgc) { $bgc = $cv; $bg = $g; }
-         |}
-         |int $lo = $bg * $perGroup;
-         |int $hi = java.lang.Math.min($lo + $perGroup, $mat.length);
-         |int $bi = $lo; double $bic = $fn($a, $mat[$lo]);
-         |for (int $i = $lo + 1; $i < $hi; $i++) {
-         |  double $cv = $fn($a, $mat[$i]);
-         |  if ($cv > $bic) { $bic = $cv; $bi = $i; }
-         |}
-         |${ev.value} = $bi;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Two-level PROBE navigation (r11): the group pick of [[TwoLevelAssign]],
-  * then the `nprobe` best cells WITHIN the matched group as an array of
-  * global cell ids ordered (cos desc, cell asc) — the serving side of the
-  * beyond-cap tower. Same kernel arithmetic and tie rule. */
-case class TwoLevelProbe(child: Expression, matrix: Array[Array[Float]],
-                         perGroup: Int, nprobe: Int)
-    extends UnaryExpression {
-  require(perGroup > 0 && nprobe > 0 && matrix.nonEmpty, "bad two-level probe geometry")
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "graft_twolevel_probe"
-  private def nGroups: Int = (matrix.length + perGroup - 1) / perGroup
-
-  private def cosRow(x: ArrayData, c: Array[Float]): Double = {
-    val n = math.min(x.numElements(), c.length)
-    var dot = 0.0; var nx = 0.0; var ny = 0.0; var i = 0
-    while (i < n) {
-      val xi = x.getFloat(i).toDouble; val yi = c(i).toDouble
-      dot += xi * yi; nx += xi * xi; ny += yi * yi; i += 1
-    }
-    if (nx == 0.0 || ny == 0.0) 0.0 else dot / (math.sqrt(nx) * math.sqrt(ny))
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val x = input.asInstanceOf[ArrayData]
-    var bg = 0; var bgc = cosRow(x, matrix(0))
-    var g = 1
-    while (g < nGroups) {
-      val c = cosRow(x, matrix(g * perGroup))
-      if (c > bgc) { bgc = c; bg = g }
-      g += 1
-    }
-    val lo = bg * perGroup; val hi = math.min(lo + perGroup, matrix.length)
-    val m = hi - lo
-    val cs = new Array[Double](m)
-    var i = 0
-    while (i < m) { cs(i) = cosRow(x, matrix(lo + i)); i += 1 }
-    val np = math.min(nprobe, m)
-    val used = new Array[Boolean](m)
-    val out = new Array[Int](np)
-    var r = 0
-    while (r < np) {
-      var arg = -1; var bc = 0.0
-      var j = 0
-      while (j < m) {
-        if (!used(j) && (arg == -1 || cs(j) > bc)) { bc = cs(j); arg = j }
-        j += 1
-      }
-      used(arg) = true; out(r) = lo + arg; r += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val mat = ctx.addReferenceObj("twoLevelProbeMatrix", matrix, "float[][]")
-      val fn = ctx.addNewFunction("graftTwoLevelProbeCos",
-        s"""
-           |private double graftTwoLevelProbeCos(org.apache.spark.sql.catalyst.util.ArrayData a, float[] c) {
-           |  int n = java.lang.Math.min(a.numElements(), c.length);
-           |  double dot = 0.0; double nx = 0.0; double ny = 0.0;
-           |  for (int i = 0; i < n; i++) {
-           |    double xi = (double) a.getFloat(i); double yi = (double) c[i];
-           |    dot += xi * yi; nx += xi * xi; ny += yi * yi;
-           |  }
-           |  return (nx == 0.0 || ny == 0.0) ? 0.0 : dot / (java.lang.Math.sqrt(nx) * java.lang.Math.sqrt(ny));
-           |}
-         """.stripMargin)
-      val bg = ctx.freshName("bg"); val bgc = ctx.freshName("bgc"); val g = ctx.freshName("g")
-      val lo = ctx.freshName("lo"); val hi = ctx.freshName("hi"); val m = ctx.freshName("m")
-      val cs = ctx.freshName("cs"); val np = ctx.freshName("np"); val used = ctx.freshName("used")
-      val out = ctx.freshName("out"); val r = ctx.freshName("r"); val arg = ctx.freshName("arg")
-      val bc = ctx.freshName("bc"); val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val cv = ctx.freshName("cv")
-      s"""
-         |int $bg = 0; double $bgc = $fn($a, $mat[0]);
-         |for (int $g = 1; $g < ${nGroups}; $g++) {
-         |  double $cv = $fn($a, $mat[$g * $perGroup]);
-         |  if ($cv > $bgc) { $bgc = $cv; $bg = $g; }
-         |}
-         |int $lo = $bg * $perGroup;
-         |int $hi = java.lang.Math.min($lo + $perGroup, $mat.length);
-         |int $m = $hi - $lo;
-         |double[] $cs = new double[$m];
-         |for (int $i = 0; $i < $m; $i++) $cs[$i] = $fn($a, $mat[$lo + $i]);
-         |int $np = java.lang.Math.min($nprobe, $m);
-         |boolean[] $used = new boolean[$m];
-         |int[] $out = new int[$np];
-         |for (int $r = 0; $r < $np; $r++) {
-         |  int $arg = -1; double $bc = 0.0;
-         |  for (int $j = 0; $j < $m; $j++) {
-         |    if (!$used[$j] && ($arg == -1 || $cs[$j] > $bc)) { $bc = $cs[$j]; $arg = $j; }
-         |  }
-         |  $used[$arg] = true; $out[$r] = $lo + $arg;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object VectorExpressions {
   /** Idempotent per-session registration; queries call this so the
     * functions exist no matter which session (driver-created included)
@@ -666,21 +476,6 @@ object VectorExpressions {
           .map(j => arr.getArray(j).toFloatArray()).toArray
         CentroidCosines(exprs.head, mat)
       }, "built-in")
-    registry.createOrReplaceTempFunction("graft_twolevel_assign",
-      exprs => {
-        val arr = exprs(1).eval().asInstanceOf[ArrayData]
-        val mat = (0 until arr.numElements())
-          .map(j => arr.getArray(j).toFloatArray()).toArray
-        TwoLevelAssign(exprs.head, mat, exprs(2).eval().asInstanceOf[Int])
-      }, "built-in")
-    registry.createOrReplaceTempFunction("graft_twolevel_probe",
-      exprs => {
-        val arr = exprs(1).eval().asInstanceOf[ArrayData]
-        val mat = (0 until arr.numElements())
-          .map(j => arr.getArray(j).toFloatArray()).toArray
-        TwoLevelProbe(exprs.head, mat,
-          exprs(2).eval().asInstanceOf[Int], exprs(3).eval().asInstanceOf[Int])
-      }, "built-in")
   }
 
   /** Column-level handles (resolve through the function registry). */
@@ -691,17 +486,6 @@ object VectorExpressions {
   def centroidCosines(emb: Column, cents: Seq[Array[Float]]): Column =
     call_function("graft_centroid_cos", emb,
       org.apache.spark.sql.functions.typedlit(cents.map(_.toSeq)))
-  /** One-pass two-level cell id (group rep argmax, then in-group argmax). */
-  def twoLevelAssignCol(emb: Column, cents: Seq[Array[Float]], perGroup: Int): Column =
-    call_function("graft_twolevel_assign", emb,
-      org.apache.spark.sql.functions.typedlit(cents.map(_.toSeq)),
-      org.apache.spark.sql.functions.lit(perGroup))
-  /** The nprobe best cells within the matched group (cos desc, cell asc). */
-  def twoLevelProbeCol(emb: Column, cents: Seq[Array[Float]], perGroup: Int, nprobe: Int): Column =
-    call_function("graft_twolevel_probe", emb,
-      org.apache.spark.sql.functions.typedlit(cents.map(_.toSeq)),
-      org.apache.spark.sql.functions.lit(perGroup),
-      org.apache.spark.sql.functions.lit(nprobe))
   def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
   def intervalOverlapCount(a: Column, b: Column): Column =
     call_function("graft_interval_overlap_count", a, b)

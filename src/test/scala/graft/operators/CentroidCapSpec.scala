@@ -1,6 +1,8 @@
 package graft.operators
 
 import graft.TestSpark
+import graft.plans.VectorExpressions
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The r10 cap on the seed-centroid family's k ∝ corpus rule:
@@ -11,7 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * cap binds exactly at `CentroidCap × CentroidOccupancy` vectors and
   * holds to Long.MaxValue; (c) the SQL twin carries the same three-way
   * expression; (d) the per-dir centroid memo returns the identical
-  * collected structure without re-running the sizing scan. */
+  * collected structure without re-running the sizing scan; (e) the coarse
+  * quantizer is flat — corpus assignment is the kernel argmax and probe
+  * ranking the kernel's (cos desc, id asc) sort. */
 class CentroidCapSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
@@ -59,7 +63,6 @@ class CentroidCapSpec extends AnyFunSuite {
   }
 
   test("centroid memo: a rewritten embeddings table invalidates the cached vintage") {
-    import org.apache.spark.sql.functions._
     val tmp = TestSpark.tempDir("graft_memo").toString
     val src = spark.read.parquet(s"$dir/embeddings.parquet")
     src.write.parquet(s"$tmp/embeddings.parquet")
@@ -75,5 +78,48 @@ class CentroidCapSpec extends AnyFunSuite {
     assert(second.map(_._1).min === 1L, "refreshed centroids read the new content")
     val third = AnnQueries.centroids(spark, t)
     assert(second eq third, "unchanged table memoizes again")
+  }
+
+  private def emb = {
+    VectorExpressions.register(spark)
+    spark.read.parquet(s"$dir/embeddings.parquet")
+  }
+
+  private def vectors: Array[(Long, Array[Float])] = {
+    import spark.implicits._
+    emb.select(col("vec_id"), col("embedding")).as[(Long, Array[Float])].collect()
+  }
+
+  /** Cell ids by (cos desc, id asc), cosines in the kernel's arithmetic. */
+  private def ranked(v: Array[Float], cs: Seq[Array[Float]]): Seq[Int] = {
+    def cos(c: Array[Float]): Double = {
+      var dot = 0.0; var nx = 0.0; var ny = 0.0; var i = 0
+      while (i < math.min(v.length, c.length)) {
+        val x = v(i).toDouble; val y = c(i).toDouble
+        dot += x * y; nx += x * x; ny += y * y; i += 1
+      }
+      if (nx == 0.0 || ny == 0.0) 0.0 else dot / (math.sqrt(nx) * math.sqrt(ny))
+    }
+    cs.indices.sortBy(j => (-cos(cs(j)), j))
+  }
+
+  test("flat assignment: assignNearest is the kernel argmax") {
+    val vs = vectors
+    val cs = vs.sortBy(_._1).take(8).map(_._2).toSeq
+    val got = AnnQueries.assignNearest(emb, cs)
+      .select(col("vec_id"), col("cluster")).collect()
+      .map(r => r.getLong(0) -> r.getInt(1)).toMap
+    assert(got === vs.map { case (id, v) => id -> ranked(v, cs).head }.toMap && got.nonEmpty)
+  }
+
+  test("flat probe ranking: probeTopC ranks cells by cosine") {
+    import spark.implicits._
+    val vs = vectors
+    val cs = vs.sortBy(_._1).take(16).map(_._2).toSeq
+    val got = emb.withColumn("top_c", AnnQueries.probeTopC(cs))
+      .select(col("vec_id"), expr("transform(top_c, x -> x.idx)").as("cells"))
+      .as[(Long, Seq[Int])].collect().toMap
+    val nprobe = 2 // NProbeBuckets
+    assert(got === vs.map { case (id, v) => id -> ranked(v, cs).take(nprobe) }.toMap && got.nonEmpty)
   }
 }

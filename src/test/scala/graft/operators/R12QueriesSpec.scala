@@ -11,52 +11,6 @@ class R12QueriesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val sf = TestSpark.Sf0001
 
-  test("ann_twolevel_recall: driver recompute of the two-level recall on sf0.001") {
-    implicit val s: org.apache.spark.sql.SparkSession = spark
-    graft.plans.VectorExpressions.register(spark)
-    val emb = graft.sources.Tables(sf).embeddings
-      .select("vec_id", "embedding").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).sortBy(_._1)
-    val n = emb.length
-    val k = AnnQueries.scaledK(n.toLong).toInt
-    val cents = emb.takeWhile(_._1 < k).map(_._2)
-    val (pg, _) = AnnQueries.twoLevelGeometry(cents.length)
-    def cos(a: Array[Float], b: Array[Float]): Double = {
-      var d = 0.0; var na = 0.0; var nb = 0.0
-      var i = 0
-      while (i < a.length) { d += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-      math.rint(d / math.sqrt(na * nb) * 1e6) / 1e6
-    }
-    // two-level navigation: best group rep (cells 0, pg, 2pg, ...), then
-    // cells within the group; corpus assigned the same way (nprobe = 1)
-    def groupOf(v: Array[Float]): Int = {
-      val reps = cents.indices.filter(_ % pg == 0)
-      reps.maxBy(r => (cos(v, cents(r)), -r)) / pg
-    }
-    def cellsRanked(v: Array[Float]): Seq[Int] = {
-      val g = groupOf(v)
-      (g * pg until math.min((g + 1) * pg, cents.length))
-        .sortBy(c => (-cos(v, cents(c)), c))
-    }
-    val cluster = emb.map { case (id, v) => id -> cellsRanked(v).head }.toMap
-    val probeIds = AnnQueries.queries("ann_twolevel_recall")
-      .fn(spark, sf).select("probe_id").collect().map(_.getLong(0)).sorted
-    val got = AnnQueries.queries("ann_twolevel_recall").fn(spark, sf)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val byId = emb.toMap
-    probeIds.foreach { p =>
-      val pv = byId(p)
-      val probed = cellsRanked(pv).take(2).toSet // NProbeBuckets = 2
-      val exact = emb.filter(_._1 != p)
-        .sortBy { case (id, v) => (-cos(pv, v), id) }.take(5).map(_._1).toSet
-      val tl = emb.filter { case (id, _) => id != p && probed(cluster(id)) }
-        .sortBy { case (id, v) => (-cos(pv, v), id) }.take(5).map(_._1).toSet
-      assert(got(p) == exact.intersect(tl).size.toLong,
-        s"probe $p: recomputed overlap ${exact.intersect(tl).size}, query ${got(p)}")
-    }
-    assert(probeIds.nonEmpty)
-  }
-
   test("events_copresence_topk equals a window-rank recompute over the pair table") {
     implicit val s: org.apache.spark.sql.SparkSession = spark
     val pairs = MultiIntervalJoin.queries("events_overlapping_stays").fn(spark, sf)
